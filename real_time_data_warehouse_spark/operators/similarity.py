@@ -2285,7 +2285,9 @@ def _sq8_matmul_scorer(qids: "np.ndarray", Q: "np.ndarray", k: int):
                 thresh = np.partition(S, -k, axis=1)[:, -k]
             else:
                 thresh = np.full(S.shape[0], -np.inf)
-            qi, ni = np.nonzero(S >= thresh[:, None])
+            # the isfinite term drops masked self-pairs, which pass a
+            # -inf threshold when the batch holds <= k rows
+            qi, ni = np.nonzero((S >= thresh[:, None]) & np.isfinite(S))
             yield pd.DataFrame(
                 {
                     "qid": qids[qi],

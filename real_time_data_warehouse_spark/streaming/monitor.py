@@ -15,9 +15,15 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 
+# per-operator state-store metrics kept in each record, under Spark's names
+_OP_METRICS = ("numRowsTotal", "commitTimeMs", "allUpdatesTimeMs", "memoryUsedBytes")
+
+
 class ProgressLogListener(StreamingQueryListener):
     """Append one JSONL record per micro-batch: batch id, input rows,
-    processed-per-second, watermark, and state-store totals."""
+    processed-per-second, watermark, state-store totals, the trigger's
+    ``durationMs`` phases (addBatch, queryPlanning, walCommit, ...) and
+    each stateful operator's commit/update time and memory."""
 
     def __init__(self, path: str):
         self.path = path
@@ -47,6 +53,12 @@ class ProgressLogListener(StreamingQueryListener):
                 sum(o.numRowsRemoved for o in ops) if ops else None
             ),
             "n_state_operators": len(ops),
+            "duration_ms": dict(p.durationMs or {}),
+            "state_operators": [
+                {"operator": o.operatorName,
+                 **{m: getattr(o, m) for m in _OP_METRICS}}
+                for o in ops
+            ],
         }
         with self._lock, open(self.path, "a") as f:
             f.write(json.dumps(rec) + "\n")

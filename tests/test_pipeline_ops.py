@@ -503,6 +503,27 @@ def test_s14_code_lattice_and_symmetry(spark):
     assert dots[0] > dots[1] > dots[2]
 
 
+def test_sq8_matmul_scorer_never_emits_self_pairs_in_small_batch():
+    """A corpus batch of <= k rows keeps every scored cell (threshold
+    -inf); the masked self-pairs must still not be emitted."""
+    import numpy as np
+    import pandas as pd
+
+    from real_time_data_warehouse_spark.operators.similarity import (
+        _sq8_matmul_scorer,
+    )
+
+    qids = np.array([0, 1], dtype=np.int64)
+    Q = np.array([[76.0, 102.0], [-76.0, 102.0]])
+    batch = pd.DataFrame(
+        {"vec_id": [0, 1, 2], "qc": [[76, 102], [-76, 102], [102, -76]]}
+    )
+    out = pd.concat(list(_sq8_matmul_scorer(qids, Q, k=3)(iter([batch]))))
+    got = {(q, n): s for q, n, s in zip(out["qid"], out["nid"], out["sim"])}
+    # every non-self pair, with its exact code dot
+    assert got == {(0, 1): 4628, (0, 2): 0, (1, 0): 4628, (1, 2): -15504}
+
+
 def test_z3_bins_never_split_and_stay_near_target(spark):
     """Compaction-plan invariants on a planted file list: bin ids are
     non-decreasing in (day, hour) order; no file is split; every bin

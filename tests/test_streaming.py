@@ -533,6 +533,19 @@ def test_progress_monitor_listener(spark, tmp_path, events_dir):
     assert len(data_batches) == 2  # two source files = two data batches
     assert all(r["watermark"] is not None for r in recs if r["batch_id"] > 0)
     assert any(r["state_rows"] for r in recs)
+    # trigger phases and per-operator state-store cost ride along
+    for r in data_batches:
+        assert {"addBatch", "queryPlanning", "walCommit", "commitOffsets",
+                "latestOffset", "triggerExecution"} <= r["duration_ms"].keys()
+        assert len(r["state_operators"]) == r["n_state_operators"] >= 1
+        for op in r["state_operators"]:
+            assert op["operator"]
+            for m in ("numRowsTotal", "commitTimeMs", "allUpdatesTimeMs",
+                      "memoryUsedBytes"):
+                assert isinstance(op[m], int) and op[m] >= 0, (m, op)
+        assert r["state_rows"] == sum(
+            op["numRowsTotal"] for op in r["state_operators"]
+        )
 
 
 def test_log_split_crash_recovery_exactly_once(spark, tmp_path, events_dir):
