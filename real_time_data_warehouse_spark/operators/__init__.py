@@ -7,12 +7,12 @@ import importlib
 # Import order only — the driver's visit order is the EXPLICIT
 # registry.MANIFEST (registry.ordered_registry), not import side-effect
 # order. Constraints here are purely load-time: curation composes
-# d7/t1/t2/t3 and gate_replay reuses the d7/d9 oracles, so both load
-# after dedup/similarity.
+# d7/t1/t2/t3, so it loads after them; gate_replay imports the batch
+# twins whose oracles it reuses itself.
 _MODULES = (
     "dedup",
     "similarity",
-    "gate_replay",  # reuses the d7/d9 oracles — after dedup/similarity
+    "gate_replay",
     "textanalysis",
     "bpe",
     "classifier",

@@ -111,6 +111,11 @@ from real_time_data_warehouse_spark.operators.streaming_exec import (
     _stream_shuffle_partitions,
 )
 from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.streaming.state_store import (
+    epoch_dir,
+    read_log,
+    write_snapshot,
+)
 from real_time_data_warehouse_spark.tables import Tables
 
 _DELAY = "2 hours"  # watermark delay — must exceed the replay window
@@ -1071,9 +1076,11 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
                 ),
             }
             for side, df in sides.items():
-                df.select("event_id", "user_id", "is_new").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(out, side, f"batch_id={bid}"))
+                write_snapshot(
+                    df.select("event_id", "user_id", "is_new"),
+                    os.path.join(out, side),
+                    bid,
+                )
 
         def start(fault):
             ev = stream_events(spark, src)
@@ -1105,11 +1112,11 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
         def plant_debris() -> None:
             # partial file a mid-write crash leaves in the crashed
             # epoch's action sink — the retry must REPLACE it
-            debris = os.path.join(out, "action", "batch_id=2")
             ev = Tables(spark, sf_dir).events
-            ev.where(F.col("event_type") == "click").limit(9).select(
+            debris = ev.where(F.col("event_type") == "click").limit(9).select(
                 "event_id", "user_id", F.lit(9).cast("int").alias("is_new")
-            ).write.mode("overwrite").parquet(debris)
+            )
+            write_snapshot(debris, os.path.join(out, "action"), 2)
 
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
             q2 = _run_crash_restart(spark, start, plant_debris)
@@ -1856,9 +1863,7 @@ def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
                     fault(bid)
                 # per-epoch overwrite dir: a replayed epoch REPLACES
                 # partial output (the x1s exactly-once discipline)
-                b.write.mode("overwrite").parquet(
-                    os.path.join(out, f"batch_id={bid}")
-                )
+                write_snapshot(b, out, bid)
 
             return (
                 joined.writeStream.foreachBatch(body)
@@ -1868,11 +1873,11 @@ def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
             )
 
         def plant_debris() -> None:
-            debris = os.path.join(out, "batch_id=2")
-            spark.createDataFrame(
+            debris = spark.createDataFrame(
                 [(-999, -999, -999)], "pay_id bigint, pay_key bigint, "
                 "det_id bigint",
-            ).write.mode("overwrite").parquet(debris)
+            )
+            write_snapshot(debris, out, 2)
 
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
             q2 = _run_crash_restart(spark, start, plant_debris)
@@ -1921,9 +1926,7 @@ def app9x_pay_detail_crash_restart(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app9x_build(spark, sf_dir)
-    back = spark.read.option(
-        "basePath", os.path.join(base, "out")
-    ).parquet(os.path.join(base, "out"))
+    back = read_log(spark, os.path.join(base, "out"))
     return back.groupBy("pay_key").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.sum("pay_id").cast("bigint").alias("pay_id_sum"),
@@ -2207,7 +2210,7 @@ def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
                     fault(bid)
                 b.write.mode("overwrite").partitionBy(
                     "sink_table"
-                ).parquet(os.path.join(out, f"batch_id={bid}"))
+                ).parquet(epoch_dir(out, bid))
 
             return (
                 routed.writeStream.foreachBatch(body)
@@ -2217,9 +2220,7 @@ def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
             )
 
         def plant_debris() -> None:
-            debris = os.path.join(
-                out, "batch_id=2", "sink_table=dwd_action"
-            )
+            debris = os.path.join(epoch_dir(out, 2), "sink_table=dwd_action")
             spark.createDataFrame(
                 [(-777, -777)], "event_id bigint, user_id bigint"
             ).write.mode("overwrite").parquet(debris)
@@ -2268,9 +2269,7 @@ def app14s_base_db_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app14s_build(spark, sf_dir)
-    back = spark.read.option(
-        "basePath", os.path.join(base, "out")
-    ).parquet(os.path.join(base, "out"))
+    back = read_log(spark, os.path.join(base, "out"))
     return (
         back.where(F.col("event_id") >= 0)  # sentinel rows route too
         .groupBy("sink_table")

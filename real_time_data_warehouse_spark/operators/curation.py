@@ -643,12 +643,12 @@ def c1s_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _replay_batches,
     )
     from real_time_data_warehouse_spark.streaming import curation
+    from real_time_data_warehouse_spark.streaming.state_store import read_log
     from real_time_data_warehouse_spark.tables import Tables
 
     def read_decisions(spark_, base_dir):
-        d = os.path.join(base_dir, "decisions")
-        return (
-            spark_.read.option("basePath", d).parquet(d).drop("batch_id")
+        return read_log(spark_, os.path.join(base_dir, "decisions")).drop(
+            "batch_id"
         )
 
     t = Tables(spark, sf_dir)

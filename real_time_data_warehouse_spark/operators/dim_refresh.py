@@ -62,6 +62,10 @@ from real_time_data_warehouse_spark.operators.streaming_exec import (
     _stream_shuffle_partitions,
 )
 from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.streaming.state_store import (
+    read_log,
+    write_snapshot,
+)
 from real_time_data_warehouse_spark.tables import Tables
 
 _N_DIM = 25  # nation-table domain; province_id = user_id % 25
@@ -155,9 +159,7 @@ def _j16_build(
                     ).alias("province_name"),
                 )
             )
-            enriched.write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={bid}")
-            )
+            write_snapshot(enriched, out, bid)
 
         with _stream_shuffle_partitions(spark):
             q = (
@@ -229,9 +231,7 @@ def j16_dim_refresh_stream_readback(
 
 
 def _j16_readback(spark: SparkSession, base: str) -> DataFrame:
-    back = spark.read.option(
-        "basePath", os.path.join(base, "out")
-    ).parquet(os.path.join(base, "out"))
+    back = read_log(spark, os.path.join(base, "out"))
     return back.groupBy("province_name").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum("event_id").cast("bigint").alias("id_sum"),

@@ -33,20 +33,28 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# direct imports (not load_all) so the batch-form oracles these queries
-# reuse are attached no matter how this module is reached
-from real_time_data_warehouse_spark.operators import dedup as _dedup  # noqa: F401
+# direct imports (not load_all): every replay row registers with its
+# batch twin's oracle, so the batch-form modules load first
 from real_time_data_warehouse_spark.operators import (  # noqa: F401
-    similarity as _similarity,
+    aggregations,
+    curation,
+    dedup,
+    graph,
+    joins,
+    layout,
+    similarity,
+    stateful,
 )
 from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 from real_time_data_warehouse_spark.streaming import dedup_gate, embedding_gate
+from real_time_data_warehouse_spark.streaming.state_store import read_log
 from real_time_data_warehouse_spark.tables import Tables
 
 # Fixed batch count — the replay is deterministic for a given fixture:
-# batch b covers ids in [span*b/N, span*(b+1)/N). The oracle (the
-# one-pass form) is independent of the boundaries, which is exactly the
-# equivalence being asserted.
+# batch b covers ids in [span*b/N, span*(b+1)/N), the last batch
+# everything from span*(N-1)/N up. The oracle (the one-pass form) is
+# independent of the boundaries, which is exactly the equivalence being
+# asserted.
 _N_BATCHES = 4
 
 
@@ -66,12 +74,9 @@ def _replay_batches(
     for the SCD2 stream). Callers that already know the id range pass
     ``span`` so the max-id scalar job (a full input scan) is skipped —
     the time-split family derives it from the same aggregate that finds
-    the 0-base (guide §1.2: fewer passes). PRECONDITION on a caller-
-    supplied span: every row must satisfy ``id_col < span`` — batch
-    ranges are [lo, hi) with hi capped at span, so an under-estimated
-    span silently DROPS rows with id_col >= span from every batch
-    instead of failing. Current callers compute it exactly from
-    max(id_col)."""
+    the 0-base (guide §1.2: fewer passes). The last batch has no upper
+    bound, so a stale ``span`` moves rows into the last batch but never
+    drops them."""
     if span is None:
         max_id = rows.agg(F.max(id_col)).first()[0]
         # empty input: still drive the applier once with the empty
@@ -84,18 +89,14 @@ def _replay_batches(
     out_dir = os.path.join(tmp, "out")
     try:
         for b in range(_N_BATCHES):
-            lo = span * b // _N_BATCHES
-            hi = span * (b + 1) // _N_BATCHES
-            batch = rows.where(
-                (F.col(id_col) >= lo) & (F.col(id_col) < hi)
-            )
-            apply_batch(spark, batch, b, store_dir, out_dir)
+            cond = F.col(id_col) >= span * b // _N_BATCHES
+            if b < _N_BATCHES - 1:
+                cond &= F.col(id_col) < span * (b + 1) // _N_BATCHES
+            apply_batch(spark, rows.where(cond), b, store_dir, out_dir)
         if finalize is not None:
             out = finalize(spark, out_dir)
         else:
-            out = spark.read.option("basePath", out_dir).parquet(
-                out_dir
-            ).drop("batch_id")
+            out = read_log(spark, out_dir).drop("batch_id")
         # materialize before the scratch dir is removed — the returned
         # frame must not depend on the replay's files
         return out.localCheckpoint(eager=True)
@@ -113,7 +114,7 @@ def _replay_batches(
         "per-batch decisions are concatenated. Checked against the "
         "ONE-PASS d7 oracle: a green row is the driver verifying the "
         "sequential gate ≡ the batch query (previously pytest-only).",
-    oracle=None,  # attached below: the d7 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["d7_dedup_gate"].oracle,
 )
 def d7s_dedup_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
@@ -133,7 +134,7 @@ def d7s_dedup_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per-batch decisions are concatenated. Checked against the "
         "ONE-PASS d9 oracle — the driver-verified batch ≡ stream claim "
         "for the SemDeDup-style gate.",
-    oracle=None,  # attached below: the d9 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["d9_semantic_gate"].oracle,
 )
 def d9s_semantic_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
@@ -155,12 +156,9 @@ def d9s_semantic_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Checked against the ONE-PASS st8 oracle: a green row is the "
         "driver verifying incremental history maintenance ≡ the batch "
         "interval builder.",
-    oracle=None,  # attached below: the st8 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["st8_scd2_intervals"].oracle,
 )
 def st8s_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        stateful as _stateful,
-    )
     from real_time_data_warehouse_spark.streaming import scd2
 
     t = Tables(spark, sf_dir)
@@ -175,22 +173,6 @@ def st8s_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         scd2.apply_scd2_batch,
         finalize=scd2.compact_scd2_log,
     )
-
-
-import dataclasses as _dc
-
-_QR = QUERY_REGISTRY
-_QR["d7s_dedup_gate_replay"] = _dc.replace(
-    _QR["d7s_dedup_gate_replay"], oracle=_QR["d7_dedup_gate"].oracle
-)
-_QR["d9s_semantic_gate_replay"] = _dc.replace(
-    _QR["d9s_semantic_gate_replay"], oracle=_QR["d9_semantic_gate"].oracle
-)
-from real_time_data_warehouse_spark.operators import stateful as _stateful  # noqa: E402,F401
-
-_QR["st8s_scd2_replay"] = _dc.replace(
-    _QR["st8s_scd2_replay"], oracle=_QR["st8_scd2_intervals"].oracle
-)
 
 
 @register(
@@ -208,7 +190,7 @@ _QR["st8s_scd2_replay"] = _dc.replace(
         "IDENTICAL rows to the one-pass a13 query — the oracle is "
         "literally a13's, making the green row a driver-checked "
         "batch ≡ stream equivalence.",
-    oracle=None,  # replaced below with a13's oracle (shared contract)
+    oracle=QUERY_REGISTRY["a13_heavy_hitters"].oracle,
 )
 def a13s_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.functions.text import tokenize
@@ -219,20 +201,17 @@ def a13s_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = t.documents.select(
         "doc_id", F.explode(tokenize("text")).alias("w")
     ).localCheckpoint(eager=True)
-    span = int(tokens.agg(F.max("doc_id")).first()[0]) + 1
-    tmp = tempfile.mkdtemp(prefix="rtdw_hh_replay_")
-    try:
-        for b in range(_N_BATCHES):
-            lo, hi = span * b // _N_BATCHES, span * (b + 1) // _N_BATCHES
-            batch = tokens.where(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-            ).select("w")
-            hh.apply_hh_batch(spark, batch, b, tmp, cap=4 * _HH_K)
-        cand = hh.final_candidates(spark, tmp, _N_BATCHES).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    cand = _replay_batches(
+        spark,
+        tokens,
+        "doc_id",
+        # the summary snapshots are the only output: they live in
+        # out_dir, where finalize reads the last one
+        lambda sp, batch, b, _store, out: hh.apply_hh_batch(
+            sp, batch.select("w"), b, out, cap=4 * _HH_K
+        ),
+        finalize=lambda sp, out: hh.final_candidates(sp, out, _N_BATCHES),
+    )
     tot = tokens.agg(F.count("*").cast("bigint").alias("n_total"))
     return (
         tokens.join(F.broadcast(cand), "w")
@@ -242,16 +221,6 @@ def a13s_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("cnt") * _HH_K > F.col("n_total"))
         .select("w", "cnt", "n_total")
     )
-
-
-# shared contract: the replay answers to the one-pass a13 oracle
-from real_time_data_warehouse_spark.operators import aggregations as _aggs  # noqa: E402,F401
-import dataclasses as _dc13  # noqa: E402
-
-QUERY_REGISTRY["a13s_heavy_hitters_replay"] = _dc13.replace(
-    QUERY_REGISTRY["a13s_heavy_hitters_replay"],
-    oracle=QUERY_REGISTRY["a13_heavy_hitters"].oracle,
-)
 
 
 @register(
@@ -267,7 +236,7 @@ QUERY_REGISTRY["a13s_heavy_hitters_replay"] = _dc13.replace(
         "a green row is the driver verifying that session numbering, "
         "boundaries, and exact DECIMAL value sums are independent of "
         "where the batch boundaries fall.",
-    oracle=None,  # attached below: the st13 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["st13_sessionization"].oracle,
 )
 def st13s_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.streaming import sessionize
@@ -289,14 +258,6 @@ def st13s_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import dataclasses as _dc14  # noqa: E402
-
-QUERY_REGISTRY["st13s_session_replay"] = _dc14.replace(
-    QUERY_REGISTRY["st13s_session_replay"],
-    oracle=QUERY_REGISTRY["st13_sessionization"].oracle,
-)
-
-
 @register(
     "a1s_windowed_sum_replay",
     survey="A1,W1,W4,ext-scale",
@@ -311,12 +272,9 @@ QUERY_REGISTRY["st13s_session_replay"] = _dc14.replace(
         "reduce, DwsTradeSkuOrderWindow.java:271-302) is batch ≡ "
         "stream at any batch split, with NO ordering contract — the "
         "merge is commutative and associative.",
-    oracle=None,  # attached below: the a1 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["a1_windowed_sum"].oracle,
 )
 def a1s_windowed_sum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        aggregations as _aggregations,
-    )
     from real_time_data_warehouse_spark.streaming import window_agg
 
     t = Tables(spark, sf_dir)
@@ -328,18 +286,6 @@ def a1s_windowed_sum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_agg.apply_window_batch,
         finalize=window_agg.compact_window_log,
     )
-
-
-import dataclasses as _dc15  # noqa: E402
-
-from real_time_data_warehouse_spark.operators import (  # noqa: E402,F401
-    aggregations as _aggs_for_oracle,
-)
-
-QUERY_REGISTRY["a1s_windowed_sum_replay"] = _dc15.replace(
-    QUERY_REGISTRY["a1s_windowed_sum_replay"],
-    oracle=QUERY_REGISTRY["a1_windowed_sum"].oracle,
-)
 
 
 @register(
@@ -356,12 +302,9 @@ QUERY_REGISTRY["a1s_windowed_sum_replay"] = _dc15.replace(
         "Checked against the ONE-PASS j4 oracle: the driver verifies "
         "the hardest streaming op class — stream⋈stream with state "
         "eviction — is batch ≡ stream.",
-    oracle=None,  # attached below: the j4 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["j4_interval_join"].oracle,
 )
 def j4s_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        joins as _joins,
-    )
     from real_time_data_warehouse_spark.streaming import joins as sjoins
 
     t = Tables(spark, sf_dir)
@@ -378,18 +321,6 @@ def j4s_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         span=span,
         finalize=sjoins.read_interval_join_log,
     )
-
-
-import dataclasses as _dc16  # noqa: E402
-
-from real_time_data_warehouse_spark.operators import (  # noqa: E402,F401
-    joins as _joins_for_oracle,
-)
-
-QUERY_REGISTRY["j4s_interval_join_replay"] = _dc16.replace(
-    QUERY_REGISTRY["j4s_interval_join_replay"],
-    oracle=QUERY_REGISTRY["j4_interval_join"].oracle,
-)
 
 
 @register(
@@ -452,7 +383,7 @@ def j2s_left_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "log compacts last-wins. Checked against the ONE-PASS a5 "
         "oracle at any batch split — set union has no ordering "
         "contract.",
-    oracle=None,  # attached below: the a5 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["a5_windowed_uu"].oracle,
 )
 def a5s_windowed_uu_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.streaming import distinct_agg
@@ -466,14 +397,6 @@ def a5s_windowed_uu_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         distinct_agg.apply_distinct_batch,
         finalize=distinct_agg.compact_distinct_log,
     )
-
-
-import dataclasses as _dc17  # noqa: E402
-
-QUERY_REGISTRY["a5s_windowed_uu_replay"] = _dc17.replace(
-    QUERY_REGISTRY["a5s_windowed_uu_replay"],
-    oracle=QUERY_REGISTRY["a5_windowed_uu"].oracle,
-)
 
 
 def _with_tsec(ev: DataFrame) -> tuple[DataFrame, int]:
@@ -512,7 +435,7 @@ def _with_tsec(ev: DataFrame) -> tuple[DataFrame, int]:
         "Checked against the ONE-PASS st3 oracle: a green row is the "
         "driver verifying the custom visitor-state op is batch ≡ "
         "stream.",
-    oracle=None,  # attached below: the st3 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["st3_visitor_state_fix"].oracle,
 )
 def st3s_visitor_fix_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.streaming import user_state
@@ -537,7 +460,7 @@ def st3s_visitor_fix_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "last-wins. Checked against the ONE-PASS st5 oracle: a green "
         "row is the driver verifying uu/returning counts are "
         "independent of where the batch boundaries fall.",
-    oracle=None,  # attached below: the st5 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["st5_returning_user"].oracle,
 )
 def st5s_returning_user_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.streaming import user_state
@@ -554,18 +477,6 @@ def st5s_returning_user_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import dataclasses as _dc18  # noqa: E402
-
-QUERY_REGISTRY["st3s_visitor_fix_replay"] = _dc18.replace(
-    QUERY_REGISTRY["st3s_visitor_fix_replay"],
-    oracle=QUERY_REGISTRY["st3_visitor_state_fix"].oracle,
-)
-QUERY_REGISTRY["st5s_returning_user_replay"] = _dc18.replace(
-    QUERY_REGISTRY["st5s_returning_user_replay"],
-    oracle=QUERY_REGISTRY["st5_returning_user"].oracle,
-)
-
-
 @register(
     "c10s_profile_replay",
     survey="ext-curation,ext-text,A10,ext-scale",
@@ -579,12 +490,9 @@ QUERY_REGISTRY["st5s_returning_user_replay"] = _dc18.replace(
         "at any batch split — the merge is commutative and "
         "associative, so profile-at-ingest ≡ profile-by-rescan is a "
         "driver-verified claim.",
-    oracle=None,  # attached below: the c10 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["c10_corpus_profile"].oracle,
 )
 def c10s_profile_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        curation as _curation,
-    )
     from real_time_data_warehouse_spark.streaming import profile
 
     t = Tables(spark, sf_dir)
@@ -596,18 +504,6 @@ def c10s_profile_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         profile.apply_profile_batch,
         finalize=profile.rollup_profile,
     )
-
-
-import dataclasses as _dc19  # noqa: E402
-
-from real_time_data_warehouse_spark.operators import (  # noqa: E402,F401
-    curation as _curation_for_oracle,
-)
-
-QUERY_REGISTRY["c10s_profile_replay"] = _dc19.replace(
-    QUERY_REGISTRY["c10s_profile_replay"],
-    oracle=QUERY_REGISTRY["c10_corpus_profile"].oracle,
-)
 
 
 @register(
@@ -624,14 +520,11 @@ QUERY_REGISTRY["c10s_profile_replay"] = _dc19.replace(
         "contract exists — checked against the ONE-PASS st1 oracle at "
         "an id-based split precisely because the claim is "
         "split-independence.",
-    oracle=None,  # attached below: the st1 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["st1_dedup_last_wins"].oracle,
 )
 def st1s_dedup_last_wins_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        stateful as _stateful,
-    )
     from real_time_data_warehouse_spark.streaming import last_wins
 
     t = Tables(spark, sf_dir)
@@ -647,18 +540,6 @@ def st1s_dedup_last_wins_replay(
     )
 
 
-import dataclasses as _dc20  # noqa: E402
-
-from real_time_data_warehouse_spark.operators import (  # noqa: E402,F401
-    stateful as _stateful_for_oracle,
-)
-
-QUERY_REGISTRY["st1s_dedup_last_wins_replay"] = _dc20.replace(
-    QUERY_REGISTRY["st1s_dedup_last_wins_replay"],
-    oracle=QUERY_REGISTRY["st1_dedup_last_wins"].oracle,
-)
-
-
 @register(
     "st4s_daily_uv_replay",
     survey="ST4,A4,ext-scale",
@@ -672,12 +553,9 @@ QUERY_REGISTRY["st1s_dedup_last_wins_replay"] = _dc20.replace(
         "is order-free, so the id-based split IS the claim: daily UV "
         "is independent of where micro-batch boundaries fall. Checked "
         "against the ONE-PASS st4 oracle.",
-    oracle=None,  # attached below: the st4 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["st4_first_per_day_uv"].oracle,
 )
 def st4s_daily_uv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        stateful as _st,
-    )
     from real_time_data_warehouse_spark.streaming import visit_stats
 
     t = Tables(spark, sf_dir)
@@ -704,14 +582,11 @@ def st4s_daily_uv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "counts, the log compacts last-wins. With st4s this completes "
         "driver-checked batch ≡ stream twins for every §2.6 stateful "
         "family. Checked against the ONE-PASS st6 oracle.",
-    oracle=None,  # attached below: the st6 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["st6_session_count"].oracle,
 )
 def st6s_session_count_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        stateful as _st,
-    )
     from real_time_data_warehouse_spark.streaming import visit_stats
 
     t = Tables(spark, sf_dir)
@@ -724,22 +599,6 @@ def st6s_session_count_replay(
         finalize=visit_stats.compact_session_log,
         span=span,
     )
-
-
-import dataclasses as _dc21  # noqa: E402
-
-from real_time_data_warehouse_spark.operators import (  # noqa: E402,F401
-    stateful as _stateful_for_oracle2,
-)
-
-QUERY_REGISTRY["st4s_daily_uv_replay"] = _dc21.replace(
-    QUERY_REGISTRY["st4s_daily_uv_replay"],
-    oracle=QUERY_REGISTRY["st4_first_per_day_uv"].oracle,
-)
-QUERY_REGISTRY["st6s_session_count_replay"] = _dc21.replace(
-    QUERY_REGISTRY["st6s_session_count_replay"],
-    oracle=QUERY_REGISTRY["st6_session_count"].oracle,
-)
 
 
 @register(
@@ -756,7 +615,7 @@ QUERY_REGISTRY["st6s_session_count_replay"] = _dc21.replace(
         "z3 oracle: a green row is the driver verifying that the "
         "incrementally maintained catalog + final re-plan equals the "
         "batch query regardless of boundary placement.",
-    oracle=None,  # attached below: the z3 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["z3_compaction_plan"].oracle,
 )
 def z3s_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.streaming import compaction
@@ -774,20 +633,6 @@ def z3s_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import dataclasses as _dcz3  # noqa: E402
-
-# direct import so the z3 batch-form oracle exists no matter how this
-# module is reached (the d7/d9 pattern at the top of the file)
-from real_time_data_warehouse_spark.operators import (  # noqa: E402,F401
-    layout as _layout,
-)
-
-QUERY_REGISTRY["z3s_compaction_replay"] = _dcz3.replace(
-    QUERY_REGISTRY["z3s_compaction_replay"],
-    oracle=QUERY_REGISTRY["z3_compaction_plan"].oracle,
-)
-
-
 @register(
     "s15s_ivf_ingest_replay",
     survey="ext-similarity,ext-scale",
@@ -803,7 +648,7 @@ QUERY_REGISTRY["z3s_compaction_replay"] = _dcz3.replace(
         "that index INGESTION commutes with index BUILD — appends "
         "are order-free, so batch boundaries cannot change the "
         "search result.",
-    oracle=None,  # attached below: the s15 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["s15_ivf_sq8_topk"].oracle,
 )
 def s15s_ivf_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.operators.similarity import (
@@ -845,14 +690,6 @@ def s15s_ivf_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import dataclasses as _dcs15  # noqa: E402
-
-QUERY_REGISTRY["s15s_ivf_ingest_replay"] = _dcs15.replace(
-    QUERY_REGISTRY["s15s_ivf_ingest_replay"],
-    oracle=QUERY_REGISTRY["s15_ivf_sq8_topk"].oracle,
-)
-
-
 @register(
     "g1s_pagerank_replay",
     survey="ST6,ext-scale",
@@ -868,7 +705,7 @@ QUERY_REGISTRY["s15s_ivf_ingest_replay"] = _dcs15.replace(
         "is the driver verifying incremental graph maintenance across "
         "arbitrary boundaries ≡ the one-pass batch derivation. Closes "
         "the batch≡stream family for the graph operators.",
-    oracle=None,  # attached below: the g1 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["g1_pagerank"].oracle,
 )
 def g1s_pagerank_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.streaming import pagerank_stream
@@ -885,15 +722,3 @@ def g1s_pagerank_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         finalize=pagerank_stream.pagerank_from_log,
         span=span,
     )
-
-
-import dataclasses as _dcg1  # noqa: E402
-
-from real_time_data_warehouse_spark.operators import (  # noqa: E402,F401
-    graph as _graph_for_oracle,
-)
-
-QUERY_REGISTRY["g1s_pagerank_replay"] = _dcg1.replace(
-    QUERY_REGISTRY["g1s_pagerank_replay"],
-    oracle=QUERY_REGISTRY["g1_pagerank"].oracle,
-)

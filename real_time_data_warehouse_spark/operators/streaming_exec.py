@@ -44,6 +44,12 @@ from real_time_data_warehouse_spark.operators.sink_readback import (
     _artifact_dir,
 )
 from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.streaming.state_store import (
+    epoch_dir,
+    read_log,
+    run_applier_stream,
+    write_snapshot,
+)
 from real_time_data_warehouse_spark.tables import Tables
 
 _SRC_FILES = 4  # micro-batches: watermark must advance ACROSS batches
@@ -874,13 +880,9 @@ def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
             # partial file a mid-write crash leaves: a few purchase rows
             # already landed in the crashed epoch's 'page' dir — the
             # retry must REPLACE them, not append beside them
-            debris = os.path.join(
-                out, "page", f"batch_id={_X1S_CRASH_BATCH}"
-            )
             ev = Tables(spark, sf_dir).events
-            ev.where(F.col("event_type") == "purchase").limit(
-                7
-            ).write.mode("overwrite").parquet(debris)
+            debris = ev.where(F.col("event_type") == "purchase").limit(7)
+            write_snapshot(debris, os.path.join(out, "page"), _X1S_CRASH_BATCH)
 
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
@@ -977,9 +979,7 @@ def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
 
         def plant_debris() -> None:
             debris = os.path.join(
-                out,
-                f"batch_id={_X1S_CRASH_BATCH}",
-                "sink_table=dwd_action_log",
+                epoch_dir(out, _X1S_CRASH_BATCH), "sink_table=dwd_action_log"
             )
             ev = Tables(spark, sf_dir).events
             ev.where(F.col("event_type") == "click").limit(5).drop(
@@ -1029,9 +1029,7 @@ def x2s_dynamic_routing_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _x2s_build(spark, sf_dir)
-    back = spark.read.option("basePath", os.path.join(base, "out")).parquet(
-        os.path.join(base, "out")
-    )
+    back = read_log(spark, os.path.join(base, "out"))
     return back.groupBy("sink_table").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum("event_id").cast("bigint").alias("id_sum"),
@@ -1091,7 +1089,7 @@ def _doc_sliced_source(spark: SparkSession, sf_dir: str) -> str:
 
 def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
     from real_time_data_warehouse_spark.streaming.dedup_gate import (
-        run_dedup_gate_stream,
+        apply_gate_batch,
     )
 
     def build(base: str) -> None:
@@ -1106,8 +1104,9 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src)
             )
-            return run_dedup_gate_stream(
-                spark, docs_source, store, out, ckpt, fault_injector=fault
+            return run_applier_stream(
+                docs_source, apply_gate_batch, store, out, ckpt,
+                fault_injector=fault,
             )
 
         def plant_debris() -> None:
@@ -1126,22 +1125,26 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
             crashed = docs.where(
                 (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
             ).limit(5)
-            crashed.select(
-                "doc_id",
-                F.lit("exact_dup").alias("status"),
-                F.lit(0).cast("bigint").alias("dup_of"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={_X1S_CRASH_BATCH}")
+            write_snapshot(
+                crashed.select(
+                    "doc_id",
+                    F.lit("exact_dup").alias("status"),
+                    F.lit(0).cast("bigint").alias("dup_of"),
+                ),
+                out,
+                _X1S_CRASH_BATCH,
             )
             from real_time_data_warehouse_spark.operators.dedup import (
                 minhash_sigs_for,
             )
 
-            crashed.select(
-                "doc_id", F.md5(F.lower("text")).alias("th")
-            ).join(minhash_sigs_for(crashed), "doc_id", "left").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(store, f"batch_id={_X1S_CRASH_BATCH}"))
+            write_snapshot(
+                crashed.select(
+                    "doc_id", F.md5(F.lower("text")).alias("th")
+                ).join(minhash_sigs_for(crashed), "doc_id", "left"),
+                store,
+                _X1S_CRASH_BATCH,
+            )
 
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
@@ -1154,7 +1157,8 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
     survey="ext-dedup",
     doc="The ingestion dedup gate under the REAL streaming runtime WITH "
         "a mid-stream crash, driver-checked: streaming/dedup_gate."
-        "run_dedup_gate_stream runs as readStream(maxFilesPerTrigger=1) "
+        "apply_gate_batch runs under state_store.run_applier_stream as "
+        "readStream(maxFilesPerTrigger=1) "
         f"over a {_D7X_FILES}-file ascending-doc_id source → foreachBatch "
         "classifying each micro-batch against the persistent signature "
         "store (exact md5 + MinHash-LSH band candidates) and appending "
@@ -1177,12 +1181,8 @@ def d7x_dedup_gate_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _d7x_build(spark, sf_dir)
-    out = os.path.join(base, "out")
-    return (
-        spark.read.option("basePath", out)
-        .parquet(out)
-        .drop("batch_id")
-        .select("doc_id", "status", "dup_of")
+    return read_log(spark, os.path.join(base, "out")).select(
+        "doc_id", "status", "dup_of"
     )
 
 
@@ -1217,8 +1217,9 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src)
             )
-            return embedding_gate.run_embedding_gate_stream(
-                spark, vec_source, store, out, ckpt, fault_injector=fault
+            return run_applier_stream(
+                vec_source, embedding_gate.apply_gate_batch, store, out,
+                ckpt, fault_injector=fault,
             )
 
         def plant_debris() -> None:
@@ -1237,19 +1238,21 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
             crashed = vecs.where(
                 (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
             ).limit(3)
-            crashed.select(
-                "vec_id",
-                F.lit("near_dup").alias("status"),
-                F.lit(0).cast("bigint").alias("dup_of"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={_X1S_CRASH_BATCH}")
+            write_snapshot(
+                crashed.select(
+                    "vec_id",
+                    F.lit("near_dup").alias("status"),
+                    F.lit(0).cast("bigint").alias("dup_of"),
+                ),
+                out,
+                _X1S_CRASH_BATCH,
             )
             _, entry = embedding_gate.classify_batch(
                 spark, crashed, store
             )
             entry.write.mode("overwrite").partitionBy(
                 "band", "bucket"
-            ).parquet(os.path.join(store, f"batch_id={_X1S_CRASH_BATCH}"))
+            ).parquet(epoch_dir(store, _X1S_CRASH_BATCH))
 
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
@@ -1262,7 +1265,8 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
     survey="ext-dedup,ext-similarity",
     doc="The SemDeDup-style semantic ingestion gate under the REAL "
         "streaming runtime WITH a mid-stream crash, driver-checked: "
-        "streaming/embedding_gate.run_embedding_gate_stream runs as "
+        "streaming/embedding_gate.apply_gate_batch runs under "
+        "state_store.run_applier_stream as "
         f"readStream(maxFilesPerTrigger=1) over a {_D7X_FILES}-file "
         "ascending-vec_id source → foreachBatch classifying each "
         "micro-batch against the banded-LSH vector store (candidates "
@@ -1283,12 +1287,8 @@ def d9x_semantic_gate_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _d9x_build(spark, sf_dir)
-    out = os.path.join(base, "out")
-    return (
-        spark.read.option("basePath", out)
-        .parquet(out)
-        .drop("batch_id")
-        .select("vec_id", "status", "dup_of")
+    return read_log(spark, os.path.join(base, "out")).select(
+        "vec_id", "status", "dup_of"
     )
 
 

@@ -24,14 +24,13 @@ hash split, not just the time split).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.plans.audit import assert_no_cartesian
 from real_time_data_warehouse_spark.streaming.state_store import (
     read_snapshot,
+    write_snapshot,
     write_then_read,
 )
 
@@ -84,9 +83,7 @@ def apply_compaction_batch(
     plan = compaction_bins(merged)
     if batch_id == 0:
         assert_no_cartesian(plan, "compaction.apply_compaction_batch")
-    plan.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(plan, out_dir, batch_id)
 
 
 def compact_plan_log(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -31,6 +31,10 @@ from real_time_data_warehouse_spark.operators.textanalysis import (
     quality_frame,
 )
 from real_time_data_warehouse_spark.streaming.dedup_gate import classify_batch
+from real_time_data_warehouse_spark.streaming.state_store import (
+    write_snapshot,
+    write_then_read,
+)
 
 
 def curate_batch(
@@ -77,38 +81,15 @@ def curate_batch(
     # the decisions write IS their materialization: the admitted filter
     # reads the written bytes back (one job fewer per batch than
     # checkpoint + two writes)
-    dec_path = os.path.join(base_dir, "decisions", f"batch_id={batch_id}")
-    decisions.write.mode("overwrite").parquet(dec_path)
-    decisions = spark.read.schema("doc_id long, keep int, reason string").parquet(
-        dec_path
+    decisions = write_then_read(
+        decisions,
+        os.path.join(base_dir, "decisions"),
+        batch_id,
+        "doc_id long, keep int, reason string",
     )
     admitted = docs.join(
         decisions.where(F.col("keep") == 1).select("doc_id"), "doc_id"
     )
-    admitted.write.mode("overwrite").parquet(
-        os.path.join(base_dir, "curated", f"batch_id={batch_id}")
-    )
-    batch_entry.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(admitted, os.path.join(base_dir, "curated"), batch_id)
+    write_snapshot(batch_entry, store_dir, batch_id)
 
-
-def run_curation_stream(
-    spark: SparkSession,
-    docs_source: DataFrame,
-    store_dir: str,
-    base_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire live curation as a foreachBatch query over a streaming
-    (doc_id, text) source (ordered-batch contract as the dedup gate)."""
-    return (
-        docs_source.writeStream.foreachBatch(
-            lambda b, bid: curate_batch(
-                b.sparkSession, b, bid, store_dir, base_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

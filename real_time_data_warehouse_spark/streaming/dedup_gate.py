@@ -48,6 +48,10 @@ from real_time_data_warehouse_spark.operators.dedup import (
     _MINHASH_K,
     minhash_sigs_for,
 )
+from real_time_data_warehouse_spark.streaming.state_store import (
+    read_log,
+    write_snapshot,
+)
 
 SIG_COLS = [f"mh{j}" for j in range(_MINHASH_K)]
 _STORE_SCHEMA = "doc_id long, th string, " + ", ".join(
@@ -116,7 +120,7 @@ def _read_store(spark: SparkSession, store_dir: str) -> DataFrame:
     import glob
 
     if glob.glob(os.path.join(store_dir, "**", "*.parquet"), recursive=True):
-        return spark.read.option("basePath", store_dir).parquet(store_dir)
+        return read_log(spark, store_dir)
     return _empty_store(spark)
 
 
@@ -197,36 +201,6 @@ def apply_gate_batch(
         # one-shot (plan shape is batch-invariant): the registry-wide
         # lint skips replay queries, so the guard lives in the applier
         assert_no_cartesian(out, "dedup_gate.apply_gate_batch")
-    out.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
-    batch_entry.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(out, out_dir, batch_id)
+    write_snapshot(batch_entry, store_dir, batch_id)
 
-
-def run_dedup_gate_stream(
-    spark: SparkSession,
-    docs_source: DataFrame,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    fault_injector=None,
-):
-    """Wire the gate as an availableNow/continuous foreachBatch query over
-    a streaming (doc_id, text) source. ``fault_injector`` is a test/driver
-    hook called with the batch_id BEFORE any writes — raising from it
-    simulates a mid-stream crash so restart-from-checkpoint coverage can
-    assert the overwrite partitions heal partial epochs."""
-
-    def _body(b: DataFrame, bid: int) -> None:
-        if fault_injector is not None:
-            fault_injector(bid)
-        apply_gate_batch(b.sparkSession, b, bid, store_dir, out_dir)
-
-    return (
-        docs_source.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

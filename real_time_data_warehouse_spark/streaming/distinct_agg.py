@@ -24,22 +24,18 @@ contract, since set union is commutative and associative.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_data_warehouse_spark.streaming.state_store import read_snapshot
+from real_time_data_warehouse_spark.streaming.state_store import (
+    last_wins_log,
+    read_snapshot,
+    write_snapshot,
+    write_then_read,
+)
 
 _STATE_SCHEMA = "cur_date string, event_type string, user_id long"
 _KEY = ["cur_date", "event_type"]
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Latest snapshot with id < batch_id (replay bound), else empty."""
-    return read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
 
 
 def apply_distinct_batch(
@@ -59,19 +55,15 @@ def apply_distinct_batch(
         "event_type",
         "user_id",
     ).distinct()
-    state = _read_state(spark, state_dir, batch_id)
+    state = read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
     # the new-member flag rides IN the membership snapshot (projected
     # away by next batch's declared-schema read), so the anti-join has
     # ONE consumer (no checkpoint job) and the touched groups derive
-    # from the written bytes — 2 jobs per batch where the checkpoint
-    # form ran 3 (fold-touched-into-snapshot; guide §1.2). The count
-    # pass still PRUNES to touched groups via the broadcast semi-join,
-    # the scale-correct shape.
+    # from the written bytes (fold-touched-into-snapshot; guide §1.2;
+    # jobs per batch are pinned by tests/test_jobs_per_batch.py). The
+    # count pass still PRUNES to touched groups via the broadcast
+    # semi-join, the scale-correct shape.
     new_members = triples.join(state, [*_KEY, "user_id"], "leftanti")
-    from real_time_data_warehouse_spark.streaming.state_store import (
-        write_then_read,
-    )
-
     all_members = write_then_read(
         state.withColumn("nb", F.lit(0))
         .unionByName(new_members.withColumn("nb", F.lit(1))),
@@ -85,19 +77,11 @@ def apply_distinct_batch(
         .groupBy(*_KEY)
         .agg(F.count("*").cast("bigint").alias("uu_ct"))
     )
-    counts.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(counts, out_dir, batch_id)
 
 
 def compact_distinct_log(spark: SparkSession, out_dir: str) -> DataFrame:
     """Last-wins per (cur_date, event_type) by emitting batch."""
-    from pyspark.sql.window import Window
-
-    log = spark.read.option("basePath", out_dir).parquet(out_dir)
-    w = Window.partitionBy(*_KEY).orderBy(F.col("batch_id").desc())
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(*_KEY, F.col("uu_ct").cast("bigint").alias("uu_ct"))
+    return last_wins_log(spark, out_dir, _KEY).select(
+        *_KEY, F.col("uu_ct").cast("bigint").alias("uu_ct")
     )

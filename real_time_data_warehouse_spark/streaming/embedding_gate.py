@@ -49,6 +49,11 @@ from real_time_data_warehouse_spark.operators.similarity import (
     _banded_sig,
     dot,
 )
+from real_time_data_warehouse_spark.streaming.state_store import (
+    epoch_dir,
+    read_log,
+    write_snapshot,
+)
 
 _STORE_SCHEMA = "vec_id long, band int, bucket int, v array<double>"
 
@@ -61,7 +66,7 @@ def _read_store(spark: SparkSession, store_dir: str) -> DataFrame:
     import glob
 
     if glob.glob(os.path.join(store_dir, "**", "*.parquet"), recursive=True):
-        return spark.read.option("basePath", store_dir).parquet(store_dir)
+        return read_log(spark, store_dir)
     return _empty_store(spark)
 
 
@@ -130,38 +135,10 @@ def apply_gate_batch(
         # one-shot (plan shape is batch-invariant): the registry-wide
         # lint skips replay queries, so the guard lives in the applier
         assert_no_cartesian(out, "embedding_gate.apply_gate_batch")
-    out.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(out, out_dir, batch_id)
     # (band, bucket)-partitioned store layout: a future batch's candidate
     # read can prune to the cells it touches (8×16 dirs per batch segment)
     batch_entry.write.mode("overwrite").partitionBy("band", "bucket").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
+        epoch_dir(store_dir, batch_id)
     )
 
-
-def run_embedding_gate_stream(
-    spark: SparkSession,
-    vec_source: DataFrame,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    fault_injector=None,
-):
-    """Wire the semantic gate as a foreachBatch query over a streaming
-    (vec_id, embedding) source (ordered-batch contract as the text
-    gate). ``fault_injector`` is the same pre-write crash hook as the
-    text gate's — raising simulates a mid-stream failure for
-    restart-from-checkpoint coverage."""
-
-    def _body(b: DataFrame, bid: int) -> None:
-        if fault_injector is not None:
-            fault_injector(bid)
-        apply_gate_batch(b.sparkSession, b, bid, store_dir, out_dir)
-
-    return (
-        vec_source.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

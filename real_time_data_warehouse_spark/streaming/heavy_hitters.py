@@ -1,11 +1,12 @@
 """Streaming heavy-hitter tracker — the ingestion-time form of a13.
 
 State is a bounded Misra-Gries summary (≤ cap counters), kept as
-per-batch SNAPSHOTS: batch N reads snapshot N-1, folds its token counts
-in, applies the MG decrement if the summary overflows, and overwrites
-snapshot N. A retried batch re-reads snapshot N-1 and deterministically
-rewrites its own snapshot — the gates' retry-idempotence contract
-(streaming/dedup_gate.py) carried over to folded state.
+per-batch SNAPSHOTS (``state_store.py``): batch N reads the latest
+snapshot below N, folds its token counts in, applies the MG decrement
+if the summary overflows, and overwrites snapshot N. A retried batch
+re-reads the same pre-batch snapshot and deterministically rewrites its
+own — the gates' retry-idempotence contract (streaming/dedup_gate.py)
+carried over to folded state.
 
 The MG bound survives chunked folding: every decrement round removes
 ≥ cut·(cap+1) total mass and costs any single key ≤ cut, so across the
@@ -24,23 +25,16 @@ not data-sized.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.plans.audit import assert_no_cartesian
+from real_time_data_warehouse_spark.streaming.state_store import (
+    read_snapshot,
+    write_snapshot,
+)
 
 _STATE_SCHEMA = "w string, cnt bigint"
-
-
-def _read_snapshot(
-    spark: SparkSession, store_dir: str, batch_id: int
-) -> DataFrame:
-    path = os.path.join(store_dir, f"batch_id={batch_id}")
-    if batch_id < 0 or not os.path.isdir(path):
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.schema(_STATE_SCHEMA).parquet(path)
 
 
 def apply_hh_batch(
@@ -51,7 +45,7 @@ def apply_hh_batch(
     cap: int,
 ) -> None:
     """Fold one batch of (w) token rows into the MG summary snapshot."""
-    prev = _read_snapshot(spark, store_dir, batch_id - 1)
+    prev = read_snapshot(spark, store_dir, batch_id, _STATE_SCHEMA)
     counts = batch.groupBy("w").agg(F.count("*").cast("bigint").alias("cnt"))
     merged = (
         prev.unionByName(counts)
@@ -73,13 +67,13 @@ def apply_hh_batch(
         # one-shot (plan shape is batch-invariant): the registry-wide
         # lint skips replay queries, so the guard lives in the applier
         assert_no_cartesian(merged, "heavy_hitters.apply_hh_batch")
-    merged.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(merged, store_dir, batch_id)
 
 
 def final_candidates(
     spark: SparkSession, store_dir: str, n_batches: int
 ) -> DataFrame:
     """Candidate keys after the last fold — ≤ cap rows."""
-    return _read_snapshot(spark, store_dir, n_batches - 1).select("w")
+    return read_snapshot(spark, store_dir, n_batches, _STATE_SCHEMA).select(
+        "w"
+    )

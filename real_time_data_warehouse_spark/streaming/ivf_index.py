@@ -24,12 +24,14 @@ the vector bytes (the s14/s15 argument).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.plans.audit import assert_no_cartesian
+from real_time_data_warehouse_spark.streaming.state_store import (
+    read_log,
+    write_snapshot,
+)
 
 
 def make_ingest_applier(cents: list[tuple[int, list[float]]]):
@@ -63,9 +65,7 @@ def make_ingest_applier(cents: list[tuple[int, list[float]]]):
         )
         if batch_id == 0:
             assert_no_cartesian(rows, "ivf_index.apply_ingest_batch")
-        rows.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
+        write_snapshot(rows, out_dir, batch_id)
 
     return apply_ingest_batch
 
@@ -83,12 +83,8 @@ def make_searcher(probes: DataFrame):
             int_dot,
         )
 
-        inv = (
-            spark.read.option("basePath", out_dir)
-            .parquet(out_dir)
-            .select(
-                F.col("vec_id").alias("neighbor_id"), "cell", "ncode"
-            )
+        inv = read_log(spark, out_dir).select(
+            F.col("vec_id").alias("neighbor_id"), "cell", "ncode"
         )
         scored = (
             F.broadcast(probes)

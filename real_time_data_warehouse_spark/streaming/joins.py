@@ -101,17 +101,14 @@ import os as _os
 
 from pyspark.sql import SparkSession
 
-from real_time_data_warehouse_spark.streaming.state_store import read_snapshot
+from real_time_data_warehouse_spark.streaming.state_store import (
+    read_log,
+    read_snapshot,
+    write_snapshot,
+)
 
 _IJ_STATE_SCHEMA = "prior_id long, user_id long, ts timestamp"
 _IJ_LOOKBACK_S = 1800  # 30 minutes — one source of truth with j4
-
-
-def _read_ij_state(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Latest snapshot with id < batch_id (replay bound), else empty."""
-    return read_snapshot(spark, state_dir, batch_id, _IJ_STATE_SCHEMA)
 
 
 def apply_interval_join_batch(
@@ -135,7 +132,7 @@ def apply_interval_join_batch(
     events = batch.select(
         "event_id", "user_id", "ts", "event_type"
     ).localCheckpoint(eager=True)
-    state = _read_ij_state(spark, state_dir, batch_id)
+    state = read_snapshot(spark, state_dir, batch_id, _IJ_STATE_SCHEMA)
     all_ev = state.unionByName(
         events.select(
             F.col("event_id").alias("prior_id"), "user_id", "ts"
@@ -158,9 +155,7 @@ def apply_interval_join_batch(
     out = joined.groupBy("pay_id").agg(
         F.count("prior_id").alias("prior_events")
     )
-    out.write.mode("overwrite").parquet(
-        _os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(out, out_dir, batch_id)
     # evict: keep only the trailing lookback window (state stays O(rate
     # × lookback) forever — the watermark bound). The driver-side
     # max-ts round-trip was A/B-measured against a 1-row broadcast
@@ -171,19 +166,13 @@ def apply_interval_join_batch(
     new_state = all_ev.where(
         F.col("ts") > F.lit(mx) - F.expr(f"INTERVAL {_IJ_LOOKBACK_S} SECONDS")
     )
-    new_state.write.mode("overwrite").parquet(
-        _os.path.join(state_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(new_state, state_dir, batch_id)
 
 
 def read_interval_join_log(spark: SparkSession, out_dir: str) -> DataFrame:
     """Concatenate the append-only per-batch outputs (each purchase is
     emitted exactly once, in its own batch)."""
-    return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
-        .drop("batch_id")
-    )
+    return read_log(spark, out_dir).drop("batch_id")
 
 
 # --- incremental left-outer join (the j2s replay body) --------------------
@@ -225,7 +214,7 @@ def apply_left_outer_batch(
     ev = batch.select(
         "event_id", "user_id", "ts", "event_type"
     ).localCheckpoint(eager=True)
-    state = _read_loj_state(spark, state_dir, batch_id)
+    state = read_snapshot(spark, state_dir, batch_id, _LOJ_STATE_SCHEMA)
     new_orders = ev.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("order_id"),
         "user_id",
@@ -272,20 +261,9 @@ def apply_left_outer_batch(
     nulls = expired.where(F.col("matched") == 0).select(
         "order_id", F.lit(None).cast("long").alias("pay_id")
     )
-    pairs.unionByName(nulls).write.mode("overwrite").parquet(
-        _os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(pairs.unionByName(nulls), out_dir, batch_id)
     keep = updated.where(horizon >= F.lit(mx)) if mx else updated
-    keep.write.mode("overwrite").parquet(
-        _os.path.join(state_dir, f"batch_id={batch_id}")
-    )
-
-
-def _read_loj_state(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Latest snapshot with id < batch_id (replay bound), else empty."""
-    return read_snapshot(spark, state_dir, batch_id, _LOJ_STATE_SCHEMA)
+    write_snapshot(keep, state_dir, batch_id)
 
 
 def finalize_left_outer(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -294,13 +272,8 @@ def finalize_left_outer(spark: SparkSession, out_dir: str) -> DataFrame:
     append-only pair/null log plus the flush is the complete left-outer
     result."""
     state_dir = _loj_state_dir(out_dir)
-    pending = _read_loj_state(spark, state_dir, 1 << 30)
+    pending = read_snapshot(spark, state_dir, 1 << 30, _LOJ_STATE_SCHEMA)
     leftovers = pending.where(F.col("matched") == 0).select(
         "order_id", F.lit(None).cast("long").alias("pay_id")
     )
-    log = (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
-        .drop("batch_id")
-    )
-    return log.unionByName(leftovers)
+    return read_log(spark, out_dir).drop("batch_id").unionByName(leftovers)

@@ -23,15 +23,15 @@ and overwrites its own outputs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from real_time_data_warehouse_spark.plans.audit import assert_no_cartesian
 from real_time_data_warehouse_spark.streaming.state_store import (
+    last_wins_log,
     read_snapshot,
+    write_snapshot,
     write_then_read,
 )
 
@@ -66,9 +66,9 @@ def apply_last_wins_batch(
     # column; next batch's read_snapshot declares _STATE_SCHEMA so the
     # flag is projected away): winner and flag come from ONE window
     # pass over state ∪ batch, the out pass is a FILTER over the
-    # written bytes, and the batch needs no checkpoint of its own —
-    # 2 jobs per batch where the checkpoint + semi-join form ran 3
-    # (fold-touched-into-snapshot; guide §1.2, §2.4).
+    # written bytes, and the batch needs no checkpoint of its own
+    # (fold-touched-into-snapshot; guide §1.2, §2.4; jobs per batch
+    # are pinned by tests/test_jobs_per_batch.py).
     # INVARIANT: keys (user_id, event_type) are non-null — the flag
     # filter groups NULL keys where the replaced semi-join would have
     # silently dropped them; the fixtures and the st1 oracle share the
@@ -94,47 +94,16 @@ def apply_last_wins_batch(
     )
     if batch_id == 0:
         assert_no_cartesian(out, "last_wins.apply_last_wins_batch")
-    out.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(out, out_dir, batch_id)
 
 
 def compact_last_wins_log(spark: SparkSession, out_dir: str) -> DataFrame:
     """Last-wins per business key by emitting batch — the winner row of
     the latest batch that touched each key."""
-    log = spark.read.option("basePath", out_dir).parquet(out_dir)
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.col("batch_id").desc()
-    )
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "event_type",
-            F.col("last_event_id").cast("bigint").alias("last_event_id"),
-            F.col("last_value").cast("double").alias("last_value"),
-        )
+    return last_wins_log(spark, out_dir, ["user_id", "event_type"]).select(
+        "user_id",
+        "event_type",
+        F.col("last_event_id").cast("bigint").alias("last_event_id"),
+        F.col("last_value").cast("double").alias("last_value"),
     )
 
-
-def run_last_wins_stream(
-    spark: SparkSession,
-    event_source: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire last-write-wins dedup as a foreachBatch query over a
-    streaming (event_id, user_id, event_type, ts, value) source — no
-    ordering contract (order-free fold)."""
-    return (
-        event_source.writeStream.foreachBatch(
-            lambda b, bid: apply_last_wins_batch(
-                b.sparkSession, b, bid, state_dir, out_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

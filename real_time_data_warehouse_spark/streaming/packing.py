@@ -21,8 +21,6 @@ doc_id ranges per batch (as the gates).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,16 +33,12 @@ from real_time_data_warehouse_spark.operators.curation import (
     _PACK_SHARDS,
 )
 
-from real_time_data_warehouse_spark.streaming.state_store import read_snapshot
+from real_time_data_warehouse_spark.streaming.state_store import (
+    read_snapshot,
+    write_snapshot,
+)
 
 _STATE_SCHEMA = "shard long, cum_tokens long"
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Latest snapshot with id < batch_id (replay bound), else empty."""
-    return read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
 
 
 def apply_pack_batch(
@@ -66,7 +60,7 @@ def apply_pack_batch(
         )
         .localCheckpoint(eager=True)
     )
-    state = _read_state(spark, state_dir, batch_id)
+    state = read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
     base = state.select("shard", F.col("cum_tokens").alias("base"))
     w = (
         Window.partitionBy("shard")
@@ -88,9 +82,7 @@ def apply_pack_batch(
         # one-shot (plan shape is batch-invariant): the registry-wide
         # lint skips replay queries, so the guard lives in the applier
         assert_no_cartesian(out, "packing.apply_pack_batch")
-    out.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(out, out_dir, batch_id)
     batch_totals = docs.groupBy("shard").agg(
         F.sum("n_tokens").alias("batch_tokens")
     )
@@ -104,27 +96,5 @@ def apply_pack_batch(
             ).alias("cum_tokens"),
         )
     )
-    new_state.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(new_state, state_dir, batch_id)
 
-
-def run_pack_stream(
-    spark: SparkSession,
-    docs_source: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire incremental packing as a foreachBatch query over a streaming
-    (doc_id, text) source (ordered-batch contract as the gates)."""
-    return (
-        docs_source.writeStream.foreachBatch(
-            lambda b, bid: apply_pack_batch(
-                b.sparkSession, b, bid, state_dir, out_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

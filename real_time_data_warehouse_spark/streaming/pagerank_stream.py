@@ -116,9 +116,7 @@ def apply_pagerank_batch(
     write_snapshot(new_last, last_dir, batch_id)
     if batch_id == 0:
         assert_no_cartesian(edges, "pagerank_stream.apply_pagerank_batch")
-    edges.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(edges, out_dir, batch_id)
 
 
 def pagerank_from_log(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -27,6 +27,10 @@ from pyspark.sql.types import (
 from real_time_data_warehouse_spark.functions.money import dec
 from real_time_data_warehouse_spark.functions.time import tumble, window_meta
 from real_time_data_warehouse_spark.session import tune
+from real_time_data_warehouse_spark.streaming.state_store import (
+    epoch_dir,
+    write_snapshot,
+)
 
 # events schema as the streaming file source sees it (ts arrives as bigint
 # nanos under nanosAsLong — same normalization as tables.load).
@@ -180,9 +184,7 @@ def run_log_split_stream(
         batch.persist()
         try:
             for side, df in log_split(batch).items():
-                df.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, side, f"batch_id={batch_id}")
-                )
+                write_snapshot(df, os.path.join(out_dir, side), batch_id)
         finally:
             batch.unpersist()
 
@@ -237,7 +239,7 @@ def run_dynamic_routing_stream(
         ).drop("source_type")
         # per-epoch overwrite → retried batches replace, never duplicate
         routed.write.mode("overwrite").partitionBy("sink_table").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
+            epoch_dir(out_dir, batch_id)
         )
 
     return (

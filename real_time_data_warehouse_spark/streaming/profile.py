@@ -30,8 +30,6 @@ snapshot and overwrite their outputs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +37,7 @@ from real_time_data_warehouse_spark.functions.money import dec4
 from real_time_data_warehouse_spark.functions.text import tokenize
 from real_time_data_warehouse_spark.streaming.state_store import (
     read_snapshot,
+    write_snapshot,
 )
 
 _STATE_SCHEMA = (
@@ -103,9 +102,7 @@ def apply_profile_batch(
             .alias("quality_sum"),
         )
     )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(merged, out_dir, batch_id)
 
 
 def rollup_profile(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -128,23 +125,3 @@ def rollup_profile(spark: SparkSession, out_dir: str) -> DataFrame:
         .alias("mean_quality"),
     )
 
-
-def run_profile_stream(
-    spark: SparkSession,
-    docs_source: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire incremental profiling as a foreachBatch query over a
-    streaming (doc_id, text, source) source."""
-    return (
-        docs_source.writeStream.foreachBatch(
-            lambda b, bid: apply_profile_batch(
-                b.sparkSession, b, bid, state_dir, out_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

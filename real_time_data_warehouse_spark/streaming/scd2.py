@@ -36,26 +36,22 @@ Batch ≡ stream equivalence is driver-checked by the
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.plans.audit import assert_no_cartesian
 from pyspark.sql.window import Window
 
-from real_time_data_warehouse_spark.streaming.state_store import read_snapshot
+from real_time_data_warehouse_spark.streaming.state_store import (
+    last_wins_log,
+    read_snapshot,
+    write_snapshot,
+    write_then_read,
+)
 
 _STATE_SCHEMA = (
     "user_id long, event_type string, valid_from timestamp, version int"
 )
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Latest snapshot with id < batch_id (replay bound), else empty."""
-    return read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
 
 
 def apply_scd2_batch(
@@ -71,7 +67,7 @@ def apply_scd2_batch(
     events = batch.select(
         "user_id", "event_type", "ts", "event_id"
     ).localCheckpoint(eager=True)
-    state = _read_state(spark, state_dir, batch_id)
+    state = read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
     touched_users = events.select("user_id").distinct()
     carried = state.join(F.broadcast(touched_users), "user_id", "leftsemi")
     untouched = state.join(F.broadcast(touched_users), "user_id", "leftanti")
@@ -141,62 +137,32 @@ def apply_scd2_batch(
     # the out-partition write IS the touched-versions materialization:
     # the open-interval snapshot derives from the written bytes instead
     # of a separate checkpoint job (one job fewer per batch)
-    out_path = os.path.join(out_dir, f"batch_id={batch_id}")
-    intervals.write.mode("overwrite").parquet(out_path)
-    intervals = spark.read.schema(
+    intervals = write_then_read(
+        intervals,
+        out_dir,
+        batch_id,
         "user_id long, event_type string, valid_from timestamp, "
-        "valid_to timestamp, version int"
-    ).parquet(out_path)
+        "valid_to timestamp, version int",
+    )
     new_open = intervals.where(F.col("valid_to").isNull()).select(
         "user_id", "event_type", "valid_from", "version"
     )
-    untouched.unionByName(new_open).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(untouched.unionByName(new_open), state_dir, batch_id)
 
 
 def compact_scd2_log(spark: SparkSession, out_dir: str) -> DataFrame:
     """Materialize the interval table from the per-batch upsert log:
     last-wins per (user_id, version) by emitting batch — the ST1 dedup
     applied to the SCD2 stream — then derive is_current."""
-    log = spark.read.option("basePath", out_dir).parquet(out_dir)
-    w = Window.partitionBy("user_id", "version").orderBy(
-        F.col("batch_id").desc()
-    )
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "event_type",
-            "valid_from",
-            "valid_to",
-            F.col("version").cast("int").alias("version"),
-            F.when(F.col("valid_to").isNull(), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("is_current"),
-        )
+    return last_wins_log(spark, out_dir, ["user_id", "version"]).select(
+        "user_id",
+        "event_type",
+        "valid_from",
+        "valid_to",
+        F.col("version").cast("int").alias("version"),
+        F.when(F.col("valid_to").isNull(), 1)
+        .otherwise(0)
+        .cast("int")
+        .alias("is_current"),
     )
 
-
-def run_scd2_stream(
-    spark: SparkSession,
-    event_source: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire SCD2 maintenance as a foreachBatch query over a streaming
-    (user_id, event_type, ts, event_id) source (ordered-batch contract
-    as the gates)."""
-    return (
-        event_source.writeStream.foreachBatch(
-            lambda b, bid: apply_scd2_batch(
-                b.sparkSession, b, bid, state_dir, out_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

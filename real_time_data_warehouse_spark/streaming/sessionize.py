@@ -35,8 +35,6 @@ the st13 oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -46,19 +44,17 @@ from real_time_data_warehouse_spark.functions.money import dec
 # one source of truth with the batch query
 from real_time_data_warehouse_spark.operators.stateful import SESSION_GAP_S
 
-from real_time_data_warehouse_spark.streaming.state_store import read_snapshot
+from real_time_data_warehouse_spark.streaming.state_store import (
+    last_wins_log,
+    read_snapshot,
+    write_snapshot,
+    write_then_read,
+)
 
 _STATE_SCHEMA = (
     "user_id long, session_seq int, session_start timestamp, "
     "last_ts timestamp, n_events long, value_sum decimal(18,2)"
 )
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Latest snapshot with id < batch_id (replay bound), else empty."""
-    return read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
 
 
 def apply_session_batch(
@@ -75,7 +71,7 @@ def apply_session_batch(
     events = batch.select(
         "user_id", "ts", "value", "event_id"
     ).localCheckpoint(eager=True)
-    state = _read_state(spark, state_dir, batch_id)
+    state = read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
     touched_users = events.select("user_id").distinct()
     carried = state.join(F.broadcast(touched_users), "user_id", "leftsemi")
     untouched = state.join(F.broadcast(touched_users), "user_id", "leftanti")
@@ -136,12 +132,13 @@ def apply_session_batch(
         F.sum("contrib_n").cast("long").alias("n_events"),
         F.sum("contrib_sum").cast("decimal(18,2)").alias("value_sum"),
     )
-    out_path = os.path.join(out_dir, f"batch_id={batch_id}")
-    sessions.write.mode("overwrite").parquet(out_path)
-    sessions = spark.read.schema(
+    sessions = write_then_read(
+        sessions,
+        out_dir,
+        batch_id,
         "user_id long, session_seq int, session_start timestamp, "
-        "session_end timestamp, n_events long, value_sum decimal(18,2)"
-    ).parquet(out_path)
+        "session_end timestamp, n_events long, value_sum decimal(18,2)",
+    )
     w_last = Window.partitionBy("user_id").orderBy(
         F.col("session_seq").desc()
     )
@@ -157,50 +154,19 @@ def apply_session_batch(
             "value_sum",
         )
     )
-    untouched.unionByName(new_open).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(untouched.unionByName(new_open), state_dir, batch_id)
 
 
 def compact_session_log(spark: SparkSession, out_dir: str) -> DataFrame:
     """Materialize the session table from the per-batch upsert log:
     last-wins per (user_id, session_seq) by emitting batch — a session
     extended across batches keeps only its final totals."""
-    log = spark.read.option("basePath", out_dir).parquet(out_dir)
-    w = Window.partitionBy("user_id", "session_seq").orderBy(
-        F.col("batch_id").desc()
-    )
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("session_seq").cast("int").alias("session_seq"),
-            "session_start",
-            "session_end",
-            F.col("n_events").cast("long").alias("n_events"),
-            F.col("value_sum").cast("double").alias("value_sum"),
-        )
+    return last_wins_log(spark, out_dir, ["user_id", "session_seq"]).select(
+        "user_id",
+        F.col("session_seq").cast("int").alias("session_seq"),
+        "session_start",
+        "session_end",
+        F.col("n_events").cast("long").alias("n_events"),
+        F.col("value_sum").cast("double").alias("value_sum"),
     )
 
-
-def run_session_stream(
-    spark: SparkSession,
-    event_source: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire sessionization as a foreachBatch query over a streaming
-    (user_id, ts, value, event_id) source (ordered-batch contract as
-    the other gates)."""
-    return (
-        event_source.writeStream.foreachBatch(
-            lambda b, bid: apply_session_batch(
-                b.sparkSession, b, bid, state_dir, out_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

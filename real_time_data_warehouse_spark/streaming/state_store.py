@@ -1,21 +1,28 @@
-"""Shared parquet snapshot-store reader for the incremental streaming
-appliers (window_agg, distinct_agg, sessionize, joins, packing, scd2,
-user_state).
+"""Owner of the per-batch epoch layout every incremental streaming
+applier, replay harness and ``foreachBatch`` sink in this package uses.
 
-Every applier keeps its keyed state as per-batch snapshot directories
-``<state_dir>/batch_id=N`` and follows the same replay discipline: batch
-N reads the LATEST snapshot with id < N and overwrites snapshot N and
-output partition N, so a retried batch re-reads the pre-batch state and
-is idempotent. The "latest id < batch_id" scan was copy-pasted per
-module; this is the single shared implementation (only the empty-state
-schema differs per caller).
+Layout: a batch's state snapshot and its output partition live at
+``<dir>/batch_id=N`` (``epoch_dir``). Batch N reads the LATEST snapshot
+with id < N (``read_snapshot`` — the replay bound) and overwrites its
+own snapshot and output partition (``write_snapshot`` /
+``write_then_read``), so a retried batch re-reads the pre-batch state
+and is idempotent: the per-epoch overwrite that gives Structured
+Streaming's file sinks exactly-once output. No other module builds a
+``batch_id=`` path.
 
-NOTE for readers of the snapshot files: snapshots may carry extra
-APPLIER-PRIVATE columns beyond the logical state (e.g. the ``tb``/``nb``
-touched-key provenance flags the fold-touched appliers persist). Every
-reader must project through its caller-declared schema — as
-``read_snapshot`` does — never ``spark.read.parquet`` with inferred
-schema over a state dir.
+Logs: ``read_log`` reads every epoch under a directory with
+``batch_id`` as a partition column; upsert logs compact with
+``last_wins_log`` (per key, the row of the latest emitting batch).
+``run_applier_stream`` wires an applier
+``(spark, batch, batch_id, state_dir, out_dir)`` as a ``foreachBatch``
+query, the same body the ``_replay_batches`` rows drive.
+
+Readers must project through a declared schema: snapshots may carry
+extra APPLIER-PRIVATE columns beyond the logical state (e.g. the
+``tb``/``nb`` touched-key flags the fold-touched appliers persist), so
+every snapshot read passes its caller's schema — as ``read_snapshot``
+does — never ``spark.read.parquet`` with an inferred schema over a
+state dir.
 """
 
 from __future__ import annotations
@@ -24,6 +31,13 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+
+def epoch_dir(base: str, batch_id: int) -> str:
+    """The directory of epoch *batch_id* under *base*."""
+    return os.path.join(base, f"batch_id={batch_id}")
 
 
 def read_snapshot(
@@ -41,17 +55,14 @@ def read_snapshot(
             if m and int(m.group(1)) < batch_id:
                 best = max(best, int(m.group(1)))
     if best >= 0:
-        return spark.read.schema(schema).parquet(
-            os.path.join(state_dir, f"batch_id={best}")
-        )
+        return spark.read.schema(schema).parquet(epoch_dir(state_dir, best))
     return spark.createDataFrame([], schema)
 
 
 def write_snapshot(df: DataFrame, state_dir: str, batch_id: int) -> None:
-    """Overwrite snapshot *batch_id* (idempotent under replay)."""
-    df.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={batch_id}")
-    )
+    """Overwrite epoch *batch_id* of a state or output dir (idempotent
+    under replay)."""
+    df.write.mode("overwrite").parquet(epoch_dir(state_dir, batch_id))
 
 
 def write_then_read(
@@ -65,5 +76,52 @@ def write_then_read(
     read-back is the same bytes the checkpoint would have held."""
     write_snapshot(df, state_dir, batch_id)
     return df.sparkSession.read.schema(schema).parquet(
-        os.path.join(state_dir, f"batch_id={batch_id}")
+        epoch_dir(state_dir, batch_id)
+    )
+
+
+def read_log(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every epoch under *out_dir*, ``batch_id`` as a partition column."""
+    return spark.read.option("basePath", out_dir).parquet(out_dir)
+
+
+def last_wins_log(
+    spark: SparkSession, out_dir: str, keys: list[str]
+) -> DataFrame:
+    """Compact an upsert log: per *keys*, the row of the latest batch
+    that emitted the key."""
+    w = Window.partitionBy(*keys).orderBy(F.col("batch_id").desc())
+    return (
+        read_log(spark, out_dir)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def run_applier_stream(
+    source: DataFrame,
+    apply_batch,
+    state_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    fault_injector=None,
+):
+    """Run ``apply_batch(spark, batch, batch_id, state_dir, out_dir)``
+    as an availableNow ``foreachBatch`` query over the streaming
+    *source*. ``fault_injector`` is a crash hook called with the
+    batch_id BEFORE any write — raising from it simulates a mid-stream
+    crash, so restart-from-checkpoint coverage can assert that the
+    overwritten epochs heal partial output."""
+
+    def body(batch: DataFrame, batch_id: int) -> None:
+        if fault_injector is not None:
+            fault_injector(batch_id)
+        apply_batch(batch.sparkSession, batch, batch_id, state_dir, out_dir)
+
+    return (
+        source.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )

@@ -53,6 +53,7 @@ from real_time_data_warehouse_spark.sources.cdc import (
     parse_maxwell,
 )
 from real_time_data_warehouse_spark.streaming.sinks import upsert_versioned
+from real_time_data_warehouse_spark.streaming.state_store import write_snapshot
 
 
 def stream_cdc_values(spark: SparkSession, path: str) -> DataFrame:
@@ -107,9 +108,7 @@ def run_trade_pipeline(
     dwd = dwd_trade_order(stream_cdc_values(spark, ods_path), dim_user_province)
 
     def dwd_sink(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(dwd_dir, f"batch_id={batch_id}")
-        )
+        write_snapshot(batch, dwd_dir, batch_id)
 
     with _no_data_batches_off(spark):
         q1 = (

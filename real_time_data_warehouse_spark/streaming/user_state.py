@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from real_time_data_warehouse_spark.streaming.state_store import (
+    last_wins_log,
     read_snapshot,
     write_snapshot,
     write_then_read,
@@ -93,9 +94,7 @@ def apply_visitor_batch(
         F.date_format("d", "yyyy-MM-dd").alias("visit_date"),
         (F.col("d") == F.col("first_d")).cast("int").alias("is_new"),
     )
-    out.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(out, out_dir, batch_id)
 
 
 # --- ST5: returning-user / daily-UU accumulation --------------------------
@@ -188,12 +187,14 @@ def apply_returning_batch(
         batch_id,
         _DAY_STATE_SCHEMA + ", tb int",
     )
-    new_dstate.where(F.col("tb") == 1).select(
-        F.date_format("d", "yyyy-MM-dd").alias("cur_date"),
-        "uu_ct",
-        "back_ct",
-    ).write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
+    write_snapshot(
+        new_dstate.where(F.col("tb") == 1).select(
+            F.date_format("d", "yyyy-MM-dd").alias("cur_date"),
+            "uu_ct",
+            "back_ct",
+        ),
+        out_dir,
+        batch_id,
     )
     new_ustate = (
         ustate.unionByName(
@@ -208,57 +209,9 @@ def apply_returning_batch(
 def compact_returning_log(spark: SparkSession, out_dir: str) -> DataFrame:
     """Last-wins per cur_date by emitting batch — the accumulated
     counts of the latest batch that touched each date."""
-    log = spark.read.option("basePath", out_dir).parquet(out_dir)
-    w = Window.partitionBy("cur_date").orderBy(F.col("batch_id").desc())
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "cur_date",
-            F.col("uu_ct").cast("bigint").alias("uu_ct"),
-            F.col("back_ct").cast("bigint").alias("back_ct"),
-        )
+    return last_wins_log(spark, out_dir, ["cur_date"]).select(
+        "cur_date",
+        F.col("uu_ct").cast("bigint").alias("uu_ct"),
+        F.col("back_ct").cast("bigint").alias("back_ct"),
     )
 
-
-def run_visitor_stream(
-    spark: SparkSession,
-    event_source: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire the visitor-flag repair as a foreachBatch query over a
-    streaming (event_id, user_id, ts) source (time-ordered-batch
-    contract as the other carried-state gates)."""
-    return (
-        event_source.writeStream.foreachBatch(
-            lambda b, bid: apply_visitor_batch(
-                b.sparkSession, b, bid, state_dir, out_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_returning_stream(
-    spark: SparkSession,
-    event_source: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire returning-user detection as a foreachBatch query over a
-    streaming (user_id, ts, event_type) source."""
-    return (
-        event_source.writeStream.foreachBatch(
-            lambda b, bid: apply_returning_batch(
-                b.sparkSession, b, bid, state_dir, out_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 
 from real_time_data_warehouse_spark.plans.audit import assert_no_cartesian
 from real_time_data_warehouse_spark.streaming.state_store import (
+    last_wins_log,
     read_snapshot,
     write_snapshot,
     write_then_read,
@@ -63,8 +64,8 @@ def apply_daily_uv_batch(
     # DERIVED from the written set — uv_ct(d) is by definition the
     # number of (user, d) members, so the separate day-counter store
     # the original form maintained (1 read + 1 write per batch) held
-    # nothing the membership set doesn't already say. 3 jobs per batch
-    # where the checkpoint-per-frame form ran 6.
+    # nothing the membership set doesn't already say. Jobs per batch
+    # are pinned by tests/test_jobs_per_batch.py.
     pairs = batch.select(
         "user_id", F.to_date(F.date_trunc("day", "ts")).alias("d")
     ).distinct()
@@ -72,8 +73,7 @@ def apply_daily_uv_batch(
     # the new-member flag rides IN the membership snapshot (projected
     # away by next batch's declared-schema read), so the anti-join has
     # ONE consumer (no checkpoint job) and touched days derive from the
-    # written bytes — 2 jobs per batch where the checkpoint form ran 3
-    # (fold-touched-into-snapshot; guide §1.2).
+    # written bytes (fold-touched-into-snapshot; guide §1.2).
     new = pairs.join(seen, ["user_id", "d"], "left_anti")
     all_seen = write_then_read(
         seen.withColumn("nb", F.lit(0))
@@ -91,19 +91,13 @@ def apply_daily_uv_batch(
     )
     if batch_id == 0:
         assert_no_cartesian(out, "visit_stats.apply_daily_uv_batch")
-    out.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(out, out_dir, batch_id)
 
 
 def compact_daily_uv_log(spark: SparkSession, out_dir: str) -> DataFrame:
     """Last-wins per cur_date by emitting batch."""
-    log = spark.read.option("basePath", out_dir).parquet(out_dir)
-    w = Window.partitionBy("cur_date").orderBy(F.col("batch_id").desc())
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("cur_date", F.col("uv_ct").cast("bigint").alias("uv_ct"))
+    return last_wins_log(spark, out_dir, ["cur_date"]).select(
+        "cur_date", F.col("uv_ct").cast("bigint").alias("uv_ct")
     )
 
 
@@ -150,10 +144,10 @@ def apply_session_count_batch(
     # the snapshot write IS the state materialization, and the
     # touched-user flag (batch side present in the full join) rides IN
     # the snapshot — per_user has ONE consumer (no checkpoint job) and
-    # the out pass filters the written bytes: 2 jobs per batch where
-    # the checkpoint + semi-join form ran 3 (fold-touched-into-
-    # snapshot; guide §1.2). Next batch's declared-schema read projects
-    # the flag away. INVARIANT: user_id is non-null (the flag filter
+    # the out pass filters the written bytes (fold-touched-into-
+    # snapshot; guide §1.2; jobs per batch are pinned by
+    # tests/test_jobs_per_batch.py). Next batch's declared-schema read
+    # projects the flag away. INVARIANT: user_id is non-null (the flag filter
     # groups NULL keys where the old semi-join dropped them; the
     # fixtures guarantee non-null user_id, so the forms agree — see
     # last_wins.py).
@@ -177,19 +171,11 @@ def apply_session_count_batch(
     )
     if batch_id == 0:
         assert_no_cartesian(out, "visit_stats.apply_session_count_batch")
-    out.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_snapshot(out, out_dir, batch_id)
 
 
 def compact_session_log(spark: SparkSession, out_dir: str) -> DataFrame:
     """Last-wins per user by emitting batch."""
-    log = spark.read.option("basePath", out_dir).parquet(out_dir)
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "user_id", F.col("session_ct").cast("bigint").alias("session_ct")
-        )
+    return last_wins_log(spark, out_dir, ["user_id"]).select(
+        "user_id", F.col("session_ct").cast("bigint").alias("session_ct")
     )

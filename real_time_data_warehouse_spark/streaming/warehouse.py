@@ -23,6 +23,7 @@ from real_time_data_warehouse_spark.streaming.pipelines import (
     log_split,
     stream_events,
 )
+from real_time_data_warehouse_spark.streaming.state_store import write_snapshot
 
 
 def run_warehouse(
@@ -42,9 +43,7 @@ def run_warehouse(
         try:
             for side, df in log_split(batch).items():
                 # epoch-overwrite: a retried batch replaces partial output
-                df.write.mode("overwrite").parquet(
-                    os.path.join(dwd_dir, side, f"batch_id={batch_id}")
-                )
+                write_snapshot(df, os.path.join(dwd_dir, side), batch_id)
         finally:
             batch.unpersist()
 

@@ -26,8 +26,6 @@ touched keys.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +33,10 @@ from real_time_data_warehouse_spark.functions.money import dec
 from real_time_data_warehouse_spark.functions.time import tumble
 
 from real_time_data_warehouse_spark.streaming.state_store import (
+    last_wins_log,
     read_snapshot,
+    write_snapshot,
+    write_then_read,
 )
 
 _STATE_SCHEMA = (
@@ -43,13 +44,6 @@ _STATE_SCHEMA = (
     "order_amount decimal(18,2), order_ct long"
 )
 _KEY = ["wstart", "sku_group"]
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, batch_id: int
-) -> DataFrame:
-    """Latest snapshot with id < batch_id (replay bound), else empty."""
-    return read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
 
 
 def apply_window_batch(
@@ -76,22 +70,19 @@ def apply_window_batch(
             F.col("order_ct").alias("p_ct"),
         )
     )
-    state = _read_state(spark, state_dir, batch_id)
+    state = read_snapshot(spark, state_dir, batch_id, _STATE_SCHEMA)
     # one keyed FULL join merges carried totals with the batch partials
     # (a + 0.00 / a + b — the identical two-term decimal adds the
     # union + re-aggregate form computed), and the touched flag (batch
     # side present) rides IN the snapshot. part has ONE consumer (no
     # checkpoint job), the semi/anti broadcast pair is gone, and the
-    # out pass filters the written bytes — 2 jobs per batch where the
-    # checkpoint form ran 3 (fold-touched-into-snapshot; guide §1.2,
-    # §2.4). Next batch's declared-schema read projects the flag away.
+    # out pass filters the written bytes (fold-touched-into-snapshot;
+    # guide §1.2, §2.4; jobs per batch are pinned by
+    # tests/test_jobs_per_batch.py). Next batch's declared-schema read
+    # projects the flag away.
     # INVARIANT: the window/key columns are non-null (the flag filter
     # groups NULL keys where the old semi-join dropped them;
     # fixture-guaranteed — see last_wins.py).
-    from real_time_data_warehouse_spark.streaming.state_store import (
-        write_then_read,
-    )
-
     zero = F.lit(0).cast("decimal(18,2)")
     merged_all = write_then_read(
         state.join(part, _KEY, "full").select(
@@ -112,10 +103,12 @@ def apply_window_batch(
         batch_id,
         _STATE_SCHEMA + ", tb int",
     )
-    merged_all.where(F.col("tb") == 1).select(
-        "wstart", "sku_group", "order_amount", "order_ct"
-    ).write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
+    write_snapshot(
+        merged_all.where(F.col("tb") == 1).select(
+            "wstart", "sku_group", "order_amount", "order_ct"
+        ),
+        out_dir,
+        batch_id,
     )
 
 
@@ -124,16 +117,8 @@ def compact_window_log(spark: SparkSession, out_dir: str) -> DataFrame:
     (last-wins per group by emitting batch), stamped with the same
     stt/edt/cur_date metadata and column types the a1 batch query
     emits."""
-    from pyspark.sql.window import Window
-
-    log = spark.read.option("basePath", out_dir).parquet(out_dir)
-    w = Window.partitionBy(*_KEY).orderBy(F.col("batch_id").desc())
-    last = (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-    )
     wend = F.col("wstart") + F.expr("INTERVAL 10 SECONDS")
-    return last.select(
+    return last_wins_log(spark, out_dir, _KEY).select(
         F.date_format("wstart", "yyyy-MM-dd HH:mm:ss").alias("stt"),
         F.date_format(wend, "yyyy-MM-dd HH:mm:ss").alias("edt"),
         F.date_format("wstart", "yyyy-MM-dd").alias("cur_date"),
@@ -142,24 +127,3 @@ def compact_window_log(spark: SparkSession, out_dir: str) -> DataFrame:
         F.col("order_ct").cast("long").alias("order_ct"),
     )
 
-
-def run_window_stream(
-    spark: SparkSession,
-    event_source: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Wire the incremental windowed sum as a foreachBatch query over a
-    streaming (ts, event_type, value) source. No ordering contract —
-    the merge is order-independent."""
-    return (
-        event_source.writeStream.foreachBatch(
-            lambda b, bid: apply_window_batch(
-                b.sparkSession, b, bid, state_dir, out_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

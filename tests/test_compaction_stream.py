@@ -15,6 +15,10 @@ from real_time_data_warehouse_spark.streaming.compaction import (
     apply_compaction_batch,
     compact_plan_log,
 )
+from real_time_data_warehouse_spark.streaming.state_store import (
+    last_wins_log,
+    read_log,
+)
 from real_time_data_warehouse_spark.tables import Tables
 from tests.conftest import SF_DIR
 
@@ -99,3 +103,24 @@ def test_empty_batches_are_harmless(spark, tmp_path_factory):
     got = _as_map(compact_plan_log(spark, out))
     exp = _as_map(_one_pass(spark))
     assert got == exp
+
+
+def test_latest_generation_equals_last_wins_over_all(spark, tmp_path_factory):
+    """The full-re-emit invariant behind compact_plan_log: every batch
+    re-plans the whole (only-growing) catalog, so the latest generation
+    alone equals last-wins per (day, hour) over ALL generations."""
+    t = Tables(spark, SF_DIR)
+    rows = t.events.select("event_id", "ts", "props")
+    base = str(tmp_path_factory.mktemp(f"cmp_{uuid.uuid4().hex[:8]}"))
+    latest = _as_map(_replay(spark, rows, "event_id", 3, base))
+    out = os.path.join(base, "out")
+    assert read_log(spark, out).select("batch_id").distinct().count() == 3
+    every = last_wins_log(spark, out, ["day", "hour"]).select(
+        "day",
+        "hour",
+        F.col("n_rows").cast("bigint").alias("n_rows"),
+        F.col("bytes").cast("bigint").alias("bytes"),
+        F.col("cum_bytes").cast("bigint").alias("cum_bytes"),
+        F.col("bin_id").cast("bigint").alias("bin_id"),
+    )
+    assert latest == _as_map(every)

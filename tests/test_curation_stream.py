@@ -6,7 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, query_map
-from real_time_data_warehouse_spark.streaming.curation import run_curation_stream
+from real_time_data_warehouse_spark.streaming.curation import curate_batch
+from real_time_data_warehouse_spark.streaming.state_store import run_applier_stream
 from tests.conftest import SF_DIR
 from tests.test_dedup_gate import _write_batches
 
@@ -33,7 +34,7 @@ def test_streaming_curation_matches_c1(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_curation_stream(spark, stream, store, base, ckpt)
+    q = run_applier_stream(stream, curate_batch, store, base, ckpt)
     q.awaitTermination(240)
 
     got = {

@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 from real_time_data_warehouse_spark.operators.dedup import dedup_gate_batch
 from real_time_data_warehouse_spark.streaming.dedup_gate import (
     apply_gate_batch,
-    run_dedup_gate_stream,
 )
+from real_time_data_warehouse_spark.streaming.state_store import run_applier_stream
 from real_time_data_warehouse_spark.tables import Tables
 from tests.conftest import SF_DIR
 
@@ -72,7 +72,7 @@ def test_streaming_gate_matches_batch_query(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_dedup_gate_stream(spark, stream, store, out, ckpt)
+    q = run_applier_stream(stream, apply_gate_batch, store, out, ckpt)
     q.awaitTermination(240)
 
     got = {

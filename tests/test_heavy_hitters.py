@@ -131,6 +131,9 @@ class TestStreamingFold:
         # gates' retry contract): snapshot N depends only on snapshot
         # N-1 and the batch content
         from real_time_data_warehouse_spark.streaming import heavy_hitters as hh
+        from real_time_data_warehouse_spark.streaming.state_store import (
+            read_snapshot,
+        )
 
         store = str(tmp_path / "hh_store")
         half = zipf_stream.limit(2000).select("w")
@@ -138,11 +141,11 @@ class TestStreamingFold:
         hh.apply_hh_batch(spark, zipf_stream.select("w"), 1, store, cap=4 * K)
         snap1 = sorted(
             (r["w"], r["cnt"])
-            for r in hh._read_snapshot(spark, store, 1).collect()
+            for r in read_snapshot(spark, store, 2, hh._STATE_SCHEMA).collect()
         )
         hh.apply_hh_batch(spark, zipf_stream.select("w"), 1, store, cap=4 * K)
         snap1_retry = sorted(
             (r["w"], r["cnt"])
-            for r in hh._read_snapshot(spark, store, 1).collect()
+            for r in read_snapshot(spark, store, 2, hh._STATE_SCHEMA).collect()
         )
         assert snap1 == snap1_retry

@@ -16,6 +16,7 @@ from real_time_data_warehouse_spark.streaming.last_wins import (
     apply_last_wins_batch,
     compact_last_wins_log,
 )
+from real_time_data_warehouse_spark.streaming.state_store import run_applier_stream
 from real_time_data_warehouse_spark.tables import Tables
 from tests.conftest import SF_DIR
 
@@ -121,15 +122,11 @@ def test_planted_winners(spark, tmp_path):
 
 def test_last_wins_readstream_matches_batch(spark, tmp_path):
     """End-to-end Structured Streaming: a file-source stream (one file
-    per micro-batch) through run_last_wins_stream must compact to the
+    per micro-batch) through run_applier_stream must compact to the
     one-pass st1 result. Files are id-split — the order-free fold needs
     no arrival-order contract."""
     import os
     import shutil
-
-    from real_time_data_warehouse_spark.streaming.last_wins import (
-        run_last_wins_stream,
-    )
 
     ev = _events(spark)
     span = ev.agg(F.max("event_id")).first()[0] + 1
@@ -157,7 +154,7 @@ def test_last_wins_readstream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q2 = run_last_wins_stream(spark, stream, state, out, ckpt)
+    q2 = run_applier_stream(stream, apply_last_wins_batch, state, out, ckpt)
     q2.awaitTermination(240)
     from real_time_data_warehouse_spark.streaming.last_wins import (
         compact_last_wins_log,

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, query_map
 from real_time_data_warehouse_spark.streaming.packing import (
     apply_pack_batch,
-    run_pack_stream,
 )
+from real_time_data_warehouse_spark.streaming.state_store import run_applier_stream
 from real_time_data_warehouse_spark.tables import Tables
 from tests.conftest import SF_DIR
 from tests.test_dedup_gate import _write_batches
@@ -46,7 +46,7 @@ def test_streaming_packing_matches_c3(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_pack_stream(spark, stream, state, out, ckpt)
+    q = run_applier_stream(stream, apply_pack_batch, state, out, ckpt)
     q.awaitTermination(240)
     expected = _expected(spark)
     got = _got(spark, out)

@@ -126,3 +126,22 @@ def test_unbounded_global_window_detector_edges(spark):
         F.row_number().over(Window.partitionBy(F.lit(1)).orderBy("doc_id")),
     )
     assert len(unbounded_global_windows(lit_part)) == 1
+
+
+def test_epoch_paths_only_in_state_store():
+    """streaming/state_store.py owns the ``batch_id=N`` epoch layout:
+    no other package module spells an epoch path by hand."""
+    import real_time_data_warehouse_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    owner = os.path.join(root, "streaming", "state_store.py")
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == owner:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                if 'f"batch_id={' in fh.read():
+                    offenders.append(os.path.relpath(path, root))
+    assert not offenders, f"hand-built epoch paths in {sorted(offenders)}"

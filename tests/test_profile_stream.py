@@ -10,8 +10,8 @@ from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, query_map
 from real_time_data_warehouse_spark.streaming.profile import (
     apply_profile_batch,
     rollup_profile,
-    run_profile_stream,
 )
+from real_time_data_warehouse_spark.streaming.state_store import run_applier_stream
 from real_time_data_warehouse_spark.tables import Tables
 from tests.conftest import SF_DIR
 from tests.test_dedup_gate import _write_batches
@@ -88,6 +88,6 @@ def test_profile_readstream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_profile_stream(spark, stream, state, out, ckpt)
+    q = run_applier_stream(stream, apply_profile_batch, state, out, ckpt)
     q.awaitTermination(240)
     assert _got(spark, out) == _expected(spark)

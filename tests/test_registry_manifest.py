@@ -115,3 +115,32 @@ def test_query_and_oracle_maps_follow_manifest():
     assert list(query_map()) == list(MANIFEST)
     oracles = oracle_map()
     assert list(oracles) == [n for n in MANIFEST if n in oracles]
+
+
+# Replay rows answer to their one-pass batch twin's oracle, verbatim.
+REPLAY_TWINS = {
+    "d7s_dedup_gate_replay": "d7_dedup_gate",
+    "d9s_semantic_gate_replay": "d9_semantic_gate",
+    "st8s_scd2_replay": "st8_scd2_intervals",
+    "a13s_heavy_hitters_replay": "a13_heavy_hitters",
+    "st13s_session_replay": "st13_sessionization",
+    "a1s_windowed_sum_replay": "a1_windowed_sum",
+    "j4s_interval_join_replay": "j4_interval_join",
+    "a5s_windowed_uu_replay": "a5_windowed_uu",
+    "st3s_visitor_fix_replay": "st3_visitor_state_fix",
+    "st5s_returning_user_replay": "st5_returning_user",
+    "c10s_profile_replay": "c10_corpus_profile",
+    "st1s_dedup_last_wins_replay": "st1_dedup_last_wins",
+    "st4s_daily_uv_replay": "st4_first_per_day_uv",
+    "st6s_session_count_replay": "st6_session_count",
+    "z3s_compaction_replay": "z3_compaction_plan",
+    "s15s_ivf_ingest_replay": "s15_ivf_sq8_topk",
+    "g1s_pagerank_replay": "g1_pagerank",
+}
+
+
+def test_replay_rows_carry_batch_twin_oracle():
+    registry = ordered_registry()
+    for replay, twin in REPLAY_TWINS.items():
+        assert registry[twin].oracle is not None, twin
+        assert registry[replay].oracle == registry[twin].oracle, replay

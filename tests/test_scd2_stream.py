@@ -15,8 +15,8 @@ from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, query_map
 from real_time_data_warehouse_spark.streaming.scd2 import (
     apply_scd2_batch,
     compact_scd2_log,
-    run_scd2_stream,
 )
+from real_time_data_warehouse_spark.streaming.state_store import run_applier_stream
 from real_time_data_warehouse_spark.tables import Tables
 from tests.conftest import SF_DIR
 
@@ -136,7 +136,7 @@ def test_scd2_stream_wire(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_scd2_stream(spark, stream, state, out, ckpt)
+    q = run_applier_stream(stream, apply_scd2_batch, state, out, ckpt)
     q.awaitTermination(240)
     assert _got(spark, out) == _expected(spark)
 

@@ -18,6 +18,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, query_map
+from real_time_data_warehouse_spark.streaming.state_store import run_applier_stream
 from real_time_data_warehouse_spark.streaming.user_state import (
     apply_returning_batch,
     apply_visitor_batch,
@@ -235,10 +236,6 @@ def _write_time_batches(spark, events, src, n_batches=3):
 
 
 def test_visitor_readstream_matches_batch(spark, tmp_path):
-    from real_time_data_warehouse_spark.streaming.user_state import (
-        run_visitor_stream,
-    )
-
     ev = (
         Tables(spark, SF_DIR)
         .events.select("event_id", "user_id", "ts")
@@ -256,7 +253,7 @@ def test_visitor_readstream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_visitor_stream(spark, stream, state, out, ckpt)
+    q = run_applier_stream(stream, apply_visitor_batch, state, out, ckpt)
     q.awaitTermination(240)
     got = {
         (r["event_id"], r["user_id"], r["visit_date"], r["is_new"])
@@ -266,10 +263,6 @@ def test_visitor_readstream_matches_batch(spark, tmp_path):
 
 
 def test_returning_readstream_matches_batch(spark, tmp_path):
-    from real_time_data_warehouse_spark.streaming.user_state import (
-        run_returning_stream,
-    )
-
     ev = (
         Tables(spark, SF_DIR)
         .events.select("user_id", "ts", "event_type")
@@ -289,7 +282,7 @@ def test_returning_readstream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_returning_stream(spark, stream, state, out, ckpt)
+    q = run_applier_stream(stream, apply_returning_batch, state, out, ckpt)
     q.awaitTermination(240)
     got = {
         (r["cur_date"], r["uu_ct"], r["back_ct"])
