@@ -13,26 +13,32 @@ query_map()  # force registration
 ALL = sorted(QUERY_REGISTRY)
 
 
-@pytest.mark.parametrize("name", ALL)
-def test_no_decimal_in_output_schema(spark, name):
+@pytest.fixture(scope="module", params=ALL)
+def built(request, spark):
+    """(query, frame) of one registry row, built ONCE for both checks
+    below. Module scope groups a row's two tests together, so a row
+    whose fn runs real work (a replay fold, a streaming build) pays for
+    it once per module instead of once per check."""
+    q = QUERY_REGISTRY[request.param]
+    return q, q.fn(spark, SF_DIR)
+
+
+def test_no_decimal_in_output_schema(built):
     """Repo-wide decimal discipline: computed decimals are cast to DOUBLE at
     exact scale (functions/money.py) before surfacing. A DecimalType output
     hashes differently across engines (Decimal('31.40') vs 31.4) under the
     driver's exact comparator even when values are equal."""
     from pyspark.sql.types import DecimalType
 
-    q = QUERY_REGISTRY[name]
-    df = q.fn(spark, SF_DIR)
+    q, df = built
     bad = [f.name for f in df.schema.fields if isinstance(f.dataType, DecimalType)]
-    assert not bad, f"{name}: DecimalType output columns {bad} — cast to DOUBLE"
+    assert not bad, f"{q.name}: DecimalType output columns {bad} — cast to DOUBLE"
 
 
-@pytest.mark.parametrize("name", ALL)
-def test_query_parity(spark, duck, name):
-    q = QUERY_REGISTRY[name]
-    df = q.fn(spark, SF_DIR)
+def test_query_parity(duck, built):
+    q, df = built
     if q.oracle is None:
         assert df.count() >= 0  # rows-only check, mirrors the driver
         return
     ok, msg = compare(df, duck, q.oracle)
-    assert ok, f"{name}: {msg}"
+    assert ok, f"{q.name}: {msg}"

@@ -39,9 +39,20 @@ REPLAYS = {
 }
 
 
-@pytest.mark.parametrize("name", [n for n in ALL if n not in REPLAYS])
-def test_no_cartesian_product(spark, name):
-    df = QUERY_REGISTRY[name].fn(spark, SF_DIR)
+LINTED = [n for n in ALL if n not in REPLAYS]
+
+
+@pytest.fixture(scope="module", params=LINTED)
+def linted(request, spark):
+    """(name, frame) of one registry row, built ONCE for the three
+    lints below. Module scope groups the three tests of a row together,
+    so a row whose fn runs real work (a replay fold, a streaming build)
+    pays for it once per module instead of once per lint."""
+    return request.param, QUERY_REGISTRY[request.param].fn(spark, SF_DIR)
+
+
+def test_no_cartesian_product(linted):
+    name, df = linted
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan, f"{name} plans a CartesianProduct"
 
@@ -53,8 +64,7 @@ def test_no_cartesian_product(spark, name):
 GLOBAL_WINDOW_BOUNDED_BY_DESIGN = {"z3_compaction_plan"}
 
 
-@pytest.mark.parametrize("name", [n for n in ALL if n not in REPLAYS])
-def test_global_windows_are_bounded(spark, name):
+def test_global_windows_are_bounded(linted):
     """No partition-less Window may run over an un-limited input: that
     shape serializes the whole dataset through ONE task at 100 TB even
     when the small-SF answer is correct. Global windows over top-K /
@@ -64,15 +74,14 @@ def test_global_windows_are_bounded(spark, name):
         unbounded_global_windows,
     )
 
+    name, df = linted
     if name in GLOBAL_WINDOW_BOUNDED_BY_DESIGN:
         pytest.skip("bounded by design; documented at the call site")
-    df = QUERY_REGISTRY[name].fn(spark, SF_DIR)
     offenders = unbounded_global_windows(df)
     assert not offenders, f"{name}: unbounded global window(s): {offenders}"
 
 
-@pytest.mark.parametrize("name", [n for n in ALL if n not in REPLAYS])
-def test_output_columns_are_scalar(spark, name):
+def test_output_columns_are_scalar(linted):
     """Driver hash-comparability: every output column must be a scalar
     type. Array/map/struct outputs hash engine-dependently (element
     order, struct field rendering) under the driver's sorted-column
@@ -81,7 +90,7 @@ def test_output_columns_are_scalar(spark, name):
     called); their scalar schemas are pinned by the parity suite."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    df = QUERY_REGISTRY[name].fn(spark, SF_DIR)
+    name, df = linted
     bad = [
         f.name
         for f in df.schema.fields
