@@ -109,6 +109,7 @@ from real_time_data_warehouse_spark.operators.streaming_exec import (
     _await,
     _sliced_source,
     _stream_shuffle_partitions,
+    _write_time_sliced_source,
 )
 from real_time_data_warehouse_spark.registry import register
 from real_time_data_warehouse_spark.streaming.state_store import (
@@ -914,7 +915,8 @@ def app4s_dim_app_stream_chain(
 # --------------------------------------------------------------------------
 # app5s: DwdBaseLog — P2 dirty side-output + ST3 keyed visitor repair +
 # X1/X1b 5-way split with child explode, as ONE streaming query fanning
-# out to 6 sinks, with a mid-stream crash + checkpoint restart
+# out to 6 sides of one side-partitioned sink, with a mid-stream crash +
+# checkpoint restart
 # --------------------------------------------------------------------------
 
 # Generator rule for the injected dirty rows: every 53rd event's props
@@ -924,7 +926,8 @@ def app4s_dim_app_stream_chain(
 # so a generator drift fails the build instead of silently breaking
 # parity.
 _APP5_DIRTY_MOD = _APP_PARAMS["app5_dirty_mod"]
-_APP5_SIDES = ("dirty", "err", "start", "display", "action", "page")
+# data columns of the app5s sink (batch_id and side are its partitions)
+_APP5_SINK_SCHEMA = "event_id bigint, user_id bigint, is_new int"
 
 
 def _app5_source(spark: SparkSession, sf_dir: str) -> str:
@@ -932,23 +935,20 @@ def _app5_source(spark: SparkSession, sf_dir: str) -> str:
     every _APP5_DIRTY_MOD-th row's props mangled into invalid JSON (the
     dirty-data the reference's ETL side-outputs, DwdBaseLog.java:88-117).
     No replay duplicates and no sentinel: DwdBaseLog has no dedup and no
-    watermark-gated operator — its keyed state (ST3) emits per batch."""
+    watermark-gated operator — its keyed state (ST3) emits per batch.
+    Sliced exactly like the shared source, in the same single write."""
+
+    def mangle(wire: DataFrame) -> DataFrame:
+        return wire.withColumn(
+            "props",
+            F.when(
+                F.col("event_id") % _APP5_DIRTY_MOD == 0,
+                F.concat(F.lit("{corrupt::"), F.col("props")),
+            ).otherwise(F.col("props")),
+        )
 
     def build(base: str) -> None:
-        src0 = _sliced_source(spark, sf_dir, _SRC_FILES)
-        files = sorted(glob.glob(src0 + "/*.parquet"), key=os.path.getmtime)
-        now = time.time()
-        for i, f in enumerate(files):
-            df = spark.read.parquet(f).withColumn(
-                "props",
-                F.when(
-                    F.col("event_id") % _APP5_DIRTY_MOD == 0,
-                    F.concat(F.lit("{corrupt::"), F.col("props")),
-                ).otherwise(F.col("props")),
-            )
-            _write_single_file(
-                df, base, f"batch_{i}.parquet", now - len(files) + i
-            )
+        _write_time_sliced_source(spark, sf_dir, base, _SRC_FILES, mangle)
         # oracle-rule ≡ stream-rule guard: every non-mangled row must be
         # VALID json and every mangled row invalid, or the id-rule
         # oracle and the validity-detecting stream diverge
@@ -963,9 +963,6 @@ def _app5_source(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return _artifact_dir(spark, sf_dir, "app5src", build)
-
-
-_APP5_OUTPUT = None  # built lazily: pyspark.sql.types import kept local
 
 
 def _app5_schemas():
@@ -1035,6 +1032,7 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
         _run_crash_restart,
     )
     from real_time_data_warehouse_spark.streaming.pipelines import (
+        log_side,
         stream_events,
     )
 
@@ -1048,39 +1046,31 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
         def body(b: DataFrame, bid: int, fault) -> None:
             if fault is not None:
                 fault(bid)
+            # P2 + X1: one CASE routes every row (dirty first, then the
+            # X1 5-way split); event types no side carries drop out
+            side = F.when(F.col("dirty") == 1, "dirty").otherwise(log_side())
             # X1b child arrays: the reference explodes displays[]/
             # actions[] out of page logs (:230-270); the analog derives
             # the child count from props.k — JSON parsed natively, once
-            b = b.withColumn(
-                "k", F.get_json_object("props", "$.k").try_cast("int")
-            ).localCheckpoint(eager=True)  # one pass for all 6 sinks
-            clean = b.where(F.col("dirty") == 0)
-            sides = {
-                "dirty": b.where(F.col("dirty") == 1),
-                "err": clean.where(F.col("event_type") == "error"),
-                "start": clean.where(F.col("event_type") == "signup"),
-                "page": clean.where(F.col("event_type") == "purchase"),
-                "display": clean.where(F.col("event_type") == "view")
-                .withColumn(
-                    "pos",
-                    F.explode(
-                        F.sequence(F.lit(0), F.pmod(F.col("k"), F.lit(3)))
-                    ),
-                ),
-                "action": clean.where(F.col("event_type") == "click")
-                .withColumn(
-                    "pos",
-                    F.explode(
-                        F.sequence(F.lit(0), F.pmod(F.col("k"), F.lit(2)))
-                    ),
-                ),
-            }
-            for side, df in sides.items():
-                write_snapshot(
-                    df.select("event_id", "user_id", "is_new"),
-                    os.path.join(out, side),
-                    bid,
-                )
+            k = F.get_json_object("props", "$.k").try_cast("int")
+            last = (
+                F.when(F.col("side") == "display", F.pmod(k, F.lit(3)))
+                .when(F.col("side") == "action", F.pmod(k, F.lit(2)))
+                .otherwise(F.lit(0))
+            )
+            routed = (
+                b.withColumn("side", side)
+                .where(F.col("side").isNotNull())
+                .withColumn("pos", F.explode(F.sequence(F.lit(0), last)))
+            )
+            # ONE write per epoch: the keyed-state plan runs once, not
+            # once per side
+            write_snapshot(
+                routed.select("event_id", "user_id", "is_new", "side"),
+                out,
+                bid,
+                partition_by="side",
+            )
 
         def start(fault):
             ev = stream_events(spark, src)
@@ -1111,12 +1101,15 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
 
         def plant_debris() -> None:
             # partial file a mid-write crash leaves in the crashed
-            # epoch's action sink — the retry must REPLACE it
+            # epoch's side=action dir — the retry must REPLACE it
             ev = Tables(spark, sf_dir).events
             debris = ev.where(F.col("event_type") == "click").limit(9).select(
-                "event_id", "user_id", F.lit(9).cast("int").alias("is_new")
+                "event_id",
+                "user_id",
+                F.lit(9).cast("int").alias("is_new"),
+                F.lit("action").alias("side"),
             )
-            write_snapshot(debris, os.path.join(out, "action"), 2)
+            write_snapshot(debris, out, 2, partition_by="side")
 
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
             q2 = _run_crash_restart(spark, start, plant_debris)
@@ -1142,14 +1135,15 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
         "of Flink's pre-keyBy side output) → the 5-way split with "
         "display/action child-record EXPLOSION (X1/X1b, :192-295; "
         "k%3+1 display children, k%2+1 action children from props) "
-        "fanning out to 6 per-epoch-overwrite parquet sinks in "
-        "foreachBatch. A one-shot fault crashes epoch 2 after two "
-        "committed epochs, debris is planted in the crashed epoch's "
-        "action sink, and the restart replays from the checkpointed "
+        "fanning out to 6 sides of ONE side-partitioned per-epoch-"
+        "overwrite parquet write in foreachBatch (one job per epoch). "
+        "A one-shot fault crashes epoch 2 after two committed epochs, "
+        "debris is planted in the crashed epoch's side=action dir, and "
+        "the restart replays from the checkpointed "
         "keyed state — per-side aggregates (rows, id checksum, "
         "distinct users, SUM(is_new) — the repaired flags) must equal "
         "the composed batch oracle, certifying exactly-once across "
-        "the 6-sink fan-out AND cross-batch keyed-state replay.",
+        "the 6-way fan-out AND cross-batch keyed-state replay.",
     oracle=f"""
         WITH base AS (
             SELECT event_id, user_id, event_type, ts,
@@ -1199,21 +1193,13 @@ def app5s_base_log_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app5s_build(spark, sf_dir)
-    out = os.path.join(base, "out")
-    per_side = [
-        spark.read.parquet(os.path.join(out, side)).agg(
-            F.lit(side).alias("side"),
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum("event_id").cast("bigint").alias("id_sum"),
-            F.countDistinct("user_id").cast("bigint").alias("uu"),
-            F.sum("is_new").cast("bigint").alias("new_sum"),
-        )
-        for side in _APP5_SIDES
-    ]
-    res = per_side[0]
-    for df in per_side[1:]:
-        res = res.unionAll(df)
-    return res
+    back = read_log(spark, os.path.join(base, "out"), _APP5_SINK_SCHEMA)
+    return back.groupBy("side").agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.sum("event_id").cast("bigint").alias("id_sum"),
+        F.countDistinct("user_id").cast("bigint").alias("uu"),
+        F.sum("is_new").cast("bigint").alias("new_sum"),
+    )
 
 
 # --------------------------------------------------------------------------

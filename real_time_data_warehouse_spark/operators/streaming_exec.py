@@ -102,13 +102,19 @@ def _events_wire(ev: DataFrame) -> DataFrame:
 
 
 def _write_time_sliced_source(
-    spark: SparkSession, sf_dir: str, src: str, n_files: int
+    spark: SparkSession,
+    sf_dir: str,
+    src: str,
+    n_files: int,
+    transform=None,
 ) -> None:
     """events → ``n_files`` single-file parquet slices of ascending,
     non-overlapping event-time ranges (one file per micro-batch under
     maxFilesPerTrigger=1). Time-ordered batches are what make the
     watermark genuinely ADVANCE between micro-batches — the property
     every real-streaming driver row here exists to exercise.
+    ``transform`` (wire frame → wire frame, ts untouched) rewrites the
+    rows inside the same write, e.g. app5s's mangled props.
 
     One write job for all slices: hash-repartition on the slice id puts
     each slice in exactly one task, so partitionBy emits ONE file per
@@ -122,7 +128,10 @@ def _write_time_sliced_source(
     span = (hi - lo) + 1
     # all-integer slice id (wire ts is ns): exact µs via `div`, then
     # floor((us - lo) * n / span) — no doubles anywhere near a boundary
-    sliced = _events_wire(ev).withColumn(
+    wire = _events_wire(ev)
+    if transform is not None:
+        wire = transform(wire)
+    sliced = wire.withColumn(
         "b",
         F.expr(
             f"CAST(least({n_files - 1}, "
@@ -792,13 +801,12 @@ def st18_dws_update_upsert_readback(
 # --- mid-stream crash + checkpoint restart ----------------------------------
 
 _X1S_CRASH_BATCH = 2  # mid-stream: two epochs committed before the crash
-_X1S_SIDES = {
-    "err": "error",
-    "start": "signup",
-    "display": "view",
-    "action": "click",
-    "page": "purchase",
-}
+# data columns of the x1s/x2s sinks: the streamed events (batch_id and
+# the routing column are partition columns)
+_EV_SINK_SCHEMA = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+    "value double, props string"
+)
 
 
 def _crash_once(crash_batch: int):
@@ -878,11 +886,15 @@ def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
 
         def plant_debris() -> None:
             # partial file a mid-write crash leaves: a few purchase rows
-            # already landed in the crashed epoch's 'page' dir — the
+            # already landed in the crashed epoch's side=page dir — the
             # retry must REPLACE them, not append beside them
             ev = Tables(spark, sf_dir).events
-            debris = ev.where(F.col("event_type") == "purchase").limit(7)
-            write_snapshot(debris, os.path.join(out, "page"), _X1S_CRASH_BATCH)
+            debris = (
+                ev.where(F.col("event_type") == "purchase")
+                .limit(7)
+                .withColumn("side", F.lit("page"))
+            )
+            write_snapshot(debris, out, _X1S_CRASH_BATCH, partition_by="side")
 
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
@@ -897,15 +909,17 @@ def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
         "driver-checked: the DwdBaseLog 5-way side-output fan-out "
         "(streaming/pipelines.run_log_split_stream — reference "
         f"DwdBaseLog.java:192-295) runs as readStream over the "
-        f"{_SRC_FILES}-file time-ordered source → foreachBatch persisting "
-        "each micro-batch once and writing 5 per-epoch parquet sinks. A "
+        f"{_SRC_FILES}-file time-ordered source → foreachBatch tagging "
+        "each row with its side and writing ONE side-partitioned "
+        "per-epoch-overwrite parquet frame (one write job per epoch). A "
         f"one-shot fault injector crashes epoch {_X1S_CRASH_BATCH}'s "
         "first attempt AFTER two epochs committed; partial-write debris "
         "is planted in the crashed epoch's output; the query restarts "
-        "from the same checkpoint. All 5 sinks are then read back and "
-        "aggregated to per-side row counts + id checksums + distinct "
-        "users against the batch x1 oracle — a green row certifies "
-        "exactly-once across the 5-sink foreachBatch under failure: "
+        "from the same checkpoint. The sink is then read back in one "
+        "declared-schema scan and aggregated per side to row counts + id "
+        "checksums + distinct users against the batch x1 oracle — a "
+        "green row certifies exactly-once across the 5-way foreachBatch "
+        "fan-out under failure: "
         "epoch replay overwrote the debris, committed epochs did not "
         "re-emit, no side lost rows.",
     oracle="""
@@ -932,20 +946,12 @@ def x1s_log_split_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _x1s_build(spark, sf_dir)
-    out = os.path.join(base, "out")
-    per_side = [
-        spark.read.parquet(os.path.join(out, side)).agg(
-            F.lit(side).alias("side"),
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum("event_id").cast("bigint").alias("id_sum"),
-            F.countDistinct("user_id").cast("bigint").alias("uu"),
-        )
-        for side in _X1S_SIDES
-    ]
-    back = per_side[0]
-    for df in per_side[1:]:
-        back = back.unionAll(df)
-    return back
+    back = read_log(spark, os.path.join(base, "out"), _EV_SINK_SCHEMA)
+    return back.groupBy("side").agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.sum("event_id").cast("bigint").alias("id_sum"),
+        F.countDistinct("user_id").cast("bigint").alias("uu"),
+    )
 
 
 # --- x2s: X2 config-driven dynamic routing under the REAL runtime, with
@@ -978,13 +984,16 @@ def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
             )
 
         def plant_debris() -> None:
-            debris = os.path.join(
-                epoch_dir(out, _X1S_CRASH_BATCH), "sink_table=dwd_action_log"
-            )
             ev = Tables(spark, sf_dir).events
-            ev.where(F.col("event_type") == "click").limit(5).drop(
-                "event_type"
-            ).write.mode("overwrite").parquet(debris)
+            debris = (
+                ev.where(F.col("event_type") == "click")
+                .limit(5)
+                .drop("event_type")
+                .withColumn("sink_table", F.lit("dwd_action_log"))
+            )
+            write_snapshot(
+                debris, out, _X1S_CRASH_BATCH, partition_by="sink_table"
+            )
 
         with _stream_shuffle_partitions(spark):
             _run_crash_restart(spark, start, plant_debris)
@@ -1000,7 +1009,8 @@ def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
         "pipelines.run_dynamic_routing_stream — reference DwdBaseDb."
         "java:43-110 + FlinkSinkUtil.java:44-65) joins each micro-batch "
         "against the broadcast routing config and lands rows under their "
-        "routed sink_table partition, per-epoch overwrite dirs. One "
+        "routed sink_table partition of ONE per-epoch-overwrite write "
+        "(static, so a retry replaces every sink_table of the epoch). One "
         "event type is deliberately absent from the config, so dropped-"
         "unrouted is part of the checked property. A one-shot fault "
         f"crashes epoch {_X1S_CRASH_BATCH} after two committed epochs, "
@@ -1029,7 +1039,7 @@ def x2s_dynamic_routing_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _x2s_build(spark, sf_dir)
-    back = read_log(spark, os.path.join(base, "out"))
+    back = read_log(spark, os.path.join(base, "out"), _EV_SINK_SCHEMA)
     return back.groupBy("sink_table").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum("event_id").cast("bigint").alias("id_sum"),

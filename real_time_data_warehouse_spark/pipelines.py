@@ -87,7 +87,8 @@ APP_TOPOLOGIES: tuple[AppTopology, ...] = (
         "explode + new/old visitor repair (:121-188; streaming form "
         "streaming/stateful.visitor_fix). app5s runs the WHOLE app as ONE "
         "streaming query — dirty side-output + keyed ST3 repair + split "
-        "with child explode into 6 sinks, with crash+checkpoint restart — "
+        "with child explode into 6 sides of one side-partitioned sink, "
+        "with crash+checkpoint restart — "
         "against a composed oracle.",
     ),
     AppTopology(

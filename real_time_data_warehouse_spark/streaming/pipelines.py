@@ -5,16 +5,14 @@ the streaming shell is: file/kafka source → transform → sink. Tests run the
 same transform in batch for the equivalence check.
 
 Scale notes: watermarks bound all state (the reference's StateTtlConfig
-analogs — SURVEY.md §4); `foreachBatch` persists the micro-batch once and
-fans out to N sinks (the side-output pattern X1) — one pass over the data,
-N predicate scans, no shuffle.
+analogs — SURVEY.md §4); `foreachBatch` tags each row of the micro-batch
+with its side and writes ONE side-partitioned frame per epoch (the
+side-output pattern X1) — one pass over the data, one write, no shuffle.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -28,7 +26,6 @@ from real_time_data_warehouse_spark.functions.money import dec
 from real_time_data_warehouse_spark.functions.time import tumble, window_meta
 from real_time_data_warehouse_spark.session import tune
 from real_time_data_warehouse_spark.streaming.state_store import (
-    epoch_dir,
     write_snapshot,
 )
 
@@ -69,20 +66,31 @@ def stream_events(
 # ---------------------------------------------------------------------------
 
 
+# X1 routing: DwdBaseLog side → the event type it carries
+LOG_SIDES = {
+    "err": "error",
+    "start": "signup",
+    "display": "view",
+    "action": "click",
+    "page": "purchase",
+}
+
+
 def log_split(events: DataFrame) -> dict[str, DataFrame]:
     """X1: the DwdBaseLog 5-way split (DwdBaseLog.java:192-295) as five
     derived DataFrames over one parsed stream."""
-    sides = {
-        "err": "error",
-        "start": "signup",
-        "display": "view",
-        "action": "click",
-        "page": "purchase",
-    }
     return {
         side: events.where(F.col("event_type") == etype)
-        for side, etype in sides.items()
+        for side, etype in LOG_SIDES.items()
     }
+
+
+def log_side() -> Column:
+    """X1 as ONE column: the side a row routes to, NULL for an event
+    type no side carries — the single-frame form of ``log_split`` that
+    fan-out sinks partition by."""
+    cases = " ".join(f"WHEN '{e}' THEN '{s}'" for s, e in LOG_SIDES.items())
+    return F.expr(f"CASE event_type {cases} END")
 
 
 def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -164,29 +172,29 @@ def run_log_split_stream(
     checkpoint_dir: str,
     fault_injector=None,
 ):
-    """DwdBaseLog shell: one source → foreachBatch → 5 parquet sinks.
-    The micro-batch is persisted once and scanned per side — the Spark
-    equivalent of Flink side outputs (one pass, no duplicate source read).
+    """DwdBaseLog shell: one source → foreachBatch → one parquet sink
+    partitioned by ``side`` (``log_side``) — the Spark form of Flink side
+    outputs: one pass and ONE write job per epoch for all five sides.
 
-    Exactly-once across failures: each side writes to its own
-    ``batch_id=N`` partition directory with overwrite, so a retry of the
-    same epoch (after a mid-batch crash) REPLACES any partial output
-    instead of appending next to it. Checkpoint replay + idempotent batch
-    writes = end-to-end exactly-once on a plain file sink (the Delta path
-    gets the same property from its transaction log). ``fault_injector``
-    is a test hook called with each batch_id before writing.
+    Exactly-once across failures: each epoch writes its own
+    ``batch_id=N`` directory with a static overwrite, so a retry of the
+    same epoch (after a mid-batch crash) REPLACES any partial output of
+    every side instead of appending next to it. Checkpoint replay +
+    idempotent batch writes = end-to-end exactly-once on a plain file
+    sink (the Delta path gets the same property from its transaction
+    log). Read a side back as ``read_log(...).where(side == ...)``.
+    ``fault_injector`` is a test hook called with each batch_id before
+    writing.
     """
     events = stream_events(spark, src_path)
 
     def sink_batch(batch: DataFrame, batch_id: int) -> None:
         if fault_injector is not None:
             fault_injector(batch_id)
-        batch.persist()
-        try:
-            for side, df in log_split(batch).items():
-                write_snapshot(df, os.path.join(out_dir, side), batch_id)
-        finally:
-            batch.unpersist()
+        routed = batch.withColumn("side", log_side()).where(
+            F.col("side").isNotNull()
+        )
+        write_snapshot(routed, out_dir, batch_id, partition_by="side")
 
     return (
         events.writeStream.foreachBatch(sink_batch)
@@ -223,9 +231,10 @@ def run_dynamic_routing_stream(
     kafka column (sources/kafka.with_dynamic_topic is the Kafka form).
 
     Exactly-once across failures mirrors ``run_log_split_stream``: each
-    epoch writes its own ``batch_id=N`` dir with overwrite, so a retried
-    epoch replaces partial output. ``fault_injector`` is a test/driver
-    hook called with each batch_id before any write."""
+    epoch overwrites its own ``batch_id=N`` dir (static, whatever the
+    session's partitionOverwriteMode), so a retried epoch replaces the
+    partial output of every routed sink_table. ``fault_injector`` is a
+    test/driver hook called with each batch_id before any write."""
     events = stream_events(spark, src_path)
 
     def sink_batch(batch: DataFrame, batch_id: int) -> None:
@@ -238,9 +247,7 @@ def run_dynamic_routing_stream(
             F.broadcast(config), batch["event_type"] == config["source_type"]
         ).drop("source_type")
         # per-epoch overwrite → retried batches replace, never duplicate
-        routed.write.mode("overwrite").partitionBy("sink_table").parquet(
-            epoch_dir(out_dir, batch_id)
-        )
+        write_snapshot(routed, out_dir, batch_id, partition_by="sink_table")
 
     return (
         events.writeStream.foreachBatch(sink_batch)

@@ -10,6 +10,16 @@ and is idempotent: the per-epoch overwrite that gives Structured
 Streaming's file sinks exactly-once output. No other module builds a
 ``batch_id=`` path.
 
+Fan-out sinks (one micro-batch routed to several sides) write ONE frame
+per epoch with a routing column, partitioned by it
+(``write_snapshot(..., partition_by="side")`` →
+``<dir>/batch_id=N/side=S``): one write job per epoch instead of one
+per side. The epoch write pins ``partitionOverwriteMode=static``, so a
+retried epoch replaces EVERY routed partition of the epoch, whatever
+the session sets: under ``dynamic`` a retry that routes no rows to some
+side would leave that side's partial output from the failed attempt
+beside the replay — a silent duplicate.
+
 Logs: ``read_log`` reads every epoch under a directory with
 ``batch_id`` as a partition column; upsert logs compact with
 ``last_wins_log`` (per key, the row of the latest emitting batch).
@@ -59,10 +69,19 @@ def read_snapshot(
     return spark.createDataFrame([], schema)
 
 
-def write_snapshot(df: DataFrame, state_dir: str, batch_id: int) -> None:
+def write_snapshot(
+    df: DataFrame,
+    state_dir: str,
+    batch_id: int,
+    partition_by: str | None = None,
+) -> None:
     """Overwrite epoch *batch_id* of a state or output dir (idempotent
-    under replay)."""
-    df.write.mode("overwrite").parquet(epoch_dir(state_dir, batch_id))
+    under replay), partitioned by the *partition_by* column if given.
+    The whole epoch is replaced (static overwrite, pinned per write)."""
+    w = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    if partition_by is not None:
+        w = w.partitionBy(partition_by)
+    w.parquet(epoch_dir(state_dir, batch_id))
 
 
 def write_then_read(
@@ -80,9 +99,16 @@ def write_then_read(
     )
 
 
-def read_log(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Every epoch under *out_dir*, ``batch_id`` as a partition column."""
-    return spark.read.option("basePath", out_dir).parquet(out_dir)
+def read_log(
+    spark: SparkSession, out_dir: str, schema: str | None = None
+) -> DataFrame:
+    """Every epoch under *out_dir*, ``batch_id`` (and any column the
+    epochs were partitioned by) as a partition column. A declared
+    *schema* of the data columns skips the parquet-footer job."""
+    reader = spark.read.option("basePath", out_dir)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(out_dir)
 
 
 def last_wins_log(

@@ -30,7 +30,13 @@ def run_warehouse(
     spark: SparkSession, ods_path: str, base_dir: str
 ) -> dict[str, str]:
     """Run ODS→DWD→DWS→ADS once over the available ODS files, each layer a
-    real streaming query with its own checkpoint. Returns layer paths."""
+    real streaming query with its own checkpoint. Returns layer paths.
+
+    The DWD split keeps one directory per side (``dwd/<side>/batch_id=N``)
+    rather than the one side-partitioned epoch write of
+    ``run_log_split_stream``: the DWS layer streams ``dwd/page`` as its
+    file source, and a file source over one side-partitioned tree would
+    list every side's files each trigger to keep only the page rows."""
     dwd_dir = os.path.join(base_dir, "dwd")
     dws_path = os.path.join(base_dir, "dws_traffic_window")
     paths = {"dwd": dwd_dir, "dws": dws_path}

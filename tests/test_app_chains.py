@@ -270,21 +270,26 @@ def test_app5s_matches_composed_oracle(spark):
 
 def test_app5s_source_dirty_rule_and_sides(spark):
     """The injected dirty rows exist (the P2 side output is
-    load-bearing), every side dir is written, and the crashed epoch's
+    load-bearing), every side is written, and the crashed epoch's
     planted debris (is_new=9 rows) was REPLACED by the replay."""
     from real_time_data_warehouse_spark.operators.app_chains import (
-        _APP5_SIDES,
+        _APP5_SINK_SCHEMA,
         _app5s_build,
+    )
+    from real_time_data_warehouse_spark.streaming.pipelines import LOG_SIDES
+    from real_time_data_warehouse_spark.streaming.state_store import (
+        read_log,
     )
 
     base = _app5s_build(spark, SF_DIR)
-    out = os.path.join(base, "out")
-    assert sorted(os.listdir(out)) == sorted(_APP5_SIDES)
-    dirty = spark.read.parquet(os.path.join(out, "dirty"))
+    log = read_log(spark, os.path.join(base, "out"), _APP5_SINK_SCHEMA)
+    sides = {r["side"] for r in log.select("side").distinct().collect()}
+    assert sides == {"dirty", *LOG_SIDES}
+    dirty = log.where(F.col("side") == "dirty")
     assert dirty.count() > 0, "no dirty rows — the P2 side is decorative"
     # dirty rows carry NULL is_new (state-neutral passthrough)
     assert dirty.where(F.col("is_new").isNotNull()).count() == 0
-    action = spark.read.parquet(os.path.join(out, "action"))
+    action = log.where(F.col("side") == "action")
     assert action.where(F.col("is_new") == 9).count() == 0, (
         "planted debris survived the epoch replay"
     )

@@ -1,4 +1,5 @@
-"""Spark jobs per micro-batch for the keyed replay appliers.
+"""Spark jobs per micro-batch for the keyed replay appliers and the
+app5s fan-out chain.
 
 Each applier runs through ``_replay_batches`` (4 ascending event_id
 batches of the sf0.001 events table, the replay rows' split), every
@@ -7,9 +8,16 @@ are counted through ``statusTracker().getJobIdsForGroup``. The pinned
 counts were measured with this test's session; a change that adds a
 job to any batch of these appliers fails here. Lower counts pass:
 lower the pin with them.
+
+app5s runs as a real streaming query, whose micro-batch jobs Spark
+groups under the query's ``runId``.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
 
 import pytest
 
@@ -93,3 +101,36 @@ def test_jobs_per_batch_not_above_pin(spark, name):
     assert all(g <= p for g, p in zip(got, pinned)), (
         f"{name}: jobs per batch {got} exceed the pin {pinned}"
     )
+
+
+def test_app5s_one_job_per_epoch_and_three_readback_jobs(spark, tmp_path):
+    """app5s writes each epoch in ONE job (the keyed-state plan feeding
+    one side-partitioned write) and reads its sink back in at most 3."""
+    from real_time_data_warehouse_spark.operators.app_chains import (
+        _app5s_build,
+        app5s_base_log_stream_chain,
+    )
+
+    # a new data dir: the session's artifact cache misses and builds cold
+    data = str(tmp_path / "fixture")
+    shutil.copytree(SF_DIR, data)
+    base = _app5s_build(spark, data)
+    # progress records of the query restarted after the injected crash
+    with open(os.path.join(base, "progress.jsonl")) as f:
+        records = [json.loads(line) for line in f]
+    (run_id,) = {r["runId"] for r in records}
+    epochs = {r["batchId"] for r in records}
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup(run_id)) == len(epochs), epochs
+
+    group = "jobs-per-batch-app5s-readback"
+    sc.setJobGroup(group, group)
+    try:
+        rows = app5s_base_log_stream_chain(spark, data).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(rows) == 6
+    assert 0 < len(tracker.getJobIdsForGroup(group)) <= 3

@@ -25,6 +25,11 @@ from real_time_data_warehouse_spark.streaming.pipelines import (
     run_log_split_stream,
     stream_events,
 )
+from real_time_data_warehouse_spark.streaming.state_store import (
+    epoch_dir,
+    read_log,
+    write_snapshot,
+)
 from real_time_data_warehouse_spark.streaming.stateful import (
     returning_user,
     visitor_fix,
@@ -59,8 +64,9 @@ def test_log_split_stream_matches_batch(spark, tmp_path, events_dir):
     q.awaitTermination(120)
     ev = Tables(spark, SF_DIR).events
     batch_sides = {k: df.count() for k, df in log_split(ev).items()}
+    log = read_log(spark, out)
     for side, expected in batch_sides.items():
-        got = spark.read.parquet(os.path.join(out, side)).count()
+        got = log.where(F.col("side") == side).count()
         assert got == expected, f"{side}: stream={got} batch={expected}"
 
 
@@ -568,7 +574,7 @@ def test_log_split_crash_recovery_exactly_once(spark, tmp_path, events_dir):
         q.awaitTermination(120)
 
     # simulate partial debris a real crash could leave in the epoch dir
-    debris_dir = os.path.join(out, "page", "batch_id=1")
+    debris_dir = os.path.join(epoch_dir(out, 1), "side=page")
     os.makedirs(debris_dir, exist_ok=True)
     ev = Tables(spark, SF_DIR).events
     ev.where(F.col("event_type") == "purchase").limit(7).write.mode(
@@ -579,9 +585,31 @@ def test_log_split_crash_recovery_exactly_once(spark, tmp_path, events_dir):
     q2 = run_log_split_stream(spark, events_dir, out, ckpt)
     q2.awaitTermination(120)
 
+    log = read_log(spark, out)
     for side, df in log_split(ev).items():
-        got = spark.read.parquet(os.path.join(out, side)).count()
+        got = log.where(F.col("side") == side).count()
         assert got == df.count(), f"{side}: {got} != {df.count()}"
+
+
+def test_partitioned_epoch_overwrite_is_static(spark, tmp_path):
+    """A retried epoch replaces EVERY partition of the epoch, even under
+    a session set to dynamic partition overwrite: a retry that routes no
+    rows to side b must not leave b's rows from the failed attempt."""
+    out = str(tmp_path / "out")
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "id long, side string")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        write_snapshot(rows, out, 3, partition_by="side")
+        write_snapshot(
+            rows.where(F.col("side") == "a"), out, 3, partition_by="side"
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert not os.path.exists(os.path.join(epoch_dir(out, 3), "side=b"))
+    got = [tuple(r) for r in read_log(spark, out, "id long").collect()]
+    assert got == [(1, 3, "a")]
 
 
 def test_dws_sku_order_enriched_stream(spark, tmp_path, events_dir):

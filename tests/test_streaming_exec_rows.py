@@ -407,13 +407,11 @@ def test_k6_jdbc_scan_pushes_filters_to_the_database(spark):
 
 def test_x1s_fanout_crash_restart_equals_batch(spark):
     """The x1s row end-to-end: the injected crash must fire, the
-    checkpoint restart must overwrite the planted debris, and the 5-sink
+    checkpoint restart must overwrite the planted debris, and the 5-side
     read-back must equal the batch x1 split's per-side counts/checksums
     — exactly-once across the foreachBatch failure."""
-    from real_time_data_warehouse_spark.operators.streaming_exec import (
-        _X1S_SIDES,
-    )
     from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, query_map
+    from real_time_data_warehouse_spark.streaming.pipelines import LOG_SIDES
     from real_time_data_warehouse_spark.tables import Tables
 
     query_map()
@@ -425,7 +423,7 @@ def test_x1s_fanout_crash_restart_equals_batch(spark):
     }
     ev = Tables(spark, SF_DIR).events
     want = set()
-    for side, etype in _X1S_SIDES.items():
+    for side, etype in LOG_SIDES.items():
         part = ev.where(F.col("event_type") == etype)
         n, id_sum, uu = part.agg(
             F.count("*").cast("bigint"),
