@@ -89,7 +89,6 @@ plan shape survives 1000 executors.
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 import time
@@ -106,15 +105,17 @@ from real_time_data_warehouse_spark.operators.sink_readback import (
 )
 from real_time_data_warehouse_spark.operators.streaming_exec import (
     _SRC_FILES,
-    _await,
+    _run_crash_restart,
     _sliced_source,
     _stream_shuffle_partitions,
     _write_time_sliced_source,
 )
 from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.streaming.monitor import dump_progress
 from real_time_data_warehouse_spark.streaming.state_store import (
-    epoch_dir,
     read_log,
+    run_epoch_stream,
+    run_file_stream,
     write_snapshot,
 )
 from real_time_data_warehouse_spark.tables import Tables
@@ -258,14 +259,6 @@ def _app_source(spark: SparkSession, sf_dir: str) -> str:
     return _artifact_dir(spark, sf_dir, "appsrc", build)
 
 
-def _dump_progress(q, base: str) -> list[dict]:
-    records = [json.loads(p.json) for p in q.recentProgress]
-    with open(os.path.join(base, "progress.jsonl"), "w") as f:
-        for r in records:
-            f.write(json.dumps(r) + "\n")
-    return records
-
-
 def _assert_state_operators(records: list[dict], expect: int) -> None:
     """The row's claim is the CHAIN — fail loud if Spark planned fewer
     stateful operators than the topology declares (e.g. an optimizer
@@ -290,16 +283,10 @@ def _run_append_chain(spark: SparkSession, base: str, df, n_ops: int) -> None:
     """Run ``df`` as ONE append-mode streaming query into ``base/out``
     (checkpoint at ``base/ckpt``), await completion, and assert the
     planned stateful-operator count from the progress records."""
-    q = (
-        df.writeStream.format("parquet")
-        .option("path", os.path.join(base, "out"))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    q = run_file_stream(
+        df, os.path.join(base, "out"), os.path.join(base, "ckpt")
     )
-    _await(q)
-    _assert_state_operators(_dump_progress(q, base), n_ops)
+    _assert_state_operators(dump_progress(q, base), n_ops)
 
 
 def _chain_artifact(
@@ -733,8 +720,8 @@ _APP4_DELETE_MOD = _APP_PARAMS["app4_delete_mod"]
 
 
 def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.operators.streaming_exec import (
-        _run_crash_restart,
+    from real_time_data_warehouse_spark.streaming.pipelines import (
+        EVENTS_RAW_SCHEMA,
     )
     from real_time_data_warehouse_spark.streaming.sinks import upsert_dim
 
@@ -747,9 +734,7 @@ def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
             "event_type string, sink_table string, sink_columns string",
         )
 
-        def body(b: DataFrame, bid: int, fault) -> None:
-            if fault is not None:
-                fault(bid)
+        def body(b: DataFrame, bid: int) -> None:
             # P1: envelope parse + op derivation (Maxwell type analog);
             # sentinels carry no JSON key and negative ids — dropped
             cdc = (
@@ -800,25 +785,11 @@ def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
                     type_col="op",
                 )
 
-        def start(fault):
-            from real_time_data_warehouse_spark.streaming.pipelines import (
-                EVENTS_RAW_SCHEMA,
-            )
-
-            raw = (
-                spark.readStream.schema(EVENTS_RAW_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            return (
-                raw.writeStream.foreachBatch(
-                    lambda b, bid: body(b, bid, fault)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-
+        raw = (
+            spark.readStream.schema(EVENTS_RAW_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
         # crash before epoch 2's writes, restart from the checkpoint:
         # the replayed epoch re-applies the same upserts/deletes — a
         # no-op under LWW (same rows, same ord), which IS the
@@ -827,7 +798,7 @@ def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
         # d7x); a merge sink's mid-WRITE atomicity comes from the ACID
         # branch (Delta MERGE) in production, not from replay.
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            _run_crash_restart(spark, start, lambda: None)
+            _run_crash_restart(raw, body, ckpt, lambda: None)
 
     return _artifact_dir(spark, sf_dir, "app4s", build)
 
@@ -1028,9 +999,6 @@ def _app5_fix_fn(key, pdf_iter, state):
 def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from real_time_data_warehouse_spark.operators.streaming_exec import (
-        _run_crash_restart,
-    )
     from real_time_data_warehouse_spark.streaming.pipelines import (
         log_side,
         stream_events,
@@ -1043,9 +1011,7 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
         out = os.path.join(base, "out")
         ckpt = os.path.join(base, "ckpt")
 
-        def body(b: DataFrame, bid: int, fault) -> None:
-            if fault is not None:
-                fault(bid)
+        def body(b: DataFrame, bid: int) -> None:
             # P2 + X1: one CASE routes every row (dirty first, then the
             # X1 5-way split); event types no side carries drop out
             side = F.when(F.col("dirty") == 1, "dirty").otherwise(log_side())
@@ -1072,32 +1038,20 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
                 partition_by="side",
             )
 
-        def start(fault):
-            ev = stream_events(spark, src)
-            flagged = ev.withColumn(
-                # P2 dirty gate: actual JSON validity, not the
-                # generator's id rule (get_json_object('$') is NULL
-                # iff the document fails to parse)
-                "dirty",
-                F.get_json_object("props", "$").isNull().cast("int"),
-            ).select(
-                "event_id", "user_id", "ts", "event_type", "props", "dirty"
-            )
-            fixed = flagged.groupBy("user_id").applyInPandasWithState(
-                _app5_fix_fn,
-                outputStructType=out_schema,
-                stateStructType=state_schema,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            return (
-                fixed.writeStream.foreachBatch(
-                    lambda b, bid: body(b, bid, fault)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
+        flagged = stream_events(spark, src).withColumn(
+            # P2 dirty gate: actual JSON validity, not the generator's id
+            # rule (get_json_object('$') is NULL iff the document fails
+            # to parse)
+            "dirty",
+            F.get_json_object("props", "$").isNull().cast("int"),
+        ).select("event_id", "user_id", "ts", "event_type", "props", "dirty")
+        fixed = flagged.groupBy("user_id").applyInPandasWithState(
+            _app5_fix_fn,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
 
         def plant_debris() -> None:
             # partial file a mid-write crash leaves in the crashed
@@ -1112,10 +1066,10 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
             write_snapshot(debris, out, 2, partition_by="side")
 
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            q2 = _run_crash_restart(spark, start, plant_debris)
+            q2 = _run_crash_restart(fixed, body, ckpt, plant_debris)
             # exactly ONE keyed-state operator (the ST3 repair) in the
             # replayed epochs' plans
-            _assert_state_operators(_dump_progress(q2, base), 1)
+            _assert_state_operators(dump_progress(q2, base), 1)
 
     return _artifact_dir(spark, sf_dir, "app5s", build)
 
@@ -1468,9 +1422,10 @@ def app8s_keyword_window_stream_chain(
 # --------------------------------------------------------------------------
 
 
-def _start_login_daily(spark: SparkSession, sf_dir: str, base: str, fault):
-    """Start the app7 topology (shared by app7s and app7x): login
-    filter → ST5 returning-user keyed state (DwsUserUserLoginWindow
+def _login_daily(spark: SparkSession, sf_dir: str, base: str):
+    """The app7 topology (shared by app7s and app7x) as a (stream,
+    update-mode epoch body) pair: login filter → ST5 returning-user
+    keyed state (DwsUserUserLoginWindow
     .java:80-124; emits one row per NEW login date per user — the
     source's replayed slice tails are absorbed by the state's own
     d > last_login_date guard, idempotent under at-least-once, no
@@ -1504,8 +1459,6 @@ def _start_login_daily(spark: SparkSession, sf_dir: str, base: str, fault):
     )
 
     def body(b: DataFrame, bid: int) -> None:
-        if fault is not None:
-            fault(bid)
         ups = b.withColumn(
             "ord", F.lit(bid).cast("bigint")
         ).withColumn("op", F.lit("upsert"))
@@ -1514,13 +1467,7 @@ def _start_login_daily(spark: SparkSession, sf_dir: str, base: str, fault):
             order_col="ord", type_col="op",
         )
 
-    return (
-        daily.writeStream.foreachBatch(body)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return daily, body
 
 
 def _login_store_readback(
@@ -1535,10 +1482,13 @@ def _login_store_readback(
 def _app7s_build(spark: SparkSession, sf_dir: str) -> str:
     def build(base: str) -> None:
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            q = _start_login_daily(spark, sf_dir, base, None)
-            _await(q)
+            q = run_epoch_stream(
+                *_login_daily(spark, sf_dir, base),
+                os.path.join(base, "ckpt"),
+                "update",
+            )
             # the keyed ST5 state + the update-mode aggregate state
-            _assert_state_operators(_dump_progress(q, base), 2)
+            _assert_state_operators(dump_progress(q, base), 2)
 
     return _artifact_dir(spark, sf_dir, "app7s", build)
 
@@ -1577,10 +1527,6 @@ def app7s_user_login_stream_chain(
 
 
 def _app7x_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.operators.streaming_exec import (
-        _run_crash_restart,
-    )
-
     def build(base: str) -> None:
         # no debris: the store is an LWW merge sink (the app4s rule —
         # debris modeling belongs to append sinks; a merge sink's
@@ -1590,14 +1536,13 @@ def _app7x_build(spark: SparkSession, sf_dir: str) -> str:
         # restored from the checkpoint, or the replayed epoch re-emits
         # already-counted dates with is_uu=1 and the uu totals inflate.
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
+            daily, body = _login_daily(spark, sf_dir, base)
             q2 = _run_crash_restart(
-                spark,
-                lambda fault: _start_login_daily(spark, sf_dir, base, fault),
-                lambda: None,
+                daily, body, os.path.join(base, "ckpt"), lambda: None, "update"
             )
             # the replayed epochs still plan the keyed ST5 state + the
             # update-mode aggregate
-            _assert_state_operators(_dump_progress(q2, base), 2)
+            _assert_state_operators(dump_progress(q2, base), 2)
 
     return _artifact_dir(spark, sf_dir, "app7x", build)
 
@@ -1826,9 +1771,6 @@ def app10s_cart_add_uu_stream_chain(
 
 
 def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.operators.streaming_exec import (
-        _run_crash_restart,
-    )
     from real_time_data_warehouse_spark.streaming.pipelines import (
         stream_events,
     )
@@ -1838,25 +1780,14 @@ def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
         out = os.path.join(base, "out")
         ckpt = os.path.join(base, "ckpt")
 
-        def start(fault):
-            ev = stream_events(spark, src)
-            joined = _pay_detail_joined(ev).select(
-                "pay_id", "pay_key", "det_id"
-            )
+        joined = _pay_detail_joined(stream_events(spark, src)).select(
+            "pay_id", "pay_key", "det_id"
+        )
 
-            def body(b: DataFrame, bid: int) -> None:
-                if fault is not None:
-                    fault(bid)
-                # per-epoch overwrite dir: a replayed epoch REPLACES
-                # partial output (the x1s exactly-once discipline)
-                write_snapshot(b, out, bid)
-
-            return (
-                joined.writeStream.foreachBatch(body)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
+        def body(b: DataFrame, bid: int) -> None:
+            # per-epoch overwrite dir: a replayed epoch REPLACES partial
+            # output (the x1s exactly-once discipline)
+            write_snapshot(b, out, bid)
 
         def plant_debris() -> None:
             debris = spark.createDataFrame(
@@ -1866,10 +1797,10 @@ def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
             write_snapshot(debris, out, 2)
 
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            q2 = _run_crash_restart(spark, start, plant_debris)
+            q2 = _run_crash_restart(joined, body, ckpt, plant_debris)
             # the restarted handle's replayed epochs still plan the
             # full chain: 2 dedups + 1 symmetric hash join
-            _assert_state_operators(_dump_progress(q2, base), 3)
+            _assert_state_operators(dump_progress(q2, base), 3)
 
     return _artifact_dir(spark, sf_dir, "app9x", build)
 
@@ -2155,9 +2086,6 @@ _APP14_CONFIG = (
 
 
 def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.operators.streaming_exec import (
-        _run_crash_restart,
-    )
     from real_time_data_warehouse_spark.streaming.pipelines import (
         stream_events,
     )
@@ -2170,50 +2098,39 @@ def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
             list(_APP14_CONFIG), "source_type string, sink_table string"
         )
 
-        def start(fault):
-            # P3: bootstrap-record exclusion by prefix (:45-61)
-            routed = (
-                stream_events(spark, src)
-                .where(
-                    ~F.col("event_type").startswith("sign")
-                    & ~F.col("event_type").startswith("boot")
-                )
-                .withWatermark("ts", _DELAY)
-                .dropDuplicatesWithinWatermark(["event_id"])
-                .join(
-                    # J7/ST7: the broadcast-state config join IN the
-                    # streaming plan (x2s joins per batch inside
-                    # foreachBatch; the reference's
-                    # BroadcastProcessFunction is in-stream, as here)
-                    F.broadcast(config),
-                    F.col("event_type") == F.col("source_type"),
-                )
-                .select("event_id", "user_id", "sink_table")
+        # P3: bootstrap-record exclusion by prefix (:45-61)
+        routed = (
+            stream_events(spark, src)
+            .where(
+                ~F.col("event_type").startswith("sign")
+                & ~F.col("event_type").startswith("boot")
             )
-
-            def body(b: DataFrame, bid: int) -> None:
-                if fault is not None:
-                    fault(bid)
-                b.write.mode("overwrite").partitionBy(
-                    "sink_table"
-                ).parquet(epoch_dir(out, bid))
-
-            return (
-                routed.writeStream.foreachBatch(body)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            .withWatermark("ts", _DELAY)
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .join(
+                # J7/ST7: the broadcast-state config join IN the
+                # streaming plan (x2s joins per batch inside foreachBatch;
+                # the reference's BroadcastProcessFunction is in-stream,
+                # as here)
+                F.broadcast(config),
+                F.col("event_type") == F.col("source_type"),
             )
+            .select("event_id", "user_id", "sink_table")
+        )
+
+        def body(b: DataFrame, bid: int) -> None:
+            write_snapshot(b, out, bid, partition_by="sink_table")
 
         def plant_debris() -> None:
-            debris = os.path.join(epoch_dir(out, 2), "sink_table=dwd_action")
-            spark.createDataFrame(
-                [(-777, -777)], "event_id bigint, user_id bigint"
-            ).write.mode("overwrite").parquet(debris)
+            debris = spark.createDataFrame(
+                [(-777, -777, "dwd_action")],
+                "event_id bigint, user_id bigint, sink_table string",
+            )
+            write_snapshot(debris, out, 2, partition_by="sink_table")
 
         with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            q2 = _run_crash_restart(spark, start, plant_debris)
-            _assert_state_operators(_dump_progress(q2, base), 1)
+            q2 = _run_crash_restart(routed, body, ckpt, plant_debris)
+            _assert_state_operators(dump_progress(q2, base), 1)
 
     return _artifact_dir(spark, sf_dir, "app14s", build)
 

@@ -57,13 +57,13 @@ from real_time_data_warehouse_spark.operators.sink_readback import (
 )
 from real_time_data_warehouse_spark.operators.streaming_exec import (
     _SRC_FILES,
-    _await,
     _sliced_source,
     _stream_shuffle_partitions,
 )
 from real_time_data_warehouse_spark.registry import register
 from real_time_data_warehouse_spark.streaming.state_store import (
     read_log,
+    run_epoch_stream,
     write_snapshot,
 )
 from real_time_data_warehouse_spark.tables import Tables
@@ -162,14 +162,7 @@ def _j16_build(
             write_snapshot(enriched, out, bid)
 
         with _stream_shuffle_partitions(spark):
-            q = (
-                stream_events(spark, src)
-                .writeStream.foreachBatch(body)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
+            run_epoch_stream(stream_events(spark, src), body, ckpt)
         assert swapped["done"], (
             "dim swap never fired — no micro-batch reached time-slice "
             f">= {_SWAP_SLICE}; the row would no longer cover a "

@@ -33,8 +33,10 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
 from contextlib import contextmanager as _contextmanager
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,10 +46,15 @@ from real_time_data_warehouse_spark.operators.sink_readback import (
     _artifact_dir,
 )
 from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.streaming.monitor import (
+    assert_watermark_eviction,
+    dump_progress,
+)
 from real_time_data_warehouse_spark.streaming.state_store import (
-    epoch_dir,
+    STREAM_TIMEOUT_S,
     read_log,
-    run_applier_stream,
+    run_epoch_stream,
+    run_file_stream,
     write_snapshot,
 )
 from real_time_data_warehouse_spark.tables import Tables
@@ -55,19 +62,6 @@ from real_time_data_warehouse_spark.tables import Tables
 _SRC_FILES = 4  # micro-batches: watermark must advance ACROSS batches
 _ST14_FILES = _SRC_FILES  # kept for the registered doc text
 _ST14_HORIZON_S = 20  # closed-window margin (2 windows behind max ts)
-
-def _await(q, timeout_s: int = 300) -> None:
-    """awaitTermination that FAILS LOUD on timeout: the boolean return
-    is easy to ignore, and ignoring it caches a partially-written sink
-    as the session-wide artifact — every readback then compares an
-    incomplete sink to the full oracle with no error pointing here."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"streaming build did not finish within {timeout_s}s — "
-            "refusing to cache a partial sink artifact"
-        )
-
 
 @_contextmanager
 def _stream_shuffle_partitions(spark: SparkSession, n: int = 32):
@@ -114,12 +108,8 @@ def _write_time_sliced_source(
     watermark genuinely ADVANCE between micro-batches — the property
     every real-streaming driver row here exists to exercise.
     ``transform`` (wire frame → wire frame, ts untouched) rewrites the
-    rows inside the same write, e.g. app5s's mangled props.
-
-    One write job for all slices: hash-repartition on the slice id puts
-    each slice in exactly one task, so partitionBy emits ONE file per
-    slice dir (the k1 one-writer-per-topic discipline); the files are
-    then moved into ``src`` in slice order, which fixes the mtime order
+    rows inside the same write, e.g. app5s's mangled props. The slices
+    land through ``_write_slices``, whose pinned mtimes fix the order
     the file source follows."""
     ev = Tables(spark, sf_dir).events
     lo, hi = ev.agg(
@@ -138,27 +128,36 @@ def _write_time_sliced_source(
             f"(ts div 1000 - {lo}L) * {n_files} div {span}L) AS INT)"
         ),
     )
+    _write_slices(sliced, src, n_files)
+
+
+def _write_slices(sliced: DataFrame, dst: str, n_files: int) -> None:
+    """Write ``sliced`` (slice id ``0..n_files-1`` in column ``b``) as
+    ONE parquet file per non-empty slice, ``dst/batch_<b>.parquet``.
+
+    One write job for all slices: hash-repartition on the slice id puts
+    each slice in exactly one task, so partitionBy emits ONE file per
+    slice dir (the k1 one-writer-per-topic discipline); the files are
+    then moved into ``dst`` in slice order."""
     stage = tempfile.mkdtemp(prefix="rtdw_slice_stage_")
     sliced.repartition(n_files, "b").write.mode("overwrite").partitionBy(
         "b"
     ).parquet(stage)
-    os.makedirs(src, exist_ok=True)
-    import time as _time
-
-    now = _time.time()
+    os.makedirs(dst, exist_ok=True)
+    now = time.time()
     for b in range(n_files):
         bdir = os.path.join(stage, f"b={b}")
         if not os.path.isdir(bdir):
-            continue  # empty time slice (gappy data): fewer micro-batches
+            continue  # empty slice (gappy data): fewer micro-batches
         part = next(p for p in os.listdir(bdir) if p.endswith(".parquet"))
-        dst = os.path.join(src, f"batch_{b}.parquet")
-        shutil.move(os.path.join(bdir, part), dst)
+        out = os.path.join(dst, f"batch_{b}.parquet")
+        shutil.move(os.path.join(bdir, part), out)
         # PIN the mtimes one second apart in slice order: the one-job
         # write moves all files within the same millisecond, and the
         # file source's modification-time ordering would then be a
         # listing-order coin flip — which breaks every operator that
-        # needs time-ordered micro-batches (st15 regressed exactly so)
-        os.utime(dst, (now - n_files + b, now - n_files + b))
+        # needs ordered micro-batches (st15 regressed exactly so)
+        os.utime(out, (now - n_files + b, now - n_files + b))
     shutil.rmtree(stage, ignore_errors=True)
 
 
@@ -182,8 +181,7 @@ def _st14_build(spark: SparkSession, sf_dir: str) -> str:
         out = os.path.join(base, "out")
         ckpt = os.path.join(base, "ckpt")
         with _stream_shuffle_partitions(spark):
-            q = run_dws_agg_stream(spark, src, out, ckpt)
-            _await(q)
+            run_dws_agg_stream(spark, src, out, ckpt)
 
     return _artifact_dir(spark, sf_dir, "st14", build)
 
@@ -272,16 +270,7 @@ def _st15_build(spark: SparkSession, sf_dir: str) -> str:
             .select("user_id", "ts")
         )
         with _stream_shuffle_partitions(spark):
-            q = (
-                returning_user(logins)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
+            run_file_stream(returning_user(logins), out, ckpt)
 
     return _artifact_dir(spark, sf_dir, "st15", build)
 
@@ -367,32 +356,12 @@ def _st16_build(spark: SparkSession, sf_dir: str) -> str:
             ["user_id", "day_ts"]
         )
         with _stream_shuffle_partitions(spark):
-            q = (
-                dd.select("user_id", "day_ts")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
+            q = run_file_stream(dd.select("user_id", "day_ts"), out, ckpt)
         # the row's whole point is watermark-BOUNDED dedup state (the
         # event-time column is in the dedup key) — assert the cleanup
         # actually removed (user, day) state across batches, same
         # contract as j13/j14
-        import json as _json
-
-        from real_time_data_warehouse_spark.streaming.monitor import (
-            assert_watermark_eviction,
-            query_progress_records,
-        )
-
-        records = query_progress_records(q)
-        with open(os.path.join(base, "progress.jsonl"), "w") as f:
-            for r in records:
-                f.write(_json.dumps(r) + "\n")
-        assert_watermark_eviction(records, min_batches=2)
+        assert_watermark_eviction(dump_progress(q, base), min_batches=2)
 
     return _artifact_dir(spark, sf_dir, "st16", build)
 
@@ -436,14 +405,8 @@ _J13_HORIZON_S = 60  # closed-region margin behind max event ts
 
 
 def _j13_build(spark: SparkSession, sf_dir: str) -> str:
-    import json
-
     from real_time_data_warehouse_spark.streaming.joins import (
         interval_join_purchases,
-    )
-    from real_time_data_warehouse_spark.streaming.monitor import (
-        assert_watermark_eviction,
-        query_progress_records,
     )
     from real_time_data_warehouse_spark.streaming.pipelines import (
         stream_events,
@@ -455,26 +418,14 @@ def _j13_build(spark: SparkSession, sf_dir: str) -> str:
         ckpt = os.path.join(base, "ckpt")
         joined = interval_join_purchases(stream_events(spark, src))
         with _stream_shuffle_partitions(spark):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
+            q = run_file_stream(joined, out, ckpt)
         # hard evidence the join state is watermark-BOUNDED, not
         # grow-forever: across the ~7.5-day jumps between time-ranged
         # batches the watermark must have removed state rows. Raising
         # here fails the driver row itself — bounded state is part of
         # the contract, not a side observation. Progress comes from the
         # query handle (synchronous), not the async listener bus.
-        records = query_progress_records(q)
-        with open(os.path.join(base, "progress.jsonl"), "w") as f:
-            for r in records:
-                f.write(json.dumps(r) + "\n")
-        assert_watermark_eviction(records, min_batches=2)
+        assert_watermark_eviction(dump_progress(q, base), min_batches=2)
 
     return _artifact_dir(spark, sf_dir, "j13", build)
 
@@ -554,16 +505,7 @@ def _st17_build(spark: SparkSession, sf_dir: str) -> str:
         ckpt = os.path.join(base, "ckpt")
         ev = stream_events(spark, src).select("event_id", "user_id", "ts")
         with _stream_shuffle_partitions(spark):
-            q = (
-                visitor_fix(ev)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
+            run_file_stream(visitor_fix(ev), out, ckpt)
 
     return _artifact_dir(spark, sf_dir, "st17", build)
 
@@ -619,14 +561,9 @@ def _j14_build(spark: SparkSession, sf_dir: str) -> str:
     from real_time_data_warehouse_spark.streaming.joins import (
         left_outer_stream_join,
     )
-    from real_time_data_warehouse_spark.streaming.monitor import (
-        assert_watermark_eviction,
-        query_progress_records,
-    )
     from real_time_data_warehouse_spark.streaming.pipelines import (
         stream_events,
     )
-    import json
 
     def build(base: str) -> None:
         src = _sliced_source(spark, sf_dir, _SRC_FILES)
@@ -638,20 +575,8 @@ def _j14_build(spark: SparkSession, sf_dir: str) -> str:
             ev.where(F.col("event_type") == "purchase"),
         )
         with _stream_shuffle_partitions(spark):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        records = query_progress_records(q)
-        with open(os.path.join(base, "progress.jsonl"), "w") as f:
-            for r in records:
-                f.write(json.dumps(r) + "\n")
-        assert_watermark_eviction(records, min_batches=2)
+            q = run_file_stream(joined, out, ckpt)
+        assert_watermark_eviction(dump_progress(q, base), min_batches=2)
 
     return _artifact_dir(spark, sf_dir, "j14", build)
 
@@ -748,8 +673,7 @@ def _st18_build(spark: SparkSession, sf_dir: str) -> str:
         serving = os.path.join(base, "serving")
         ckpt = os.path.join(base, "ckpt")
         with _stream_shuffle_partitions(spark):
-            q = run_dws_agg_update_stream(spark, src, serving, ckpt)
-            _await(q)
+            run_dws_agg_update_stream(spark, src, serving, ckpt)
 
     return _artifact_dir(spark, sf_dir, "st18", build)
 
@@ -825,38 +749,49 @@ def _crash_once(crash_batch: int):
     return fault, calls
 
 
-def _run_crash_restart(spark: SparkSession, start_query, plant_debris):
-    """Shared crash→debris→restart driver for the fan-out rows: start
-    the query with the one-shot fault armed, require the injected crash
-    to terminate it, plant partial-write debris in the crashed epoch's
+def _run_crash_restart(
+    stream: DataFrame,
+    body,
+    checkpoint_dir: str,
+    plant_debris,
+    output_mode: str = "append",
+):
+    """Shared crash→debris→restart harness for the crash rows: run the
+    ``body(batch, batch_id)`` epoch query over *stream* with the
+    one-shot fault wrapped around it, require the injected crash to
+    terminate it, plant partial-write debris in the crashed epoch's
     output (what a real mid-write failure leaves on a file sink), then
-    restart from the SAME checkpoint and await clean completion,
-    returning the restarted query handle (its progress records cover
-    the replayed epochs — app5s pins its stateful-operator chain off
-    them). The read-back comparing to the batch oracle is then checking
-    exactly-once across the failure: epoch replay must overwrite the
-    debris, and committed epochs must not re-emit."""
+    restart the SAME streaming DataFrame with the plain ``body`` on the
+    SAME checkpoint, returning the finished restarted handle (its
+    progress records cover the replayed epochs — app5s pins its
+    stateful-operator chain off them). The read-back comparing to the
+    batch oracle is then checking exactly-once across the failure:
+    epoch replay must overwrite the debris, and committed epochs must
+    not re-emit."""
     fault, calls = _crash_once(_X1S_CRASH_BATCH)
-    q = start_query(fault)
+
+    def crashing(batch: DataFrame, batch_id: int) -> None:
+        fault(batch_id)
+        body(batch, batch_id)
+
     try:
-        finished = q.awaitTermination(300)
+        run_epoch_stream(stream, crashing, checkpoint_dir, output_mode)
         crashed = False
-    except Exception as exc:  # StreamingQueryException wrapping the fault
-        finished = True  # terminated (by the fault), not timed out
+    except TimeoutError as exc:
+        # distinguish a slow host from a dead injector: a timeout with
+        # calls['n']==1 means the fault DID fire but the failed query
+        # took too long to surface termination — misreporting that as
+        # "injector never fired" sends the debugger to the wrong place
+        raise TimeoutError(
+            "crash-restart build: first query did not terminate within "
+            f"{STREAM_TIMEOUT_S} s (fault injector fired: "
+            f"{calls['n'] == 1}) — slow host or hung micro-batch, NOT an "
+            "injector coverage gap"
+        ) from exc
+    except StreamingQueryException as exc:  # wraps the injected fault
         crashed = "injected crash" in str(exc)
         if not crashed:
             raise
-    if not finished:
-        # distinguish a slow host from a dead injector: a timeout with
-        # calls['n']==1 means the fault DID fire but the failed query
-        # took >300 s to surface termination — misreporting that as
-        # "injector never fired" sends the debugger to the wrong place
-        q.stop()
-        raise TimeoutError(
-            "crash-restart build: first query did not terminate within "
-            f"300 s (fault injector fired: {calls['n'] == 1}) — slow "
-            "host or hung micro-batch, NOT an injector coverage gap"
-        )
     if not (crashed and calls["n"] == 1):
         raise AssertionError(
             "fault injector never fired — the source produced fewer than "
@@ -864,25 +799,19 @@ def _run_crash_restart(spark: SparkSession, start_query, plant_debris):
             "longer cover a mid-stream restart"
         )
     plant_debris()
-    q2 = start_query(None)
-    _await(q2)
-    return q2  # the restarted handle: progress records of the replay
+    return run_epoch_stream(stream, body, checkpoint_dir, output_mode)
 
 
 def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
     from real_time_data_warehouse_spark.streaming.pipelines import (
-        run_log_split_stream,
+        log_split_sink,
+        stream_events,
     )
 
     def build(base: str) -> None:
         src = _sliced_source(spark, sf_dir, _SRC_FILES)
         out = os.path.join(base, "out")
         ckpt = os.path.join(base, "ckpt")
-
-        def start(fault):
-            return run_log_split_stream(
-                spark, src, out, ckpt, fault_injector=fault
-            )
 
         def plant_debris() -> None:
             # partial file a mid-write crash leaves: a few purchase rows
@@ -897,7 +826,10 @@ def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
             write_snapshot(debris, out, _X1S_CRASH_BATCH, partition_by="side")
 
         with _stream_shuffle_partitions(spark):
-            _run_crash_restart(spark, start, plant_debris)
+            _run_crash_restart(
+                stream_events(spark, src), log_split_sink(out), ckpt,
+                plant_debris,
+            )
 
     return _artifact_dir(spark, sf_dir, "x1s", build)
 
@@ -907,7 +839,7 @@ def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
     survey="X1,P2,S4",
     doc="X1 under the REAL streaming runtime WITH a mid-stream crash, "
         "driver-checked: the DwdBaseLog 5-way side-output fan-out "
-        "(streaming/pipelines.run_log_split_stream — reference "
+        "(streaming/pipelines.log_split_sink — reference "
         f"DwdBaseLog.java:192-295) runs as readStream over the "
         f"{_SRC_FILES}-file time-ordered source → foreachBatch tagging "
         "each row with its side and writing ONE side-partitioned "
@@ -970,18 +902,14 @@ _X2S_CONFIG = [
 
 def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
     from real_time_data_warehouse_spark.streaming.pipelines import (
-        run_dynamic_routing_stream,
+        routing_sink,
+        stream_events,
     )
 
     def build(base: str) -> None:
         src = _sliced_source(spark, sf_dir, _SRC_FILES)
         out = os.path.join(base, "out")
         ckpt = os.path.join(base, "ckpt")
-
-        def start(fault):
-            return run_dynamic_routing_stream(
-                spark, src, _X2S_CONFIG, out, ckpt, fault_injector=fault
-            )
 
         def plant_debris() -> None:
             ev = Tables(spark, sf_dir).events
@@ -996,7 +924,10 @@ def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
             )
 
         with _stream_shuffle_partitions(spark):
-            _run_crash_restart(spark, start, plant_debris)
+            _run_crash_restart(
+                stream_events(spark, src), routing_sink(_X2S_CONFIG, out),
+                ckpt, plant_debris,
+            )
 
     return _artifact_dir(spark, sf_dir, "x2s", build)
 
@@ -1006,7 +937,7 @@ def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
     survey="X2,S5,J7",
     doc="X2 under the REAL streaming runtime WITH a mid-stream crash, "
         "driver-checked: config-driven dynamic routing (streaming/"
-        "pipelines.run_dynamic_routing_stream — reference DwdBaseDb."
+        "pipelines.routing_sink — reference DwdBaseDb."
         "java:43-110 + FlinkSinkUtil.java:44-65) joins each micro-batch "
         "against the broadcast routing config and lands rows under their "
         "routed sink_table partition of ONE per-epoch-overwrite write "
@@ -1069,24 +1000,7 @@ def _write_id_sliced(rows: DataFrame, base: str, id_col: str) -> None:
             f"{id_col} * {_D7X_FILES} div {span}L) AS INT)"
         ),
     )
-    stage = tempfile.mkdtemp(prefix="rtdw_idslice_stage_")
-    sliced.repartition(_D7X_FILES, "b").write.mode(
-        "overwrite"
-    ).partitionBy("b").parquet(stage)
-    import time as _time
-
-    now = _time.time()
-    for b in range(_D7X_FILES):
-        bdir = os.path.join(stage, f"b={b}")
-        if not os.path.isdir(bdir):
-            continue
-        part = next(p for p in os.listdir(bdir) if p.endswith(".parquet"))
-        dst = os.path.join(base, f"batch_{b}.parquet")
-        shutil.move(os.path.join(bdir, part), dst)
-        # pin mtimes one second apart: same-ms moves make the file
-        # source's mtime ordering a listing coin flip (st15 lesson)
-        os.utime(dst, (now - _D7X_FILES + b, now - _D7X_FILES + b))
-    shutil.rmtree(stage, ignore_errors=True)
+    _write_slices(sliced, base, _D7X_FILES)
 
 
 def _doc_sliced_source(spark: SparkSession, sf_dir: str) -> str:
@@ -1107,17 +1021,6 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
         store = os.path.join(base, "store")
         out = os.path.join(base, "out")
         ckpt = os.path.join(base, "ckpt")
-
-        def start(fault):
-            docs_source = (
-                spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            return run_applier_stream(
-                docs_source, apply_gate_batch, store, out, ckpt,
-                fault_injector=fault,
-            )
 
         def plant_debris() -> None:
             # what a mid-write crash leaves behind in BOTH sinks of the
@@ -1156,8 +1059,20 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
                 _X1S_CRASH_BATCH,
             )
 
+        docs_source = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
         with _stream_shuffle_partitions(spark):
-            _run_crash_restart(spark, start, plant_debris)
+            _run_crash_restart(
+                docs_source,
+                lambda b, bid: apply_gate_batch(
+                    b.sparkSession, b, bid, store, out
+                ),
+                ckpt,
+                plant_debris,
+            )
 
     return _artifact_dir(spark, sf_dir, "d7x", build)
 
@@ -1167,7 +1082,8 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
     survey="ext-dedup",
     doc="The ingestion dedup gate under the REAL streaming runtime WITH "
         "a mid-stream crash, driver-checked: streaming/dedup_gate."
-        "apply_gate_batch runs under state_store.run_applier_stream as "
+        "apply_gate_batch runs as the epoch body of the crash-restart "
+        "harness operators/streaming_exec._run_crash_restart over "
         "readStream(maxFilesPerTrigger=1) "
         f"over a {_D7X_FILES}-file ascending-doc_id source → foreachBatch "
         "classifying each micro-batch against the persistent signature "
@@ -1219,19 +1135,6 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
         out = os.path.join(base, "out")
         ckpt = os.path.join(base, "ckpt")
 
-        def start(fault):
-            vec_source = (
-                spark.readStream.schema(
-                    "vec_id long, embedding array<float>"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            return run_applier_stream(
-                vec_source, embedding_gate.apply_gate_batch, store, out,
-                ckpt, fault_injector=fault,
-            )
-
         def plant_debris() -> None:
             # mid-write leftovers in both sinks of the crashed epoch:
             # wrong-status decision rows, plus a PARTIAL store segment
@@ -1260,12 +1163,24 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
             _, entry = embedding_gate.classify_batch(
                 spark, crashed, store
             )
-            entry.write.mode("overwrite").partitionBy(
-                "band", "bucket"
-            ).parquet(epoch_dir(store, _X1S_CRASH_BATCH))
+            write_snapshot(
+                entry, store, _X1S_CRASH_BATCH, partition_by=["band", "bucket"]
+            )
 
+        vec_source = (
+            spark.readStream.schema("vec_id long, embedding array<float>")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
         with _stream_shuffle_partitions(spark):
-            _run_crash_restart(spark, start, plant_debris)
+            _run_crash_restart(
+                vec_source,
+                lambda b, bid: embedding_gate.apply_gate_batch(
+                    b.sparkSession, b, bid, store, out
+                ),
+                ckpt,
+                plant_debris,
+            )
 
     return _artifact_dir(spark, sf_dir, "d9x", build)
 
@@ -1275,8 +1190,9 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
     survey="ext-dedup,ext-similarity",
     doc="The SemDeDup-style semantic ingestion gate under the REAL "
         "streaming runtime WITH a mid-stream crash, driver-checked: "
-        "streaming/embedding_gate.apply_gate_batch runs under "
-        "state_store.run_applier_stream as "
+        "streaming/embedding_gate.apply_gate_batch runs as the epoch "
+        "body of the crash-restart harness operators/streaming_exec."
+        "_run_crash_restart over "
         f"readStream(maxFilesPerTrigger=1) over a {_D7X_FILES}-file "
         "ascending-vec_id source → foreachBatch classifying each "
         "micro-batch against the banded-LSH vector store (candidates "
@@ -1339,15 +1255,7 @@ def _w12_build(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         with _stream_shuffle_partitions(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
+            run_file_stream(agg, out, ckpt)
 
     return _artifact_dir(spark, sf_dir, "w12", build)
 
@@ -1466,15 +1374,7 @@ def _j15_build(spark: SparkSession, sf_dir: str) -> str:
             "nation_name", F.coalesce("nation_name", F.lit("unknown"))
         )
         with _stream_shuffle_partitions(spark):
-            q = (
-                enriched.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
+            run_file_stream(enriched, out, ckpt)
 
     return _artifact_dir(spark, sf_dir, "j15", build)
 
@@ -1566,15 +1466,7 @@ def _w13_build(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         with _stream_shuffle_partitions(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
+            run_file_stream(agg, out, ckpt)
 
     return _artifact_dir(spark, sf_dir, "w13", build)
 

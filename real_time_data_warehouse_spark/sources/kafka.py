@@ -8,9 +8,9 @@ values (they arrive as null `value` rows — filter P11), and the kafka sink
 honors a per-row `topic` column, which *is* the dynamic routing S5.
 
 No Kafka broker exists in the test environment, so these builders are
-exercised for plan construction only (tests build the read/write plans
-without starting them); the file-source pipelines in streaming/ are the
-runnable stand-in.
+exercised for plan construction only (tests build the source and the
+sink-record shapes without starting a query); the file-source pipelines
+in streaming/ are the runnable stand-in.
 """
 
 from __future__ import annotations
@@ -64,11 +64,3 @@ def with_upsert_key(df: DataFrame, key_cols: list[str]) -> DataFrame:
         F.to_json(F.struct(*value_cols)).alias("value"),
     )
 
-
-def kafka_sink_writer(df: DataFrame, brokers: str, checkpoint: str):
-    """writeStream handle for a kafka sink (not started)."""
-    return (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("checkpointLocation", checkpoint)
-    )

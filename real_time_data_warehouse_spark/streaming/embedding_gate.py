@@ -50,7 +50,6 @@ from real_time_data_warehouse_spark.operators.similarity import (
     dot,
 )
 from real_time_data_warehouse_spark.streaming.state_store import (
-    epoch_dir,
     read_log,
     write_snapshot,
 )
@@ -138,7 +137,7 @@ def apply_gate_batch(
     write_snapshot(out, out_dir, batch_id)
     # (band, bucket)-partitioned store layout: a future batch's candidate
     # read can prune to the cells it touches (8×16 dirs per batch segment)
-    batch_entry.write.mode("overwrite").partitionBy("band", "bucket").parquet(
-        epoch_dir(store_dir, batch_id)
+    write_snapshot(
+        batch_entry, store_dir, batch_id, partition_by=["band", "bucket"]
     )
 

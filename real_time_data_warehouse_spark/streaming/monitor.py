@@ -9,6 +9,7 @@ JSON line per completed micro-batch, the input to any metrics shipper.
 from __future__ import annotations
 
 import json
+import os
 import threading
 
 from pyspark.sql import SparkSession
@@ -91,6 +92,16 @@ def query_progress_records(query) -> list[dict]:
         # dict form carries UUID/timestamp objects — normalize to the
         # JSON-serializable shape the audit artifact and asserts expect
         records.append(json.loads(json.dumps(raw, default=str)))
+    return records
+
+
+def dump_progress(query, base: str) -> list[dict]:
+    """``query_progress_records`` of a finished query, also written one
+    JSON line each to ``base/progress.jsonl`` (the build's audit
+    artifact)."""
+    records = query_progress_records(query)
+    with open(os.path.join(base, "progress.jsonl"), "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in records)
     return records
 
 

@@ -26,6 +26,8 @@ from real_time_data_warehouse_spark.functions.money import dec
 from real_time_data_warehouse_spark.functions.time import tumble, window_meta
 from real_time_data_warehouse_spark.session import tune
 from real_time_data_warehouse_spark.streaming.state_store import (
+    run_epoch_stream,
+    run_file_stream,
     write_snapshot,
 )
 
@@ -137,13 +139,7 @@ def run_dws_agg_update_stream(
         upsert_versioned(spark, batch, batch_id, serving_dir,
                          key_cols=["stt", "sku_group"])
 
-    return (
-        agg.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_epoch_stream(agg, upsert_batch, checkpoint_dir, "update")
 
 
 def dws_windowed_agg(events: DataFrame, watermark: str = "10 seconds") -> DataFrame:
@@ -165,16 +161,11 @@ def dws_windowed_agg(events: DataFrame, watermark: str = "10 seconds") -> DataFr
 # ---------------------------------------------------------------------------
 
 
-def run_log_split_stream(
-    spark: SparkSession,
-    src_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    fault_injector=None,
-):
-    """DwdBaseLog shell: one source → foreachBatch → one parquet sink
-    partitioned by ``side`` (``log_side``) — the Spark form of Flink side
-    outputs: one pass and ONE write job per epoch for all five sides.
+def log_split_sink(out_dir: str):
+    """DwdBaseLog epoch body: tag each row with its side (``log_side``)
+    and write ONE ``side``-partitioned frame per epoch — the Spark form
+    of Flink side outputs: one pass and ONE write job per epoch for all
+    five sides.
 
     Exactly-once across failures: each epoch writes its own
     ``batch_id=N`` directory with a static overwrite, so a retry of the
@@ -182,25 +173,24 @@ def run_log_split_stream(
     every side instead of appending next to it. Checkpoint replay +
     idempotent batch writes = end-to-end exactly-once on a plain file
     sink (the Delta path gets the same property from its transaction
-    log). Read a side back as ``read_log(...).where(side == ...)``.
-    ``fault_injector`` is a test hook called with each batch_id before
-    writing.
-    """
-    events = stream_events(spark, src_path)
+    log). Read a side back as ``read_log(...).where(side == ...)``."""
 
     def sink_batch(batch: DataFrame, batch_id: int) -> None:
-        if fault_injector is not None:
-            fault_injector(batch_id)
         routed = batch.withColumn("side", log_side()).where(
             F.col("side").isNotNull()
         )
         write_snapshot(routed, out_dir, batch_id, partition_by="side")
 
-    return (
-        events.writeStream.foreachBatch(sink_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batch
+
+
+def run_log_split_stream(
+    spark: SparkSession, src_path: str, out_dir: str, checkpoint_dir: str
+):
+    """DwdBaseLog shell: one source → ``log_split_sink`` → one parquet
+    sink partitioned by ``side``."""
+    return run_epoch_stream(
+        stream_events(spark, src_path), log_split_sink(out_dir), checkpoint_dir
     )
 
 
@@ -216,44 +206,44 @@ def dws_sku_order_enriched(
     return agg.join(F.broadcast(dim), agg["sku_group"] == dim["dic_code"], "left")
 
 
-def run_dynamic_routing_stream(
-    spark: SparkSession,
-    src_path: str,
-    config_rows: list[tuple[str, str]],
-    out_dir: str,
-    checkpoint_dir: str,
-    fault_injector=None,
-):
-    """X2/S5: config-driven demux (DwdBaseDb.java:43-110 + dynamic-topic
-    sink FlinkSinkUtil.java:44-65). The routing config joins as a broadcast
-    per micro-batch; records land under their routed ``sink_table`` via
-    partitioned write — the file-sink analog of Spark's per-row `topic`
-    kafka column (sources/kafka.with_dynamic_topic is the Kafka form).
+def routing_sink(config_rows: list[tuple[str, str]], out_dir: str):
+    """X2/S5 epoch body: config-driven demux (DwdBaseDb.java:43-110 +
+    dynamic-topic sink FlinkSinkUtil.java:44-65). The routing config
+    joins as a broadcast per micro-batch; records land under their
+    routed ``sink_table`` via partitioned write — the file-sink analog
+    of Spark's per-row `topic` kafka column (sources/kafka.
+    with_dynamic_topic is the Kafka form).
 
-    Exactly-once across failures mirrors ``run_log_split_stream``: each
-    epoch overwrites its own ``batch_id=N`` dir (static, whatever the
+    Exactly-once across failures mirrors ``log_split_sink``: each epoch
+    overwrites its own ``batch_id=N`` dir (static, whatever the
     session's partitionOverwriteMode), so a retried epoch replaces the
-    partial output of every routed sink_table. ``fault_injector`` is a
-    test/driver hook called with each batch_id before any write."""
-    events = stream_events(spark, src_path)
+    partial output of every routed sink_table."""
 
     def sink_batch(batch: DataFrame, batch_id: int) -> None:
-        if fault_injector is not None:
-            fault_injector(batch_id)
         config = batch.sparkSession.createDataFrame(
             config_rows, ["source_type", "sink_table"]
         )
         routed = batch.join(
             F.broadcast(config), batch["event_type"] == config["source_type"]
         ).drop("source_type")
-        # per-epoch overwrite → retried batches replace, never duplicate
         write_snapshot(routed, out_dir, batch_id, partition_by="sink_table")
 
-    return (
-        events.writeStream.foreachBatch(sink_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batch
+
+
+def run_dynamic_routing_stream(
+    spark: SparkSession,
+    src_path: str,
+    config_rows: list[tuple[str, str]],
+    out_dir: str,
+    checkpoint_dir: str,
+):
+    """X2/S5 shell: one source → ``routing_sink`` → ``sink_table``-
+    partitioned parquet sink."""
+    return run_epoch_stream(
+        stream_events(spark, src_path),
+        routing_sink(config_rows, out_dir),
+        checkpoint_dir,
     )
 
 
@@ -263,12 +253,6 @@ def run_dws_agg_stream(
     """DWS shell: source → watermarked window agg → append parquet sink,
     day-partitioned (the Doris `par{date}` partitioning analog, S7)."""
     agg = dws_windowed_agg(stream_events(spark, src_path))
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("cur_date")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        agg, out_path, checkpoint_dir, partition_by="cur_date"
     )

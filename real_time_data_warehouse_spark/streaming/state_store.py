@@ -23,9 +23,18 @@ beside the replay — a silent duplicate.
 Logs: ``read_log`` reads every epoch under a directory with
 ``batch_id`` as a partition column; upsert logs compact with
 ``last_wins_log`` (per key, the row of the latest emitting batch).
-``run_applier_stream`` wires an applier
-``(spark, batch, batch_id, state_dir, out_dir)`` as a ``foreachBatch``
-query, the same body the ``_replay_batches`` rows drive.
+
+Runners: this module also owns how every streaming build in the package
+starts, waits and times out. ``run_epoch_stream`` runs a
+``foreachBatch`` body, ``run_file_stream`` an append parquet sink; both
+start an ``availableNow`` query on its checkpoint, wait for it under the
+one ``STREAM_TIMEOUT_S`` limit (stopping the query and raising
+``TimeoutError`` past it — a partial sink is never handed back as
+finished) and return the finished handle, whose ``recentProgress`` holds
+the run's progress records. A failing micro-batch surfaces as the
+``StreamingQueryException`` the wait raises. ``run_applier_stream``
+wires an applier ``(spark, batch, batch_id, state_dir, out_dir)`` as an
+epoch body, the same body the ``_replay_batches`` rows drive.
 
 Readers must project through a declared schema: snapshots may carry
 extra APPLIER-PRIVATE columns beyond the logical state (e.g. the
@@ -73,10 +82,10 @@ def write_snapshot(
     df: DataFrame,
     state_dir: str,
     batch_id: int,
-    partition_by: str | None = None,
+    partition_by: str | list[str] | None = None,
 ) -> None:
     """Overwrite epoch *batch_id* of a state or output dir (idempotent
-    under replay), partitioned by the *partition_by* column if given.
+    under replay), partitioned by the *partition_by* column(s) if given.
     The whole epoch is replaced (static overwrite, pinned per write)."""
     w = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
     if partition_by is not None:
@@ -125,29 +134,63 @@ def last_wins_log(
     )
 
 
+# One hang limit for every streaming build: a query still running past it
+# is stopped and reported, never read back as a finished sink.
+STREAM_TIMEOUT_S = 300
+
+
+def _run(writer, checkpoint_dir: str):
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming build did not finish within {STREAM_TIMEOUT_S} s "
+            "— refusing to hand back a partial sink"
+        )
+    return q
+
+
+def run_epoch_stream(
+    stream: DataFrame, body, checkpoint_dir: str, output_mode: str = "append"
+):
+    """Run ``body(batch, batch_id)`` as an availableNow ``foreachBatch``
+    query over *stream* to completion; returns the finished handle."""
+    return _run(
+        stream.writeStream.foreachBatch(body).outputMode(output_mode),
+        checkpoint_dir,
+    )
+
+
+def run_file_stream(
+    df: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    partition_by: str | None = None,
+):
+    """Run *df* as an availableNow append-mode parquet sink into
+    *out_dir* (partitioned by the *partition_by* column if given) to
+    completion; returns the finished handle."""
+    w = df.writeStream.format("parquet").option("path", out_dir)
+    if partition_by is not None:
+        w = w.partitionBy(partition_by)
+    return _run(w.outputMode("append"), checkpoint_dir)
+
+
 def run_applier_stream(
     source: DataFrame,
     apply_batch,
     state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    fault_injector=None,
 ):
     """Run ``apply_batch(spark, batch, batch_id, state_dir, out_dir)``
-    as an availableNow ``foreachBatch`` query over the streaming
-    *source*. ``fault_injector`` is a crash hook called with the
-    batch_id BEFORE any write — raising from it simulates a mid-stream
-    crash, so restart-from-checkpoint coverage can assert that the
-    overwritten epochs heal partial output."""
-
-    def body(batch: DataFrame, batch_id: int) -> None:
-        if fault_injector is not None:
-            fault_injector(batch_id)
-        apply_batch(batch.sparkSession, batch, batch_id, state_dir, out_dir)
-
-    return (
-        source.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    over the streaming *source* through ``run_epoch_stream``."""
+    return run_epoch_stream(
+        source,
+        lambda b, bid: apply_batch(b.sparkSession, b, bid, state_dir, out_dir),
+        checkpoint_dir,
     )

@@ -33,9 +33,11 @@ call's latency at ingest scale, so:
   DWS eviction happens in the next call's data batch instead, which uses
   the same watermark for late-row filtering and eviction, so the
   serving table is the same; DWS state holds one call's closed windows
-  until the next call. The conf is scoped to the two ``start()`` calls
-  (Spark reads it at query start; the checkpoint does not store it), so
-  queries that need the trailing flush batch keep it.
+  until the next call. The conf is scoped to the two runner calls
+  (``state_store.run_epoch_stream``). Spark reads it once, at query
+  start, and the checkpoint does not store it, so holding it through
+  the runner's wait changes nothing, and queries that need the trailing
+  flush batch keep it.
 """
 
 from __future__ import annotations
@@ -53,7 +55,10 @@ from real_time_data_warehouse_spark.sources.cdc import (
     parse_maxwell,
 )
 from real_time_data_warehouse_spark.streaming.sinks import upsert_versioned
-from real_time_data_warehouse_spark.streaming.state_store import write_snapshot
+from real_time_data_warehouse_spark.streaming.state_store import (
+    run_epoch_stream,
+    write_snapshot,
+)
 
 
 def stream_cdc_values(spark: SparkSession, path: str) -> DataFrame:
@@ -68,9 +73,9 @@ _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 @contextmanager
 def _no_data_batches_off(spark: SparkSession):
-    """Scope no-data micro-batches OFF around a query's start (see the
+    """Scope no-data micro-batches OFF around a query's run (see the
     module docstring); the previous session value is restored even when
-    the start raises."""
+    the run raises."""
     old = spark.conf.get(_NO_DATA_BATCHES)
     spark.conf.set(_NO_DATA_BATCHES, "false")
     try:
@@ -111,15 +116,7 @@ def run_trade_pipeline(
         write_snapshot(batch, dwd_dir, batch_id)
 
     with _no_data_batches_off(spark):
-        q1 = (
-            dwd.writeStream.foreachBatch(dwd_sink)
-            .option("checkpointLocation", os.path.join(base_dir, "ckpt_dwd"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    if not q1.awaitTermination(180):
-        q1.stop()
-        raise TimeoutError("trade DWD query did not finish in 180 s")
+        run_epoch_stream(dwd, dwd_sink, os.path.join(base_dir, "ckpt_dwd"))
 
     # DWS query (stateful op: windowed agg) in update mode → upsert serving
     dwd_stream = (
@@ -152,16 +149,9 @@ def run_trade_pipeline(
                          key_cols=["cur_date", "province_name"])
 
     with _no_data_batches_off(spark):
-        q2 = (
-            agg.writeStream.foreachBatch(dws_sink)
-            .option("checkpointLocation", os.path.join(base_dir, "ckpt_dws"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        run_epoch_stream(
+            agg, dws_sink, os.path.join(base_dir, "ckpt_dws"), "update"
         )
-    if not q2.awaitTermination(180):
-        q2.stop()
-        raise TimeoutError("trade DWS query did not finish in 180 s")
     return paths
 
 

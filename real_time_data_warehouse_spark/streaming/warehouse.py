@@ -23,7 +23,11 @@ from real_time_data_warehouse_spark.streaming.pipelines import (
     log_split,
     stream_events,
 )
-from real_time_data_warehouse_spark.streaming.state_store import write_snapshot
+from real_time_data_warehouse_spark.streaming.state_store import (
+    run_epoch_stream,
+    run_file_stream,
+    write_snapshot,
+)
 
 
 def run_warehouse(
@@ -53,15 +57,7 @@ def run_warehouse(
         finally:
             batch.unpersist()
 
-    q1 = (
-        ods.writeStream.foreachBatch(split_sink)
-        .option("checkpointLocation", os.path.join(base_dir, "ckpt_dwd"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q1.awaitTermination(120):
-        q1.stop()
-        raise TimeoutError("DWD split query did not finish in 120 s")
+    run_epoch_stream(ods, split_sink, os.path.join(base_dir, "ckpt_dwd"))
 
     # --- DWS: windowed aggregate over the DWD page stream ----------------
     # (each DWD side dir is itself a valid streaming source — the Kafka-
@@ -75,19 +71,12 @@ def run_warehouse(
         )
         .parquet(os.path.join(dwd_dir, "page"))
     )
-    agg = dws_windowed_agg(page)
-    q2 = (
-        agg.writeStream.format("parquet")
-        .option("path", dws_path)
-        .option("checkpointLocation", os.path.join(base_dir, "ckpt_dws"))
-        .partitionBy("cur_date")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_file_stream(
+        dws_windowed_agg(page),
+        dws_path,
+        os.path.join(base_dir, "ckpt_dws"),
+        partition_by="cur_date",
     )
-    if not q2.awaitTermination(120):
-        q2.stop()
-        raise TimeoutError("DWS aggregate query did not finish in 120 s")
     return paths
 
 

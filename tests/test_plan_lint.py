@@ -137,20 +137,60 @@ def test_unbounded_global_window_detector_edges(spark):
     assert len(unbounded_global_windows(lit_part)) == 1
 
 
-def test_epoch_paths_only_in_state_store():
-    """streaming/state_store.py owns the ``batch_id=N`` epoch layout:
-    no other package module spells an epoch path by hand."""
+def _package_sources():
+    """(path relative to the package, source) of every package module
+    except ``streaming/state_store.py``, the epoch-layout and query-run
+    owner."""
     import real_time_data_warehouse_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
     owner = os.path.join(root, "streaming", "state_store.py")
-    offenders = []
     for dirpath, _, files in os.walk(root):
         for f in files:
             path = os.path.join(dirpath, f)
-            if not f.endswith(".py") or path == owner:
-                continue
-            with open(path, encoding="utf-8") as fh:
-                if 'f"batch_id={' in fh.read():
-                    offenders.append(os.path.relpath(path, root))
-    assert not offenders, f"hand-built epoch paths in {sorted(offenders)}"
+            if f.endswith(".py") and path != owner:
+                with open(path, encoding="utf-8") as fh:
+                    yield os.path.relpath(path, root), fh.read()
+
+
+def _code_tokens(source: str) -> list[str]:
+    """Text of every NAME and OP token of *source*: code only, since a
+    comment or a string literal (docstrings included) is one token of
+    another type."""
+    import io
+    import tokenize
+
+    return [
+        t.string
+        for t in tokenize.generate_tokens(io.StringIO(source).readline)
+        if t.type in (tokenize.NAME, tokenize.OP)
+    ]
+
+
+def test_epoch_paths_only_in_state_store():
+    """streaming/state_store.py owns the ``batch_id=N`` epoch layout:
+    no other package module spells an epoch path by hand or builds one
+    through ``epoch_dir`` — every epoch write goes through
+    ``write_snapshot`` (static overwrite pinned) and every read through
+    ``read_snapshot``/``read_log``."""
+    offenders = sorted(
+        rel
+        for rel, src in _package_sources()
+        if 'f"batch_id={' in src or "epoch_dir" in _code_tokens(src)
+    )
+    assert not offenders, f"hand-built epoch paths in {offenders}"
+
+
+def test_queries_start_only_in_state_store():
+    """streaming/state_store.py owns how a streaming build starts, waits
+    and times out (``run_epoch_stream``/``run_file_stream``): no other
+    package module reaches ``.writeStream`` or calls
+    ``awaitTermination(`` in code (docstrings and comments may name
+    them)."""
+    offenders = []
+    for rel, src in _package_sources():
+        toks = _code_tokens(src)
+        pairs = set(zip(toks, toks[1:]))
+        if pairs & {(".", "writeStream"), ("awaitTermination", "(")}:
+            offenders.append(rel)
+    assert not offenders, f"queries run by hand in {sorted(offenders)}"

@@ -18,9 +18,14 @@ from real_time_data_warehouse_spark.streaming.dim import (
     default_dim_config,
     run_dim_batch,
 )
+from real_time_data_warehouse_spark.operators.streaming_exec import (
+    _crash_once,
+    _run_crash_restart,
+)
 from real_time_data_warehouse_spark.streaming.pipelines import (
     dws_windowed_agg,
     log_split,
+    log_split_sink,
     run_dws_agg_stream,
     run_log_split_stream,
     stream_events,
@@ -28,6 +33,7 @@ from real_time_data_warehouse_spark.streaming.pipelines import (
 from real_time_data_warehouse_spark.streaming.state_store import (
     epoch_dir,
     read_log,
+    run_epoch_stream,
     write_snapshot,
 )
 from real_time_data_warehouse_spark.streaming.stateful import (
@@ -556,22 +562,21 @@ def test_progress_monitor_listener(spark, tmp_path, events_dir):
 
 def test_log_split_crash_recovery_exactly_once(spark, tmp_path, events_dir):
     """Exactly-once across a mid-stream crash: batch 1's first attempt
-    fails (fault injector) after batch 0 committed; a partial file is
-    planted in batch 1's output dir simulating the crash's debris; the
-    restarted query must retry batch 1, OVERWRITE the debris, and land
-    exactly the batch-mode counts — no duplicates, no loss."""
+    fails (the one-shot fault wrapped around the log-split body) after
+    batch 0 committed; a partial file is planted in batch 1's output dir
+    simulating the crash's debris; the restarted query must retry batch
+    1, OVERWRITE the debris, and land exactly the batch-mode counts — no
+    duplicates, no loss."""
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    fault, _ = _crash_once(1)
+    sink = log_split_sink(out)
 
-    calls = {"n": 0}
+    def crashing(batch, batch_id: int) -> None:
+        fault(batch_id)
+        sink(batch, batch_id)
 
-    def fault(batch_id: int) -> None:
-        if batch_id == 1 and calls["n"] == 0:
-            calls["n"] += 1
-            raise RuntimeError("injected crash before batch 1 writes")
-
-    q = run_log_split_stream(spark, events_dir, out, ckpt, fault_injector=fault)
     with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination(120)
+        run_epoch_stream(stream_events(spark, events_dir), crashing, ckpt)
 
     # simulate partial debris a real crash could leave in the epoch dir
     debris_dir = os.path.join(epoch_dir(out, 1), "side=page")
@@ -582,13 +587,32 @@ def test_log_split_crash_recovery_exactly_once(spark, tmp_path, events_dir):
     ).parquet(debris_dir)
 
     # restart from the same checkpoint, no fault this time
-    q2 = run_log_split_stream(spark, events_dir, out, ckpt)
-    q2.awaitTermination(120)
+    run_log_split_stream(spark, events_dir, out, ckpt)
 
     log = read_log(spark, out)
     for side, df in log_split(ev).items():
         got = log.where(F.col("side") == side).count()
         assert got == df.count(), f"{side}: {got} != {df.count()}"
+
+
+def test_crash_restart_refuses_a_run_whose_fault_never_fired(
+    spark, tmp_path, events_dir
+):
+    """The crash rows' coverage guard: over the 2-file source (epochs 0
+    and 1) the fault ``_run_crash_restart`` arms for epoch 2 never
+    fires — it must fail loud instead of passing a row that no longer
+    covers a mid-stream restart, and must neither plant debris nor
+    restart."""
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    planted = []
+    with pytest.raises(AssertionError, match="fault injector never fired"):
+        _run_crash_restart(
+            stream_events(spark, events_dir),
+            log_split_sink(out),
+            ckpt,
+            lambda: planted.append(True),
+        )
+    assert not planted
 
 
 def test_partitioned_epoch_overwrite_is_static(spark, tmp_path):

@@ -274,16 +274,10 @@ def test_native_sink_checkpoint_resume_exactly_once(spark, tmp_path):
     names = [f"batch_{b}.parquet" for b in range(_SRC_FILES)]
     for n in names[:2]:  # wave 1: first half of the timeline
         _sh.copy2(os.path.join(shared, n), os.path.join(src, n))
-    from real_time_data_warehouse_spark.operators.streaming_exec import (
-        _await,
-    )
-
-    q = run_dws_agg_stream(spark, src, out, ckpt)
-    _await(q, 180)
+    run_dws_agg_stream(spark, src, out, ckpt)  # runs to completion
     for n in names[2:]:  # wave 2 arrives after the first query stopped
         _sh.copy2(os.path.join(shared, n), os.path.join(src, n))
-    q2 = run_dws_agg_stream(spark, src, out, ckpt)  # resume, same ckpt
-    _await(q2, 180)
+    run_dws_agg_stream(spark, src, out, ckpt)  # resume, same ckpt
 
     back = spark.read.parquet(out)
     # exactly-once: no window key appears twice across the two runs
@@ -328,6 +322,9 @@ def test_returning_user_under_rocksdb_state_store(spark, tmp_path):
     )
     from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, query_map
     from real_time_data_warehouse_spark.streaming.pipelines import stream_events
+    from real_time_data_warehouse_spark.streaming.state_store import (
+        run_file_stream,
+    )
     from real_time_data_warehouse_spark.streaming.stateful import returning_user
 
     query_map()
@@ -346,20 +343,7 @@ def test_returning_user_under_rocksdb_state_store(spark, tmp_path):
             .select("user_id", "ts")
         )
         out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        q = (
-            returning_user(logins)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        from real_time_data_warehouse_spark.operators.streaming_exec import (
-            _await,
-        )
-
-        _await(q, 240)
+        run_file_stream(returning_user(logins), out, ckpt)
     finally:
         if old is None:
             spark.conf.unset(key)
