@@ -46,9 +46,5 @@ def with_bounded_part(df: DataFrame, anchor: str | None = None) -> DataFrame:
     return df.withColumn(BOUNDED_PART, (y - y).cast("int"))
 
 
-def drop_bounded_part(df: DataFrame) -> DataFrame:
-    return df.drop(BOUNDED_PART)
-
-
 def bounded_part_col() -> Column:
     return F.col(BOUNDED_PART)

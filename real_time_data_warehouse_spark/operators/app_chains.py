@@ -88,36 +88,43 @@ plan shape survives 1000 executors.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from real_time_data_warehouse_spark.functions.money import (
     dec_sum,
     oracle_dec_sum,
 )
+from real_time_data_warehouse_spark.functions.text import tokenize
 from real_time_data_warehouse_spark.operators.sink_readback import (
     _artifact_dir,
 )
 from real_time_data_warehouse_spark.operators.streaming_exec import (
     _SRC_FILES,
-    _run_crash_restart,
+    _assert_state_operators,
+    _sink_checksums,
     _sliced_source,
-    _stream_shuffle_partitions,
+    _stream_artifact,
+    _write_slices,
     _write_time_sliced_source,
 )
 from real_time_data_warehouse_spark.registry import register
-from real_time_data_warehouse_spark.streaming.monitor import dump_progress
+from real_time_data_warehouse_spark.streaming.pipelines import (
+    EVENTS_RAW_SCHEMA,
+    file_stream,
+    log_side,
+    stream_events,
+)
+from real_time_data_warehouse_spark.streaming.sinks import upsert_dim
 from real_time_data_warehouse_spark.streaming.state_store import (
     read_log,
-    run_epoch_stream,
-    run_file_stream,
     write_snapshot,
 )
+from real_time_data_warehouse_spark.streaming.stateful import returning_user
 from real_time_data_warehouse_spark.tables import Tables
 
 _DELAY = "2 hours"  # watermark delay — must exceed the replay window
@@ -158,7 +165,8 @@ _APP_PARAMS: dict[str, object] = {
 # right for the harness; a production deployment sizes this to
 # ~2-3x cluster cores per the st14 note — a deploy-time conf, and the
 # chain multiplier is exactly why chained jobs size it more carefully
-# than single-op jobs.
+# than single-op jobs. Every chain row hands it to the build harness,
+# streaming_exec._stream_artifact.
 _STATE_PARTS = 8
 _REPLAY_NS = 3600 * 10**9  # 1 h of each slice re-delivered in the next
 _SENT_NS = 30 * 86400 * 10**9  # sentinel 30 days past max event time
@@ -176,20 +184,6 @@ _ORD_SHIFT = 1 << 31
 _N_PROVINCES = 25  # nation-table domain; province_id = user_id % 25
 
 
-def _write_single_file(
-    df: DataFrame, base: str, name: str, mtime: float
-) -> None:
-    """Write ``df`` as ONE parquet file ``base/name`` with a pinned
-    mtime (the file source schedules micro-batches in mtime order)."""
-    stage = os.path.join(base, "_stage")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
-    dst = os.path.join(base, name)
-    shutil.move(os.path.join(stage, part), dst)
-    shutil.rmtree(stage, ignore_errors=True)
-    os.utime(dst, (mtime, mtime))
-
-
 def _app_source(spark: SparkSession, sf_dir: str) -> str:
     """Session-cached app-row source: the shared time-sliced events
     plus (a) tail-replay duplicates — the last _REPLAY_NS of slice k
@@ -202,110 +196,77 @@ def _app_source(spark: SparkSession, sf_dir: str) -> str:
     twice past all real data before the trailing no-data batch, or the
     second outer join strands its final null-padded rows in state.
 
-    One file per micro-batch; mtimes pinned in slice order, offsets
-    derived from the FILE COUNT (a fixed offset silently mis-orders the
-    sentinel once the slice count grows past it — the file source
-    follows modification time, same discipline as
-    streaming_exec._write_time_sliced_source)."""
+    One file per micro-batch, all slices landing in ONE
+    ``streaming_exec._write_slices`` job, which pins the mtimes in slice
+    order (the file source follows modification time). The sentinel
+    slices take the two ids after the last real slice, so their mtimes
+    come last at any slice count."""
 
     def build(base: str) -> None:
         src0 = _sliced_source(spark, sf_dir, _SRC_FILES)
-        files = sorted(glob.glob(src0 + "/*.parquet"), key=os.path.getmtime)
-        now = time.time()
-        n_slices = len(files) + 2  # + the two sentinel slices
-
-        def write_one(df: DataFrame, name: str, mtime: float) -> None:
-            _write_single_file(df, base, name, mtime)
-
-        for i, f in enumerate(files):
-            cur = spark.read.parquet(f)
-            if i > 0:
-                prev = spark.read.parquet(files[i - 1])
-                pmx = prev.agg(F.max("ts")).first()[0]
-                cur = cur.unionByName(
-                    prev.where(F.col("ts") >= pmx - _REPLAY_NS)
-                )
-            write_one(cur, f"batch_{i}.parquet", now - n_slices + i)
-        mx, mx_id = (
-            spark.read.parquet(src0)
-            .agg(F.max("ts"), F.max("event_id"))
-            .first()
+        # the shared source's slice id, from its batch_<b>.parquet name
+        wire = spark.read.parquet(src0).withColumn(
+            "b",
+            F.regexp_extract("_metadata.file_name", r"^batch_(\d+)", 1)
+            .cast("int"),
         )
+        stats = sorted(
+            wire.groupBy("b").agg(F.max("ts"), F.max("event_id")).collect()
+        )
+        mx = max(r[1] for r in stats)
+        mx_id = max(r[2] for r in stats)
         # the app4s/k4 LWW ord packs event_id under _ORD_SHIFT — a
         # dataset outgrowing the modulus would silently invert LWW
         # ordering, so fail loud here instead
         assert mx_id < _ORD_SHIFT, (
             f"event_id {mx_id} >= ord-packing modulus {_ORD_SHIFT}"
         )
+        # the tail of each slice, re-delivered in the next non-empty one
+        replays = [
+            wire.where(
+                (F.col("b") == b) & (F.col("ts") >= pmx - _REPLAY_NS)
+            ).withColumn("b", F.lit(nxt))
+            for (b, pmx, _), (nxt, _, _) in zip(stats, stats[1:])
+        ]
+        first = stats[-1][0] + 1  # slice id of the first sentinel slice
 
-        def sentinel(k: int, ns_off: int) -> DataFrame:
+        def sentinel(k: int) -> DataFrame:
             base_id = -(4 * (k - 1))  # slice 1: -1..-4; slice 2: -5..-8
             return spark.createDataFrame(
                 [
-                    (base_id - j - 1, mx + k * ns_off, base_id - j - 1, t,
-                     0.0, "{}")
+                    (base_id - j - 1, mx + k * _SENT_NS, base_id - j - 1, t,
+                     0.0, "{}", first + k - 1)
                     for j, t in enumerate(
                         ("purchase", "signup", "click", "view")
                     )
                 ],
                 "event_id bigint, ts bigint, user_id bigint, "
-                "event_type string, value double, props string",
+                "event_type string, value double, props string, b int",
             )
 
-        write_one(sentinel(1, _SENT_NS), "batch_z1_sentinel.parquet",
-                  now - 1)
-        write_one(sentinel(2, _SENT_NS), "batch_z2_sentinel.parquet", now)
+        slices = reduce(
+            DataFrame.unionByName, [*replays, sentinel(1), sentinel(2)], wire
+        )
+        _write_slices(slices, base, first + 2)
 
     return _artifact_dir(spark, sf_dir, "appsrc", build)
 
 
-def _assert_state_operators(records: list[dict], expect: int) -> None:
-    """The row's claim is the CHAIN — fail loud if Spark planned fewer
-    stateful operators than the topology declares (e.g. an optimizer
-    change collapsing a dedup would silently degrade the coverage)."""
-    counts = {
-        len(r.get("stateOperators", []))
-        for r in records
-        if r.get("stateOperators")
-    }
-    if counts != {expect}:
-        raise AssertionError(
-            f"app chain expected {expect} stateful operators per batch, "
-            f"saw {sorted(counts)} — the composed topology is no longer "
-            "what this row verifies"
-        )
+# --- shared pieces of the chain builds (every build runs through the one
+# --- harness, streaming_exec._stream_artifact) -----------------------------
 
 
-# --- shared chain scaffolding (18 builds; round-11 verdict task 7) --------
+def _app_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The app source as an event stream, one file per micro-batch."""
+    return stream_events(spark, _app_source(spark, sf_dir))
 
 
-def _run_append_chain(spark: SparkSession, base: str, df, n_ops: int) -> None:
-    """Run ``df`` as ONE append-mode streaming query into ``base/out``
-    (checkpoint at ``base/ckpt``), await completion, and assert the
-    planned stateful-operator count from the progress records."""
-    q = run_file_stream(
-        df, os.path.join(base, "out"), os.path.join(base, "ckpt")
-    )
-    _assert_state_operators(dump_progress(q, base), n_ops)
-
-
-def _chain_artifact(
-    spark: SparkSession, sf_dir: str, kind: str, n_ops: int, plan
-) -> str:
-    """Session-cached app-chain artifact: ``plan(ev)`` declares the
-    topology over the shared replay+sentinel source's event stream; the
-    result runs as one append-mode query at _STATE_PARTS state-store
-    partitions. Every parquet-sink chain build is this shape."""
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        ev = stream_events(spark, _app_source(spark, sf_dir))
-        with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            _run_append_chain(spark, base, plan(ev), n_ops)
-
-    return _artifact_dir(spark, sf_dir, kind, build)
+def _no_debris(base: str, epoch: int) -> None:
+    """Crash planter of the merge-sink rows (app4s, app7x): the replay of
+    an LWW upsert is a no-op, so their crash leaves no partial append
+    for the replay to heal — debris modeling belongs to append sinks; a
+    merge sink's mid-WRITE atomicity is the ACID branch's (Delta MERGE)
+    job in production, not replay's."""
 
 
 def _typed_branch(
@@ -368,7 +329,8 @@ def _drop_sentinel_windows(
 
 
 def _app1s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         # per-table filter views (DwdTradeOrderDetail.java:30-82), each
         # branch LWW-deduped (ST1 — the DWS consumer's retract-dedup
         # pulled up to the producer, same observable stream)
@@ -414,10 +376,12 @@ def _app1s_build(spark: SparkSession, sf_dir: str) -> str:
         ).select(
             "od_id", "order_key", "amount", "od_ts", "oi_id", "act_id",
             "cpn_id",
-        )
+        ), None
 
     # 4 dedups + 3 symmetric hash joins = 7 stateful operators
-    return _chain_artifact(spark, sf_dir, "app1s", 7, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app1s", plan, _STATE_PARTS, _assert_state_operators(7)
+    )
 
 
 @register(
@@ -487,7 +451,8 @@ def app1s_order_detail_stream_chain(
 
 
 def _app2s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         # ST1: dedup by the detail's unique key (DwsTradeProvince
         # OrderWindow.java:74-99 — the retract-dedup ValueState with a
         # 10 s TTL, re-expressed as dropDuplicatesWithinWatermark: the
@@ -530,10 +495,12 @@ def _app2s_build(spark: SparkSession, sf_dir: str) -> str:
             "n_details",
             "order_count",
             "order_amount",
-        )
+        ), None
 
     # dedup + windowed agg = 2 stateful operators
-    return _chain_artifact(spark, sf_dir, "app2s", 2, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app2s", plan, _STATE_PARTS, _assert_state_operators(2)
+    )
 
 
 @register(
@@ -584,7 +551,8 @@ _APP3_DROP_MOD = _APP_PARAMS["app3_drop_mod"]
 
 
 def _app3s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         # P1/P11: per-row JSON parse + predicate filter — the
         # reference's tombstone/dirty-row gate ahead of the dedup
         # (DwsTradeSkuOrderWindow.java:133-142 drops null-'old' CDC
@@ -649,11 +617,13 @@ def _app3s_build(spark: SparkSession, sf_dir: str) -> str:
                 "order_count",
                 "order_amount",
             )
-        )
+        ), None
 
     # dedup + windowed agg = 2 stateful operators; the dim chain is
     # stateless per-batch broadcasts
-    return _chain_artifact(spark, sf_dir, "app3s", 2, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app3s", plan, _STATE_PARTS, _assert_state_operators(2)
+    )
 
 
 @register(
@@ -720,15 +690,8 @@ _APP4_DELETE_MOD = _APP_PARAMS["app4_delete_mod"]
 
 
 def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        EVENTS_RAW_SCHEMA,
-    )
-    from real_time_data_warehouse_spark.streaming.sinks import upsert_dim
-
-    def build(base: str) -> None:
-        src = _app_source(spark, sf_dir)
+    def plan(base: str):
         dim_base = os.path.join(base, "dim")
-        ckpt = os.path.join(base, "ckpt")
         config = spark.createDataFrame(
             [(s, t, ",".join(c)) for s, t, c in _APP4_CONFIG],
             "event_type string, sink_table string, sink_columns string",
@@ -785,22 +748,16 @@ def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
                     type_col="op",
                 )
 
-        raw = (
-            spark.readStream.schema(EVENTS_RAW_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        # crash before epoch 2's writes, restart from the checkpoint:
-        # the replayed epoch re-applies the same upserts/deletes — a
-        # no-op under LWW (same rows, same ord), which IS the
-        # exactly-once argument for an idempotent merge sink. No debris
-        # is planted: debris modeling belongs to append sinks (x1s/
-        # d7x); a merge sink's mid-WRITE atomicity comes from the ACID
-        # branch (Delta MERGE) in production, not from replay.
-        with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            _run_crash_restart(raw, body, ckpt, lambda: None)
+        src = _app_source(spark, sf_dir)
+        return file_stream(spark, src, EVENTS_RAW_SCHEMA), body
 
-    return _artifact_dir(spark, sf_dir, "app4s", build)
+    # crash before the crash epoch's writes, restart from the
+    # checkpoint: the replayed epoch re-applies the same
+    # upserts/deletes — a no-op under LWW (same rows, same ord), which
+    # IS the exactly-once argument for an idempotent merge sink
+    return _stream_artifact(
+        spark, sf_dir, "app4s", plan, _STATE_PARTS, debris=_no_debris
+    )
 
 
 @register(
@@ -997,19 +954,10 @@ def _app5_fix_fn(key, pdf_iter, state):
 
 
 def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        log_side,
-        stream_events,
-    )
-
     out_schema, state_schema = _app5_schemas()
 
-    def build(base: str) -> None:
-        src = _app5_source(spark, sf_dir)
+    def plan(base: str):
         out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
 
         def body(b: DataFrame, bid: int) -> None:
             # P2 + X1: one CASE routes every row (dirty first, then the
@@ -1038,7 +986,7 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
                 partition_by="side",
             )
 
-        flagged = stream_events(spark, src).withColumn(
+        flagged = stream_events(spark, _app5_source(spark, sf_dir)).withColumn(
             # P2 dirty gate: actual JSON validity, not the generator's id
             # rule (get_json_object('$') is NULL iff the document fails
             # to parse)
@@ -1052,26 +1000,27 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        return fixed, body
 
-        def plant_debris() -> None:
-            # partial file a mid-write crash leaves in the crashed
-            # epoch's side=action dir — the retry must REPLACE it
-            ev = Tables(spark, sf_dir).events
-            debris = ev.where(F.col("event_type") == "click").limit(9).select(
-                "event_id",
-                "user_id",
-                F.lit(9).cast("int").alias("is_new"),
-                F.lit("action").alias("side"),
-            )
-            write_snapshot(debris, out, 2, partition_by="side")
+    def debris(base: str, epoch: int) -> None:
+        # partial file a mid-write crash leaves in the crashed epoch's
+        # side=action dir — the retry must REPLACE it
+        ev = Tables(spark, sf_dir).events
+        rows = ev.where(F.col("event_type") == "click").limit(9).select(
+            "event_id",
+            "user_id",
+            F.lit(9).cast("int").alias("is_new"),
+            F.lit("action").alias("side"),
+        )
+        out = os.path.join(base, "out")
+        write_snapshot(rows, out, epoch, partition_by="side")
 
-        with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            q2 = _run_crash_restart(fixed, body, ckpt, plant_debris)
-            # exactly ONE keyed-state operator (the ST3 repair) in the
-            # replayed epochs' plans
-            _assert_state_operators(dump_progress(q2, base), 1)
-
-    return _artifact_dir(spark, sf_dir, "app5s", build)
+    # exactly ONE keyed-state operator (the ST3 repair) in the replayed
+    # epochs' plans
+    return _stream_artifact(
+        spark, sf_dir, "app5s", plan, _STATE_PARTS,
+        _assert_state_operators(1), debris=debris,
+    )
 
 
 @register(
@@ -1148,11 +1097,8 @@ def app5s_base_log_stream_chain(
 ) -> DataFrame:
     base = _app5s_build(spark, sf_dir)
     back = read_log(spark, os.path.join(base, "out"), _APP5_SINK_SCHEMA)
-    return back.groupBy("side").agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum("event_id").cast("bigint").alias("id_sum"),
-        F.countDistinct("user_id").cast("bigint").alias("uu"),
-        F.sum("is_new").cast("bigint").alias("new_sum"),
+    return _sink_checksums(
+        back, "side", F.sum("is_new").cast("bigint").alias("new_sum")
     )
 
 
@@ -1165,7 +1111,8 @@ _APP6_SV_MOD = _APP_PARAMS["app6_sv_mod"]
 
 
 def _app6s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(raw: DataFrame) -> DataFrame:
+    def plan(base: str):
+        raw = _app_events(spark, sf_dir)
         # the 4 stat dims (vc/ch/ar/is_new, :77-92) derived from the
         # key so every event of a user carries identical dims — the
         # uv row's attribution is then arrival-order-independent
@@ -1228,10 +1175,12 @@ def _app6s_build(spark: SparkSession, sf_dir: str) -> str:
                 "pv_ct", "uv_ct", "sv_ct", "dur_sum",
             )
         )
-        return agg
+        return agg, None
 
     # 2 dedup states + 1 windowed agg = 3 stateful operators
-    return _chain_artifact(spark, sf_dir, "app6s", 3, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app6s", plan, _STATE_PARTS, _assert_state_operators(3)
+    )
 
 
 @register(
@@ -1301,9 +1250,8 @@ _APP8_SEARCH_MOD = _APP_PARAMS["app8_search_mod"]
 
 
 def _app8s_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.functions.text import tokenize
-
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         # P10: the search-page filter (DwsTrafficSourceKeywordPageView
         # Window.java:66-77 keeps last_page_id='search' pages with a
@@ -1352,11 +1300,13 @@ def _app8s_build(spark: SparkSession, sf_dir: str) -> str:
             words.groupBy(F.window("ts", "1 day").alias("w"), "keyword")
             .agg(F.count("*").cast("bigint").alias("keyword_ct"))
             .select(*_win_meta(), "keyword", "keyword_ct")
-        )
+        ), None
 
     # dedup + windowed count = 2 stateful operators; the tokenizer
     # explode is stateless between them
-    return _chain_artifact(spark, sf_dir, "app8s", 2, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app8s", plan, _STATE_PARTS, _assert_state_operators(2)
+    )
 
 
 _APP8_VOCAB_SQL = "['" + "','".join(_APP8_VOCAB) + "']"
@@ -1435,17 +1385,9 @@ def _login_daily(spark: SparkSession, sf_dir: str, base: str):
     id, monotone) folds them so the FINAL store equals the complete
     aggregate — the exact shape of the reference's keyed-process →
     windowAll → upsert-sink, with no watermark and no horizon math."""
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-    from real_time_data_warehouse_spark.streaming.sinks import upsert_dim
-    from real_time_data_warehouse_spark.streaming.stateful import (
-        returning_user,
-    )
-
     store = os.path.join(base, "store")
     logins = (
-        stream_events(spark, _app_source(spark, sf_dir))
+        _app_events(spark, sf_dir)
         .where(F.col("event_type").isin("signup", "click"))
         .select("user_id", "ts")
     )
@@ -1480,17 +1422,11 @@ def _login_store_readback(
 
 
 def _app7s_build(spark: SparkSession, sf_dir: str) -> str:
-    def build(base: str) -> None:
-        with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            q = run_epoch_stream(
-                *_login_daily(spark, sf_dir, base),
-                os.path.join(base, "ckpt"),
-                "update",
-            )
-            # the keyed ST5 state + the update-mode aggregate state
-            _assert_state_operators(dump_progress(q, base), 2)
-
-    return _artifact_dir(spark, sf_dir, "app7s", build)
+    # the keyed ST5 state + the update-mode aggregate state
+    return _stream_artifact(
+        spark, sf_dir, "app7s", lambda base: _login_daily(spark, sf_dir, base),
+        _STATE_PARTS, _assert_state_operators(2), mode="update",
+    )
 
 
 @register(
@@ -1527,24 +1463,17 @@ def app7s_user_login_stream_chain(
 
 
 def _app7x_build(spark: SparkSession, sf_dir: str) -> str:
-    def build(base: str) -> None:
-        # no debris: the store is an LWW merge sink (the app4s rule —
-        # debris modeling belongs to append sinks; a merge sink's
-        # mid-write atomicity is the ACID branch's job in production).
-        # The coverage here is the KEYED PYTHON STATE: the per-user
-        # last_login_date held by applyInPandasWithState must be
-        # restored from the checkpoint, or the replayed epoch re-emits
-        # already-counted dates with is_uu=1 and the uu totals inflate.
-        with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            daily, body = _login_daily(spark, sf_dir, base)
-            q2 = _run_crash_restart(
-                daily, body, os.path.join(base, "ckpt"), lambda: None, "update"
-            )
-            # the replayed epochs still plan the keyed ST5 state + the
-            # update-mode aggregate
-            _assert_state_operators(dump_progress(q2, base), 2)
-
-    return _artifact_dir(spark, sf_dir, "app7x", build)
+    # no debris: the store is an LWW merge sink (the app4s rule). The
+    # coverage here is the KEYED PYTHON STATE: the per-user
+    # last_login_date held by applyInPandasWithState must be restored
+    # from the checkpoint, or the replayed epoch re-emits already-counted
+    # dates with is_uu=1 and the uu totals inflate. The replayed epochs
+    # still plan the keyed ST5 state + the update-mode aggregate.
+    return _stream_artifact(
+        spark, sf_dir, "app7x", lambda base: _login_daily(spark, sf_dir, base),
+        _STATE_PARTS, _assert_state_operators(2), debris=_no_debris,
+        mode="update",
+    )
 
 
 @register(
@@ -1622,7 +1551,8 @@ def _pay_detail_joined(ev: DataFrame) -> DataFrame:
 
 
 def _app9s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         joined = _pay_detail_joined(ev).select(
             "pay_id", "pay_key", "pay_ts", "det_id"
         )
@@ -1644,11 +1574,13 @@ def _app9s_build(spark: SparkSession, sf_dir: str) -> str:
             .select(
                 "pay_id", "pay_key", "pay_ts", "det_id", "province_name"
             )
-        )
+        ), None
 
     # 2 dedups + 1 symmetric hash join = 3 stateful operators; the dim
     # hop is a stateless per-batch broadcast
-    return _chain_artifact(spark, sf_dir, "app9s", 3, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app9s", plan, _STATE_PARTS, _assert_state_operators(3)
+    )
 
 
 @register(
@@ -1703,7 +1635,8 @@ def app9s_pay_detail_stream_chain(
 
 
 def _app10s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         # ST4-shape keyed state: lastCartAddDate per user (DwsTradeCart
         # AddUuWindow.java:69-110) = first-cart-add-per-(user, day)
         # dedup with the event-time column IN the key (st16's
@@ -1723,10 +1656,12 @@ def _app10s_build(spark: SparkSession, sf_dir: str) -> str:
             firsts.groupBy(F.window("day_ts", "1 day").alias("w"))
             .agg(F.count("*").cast("bigint").alias("cart_add_uu"))
             .select(*_win_meta(), "cart_add_uu")
-        )
+        ), None
 
     # dedup state + window state = 2 stateful operators
-    return _chain_artifact(spark, sf_dir, "app10s", 2, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app10s", plan, _STATE_PARTS, _assert_state_operators(2)
+    )
 
 
 @register(
@@ -1771,38 +1706,28 @@ def app10s_cart_add_uu_stream_chain(
 
 
 def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _app_source(spark, sf_dir)
+    def plan(base: str):
         out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-
-        joined = _pay_detail_joined(stream_events(spark, src)).select(
+        joined = _pay_detail_joined(_app_events(spark, sf_dir)).select(
             "pay_id", "pay_key", "det_id"
         )
+        # per-epoch overwrite dir: a replayed epoch REPLACES partial
+        # output (the x1s exactly-once discipline)
+        return joined, lambda b, bid: write_snapshot(b, out, bid)
 
-        def body(b: DataFrame, bid: int) -> None:
-            # per-epoch overwrite dir: a replayed epoch REPLACES partial
-            # output (the x1s exactly-once discipline)
-            write_snapshot(b, out, bid)
+    def debris(base: str, epoch: int) -> None:
+        rows = spark.createDataFrame(
+            [(-999, -999, -999)], "pay_id bigint, pay_key bigint, "
+            "det_id bigint",
+        )
+        write_snapshot(rows, os.path.join(base, "out"), epoch)
 
-        def plant_debris() -> None:
-            debris = spark.createDataFrame(
-                [(-999, -999, -999)], "pay_id bigint, pay_key bigint, "
-                "det_id bigint",
-            )
-            write_snapshot(debris, out, 2)
-
-        with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            q2 = _run_crash_restart(joined, body, ckpt, plant_debris)
-            # the restarted handle's replayed epochs still plan the
-            # full chain: 2 dedups + 1 symmetric hash join
-            _assert_state_operators(dump_progress(q2, base), 3)
-
-    return _artifact_dir(spark, sf_dir, "app9x", build)
+    # the restarted handle's replayed epochs still plan the full chain:
+    # 2 dedups + 1 symmetric hash join
+    return _stream_artifact(
+        spark, sf_dir, "app9x", plan, _STATE_PARTS,
+        _assert_state_operators(3), debris=debris,
+    )
 
 
 @register(
@@ -1861,7 +1786,8 @@ _APP11_GATE = _APP_PARAMS["cancel_gate"]
 
 
 def _app11s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         # P5: the CDC state-transition predicate (DwdTradeOrderCancel
         # Detail.java:35-43 — old.order_status='1001' AND
@@ -1885,9 +1811,11 @@ def _app11s_build(spark: SparkSession, sf_dir: str) -> str:
             (F.col("cancel_key") == F.col("det_key"))
             & (F.col("det_ts") >= F.col("cancel_ts") - F.expr(_CANCEL_BACK))
             & (F.col("det_ts") <= F.col("cancel_ts")),
-        ).select("cancel_id", "cancel_key", "det_id")
+        ).select("cancel_id", "cancel_key", "det_id"), None
 
-    return _chain_artifact(spark, sf_dir, "app11s", 3, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app11s", plan, _STATE_PARTS, _assert_state_operators(3)
+    )
 
 
 @register(
@@ -1941,7 +1869,8 @@ def app11s_order_cancel_stream_chain(
 
 
 def _app12s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         # ST1 dedup absorbs the replayed slice tails, then the P6
         # cart-add delta map (DwdTradeCartAdd.java:28-40): insert
@@ -1961,9 +1890,11 @@ def _app12s_build(spark: SparkSession, sf_dir: str) -> str:
                 .cast("int")
                 .alias("delta"),
             )
-        )
+        ), None
 
-    return _chain_artifact(spark, sf_dir, "app12s", 1, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app12s", plan, _STATE_PARTS, _assert_state_operators(1)
+    )
 
 
 @register(
@@ -2007,7 +1938,8 @@ _APP13_DIC = _APP_PARAMS["app13_dic"]
 
 
 def _app13s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         # P4: map-subscript projection of the comment envelope
         # (DwdInteractionCommentInfo.java:25-33); ST1 dedup; then the
@@ -2030,9 +1962,11 @@ def _app13s_build(spark: SparkSession, sf_dir: str) -> str:
             F.col("r_regionkey").alias("appraise_code"),
             F.col("r_name").alias("appraise_name"),
         )
-        return comments.join(F.broadcast(dic), "appraise_code")
+        return comments.join(F.broadcast(dic), "appraise_code"), None
 
-    return _chain_artifact(spark, sf_dir, "app13s", 1, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app13s", plan, _STATE_PARTS, _assert_state_operators(1)
+    )
 
 
 @register(
@@ -2068,11 +2002,7 @@ def app13s_comment_info_stream_chain(
 ) -> DataFrame:
     base = _app13s_build(spark, sf_dir)
     back = spark.read.parquet(os.path.join(base, "out"))
-    return back.groupBy("appraise_name").agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum("event_id").cast("bigint").alias("id_sum"),
-        F.countDistinct("user_id").cast("bigint").alias("uu"),
-    )
+    return _sink_checksums(back, "appraise_name")
 
 
 # the base_db routing config: signup deliberately ABSENT (it falls to
@@ -2086,21 +2016,15 @@ _APP14_CONFIG = (
 
 
 def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _app_source(spark, sf_dir)
+    def plan(base: str):
         out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
         config = spark.createDataFrame(
             list(_APP14_CONFIG), "source_type string, sink_table string"
         )
 
         # P3: bootstrap-record exclusion by prefix (:45-61)
         routed = (
-            stream_events(spark, src)
+            _app_events(spark, sf_dir)
             .where(
                 ~F.col("event_type").startswith("sign")
                 & ~F.col("event_type").startswith("boot")
@@ -2118,21 +2042,22 @@ def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
             .select("event_id", "user_id", "sink_table")
         )
 
-        def body(b: DataFrame, bid: int) -> None:
-            write_snapshot(b, out, bid, partition_by="sink_table")
+        return routed, lambda b, bid: write_snapshot(
+            b, out, bid, partition_by="sink_table"
+        )
 
-        def plant_debris() -> None:
-            debris = spark.createDataFrame(
-                [(-777, -777, "dwd_action")],
-                "event_id bigint, user_id bigint, sink_table string",
-            )
-            write_snapshot(debris, out, 2, partition_by="sink_table")
+    def debris(base: str, epoch: int) -> None:
+        rows = spark.createDataFrame(
+            [(-777, -777, "dwd_action")],
+            "event_id bigint, user_id bigint, sink_table string",
+        )
+        out = os.path.join(base, "out")
+        write_snapshot(rows, out, epoch, partition_by="sink_table")
 
-        with _stream_shuffle_partitions(spark, _STATE_PARTS):
-            q2 = _run_crash_restart(routed, body, ckpt, plant_debris)
-            _assert_state_operators(dump_progress(q2, base), 1)
-
-    return _artifact_dir(spark, sf_dir, "app14s", build)
+    return _stream_artifact(
+        spark, sf_dir, "app14s", plan, _STATE_PARTS,
+        _assert_state_operators(1), debris=debris,
+    )
 
 
 @register(
@@ -2173,15 +2098,8 @@ def app14s_base_db_stream_chain(
 ) -> DataFrame:
     base = _app14s_build(spark, sf_dir)
     back = read_log(spark, os.path.join(base, "out"))
-    return (
-        back.where(F.col("event_id") >= 0)  # sentinel rows route too
-        .groupBy("sink_table")
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum("event_id").cast("bigint").alias("id_sum"),
-            F.countDistinct("user_id").cast("bigint").alias("uu"),
-        )
-    )
+    # sentinel rows route too
+    return _sink_checksums(back.where(F.col("event_id") >= 0), "sink_table")
 
 
 _APP15_GATE = _APP_PARAMS["refund_gate"]
@@ -2200,7 +2118,8 @@ def _refund_chain(
     if pay_suc:
         lo = (lo + hi) // 2 + 1  # 76-90: refunds whose payment succeeded
 
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         refunds = (
             ev.where(
@@ -2239,9 +2158,11 @@ def _refund_chain(
             .select(
                 "event_id", "user_id", "refund_type", "province_name"
             )
-        )
+        ), None
 
-    return _chain_artifact(spark, sf_dir, kind, 1, plan)
+    return _stream_artifact(
+        spark, sf_dir, kind, plan, _STATE_PARTS, _assert_state_operators(1)
+    )
 
 
 def _refund_oracle(lo: int, hi: int) -> str:
@@ -2320,7 +2241,8 @@ _APP16_PAGES = _APP_PARAMS["app16_pages"]
 
 
 def _app16s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(ev: DataFrame) -> DataFrame:
+    def plan(base: str):
+        ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         page = (
             F.when(F.pmod(k, F.lit(6)) == _APP16_PAGES["home"], "home")
@@ -2351,9 +2273,11 @@ def _app16s_build(spark: SparkSession, sf_dir: str) -> str:
             )
             .agg(F.count("*").cast("bigint").alias("uv_ct"))
             .select(*_win_meta(), "page", "uv_ct")
-        )
+        ), None
 
-    return _chain_artifact(spark, sf_dir, "app16s", 2, plan)
+    return _stream_artifact(
+        spark, sf_dir, "app16s", plan, _STATE_PARTS, _assert_state_operators(2)
+    )
 
 
 @register(

@@ -52,18 +52,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_data_warehouse_spark.operators.sink_readback import (
-    _artifact_dir,
-)
 from real_time_data_warehouse_spark.operators.streaming_exec import (
     _SRC_FILES,
-    _sliced_source,
-    _stream_shuffle_partitions,
+    _sliced_events,
+    _stream_artifact,
 )
 from real_time_data_warehouse_spark.registry import register
 from real_time_data_warehouse_spark.streaming.state_store import (
     read_log,
-    run_epoch_stream,
     write_snapshot,
 )
 from real_time_data_warehouse_spark.tables import Tables
@@ -101,15 +97,11 @@ def _j16_build(
     spark: SparkSession, sf_dir: str, kind: str = "j16",
     deletes: bool = False,
 ) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
+    swapped = {"done": False}
 
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
+    def plan(base: str):
         dim_dir = os.path.join(base, "dim")
         out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
         # generation v1 on disk before the stream starts
         _dim_df(spark, sf_dir, v2=False).coalesce(1).write.mode(
             "overwrite"
@@ -122,7 +114,6 @@ def _j16_build(
             .first()
         )
         span = (hi - lo) + 1
-        swapped = {"done": False}
 
         def body(b: DataFrame, bid: int) -> None:
             # batch → time slice: min event time over the batch (slices
@@ -161,15 +152,16 @@ def _j16_build(
             )
             write_snapshot(enriched, out, bid)
 
-        with _stream_shuffle_partitions(spark):
-            run_epoch_stream(stream_events(spark, src), body, ckpt)
+        return _sliced_events(spark, sf_dir), body
+
+    def check(records: list[dict]) -> None:
         assert swapped["done"], (
             "dim swap never fired — no micro-batch reached time-slice "
             f">= {_SWAP_SLICE}; the row would no longer cover a "
             "mid-stream dim update"
         )
 
-    return _artifact_dir(spark, sf_dir, kind, build)
+    return _stream_artifact(spark, sf_dir, kind, plan, check=check)
 
 
 @register(

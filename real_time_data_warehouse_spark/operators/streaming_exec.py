@@ -26,6 +26,14 @@ The stream runs ONCE per (session, sf_dir) into a cached artifact
 (j12 discipline); re-runs resume from the checkpoint, find no new
 files, and the read-back serves the medians — exactly how a deployment
 reads a continuously-maintained DWS table rather than recomputing it.
+
+Every streaming artifact row — here, in app_chains and in dim_refresh —
+builds through one harness, ``_stream_artifact``: the row declares its
+query (and, for a crash row, its debris); the harness owns the cache,
+the sink and checkpoint paths, the state-store partition scope, the
+runner (``run_file_stream``, ``run_epoch_stream`` or the crash driver
+``_run_crash_restart``), the progress records and the row's check on
+them.
 """
 
 from __future__ import annotations
@@ -40,15 +48,31 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_data_warehouse_spark.functions.money import oracle_dec_sum
+from real_time_data_warehouse_spark.functions.money import (
+    dec,
+    dec_sum,
+    oracle_dec_sum,
+)
 from real_time_data_warehouse_spark.functions.time import oracle_tumble
 from real_time_data_warehouse_spark.operators.sink_readback import (
     _artifact_dir,
 )
 from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.streaming.joins import (
+    interval_join_purchases,
+    left_outer_stream_join,
+)
 from real_time_data_warehouse_spark.streaming.monitor import (
     assert_watermark_eviction,
     dump_progress,
+)
+from real_time_data_warehouse_spark.streaming.pipelines import (
+    dws_upsert_sink,
+    dws_windowed_agg,
+    file_stream,
+    log_split_sink,
+    routing_sink,
+    stream_events,
 )
 from real_time_data_warehouse_spark.streaming.state_store import (
     STREAM_TIMEOUT_S,
@@ -57,28 +81,176 @@ from real_time_data_warehouse_spark.streaming.state_store import (
     run_file_stream,
     write_snapshot,
 )
+from real_time_data_warehouse_spark.streaming.stateful import (
+    returning_user,
+    visitor_fix,
+)
 from real_time_data_warehouse_spark.tables import Tables
 
 _SRC_FILES = 4  # micro-batches: watermark must advance ACROSS batches
-_ST14_FILES = _SRC_FILES  # kept for the registered doc text
 _ST14_HORIZON_S = 20  # closed-window margin (2 windows behind max ts)
 
+# --- the build harness every streaming artifact row starts through ---------
+
+# State-store partitions of a streaming build. A streaming query pins
+# its state-store partition count to spark.sql.shuffle.partitions at
+# first start (it is then frozen in the checkpoint), and a vanilla
+# session leaves it at 200 — 200 state stores × tiny micro-batches is
+# pure per-batch task overhead at artifact scale. 32 fits a 32-core
+# local session (the app chains start at app_chains._STATE_PARTS); a
+# production deployment sizes it to ~2-3×
+# cluster cores BEFORE the first start, which is a deploy-time conf,
+# not a code change.
+_STREAM_PARTS = 32
+# the epoch every crash row kills: two epochs committed before it
+_CRASH_EPOCH = 2
+
+
 @_contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int = 32):
-    """Scope spark.sql.shuffle.partitions around a streaming query's
-    START. A streaming query pins its state-store partition count to
-    this conf at first start (it is then frozen in the checkpoint), and
-    the driver's vanilla session leaves it at 200 — 200 state stores ×
-    tiny micro-batches is pure per-batch task overhead at artifact
-    scale. 32 matches the harness core count; a production deployment
-    sizes it to ~2-3× cluster cores BEFORE the first start, which is a
-    deploy-time conf, not a code change."""
+def _stream_shuffle_partitions(spark: SparkSession, n: int):
+    """Scope spark.sql.shuffle.partitions to *n* around a streaming
+    query's START (see _STREAM_PARTS)."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _assert_state_operators(expect: int):
+    """Progress check of a chain row: its claim is the CHAIN, so fail
+    loud if Spark planned other than *expect* stateful operators per
+    batch (e.g. an optimizer change collapsing a dedup would silently
+    degrade the coverage)."""
+
+    def check(records: list[dict]) -> None:
+        counts = {
+            len(r.get("stateOperators", []))
+            for r in records
+            if r.get("stateOperators")
+        }
+        if counts != {expect}:
+            raise AssertionError(
+                f"app chain expected {expect} stateful operators per "
+                f"batch, saw {sorted(counts)} — the composed topology is "
+                "no longer what this row verifies"
+            )
+
+    return check
+
+
+def _crash_once(crash_batch: int):
+    """Fault injector raising on ``crash_batch``'s FIRST attempt only,
+    plus the counter so the build can assert the crash actually fired
+    (a fault that never fires silently drops the restart coverage)."""
+    calls = {"n": 0}
+
+    def fault(batch_id: int) -> None:
+        if batch_id == crash_batch and calls["n"] == 0:
+            calls["n"] += 1
+            raise RuntimeError(
+                f"injected crash before batch {crash_batch} writes"
+            )
+
+    return fault, calls
+
+
+def _run_crash_restart(
+    stream: DataFrame,
+    body,
+    checkpoint_dir: str,
+    plant_debris,
+    output_mode: str = "append",
+):
+    """The crash driver: run the ``body(batch, batch_id)`` epoch query
+    over *stream* with a one-shot fault killing epoch _CRASH_EPOCH,
+    require the injected crash to terminate it, hand that epoch to
+    ``plant_debris(epoch)`` (which plants the partial output a real
+    mid-write failure leaves on a sink), then restart the SAME
+    streaming DataFrame with the plain ``body`` on the SAME checkpoint,
+    returning the finished restarted handle (its progress records cover
+    the replayed epochs). The read-back comparing to the batch oracle is
+    then checking exactly-once across the failure: epoch replay must
+    overwrite the debris, and committed epochs must not re-emit."""
+    epoch = _CRASH_EPOCH
+    fault, calls = _crash_once(epoch)
+
+    def crashing(batch: DataFrame, batch_id: int) -> None:
+        fault(batch_id)
+        body(batch, batch_id)
+
+    try:
+        run_epoch_stream(stream, crashing, checkpoint_dir, output_mode)
+        crashed = False
+    except TimeoutError as exc:
+        # distinguish a slow host from a dead injector: a timeout with
+        # calls['n']==1 means the fault DID fire but the failed query
+        # took too long to surface termination — misreporting that as
+        # "injector never fired" sends the debugger to the wrong place
+        raise TimeoutError(
+            "crash-restart build: first query did not terminate within "
+            f"{STREAM_TIMEOUT_S} s (fault injector fired: "
+            f"{calls['n'] == 1}) — slow host or hung micro-batch, NOT an "
+            "injector coverage gap"
+        ) from exc
+    except StreamingQueryException as exc:  # wraps the injected fault
+        crashed = "injected crash" in str(exc)
+        if not crashed:
+            raise
+    if not (crashed and calls["n"] == 1):
+        raise AssertionError(
+            "fault injector never fired — the source produced fewer than "
+            f"{epoch + 1} micro-batches, so this row would no "
+            "longer cover a mid-stream restart"
+        )
+    plant_debris(epoch)
+    return run_epoch_stream(stream, body, checkpoint_dir, output_mode)
+
+
+def _stream_artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    plan,
+    parts: int = _STREAM_PARTS,
+    check=None,
+    debris=None,
+    mode: str = "append",
+    partition_by: str | None = None,
+) -> str:
+    """Session-cached artifact of one streaming build: the one template
+    every streaming artifact row builds through (the reference's
+    BaseApp — environment, checkpointing, source, handle(), execute).
+
+    ``plan(base)`` declares the query and returns ``(stream, body)``. A
+    ``body(batch, batch_id)`` runs as the foreachBatch body of a *mode*
+    query; a ``body`` of None sinks *stream* as append parquet into
+    ``base/out``, partitioned by *partition_by* if given. The checkpoint
+    is ``base/ckpt`` and the query starts at *parts* state-store
+    partitions. With a *debris* planter the run goes through the crash
+    driver, which hands ``debris(base, epoch)`` the epoch it killed.
+    Every build writes its progress records to ``base/progress.jsonl``
+    and hands them to *check*, the row's claim on the run."""
+
+    def build(base: str) -> None:
+        stream, body = plan(base)
+        ckpt = os.path.join(base, "ckpt")
+        with _stream_shuffle_partitions(spark, parts):
+            if body is None:
+                out = os.path.join(base, "out")
+                q = run_file_stream(stream, out, ckpt, partition_by)
+            elif debris is None:
+                q = run_epoch_stream(stream, body, ckpt, mode)
+            else:
+                q = _run_crash_restart(
+                    stream, body, ckpt, lambda e: debris(base, e), mode
+                )
+        records = dump_progress(q, base)
+        if check is not None:
+            check(records)
+
+    return _artifact_dir(spark, sf_dir, kind, build)
 
 
 # events columns in their wire form (S1): ts as bigint NANOS, exactly as
@@ -171,19 +343,21 @@ def _sliced_source(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     return _artifact_dir(spark, sf_dir, f"evsrc{n_files}", build)
 
 
+def _sliced_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shared sliced source as an event stream, one file per
+    micro-batch."""
+    return stream_events(spark, _sliced_source(spark, sf_dir, _SRC_FILES))
+
+
 def _st14_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        run_dws_agg_stream,
+    # the DWS shell's query (streaming/pipelines.run_dws_agg_stream):
+    # watermarked window agg, day-partitioned append sink
+    def plan(base: str):
+        return dws_windowed_agg(_sliced_events(spark, sf_dir)), None
+
+    return _stream_artifact(
+        spark, sf_dir, "st14", plan, partition_by="cur_date"
     )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-        with _stream_shuffle_partitions(spark):
-            run_dws_agg_stream(spark, src, out, ckpt)
-
-    return _artifact_dir(spark, sf_dir, "st14", build)
 
 
 @register(
@@ -196,14 +370,14 @@ def _st14_build(spark: SparkSession, sf_dir: str) -> str:
         "micro-batch — the watermark advances BETWEEN batches, so "
         "windows are emitted by watermark eviction, the production "
         "path, not by end-of-input), checkpointed, day-partitioned "
-        "(streaming/pipelines.run_dws_agg_stream). The sink is read "
-        "back on the closed-window horizon (edt ≤ max ts − "
+        "(the streaming/pipelines.run_dws_agg_stream query). The sink "
+        "is read back on the closed-window horizon (edt ≤ max ts − "
         "{h} s — inside the guaranteed-emitted region on both "
         "engines) and hash-compared to the one-pass batch oracle. "
         "Covers what the foreachBatch replay rows cannot: trigger "
         "scheduling, cross-batch watermark state, append-mode "
         "eviction, and the checkpoint commit protocol."
-        .format(n=_ST14_FILES, h=_ST14_HORIZON_S),
+        .format(n=_SRC_FILES, h=_ST14_HORIZON_S),
     oracle=f"""
         WITH mx AS (
             SELECT MAX(ts) - INTERVAL {_ST14_HORIZON_S} SECOND AS horizon
@@ -249,30 +423,17 @@ def st14_dws_stream_readback(
 
 # --- st15: ST5 returning-user under the REAL streaming runtime -------------
 
-_ST15_FILES = _SRC_FILES
-
 
 def _st15_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-    from real_time_data_warehouse_spark.streaming.stateful import (
-        returning_user,
-    )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
+    def plan(base: str):
         logins = (
-            stream_events(spark, src)
+            _sliced_events(spark, sf_dir)
             .where(F.col("event_type").isin("signup", "click"))
             .select("user_id", "ts")
         )
-        with _stream_shuffle_partitions(spark):
-            run_file_stream(returning_user(logins), out, ckpt)
+        return returning_user(logins), None
 
-    return _artifact_dir(spark, sf_dir, "st15", build)
+    return _stream_artifact(spark, sf_dir, "st15", plan)
 
 
 @register(
@@ -282,7 +443,7 @@ def _st15_build(spark: SparkSession, sf_dir: str) -> str:
         "returning-user keyed-state operator "
         "(streaming/stateful.returning_user, applyInPandasWithState — "
         "reference DwsUserUserLoginWindow.java:80-124) runs as an actual "
-        f"readStream over a {_ST15_FILES}-file time-ordered source (one "
+        f"readStream over a {_SRC_FILES}-file time-ordered source (one "
         "file per micro-batch, so the per-user last_login_date state is "
         "carried ACROSS micro-batches through the state store, not within "
         "one pandas call), append writeStream to parquet, checkpointed. "
@@ -308,44 +469,12 @@ def st15_returning_user_stream_readback(
     )
 
 
-def _attach_shared_oracles() -> None:
-    """st15/st16 reuse the st5/st4 batch oracles verbatim (same output
-    grain and aliases — the whole point is stream ≡ batch on the same
-    SQL). Query objects are frozen; rebuild with the shared text."""
-    from dataclasses import replace
-
-    # direct imports of this module must not depend on operators.load_all
-    # having run first — pull in the modules that own the shared oracles
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        stateful as _stateful,
-    )
-    from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
-
-    QUERY_REGISTRY["st15_returning_user_stream_readback"] = replace(
-        QUERY_REGISTRY["st15_returning_user_stream_readback"],
-        oracle=QUERY_REGISTRY["st5_returning_user"].oracle,
-    )
-    QUERY_REGISTRY["st16_daily_uv_stream_readback"] = replace(
-        QUERY_REGISTRY["st16_daily_uv_stream_readback"],
-        oracle=QUERY_REGISTRY["st4_first_per_day_uv"].oracle,
-    )
-
-
 # --- st16: ST4 first-per-day dedup under the REAL streaming runtime --------
-
-_ST16_FILES = _SRC_FILES
 
 
 def _st16_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-        ev = stream_events(spark, src).withColumn(
+    def plan(base: str):
+        ev = _sliced_events(spark, sf_dir).withColumn(
             "day_ts", F.date_trunc("day", "ts")
         )
         # watermark ON the dedup's event-time key → Spark evicts
@@ -355,15 +484,15 @@ def _st16_build(spark: SparkSession, sf_dir: str) -> str:
         dd = ev.withWatermark("day_ts", "1 day").dropDuplicates(
             ["user_id", "day_ts"]
         )
-        with _stream_shuffle_partitions(spark):
-            q = run_file_stream(dd.select("user_id", "day_ts"), out, ckpt)
-        # the row's whole point is watermark-BOUNDED dedup state (the
-        # event-time column is in the dedup key) — assert the cleanup
-        # actually removed (user, day) state across batches, same
-        # contract as j13/j14
-        assert_watermark_eviction(dump_progress(q, base), min_batches=2)
+        return dd.select("user_id", "day_ts"), None
 
-    return _artifact_dir(spark, sf_dir, "st16", build)
+    # the row's whole point is watermark-BOUNDED dedup state (the
+    # event-time column is in the dedup key) — assert the cleanup
+    # actually removed (user, day) state across batches, same contract
+    # as j13/j14
+    return _stream_artifact(
+        spark, sf_dir, "st16", plan, check=assert_watermark_eviction
+    )
 
 
 @register(
@@ -372,7 +501,7 @@ def _st16_build(spark: SparkSession, sf_dir: str) -> str:
     doc=f"ST4 under the REAL streaming runtime, driver-checked: "
         "first-event-per-(user, day) detection runs as an actual "
         "readStream → withWatermark(day_ts, 1 day) → "
-        f"dropDuplicates([user_id, day_ts]) over a {_ST16_FILES}-file "
+        f"dropDuplicates([user_id, day_ts]) over a {_SRC_FILES}-file "
         "time-ordered source — the production keyed-dedup path "
         "(DwsTrafficVcChArIsNewPageViewWindow.java:58-106's "
         "lastVisitDate state) with WATERMARK-BOUNDED state: the event-"
@@ -395,39 +524,24 @@ def st16_daily_uv_stream_readback(
     ).agg(F.count("*").cast("bigint").alias("uv_ct"))
 
 
-_attach_shared_oracles()
-
-
 # --- j13: J4 stream-stream interval join under the REAL runtime ------------
 
-_J13_FILES = _SRC_FILES
 _J13_HORIZON_S = 60  # closed-region margin behind max event ts
 
 
 def _j13_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.joins import (
-        interval_join_purchases,
-    )
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
+    def plan(base: str):
+        return interval_join_purchases(_sliced_events(spark, sf_dir)), None
 
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-        joined = interval_join_purchases(stream_events(spark, src))
-        with _stream_shuffle_partitions(spark):
-            q = run_file_stream(joined, out, ckpt)
-        # hard evidence the join state is watermark-BOUNDED, not
-        # grow-forever: across the ~7.5-day jumps between time-ranged
-        # batches the watermark must have removed state rows. Raising
-        # here fails the driver row itself — bounded state is part of
-        # the contract, not a side observation. Progress comes from the
-        # query handle (synchronous), not the async listener bus.
-        assert_watermark_eviction(dump_progress(q, base), min_batches=2)
-
-    return _artifact_dir(spark, sf_dir, "j13", build)
+    # hard evidence the join state is watermark-BOUNDED, not
+    # grow-forever: across the ~7.5-day jumps between time-ranged
+    # batches the watermark must have removed state rows. Raising here
+    # fails the driver row itself — bounded state is part of the
+    # contract, not a side observation. Progress comes from the query
+    # handle (synchronous), not the async listener bus.
+    return _stream_artifact(
+        spark, sf_dir, "j13", plan, check=assert_watermark_eviction
+    )
 
 
 @register(
@@ -438,7 +552,7 @@ def _j13_build(spark: SparkSession, sf_dir: str) -> str:
         "(streaming/joins.interval_join_purchases — reference "
         "DwdTradeOrderPaySucDetail.java:74-98, Test01_IntervalJoin."
         f"java:72-83) runs as an actual stream-stream SELF-join over a "
-        f"{_J13_FILES}-file time-ordered readStream: watermarks on BOTH "
+        f"{_SRC_FILES}-file time-ordered readStream: watermarks on BOTH "
         "sides, the ±30-min range predicate sizing the join state, "
         "append sink, checkpointed. The build additionally attaches the "
         "progress listener and FAILS unless "
@@ -492,22 +606,11 @@ def j13_interval_join_stream_readback(
 
 
 def _st17_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-    from real_time_data_warehouse_spark.streaming.stateful import (
-        visitor_fix,
-    )
+    def plan(base: str):
+        ev = _sliced_events(spark, sf_dir).select("event_id", "user_id", "ts")
+        return visitor_fix(ev), None
 
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-        ev = stream_events(spark, src).select("event_id", "user_id", "ts")
-        with _stream_shuffle_partitions(spark):
-            run_file_stream(visitor_fix(ev), out, ckpt)
-
-    return _artifact_dir(spark, sf_dir, "st17", build)
+    return _stream_artifact(spark, sf_dir, "st17", plan)
 
 
 @register(
@@ -537,20 +640,6 @@ def st17_visitor_fix_stream_readback(
     return back.select("event_id", "user_id", "visit_date", "is_new")
 
 
-def _attach_st17_oracle() -> None:
-    from dataclasses import replace
-
-    from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
-
-    QUERY_REGISTRY["st17_visitor_fix_stream_readback"] = replace(
-        QUERY_REGISTRY["st17_visitor_fix_stream_readback"],
-        oracle=QUERY_REGISTRY["st3_visitor_state_fix"].oracle,
-    )
-
-
-_attach_st17_oracle()
-
-
 # --- j14: J2 stream-stream LEFT OUTER join under the REAL runtime ----------
 
 _J14_WINDOW_S = 1800  # payment window after the order event
@@ -558,27 +647,17 @@ _J14_HORIZON_S = 1800 + 60  # order fully decided: o_ts + window < watermark
 
 
 def _j14_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.joins import (
-        left_outer_stream_join,
-    )
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-        ev = stream_events(spark, src)
+    def plan(base: str):
+        ev = _sliced_events(spark, sf_dir)
         joined = left_outer_stream_join(
             ev.where(F.col("event_type") == "click"),
             ev.where(F.col("event_type") == "purchase"),
         )
-        with _stream_shuffle_partitions(spark):
-            q = run_file_stream(joined, out, ckpt)
-        assert_watermark_eviction(dump_progress(q, base), min_batches=2)
+        return joined, None
 
-    return _artifact_dir(spark, sf_dir, "j14", build)
+    return _stream_artifact(
+        spark, sf_dir, "j14", plan, check=assert_watermark_eviction
+    )
 
 
 @register(
@@ -664,18 +743,13 @@ def j14_left_outer_stream_readback(
 
 
 def _st18_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        run_dws_agg_update_stream,
-    )
+    # the DWS update shell's query (streaming/pipelines.
+    # run_dws_agg_update_stream): update-mode agg, keyed upsert body
+    def plan(base: str):
+        agg = dws_windowed_agg(_sliced_events(spark, sf_dir), "1 hour")
+        return agg, dws_upsert_sink(spark, os.path.join(base, "serving"))
 
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        serving = os.path.join(base, "serving")
-        ckpt = os.path.join(base, "ckpt")
-        with _stream_shuffle_partitions(spark):
-            run_dws_agg_update_stream(spark, src, serving, ckpt)
-
-    return _artifact_dir(spark, sf_dir, "st18", build)
+    return _stream_artifact(spark, sf_dir, "st18", plan, mode="update")
 
 
 @register(
@@ -687,14 +761,15 @@ def _st18_build(spark: SparkSession, sf_dir: str) -> str:
         "key) as opposed to st14's append-once-final: the DWS tumbling "
         "aggregate runs as readStream → update-mode foreachBatch → "
         "versioned keyed upsert into the serving table "
-        "(streaming/pipelines.run_dws_agg_update_stream over the shared "
-        f"{_SRC_FILES}-file time-ordered source). The FINAL serving "
-        "state is read back and hash-compared to the batch aggregate on "
-        "the FULL horizon — no closed-region cut, because update mode "
-        "re-fires until a window's aggregate is complete and the ordered "
-        "source means no contribution is ever dropped as late; the last "
-        "fire per key therefore equals the batch value for EVERY window, "
-        "which is exactly the upsert-sink contract this row certifies.",
+        "(the streaming/pipelines.run_dws_agg_update_stream query over "
+        f"the shared {_SRC_FILES}-file time-ordered source). The FINAL "
+        "serving state is read back and hash-compared to the batch "
+        "aggregate on the FULL horizon — no closed-region cut, because "
+        "update mode re-fires until a window's aggregate is complete "
+        "and the ordered source means no contribution is ever dropped "
+        "as late; the last fire per key therefore equals the batch value "
+        "for EVERY window, which is exactly the upsert-sink contract this "
+        "row certifies.",
     oracle=f"""
         SELECT strftime({oracle_tumble('ts', 10)},
                         '%Y-%m-%d %H:%M:%S') AS stt,
@@ -724,7 +799,6 @@ def st18_dws_update_upsert_readback(
 # --- x1s: X1 5-way foreachBatch fan-out under the REAL runtime, with a
 # --- mid-stream crash + checkpoint restart ----------------------------------
 
-_X1S_CRASH_BATCH = 2  # mid-stream: two epochs committed before the crash
 # data columns of the x1s/x2s sinks: the streamed events (batch_id and
 # the routing column are partition columns)
 _EV_SINK_SCHEMA = (
@@ -733,105 +807,37 @@ _EV_SINK_SCHEMA = (
 )
 
 
-def _crash_once(crash_batch: int):
-    """Fault injector raising on ``crash_batch``'s FIRST attempt only,
-    plus the counter so the build can assert the crash actually fired
-    (a fault that never fires silently drops the restart coverage)."""
-    calls = {"n": 0}
-
-    def fault(batch_id: int) -> None:
-        if batch_id == crash_batch and calls["n"] == 0:
-            calls["n"] += 1
-            raise RuntimeError(
-                f"injected crash before batch {crash_batch} writes"
-            )
-
-    return fault, calls
-
-
-def _run_crash_restart(
-    stream: DataFrame,
-    body,
-    checkpoint_dir: str,
-    plant_debris,
-    output_mode: str = "append",
-):
-    """Shared crash→debris→restart harness for the crash rows: run the
-    ``body(batch, batch_id)`` epoch query over *stream* with the
-    one-shot fault wrapped around it, require the injected crash to
-    terminate it, plant partial-write debris in the crashed epoch's
-    output (what a real mid-write failure leaves on a file sink), then
-    restart the SAME streaming DataFrame with the plain ``body`` on the
-    SAME checkpoint, returning the finished restarted handle (its
-    progress records cover the replayed epochs — app5s pins its
-    stateful-operator chain off them). The read-back comparing to the
-    batch oracle is then checking exactly-once across the failure:
-    epoch replay must overwrite the debris, and committed epochs must
-    not re-emit."""
-    fault, calls = _crash_once(_X1S_CRASH_BATCH)
-
-    def crashing(batch: DataFrame, batch_id: int) -> None:
-        fault(batch_id)
-        body(batch, batch_id)
-
-    try:
-        run_epoch_stream(stream, crashing, checkpoint_dir, output_mode)
-        crashed = False
-    except TimeoutError as exc:
-        # distinguish a slow host from a dead injector: a timeout with
-        # calls['n']==1 means the fault DID fire but the failed query
-        # took too long to surface termination — misreporting that as
-        # "injector never fired" sends the debugger to the wrong place
-        raise TimeoutError(
-            "crash-restart build: first query did not terminate within "
-            f"{STREAM_TIMEOUT_S} s (fault injector fired: "
-            f"{calls['n'] == 1}) — slow host or hung micro-batch, NOT an "
-            "injector coverage gap"
-        ) from exc
-    except StreamingQueryException as exc:  # wraps the injected fault
-        crashed = "injected crash" in str(exc)
-        if not crashed:
-            raise
-    if not (crashed and calls["n"] == 1):
-        raise AssertionError(
-            "fault injector never fired — the source produced fewer than "
-            f"{_X1S_CRASH_BATCH + 1} micro-batches, so this row would no "
-            "longer cover a mid-stream restart"
-        )
-    plant_debris()
-    return run_epoch_stream(stream, body, checkpoint_dir, output_mode)
+def _sink_checksums(back: DataFrame, key: str, *extra) -> DataFrame:
+    """Per-*key* row count, event-id checksum and distinct users of a
+    routed sink's read-back (then any *extra* aggregates): the
+    exactly-once evidence every fan-out row compares to its oracle."""
+    return back.groupBy(key).agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.sum("event_id").cast("bigint").alias("id_sum"),
+        F.countDistinct("user_id").cast("bigint").alias("uu"),
+        *extra,
+    )
 
 
 def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        log_split_sink,
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
+    def plan(base: str):
         out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
+        return _sliced_events(spark, sf_dir), log_split_sink(out)
 
-        def plant_debris() -> None:
-            # partial file a mid-write crash leaves: a few purchase rows
-            # already landed in the crashed epoch's side=page dir — the
-            # retry must REPLACE them, not append beside them
-            ev = Tables(spark, sf_dir).events
-            debris = (
-                ev.where(F.col("event_type") == "purchase")
-                .limit(7)
-                .withColumn("side", F.lit("page"))
-            )
-            write_snapshot(debris, out, _X1S_CRASH_BATCH, partition_by="side")
+    def debris(base: str, epoch: int) -> None:
+        # partial file a mid-write crash leaves: a few purchase rows
+        # already landed in the crashed epoch's side=page dir — the
+        # retry must REPLACE them, not append beside them
+        ev = Tables(spark, sf_dir).events
+        rows = (
+            ev.where(F.col("event_type") == "purchase")
+            .limit(7)
+            .withColumn("side", F.lit("page"))
+        )
+        out = os.path.join(base, "out")
+        write_snapshot(rows, out, epoch, partition_by="side")
 
-        with _stream_shuffle_partitions(spark):
-            _run_crash_restart(
-                stream_events(spark, src), log_split_sink(out), ckpt,
-                plant_debris,
-            )
-
-    return _artifact_dir(spark, sf_dir, "x1s", build)
+    return _stream_artifact(spark, sf_dir, "x1s", plan, debris=debris)
 
 
 @register(
@@ -844,7 +850,7 @@ def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
         f"{_SRC_FILES}-file time-ordered source → foreachBatch tagging "
         "each row with its side and writing ONE side-partitioned "
         "per-epoch-overwrite parquet frame (one write job per epoch). A "
-        f"one-shot fault injector crashes epoch {_X1S_CRASH_BATCH}'s "
+        f"one-shot fault injector crashes epoch {_CRASH_EPOCH}'s "
         "first attempt AFTER two epochs committed; partial-write debris "
         "is planted in the crashed epoch's output; the query restarts "
         "from the same checkpoint. The sink is then read back in one "
@@ -879,11 +885,7 @@ def x1s_log_split_stream_readback(
 ) -> DataFrame:
     base = _x1s_build(spark, sf_dir)
     back = read_log(spark, os.path.join(base, "out"), _EV_SINK_SCHEMA)
-    return back.groupBy("side").agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum("event_id").cast("bigint").alias("id_sum"),
-        F.countDistinct("user_id").cast("bigint").alias("uu"),
-    )
+    return _sink_checksums(back, "side")
 
 
 # --- x2s: X2 config-driven dynamic routing under the REAL runtime, with
@@ -901,35 +903,22 @@ _X2S_CONFIG = [
 
 
 def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        routing_sink,
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
+    def plan(base: str):
         out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
+        return _sliced_events(spark, sf_dir), routing_sink(_X2S_CONFIG, out)
 
-        def plant_debris() -> None:
-            ev = Tables(spark, sf_dir).events
-            debris = (
-                ev.where(F.col("event_type") == "click")
-                .limit(5)
-                .drop("event_type")
-                .withColumn("sink_table", F.lit("dwd_action_log"))
-            )
-            write_snapshot(
-                debris, out, _X1S_CRASH_BATCH, partition_by="sink_table"
-            )
+    def debris(base: str, epoch: int) -> None:
+        ev = Tables(spark, sf_dir).events
+        rows = (
+            ev.where(F.col("event_type") == "click")
+            .limit(5)
+            .drop("event_type")
+            .withColumn("sink_table", F.lit("dwd_action_log"))
+        )
+        out = os.path.join(base, "out")
+        write_snapshot(rows, out, epoch, partition_by="sink_table")
 
-        with _stream_shuffle_partitions(spark):
-            _run_crash_restart(
-                stream_events(spark, src), routing_sink(_X2S_CONFIG, out),
-                ckpt, plant_debris,
-            )
-
-    return _artifact_dir(spark, sf_dir, "x2s", build)
+    return _stream_artifact(spark, sf_dir, "x2s", plan, debris=debris)
 
 
 @register(
@@ -944,7 +933,7 @@ def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
         "(static, so a retry replaces every sink_table of the epoch). One "
         "event type is deliberately absent from the config, so dropped-"
         "unrouted is part of the checked property. A one-shot fault "
-        f"crashes epoch {_X1S_CRASH_BATCH} after two committed epochs, "
+        f"crashes epoch {_CRASH_EPOCH} after two committed epochs, "
         "debris is planted under the crashed epoch's routed dir, and the "
         "query restarts from the same checkpoint. The partitioned sink "
         "tree is read back and aggregated per sink_table against the "
@@ -971,44 +960,48 @@ def x2s_dynamic_routing_stream_readback(
 ) -> DataFrame:
     base = _x2s_build(spark, sf_dir)
     back = read_log(spark, os.path.join(base, "out"), _EV_SINK_SCHEMA)
-    return back.groupBy("sink_table").agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum("event_id").cast("bigint").alias("id_sum"),
-        F.countDistinct("user_id").cast("bigint").alias("uu"),
-    )
+    return _sink_checksums(back, "sink_table")
 
 
 # --- d7x: the ingestion dedup gate under the REAL runtime, with a
 # --- mid-stream crash + checkpoint restart ----------------------------------
 
-_D7X_FILES = _SRC_FILES
 
-
-def _write_id_sliced(rows: DataFrame, base: str, id_col: str) -> None:
-    """``rows`` → ``_D7X_FILES`` single-file parquet slices of ascending,
-    non-overlapping ``id_col`` ranges (one file per micro-batch under
+def _id_sliced_source(
+    spark: SparkSession, sf_dir: str, table: str, cols: tuple[str, str]
+) -> str:
+    """Session-cached source of *table*'s *cols* (id column first) as
+    ``_SRC_FILES`` single-file parquet slices of ascending,
+    non-overlapping id ranges (one file per micro-batch under
     maxFilesPerTrigger=1), mtimes pinned in slice order. Ascending-id
     batches are the gates' ordering contract (arrival order IS dedup
-    precedence) — the same slicing _replay_batches uses, now as files the
-    real file source schedules."""
-    max_id = rows.agg(F.max(id_col)).first()[0]
-    span = (int(max_id) if max_id is not None else 0) + 1
-    sliced = rows.withColumn(
-        "b",
-        F.expr(
-            f"CAST(least({_D7X_FILES - 1}, "
-            f"{id_col} * {_D7X_FILES} div {span}L) AS INT)"
-        ),
-    )
-    _write_slices(sliced, base, _D7X_FILES)
+    precedence) — the same slicing _replay_batches uses, now as files
+    the real file source schedules."""
+    id_col = cols[0]
 
-
-def _doc_sliced_source(spark: SparkSession, sf_dir: str) -> str:
     def build(base: str) -> None:
-        docs = Tables(spark, sf_dir).documents.select("doc_id", "text")
-        _write_id_sliced(docs, base, "doc_id")
+        rows = getattr(Tables(spark, sf_dir), table).select(*cols)
+        max_id = rows.agg(F.max(id_col)).first()[0]
+        span = (int(max_id) if max_id is not None else 0) + 1
+        sliced = rows.withColumn(
+            "b",
+            F.expr(
+                f"CAST(least({_SRC_FILES - 1}, "
+                f"{id_col} * {_SRC_FILES} div {span}L) AS INT)"
+            ),
+        )
+        _write_slices(sliced, base, _SRC_FILES)
 
-    return _artifact_dir(spark, sf_dir, f"docsrc{_D7X_FILES}", build)
+    return _artifact_dir(spark, sf_dir, f"{table}src{_SRC_FILES}", build)
+
+
+def _crashed_epoch_rows(rows: DataFrame, id_col: str, epoch: int):
+    """The rows of *epoch*'s slice of an id-sliced source
+    (``_id_sliced_source``'s arithmetic)."""
+    span = int(rows.agg(F.max(id_col)).first()[0]) + 1
+    lo = span * epoch // _SRC_FILES
+    hi = span * (epoch + 1) // _SRC_FILES
+    return rows.where((F.col(id_col) >= lo) & (F.col(id_col) < hi))
 
 
 def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
@@ -1016,65 +1009,47 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
         apply_gate_batch,
     )
 
-    def build(base: str) -> None:
-        src = _doc_sliced_source(spark, sf_dir)
+    def plan(base: str):
         store = os.path.join(base, "store")
         out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-
-        def plant_debris() -> None:
-            # what a mid-write crash leaves behind in BOTH sinks of the
-            # crashed epoch: a few decision rows with WRONG statuses in
-            # the out partition (retry must REPLACE them — any survivor
-            # breaks the hash against the one-pass oracle) and a partial
-            # signature segment in the store (retry must overwrite it;
-            # classify_batch's sid < doc_id bound keeps the partial
-            # segment from corrupting the retry's own classification)
-            docs = Tables(spark, sf_dir).documents.select("doc_id", "text")
-            max_id = int(docs.agg(F.max("doc_id")).first()[0])
-            span = max_id + 1
-            lo = span * _X1S_CRASH_BATCH // _D7X_FILES
-            hi = span * (_X1S_CRASH_BATCH + 1) // _D7X_FILES
-            crashed = docs.where(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-            ).limit(5)
-            write_snapshot(
-                crashed.select(
-                    "doc_id",
-                    F.lit("exact_dup").alias("status"),
-                    F.lit(0).cast("bigint").alias("dup_of"),
-                ),
-                out,
-                _X1S_CRASH_BATCH,
-            )
-            from real_time_data_warehouse_spark.operators.dedup import (
-                minhash_sigs_for,
-            )
-
-            write_snapshot(
-                crashed.select(
-                    "doc_id", F.md5(F.lower("text")).alias("th")
-                ).join(minhash_sigs_for(crashed), "doc_id", "left"),
-                store,
-                _X1S_CRASH_BATCH,
-            )
-
-        docs_source = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        src = _id_sliced_source(spark, sf_dir, "documents", ("doc_id", "text"))
+        docs = file_stream(spark, src, "doc_id long, text string")
+        return docs, lambda b, bid: apply_gate_batch(
+            b.sparkSession, b, bid, store, out
         )
-        with _stream_shuffle_partitions(spark):
-            _run_crash_restart(
-                docs_source,
-                lambda b, bid: apply_gate_batch(
-                    b.sparkSession, b, bid, store, out
-                ),
-                ckpt,
-                plant_debris,
-            )
 
-    return _artifact_dir(spark, sf_dir, "d7x", build)
+    def debris(base: str, epoch: int) -> None:
+        from real_time_data_warehouse_spark.operators.dedup import (
+            minhash_sigs_for,
+        )
+
+        # what a mid-write crash leaves behind in BOTH sinks of the
+        # crashed epoch: a few decision rows with WRONG statuses in the
+        # out partition (retry must REPLACE them — any survivor breaks
+        # the hash against the one-pass oracle) and a partial signature
+        # segment in the store (retry must overwrite it; classify_batch's
+        # sid < doc_id bound keeps the partial segment from corrupting
+        # the retry's own classification)
+        docs = Tables(spark, sf_dir).documents.select("doc_id", "text")
+        crashed = _crashed_epoch_rows(docs, "doc_id", epoch).limit(5)
+        write_snapshot(
+            crashed.select(
+                "doc_id",
+                F.lit("exact_dup").alias("status"),
+                F.lit(0).cast("bigint").alias("dup_of"),
+            ),
+            os.path.join(base, "out"),
+            epoch,
+        )
+        write_snapshot(
+            crashed.select(
+                "doc_id", F.md5(F.lower("text")).alias("th")
+            ).join(minhash_sigs_for(crashed), "doc_id", "left"),
+            os.path.join(base, "store"),
+            epoch,
+        )
+
+    return _stream_artifact(spark, sf_dir, "d7x", plan, debris=debris)
 
 
 @register(
@@ -1082,15 +1057,16 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
     survey="ext-dedup",
     doc="The ingestion dedup gate under the REAL streaming runtime WITH "
         "a mid-stream crash, driver-checked: streaming/dedup_gate."
-        "apply_gate_batch runs as the epoch body of the crash-restart "
-        "harness operators/streaming_exec._run_crash_restart over "
+        "apply_gate_batch runs as the epoch body of a crash-restart "
+        "build (operators/streaming_exec._stream_artifact with a debris "
+        "planter) over "
         "readStream(maxFilesPerTrigger=1) "
-        f"over a {_D7X_FILES}-file ascending-doc_id source → foreachBatch "
+        f"over a {_SRC_FILES}-file ascending-doc_id source → foreachBatch "
         "classifying each micro-batch against the persistent signature "
         "store (exact md5 + MinHash-LSH band candidates) and appending "
         "the batch's signatures to the store — per-epoch overwrite "
         "partitions on both sinks. A one-shot fault crashes epoch "
-        f"{_X1S_CRASH_BATCH}'s first attempt after two committed epochs; "
+        f"{_CRASH_EPOCH}'s first attempt after two committed epochs; "
         "partial-write debris is planted in BOTH the crashed epoch's "
         "decision partition (wrong statuses) and its store segment "
         "(partial signatures); the query restarts from the same "
@@ -1116,73 +1092,44 @@ def d7x_dedup_gate_stream_readback(
 # --- mid-stream crash + checkpoint restart ----------------------------------
 
 
-def _vec_sliced_source(spark: SparkSession, sf_dir: str) -> str:
-    def build(base: str) -> None:
-        vecs = Tables(spark, sf_dir).embeddings.select(
-            "vec_id", "embedding"
-        )
-        _write_id_sliced(vecs, base, "vec_id")
-
-    return _artifact_dir(spark, sf_dir, f"vecsrc{_D7X_FILES}", build)
-
-
 def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
     from real_time_data_warehouse_spark.streaming import embedding_gate
 
-    def build(base: str) -> None:
-        src = _vec_sliced_source(spark, sf_dir)
+    def plan(base: str):
         store = os.path.join(base, "store")
         out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-
-        def plant_debris() -> None:
-            # mid-write leftovers in both sinks of the crashed epoch:
-            # wrong-status decision rows, plus a PARTIAL store segment
-            # written through the real banded layout (what the crashed
-            # attempt's write job would have landed before dying)
-            vecs = Tables(spark, sf_dir).embeddings.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("v"),
-            )
-            max_id = int(vecs.agg(F.max("vec_id")).first()[0])
-            span = max_id + 1
-            lo = span * _X1S_CRASH_BATCH // _D7X_FILES
-            hi = span * (_X1S_CRASH_BATCH + 1) // _D7X_FILES
-            crashed = vecs.where(
-                (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-            ).limit(3)
-            write_snapshot(
-                crashed.select(
-                    "vec_id",
-                    F.lit("near_dup").alias("status"),
-                    F.lit(0).cast("bigint").alias("dup_of"),
-                ),
-                out,
-                _X1S_CRASH_BATCH,
-            )
-            _, entry = embedding_gate.classify_batch(
-                spark, crashed, store
-            )
-            write_snapshot(
-                entry, store, _X1S_CRASH_BATCH, partition_by=["band", "bucket"]
-            )
-
-        vec_source = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        src = _id_sliced_source(
+            spark, sf_dir, "embeddings", ("vec_id", "embedding")
         )
-        with _stream_shuffle_partitions(spark):
-            _run_crash_restart(
-                vec_source,
-                lambda b, bid: embedding_gate.apply_gate_batch(
-                    b.sparkSession, b, bid, store, out
-                ),
-                ckpt,
-                plant_debris,
-            )
+        vecs = file_stream(spark, src, "vec_id long, embedding array<float>")
+        return vecs, lambda b, bid: embedding_gate.apply_gate_batch(
+            b.sparkSession, b, bid, store, out
+        )
 
-    return _artifact_dir(spark, sf_dir, "d9x", build)
+    def debris(base: str, epoch: int) -> None:
+        # mid-write leftovers in both sinks of the crashed epoch:
+        # wrong-status decision rows, plus a PARTIAL store segment
+        # written through the real banded layout (what the crashed
+        # attempt's write job would have landed before dying)
+        store = os.path.join(base, "store")
+        vecs = Tables(spark, sf_dir).embeddings.select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("v"),
+        )
+        crashed = _crashed_epoch_rows(vecs, "vec_id", epoch).limit(3)
+        write_snapshot(
+            crashed.select(
+                "vec_id",
+                F.lit("near_dup").alias("status"),
+                F.lit(0).cast("bigint").alias("dup_of"),
+            ),
+            os.path.join(base, "out"),
+            epoch,
+        )
+        _, entry = embedding_gate.classify_batch(spark, crashed, store)
+        write_snapshot(entry, store, epoch, partition_by=["band", "bucket"])
+
+    return _stream_artifact(spark, sf_dir, "d9x", plan, debris=debris)
 
 
 @register(
@@ -1191,15 +1138,15 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
     doc="The SemDeDup-style semantic ingestion gate under the REAL "
         "streaming runtime WITH a mid-stream crash, driver-checked: "
         "streaming/embedding_gate.apply_gate_batch runs as the epoch "
-        "body of the crash-restart harness operators/streaming_exec."
-        "_run_crash_restart over "
-        f"readStream(maxFilesPerTrigger=1) over a {_D7X_FILES}-file "
+        "body of a crash-restart build (operators/streaming_exec."
+        "_stream_artifact with a debris planter) over "
+        f"readStream(maxFilesPerTrigger=1) over a {_SRC_FILES}-file "
         "ascending-vec_id source → foreachBatch classifying each "
         "micro-batch against the banded-LSH vector store (candidates "
         "only on band collision) and appending the batch's vectors to "
         "the (band, bucket)-partitioned store — per-epoch overwrite "
         f"partitions on both sinks. A one-shot fault crashes epoch "
-        f"{_X1S_CRASH_BATCH}'s first attempt after two committed "
+        f"{_CRASH_EPOCH}'s first attempt after two committed "
         "epochs; debris lands in both the decision partition (wrong "
         "statuses) and a PARTIAL banded store segment; the query "
         "restarts from the same checkpoint. The decision sink reads "
@@ -1226,18 +1173,10 @@ _W12_HORIZON_S = 20  # closed-session margin behind max event ts
 
 
 def _w12_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.functions.money import dec_sum
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-        ev = stream_events(spark, src)
+    def plan(base: str):
         agg = (
-            ev.withWatermark("ts", f"{_W12_DELAY_S} seconds")
+            _sliced_events(spark, sf_dir)
+            .withWatermark("ts", f"{_W12_DELAY_S} seconds")
             .groupBy(
                 "user_id",
                 F.session_window("ts", f"{_W12_GAP_S} seconds").alias("sw"),
@@ -1254,10 +1193,9 @@ def _w12_build(spark: SparkSession, sf_dir: str) -> str:
                 "value_sum",
             )
         )
-        with _stream_shuffle_partitions(spark):
-            run_file_stream(agg, out, ckpt)
+        return agg, None
 
-    return _artifact_dir(spark, sf_dir, "w12", build)
+    return _stream_artifact(spark, sf_dir, "w12", plan)
 
 
 @register(
@@ -1345,14 +1283,7 @@ def w12_session_window_stream_readback(
 # --- j15: stream-static dim enrichment under the REAL runtime (J5/J6) ------
 
 def _j15_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
+    def plan(base: str):
         t = Tables(spark, sf_dir)
         dim = (
             t.customer.join(
@@ -1363,7 +1294,7 @@ def _j15_build(spark: SparkSession, sf_dir: str) -> str:
                 F.col("n_name").alias("nation_name"),
             )
         )
-        ev = stream_events(spark, src).select(
+        ev = _sliced_events(spark, sf_dir).select(
             "event_id", "user_id", "event_type", "value"
         )
         # stream-static LEFT join, static side broadcast: the per-batch
@@ -1373,10 +1304,9 @@ def _j15_build(spark: SparkSession, sf_dir: str) -> str:
         enriched = ev.join(F.broadcast(dim), "user_id", "left").withColumn(
             "nation_name", F.coalesce("nation_name", F.lit("unknown"))
         )
-        with _stream_shuffle_partitions(spark):
-            run_file_stream(enriched, out, ckpt)
+        return enriched, None
 
-    return _artifact_dir(spark, sf_dir, "j15", build)
+    return _stream_artifact(spark, sf_dir, "j15", plan)
 
 
 @register(
@@ -1414,8 +1344,6 @@ def _j15_build(spark: SparkSession, sf_dir: str) -> str:
 def j15_dim_join_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from real_time_data_warehouse_spark.functions.money import dec
-
     base = _j15_build(spark, sf_dir)
     back = spark.read.parquet(os.path.join(base, "out"))
     return back.groupBy("nation_name").agg(
@@ -1435,18 +1363,10 @@ _W13_HORIZON_S = 20  # one slide past the watermark delay, like st14
 
 
 def _w13_build(spark: SparkSession, sf_dir: str) -> str:
-    from real_time_data_warehouse_spark.functions.money import dec_sum
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        stream_events,
-    )
-
-    def build(base: str) -> None:
-        src = _sliced_source(spark, sf_dir, _SRC_FILES)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-        ev = stream_events(spark, src)
+    def plan(base: str):
         agg = (
-            ev.withWatermark("ts", f"{_W13_DELAY_S} seconds")
+            _sliced_events(spark, sf_dir)
+            .withWatermark("ts", f"{_W13_DELAY_S} seconds")
             .groupBy(
                 F.window(
                     "ts", f"{_W13_SIZE_S} seconds", f"{_W13_SLIDE_S} seconds"
@@ -1465,10 +1385,9 @@ def _w13_build(spark: SparkSession, sf_dir: str) -> str:
                 "value_sum",
             )
         )
-        with _stream_shuffle_partitions(spark):
-            run_file_stream(agg, out, ckpt)
+        return agg, None
 
-    return _artifact_dir(spark, sf_dir, "w13", build)
+    return _stream_artifact(spark, sf_dir, "w13", plan)
 
 
 _W13_K = _W13_SIZE_S // _W13_SLIDE_S  # overlapping windows per event
@@ -1545,25 +1464,31 @@ def w13_sliding_window_stream_readback(
     )
 
 
-def _attach_gate_stream_oracles() -> None:
+def _attach_shared_oracles() -> None:
+    """The stream rows that reuse a batch row's oracle verbatim (same
+    output grain and aliases — the whole point is stream ≡ batch on the
+    same SQL). Query objects are frozen; rebuild with the shared text."""
     from dataclasses import replace
 
+    # direct imports of this module must not depend on operators.load_all
+    # having run first — pull in the modules that own the shared oracles
     from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        dedup as _dedup_mod,
-    )
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        similarity as _sim_mod,
+        dedup,
+        similarity,
+        stateful,
     )
     from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
 
-    QUERY_REGISTRY["d7x_dedup_gate_stream_readback"] = replace(
-        QUERY_REGISTRY["d7x_dedup_gate_stream_readback"],
-        oracle=QUERY_REGISTRY["d7_dedup_gate"].oracle,
-    )
-    QUERY_REGISTRY["d9x_semantic_gate_stream_readback"] = replace(
-        QUERY_REGISTRY["d9x_semantic_gate_stream_readback"],
-        oracle=QUERY_REGISTRY["d9_semantic_gate"].oracle,
-    )
+    for row, donor in (
+        ("st15_returning_user_stream_readback", "st5_returning_user"),
+        ("st16_daily_uv_stream_readback", "st4_first_per_day_uv"),
+        ("st17_visitor_fix_stream_readback", "st3_visitor_state_fix"),
+        ("d7x_dedup_gate_stream_readback", "d7_dedup_gate"),
+        ("d9x_semantic_gate_stream_readback", "d9_semantic_gate"),
+    ):
+        QUERY_REGISTRY[row] = replace(
+            QUERY_REGISTRY[row], oracle=QUERY_REGISTRY[donor].oracle
+        )
 
 
-_attach_gate_stream_oracles()
+_attach_shared_oracles()

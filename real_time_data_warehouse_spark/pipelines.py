@@ -35,33 +35,6 @@ def _q(name: str) -> Callable[[SparkSession, str], DataFrame]:
     return run
 
 
-def _dim_app(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DimApp: CDC → ETL → config route/prune → dim rows (the sink-ready
-    frame; streaming/dim.py writes it via upsert_dim)."""
-    from real_time_data_warehouse_spark.sources.cdc import (
-        maxwell_etl_filter,
-        parse_maxwell,
-        synthetic_cdc_json,
-    )
-    from real_time_data_warehouse_spark.streaming.dim import (
-        default_dim_config,
-        dim_rows,
-        route_and_prune,
-    )
-    from real_time_data_warehouse_spark.tables import Tables
-
-    t = Tables(spark, sf_dir)
-    cdc = maxwell_etl_filter(parse_maxwell(synthetic_cdc_json(t.orders)))
-    return dim_rows(route_and_prune(cdc, default_dim_config(spark)))
-
-
-def _dwd_base_log(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DwdBaseLog: parse + dirty side + 5-way split + visitor fix. Batch
-    composition returns the tagged union (x1) — the streaming form writes
-    each side separately."""
-    return query_map()["x1_log_split"](spark, sf_dir)
-
-
 APP_TOPOLOGIES: tuple[AppTopology, ...] = (
     AppTopology(
         "dim_app",

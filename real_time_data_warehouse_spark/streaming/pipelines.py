@@ -45,17 +45,25 @@ EVENTS_RAW_SCHEMA = StructType(
 )
 
 
+def file_stream(
+    spark: SparkSession, path: str, schema: str, max_files_per_trigger: int = 1
+) -> DataFrame:
+    """Streaming source over a directory of parquet files of *schema*,
+    one file per micro-batch by default."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(path)
+    )
+
+
 def stream_events(
     spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """Streaming source over a directory of events parquet files (the
     Kafka stand-in; S1). One file per micro-batch by default."""
     tune(spark)
-    raw = (
-        spark.readStream.schema(EVENTS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+    raw = file_stream(spark, path, EVENTS_RAW_SCHEMA, max_files_per_trigger)
     return raw.withColumn(
         # integer division: ts/1000 via double loses ~1 µs on ~1.6% of values
         # (nanos exceed 2^53) — div keeps the exact microsecond
@@ -131,15 +139,22 @@ def run_dws_agg_update_stream(
     it, and the upsert keeps the latest value. This is the reference's
     Doris stream-load / upsert-kafka behavior (windows overwritten per
     fire) rather than append-once-final."""
-    from real_time_data_warehouse_spark.streaming.sinks import upsert_versioned
-
     agg = dws_windowed_agg(stream_events(spark, src_path), watermark="1 hour")
+    return run_epoch_stream(
+        agg, dws_upsert_sink(spark, serving_dir), checkpoint_dir, "update"
+    )
+
+
+def dws_upsert_sink(spark: SparkSession, serving_dir: str):
+    """DWS update-mode epoch body: upsert each fired window row into the
+    serving table keyed by (stt, sku_group), latest fire wins."""
+    from real_time_data_warehouse_spark.streaming.sinks import upsert_versioned
 
     def upsert_batch(batch: DataFrame, batch_id: int) -> None:
         upsert_versioned(spark, batch, batch_id, serving_dir,
                          key_cols=["stt", "sku_group"])
 
-    return run_epoch_stream(agg, upsert_batch, checkpoint_dir, "update")
+    return upsert_batch
 
 
 def dws_windowed_agg(events: DataFrame, watermark: str = "10 seconds") -> DataFrame:

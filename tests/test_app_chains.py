@@ -28,9 +28,10 @@ def test_app_source_injects_duplicates_and_sentinel(spark):
 
     src = _app_source(spark, SF_DIR)
     files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
-    assert files[-2:] == [
-        "batch_z1_sentinel.parquet", "batch_z2_sentinel.parquet"
-    ]
+    assert files[-2:] == ["batch_4.parquet", "batch_5.parquet"]
+    # ... and the last two slices are exactly the 2x4 sentinel rows
+    tail = spark.read.parquet(*(os.path.join(src, f) for f in files[-2:]))
+    assert tail.where(F.col("event_id") < 0).count() == tail.count() == 8
     # mtime order must equal slice order, sentinels last (the file
     # source follows modification time; the offsets are derived from
     # the file count, so this holds at ANY slice count)
@@ -485,3 +486,24 @@ def test_app14s_debris_replaced_and_unrouted_dropped(spark):
     }
     # error unconfigured, signup bootstrap-excluded: neither may leak
     assert tables == {"dwd_display", "dwd_action", "dwd_page"}, tables
+
+
+def test_every_app_build_writes_its_progress_records(spark):
+    """Every streaming build writes ``progress.jsonl`` into its base dir,
+    the merge-sink rows (app4s) included. Checked on the builds this
+    module's tests already ran, so each call reads the session cache."""
+    from real_time_data_warehouse_spark.operators import app_chains as ac
+
+    builds = [
+        ac._app1s_build, ac._app2s_build, ac._app3s_build, ac._app4s_build,
+        ac._app5s_build, ac._app6s_build, ac._app7s_build, ac._app8s_build,
+        ac._app9s_build, ac._app9x_build, ac._app10s_build,
+        ac._app11s_build, ac._app12s_build, ac._app13s_build,
+        ac._app14s_build, ac._app16s_build,
+        lambda s, d: ac._refund_chain(s, d, "app15s", pay_suc=False),
+        lambda s, d: ac._refund_chain(s, d, "app17s", pay_suc=True),
+    ]
+    for build in builds:
+        base = build(spark, SF_DIR)
+        with open(os.path.join(base, "progress.jsonl")) as f:
+            assert [json.loads(line) for line in f], base

@@ -86,3 +86,18 @@ def test_j16b_dim_store_drops_deleted_keys(spark):
     for k, name in rows.items():
         assert k % _DEL_MOD != 0, f"deleted key {k} still in the store"
         assert name.endswith("_v2") == (k % 2 == 0), (k, name)
+
+
+def test_j16_builds_write_their_progress_records(spark):
+    """The build harness dumps every streaming build's progress records
+    into its base dir, j16's and j16b's included."""
+    from real_time_data_warehouse_spark.operators.dim_refresh import (
+        _j16_build,
+    )
+
+    for base in (
+        _j16_build(spark, SF_DIR),
+        _j16_build(spark, SF_DIR, kind="j16b", deletes=True),
+    ):
+        with open(os.path.join(base, "progress.jsonl")) as f:
+            assert f.readline(), base

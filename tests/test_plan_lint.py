@@ -194,3 +194,77 @@ def test_queries_start_only_in_state_store():
         if pairs & {(".", "writeStream"), ("awaitTermination", "(")}:
             offenders.append(rel)
     assert not offenders, f"queries run by hand in {sorted(offenders)}"
+
+
+def _operator_sources():
+    """(path relative to the package, source) of every operators/
+    module."""
+    return [
+        (rel, src)
+        for rel, src in _package_sources()
+        if rel.startswith("operators" + os.sep)
+    ]
+
+
+def test_debris_epoch_is_never_a_literal():
+    """A crash row's debris follows the epoch the crash driver kills: no
+    ``write_snapshot(...)`` call under operators/ passes an integer
+    literal as its epoch. A literal stays put when the crash epoch
+    moves, and the debris then lands in an epoch whose first run
+    overwrites it — the row silently stops checking that replay heals
+    partial output."""
+    import ast
+
+    offenders = []
+    for rel, src in _operator_sources():
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.id if isinstance(fn, ast.Name) else getattr(
+                fn, "attr", None
+            )
+            if name != "write_snapshot":
+                continue
+            epoch = node.args[2] if len(node.args) > 2 else next(
+                (k.value for k in node.keywords if k.arg == "batch_id"), None
+            )
+            if isinstance(epoch, ast.Constant) and type(epoch.value) is int:
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"literal write_snapshot epochs at {offenders}"
+
+
+def test_operators_run_streams_only_through_the_harness():
+    """``operators/streaming_exec._stream_artifact`` (the build harness)
+    and ``_run_crash_restart`` (its crash driver) are the only operators/
+    code that starts a streaming query or scopes its state-store
+    partitions: elsewhere under operators/, code names none of
+    ``run_file_stream``, ``run_epoch_stream`` and
+    ``_stream_shuffle_partitions`` (imports aside; docstrings and
+    comments may name them)."""
+    import ast
+
+    names = {"run_file_stream", "run_epoch_stream", "_stream_shuffle_partitions"}
+    owners = {"_stream_artifact", "_run_crash_restart"} | names
+    harness = os.path.join("operators", "streaming_exec.py")
+    offenders = []
+    for rel, src in _operator_sources():
+        lines = src.split("\n")
+        for node in ast.parse(src).body:
+            allowed = isinstance(node, (ast.Import, ast.ImportFrom)) or (
+                rel == harness
+                and isinstance(node, ast.FunctionDef)
+                and node.name in owners
+            )
+            if allowed:
+                first = min(
+                    [node.lineno]
+                    + [d.lineno for d in getattr(node, "decorator_list", [])]
+                )
+                lines[first - 1:node.end_lineno] = [""] * (
+                    node.end_lineno - first + 1
+                )
+        used = names & set(_code_tokens("\n".join(lines)))
+        if used:
+            offenders.append(f"{rel}: {sorted(used)}")
+    assert not offenders, f"streams run outside the harness: {offenders}"

@@ -610,9 +610,53 @@ def test_crash_restart_refuses_a_run_whose_fault_never_fired(
             stream_events(spark, events_dir),
             log_split_sink(out),
             ckpt,
-            lambda: planted.append(True),
+            planted.append,
         )
     assert not planted
+
+
+def test_crash_debris_follows_the_crash_epoch(
+    spark, events_dir, monkeypatch
+):
+    """The crash driver hands the epoch it kills to the debris planter:
+    with the crash moved to epoch 1 (the 2-file source's last), a build
+    through the harness gets its debris planted in epoch 1 — whose
+    writes the crash pre-empted — and the replay of epoch 1 replaces
+    it, leaving exactly the batch counts."""
+    from real_time_data_warehouse_spark.operators import streaming_exec
+
+    monkeypatch.setattr(streaming_exec, "_CRASH_EPOCH", 1)
+    ev = Tables(spark, SF_DIR).events
+    planted = []
+
+    def plan(base):
+        out = os.path.join(base, "out")
+        return stream_events(spark, events_dir), log_split_sink(out)
+
+    def debris(base, epoch):
+        out = os.path.join(base, "out")
+        assert os.path.isdir(epoch_dir(out, epoch - 1))
+        assert not os.path.exists(epoch_dir(out, epoch))
+        rows = (
+            ev.where(F.col("event_type") == "purchase")
+            .limit(7)
+            .withColumn("side", F.lit("page"))
+        )
+        write_snapshot(rows, out, epoch, partition_by="side")
+        planted.append(spark.read.parquet(epoch_dir(out, epoch)).count())
+
+    base = streaming_exec._stream_artifact(
+        spark, events_dir, "crash_epoch_probe", plan, debris=debris
+    )
+    assert planted == [7]
+    assert os.path.isfile(os.path.join(base, "progress.jsonl"))
+    log = read_log(spark, os.path.join(base, "out"))
+    assert {r[0] for r in log.select("batch_id").distinct().collect()} == {
+        0, 1
+    }
+    for side, df in log_split(ev).items():
+        got = log.where(F.col("side") == side).count()
+        assert got == df.count(), f"{side}: {got} != {df.count()}"
 
 
 def test_partitioned_epoch_overwrite_is_static(spark, tmp_path):

@@ -661,3 +661,19 @@ def test_w13_sliding_windows_overlap_and_match_batch_twin(spark):
         (b - a).total_seconds() == _W13_SLIDE_S
         for a, b in zip(starts, starts[1:])
     ), "no adjacent overlapping windows were emitted"
+
+
+def test_every_stream_build_writes_its_progress_records(spark):
+    """Every streaming build writes ``progress.jsonl`` into its base dir.
+    Checked on the builds this module's tests already ran, so each call
+    reads the session cache."""
+    from real_time_data_warehouse_spark.operators import streaming_exec as se
+
+    for build in (
+        se._st15_build, se._st16_build, se._st17_build, se._j13_build,
+        se._j14_build, se._j15_build, se._x1s_build, se._x2s_build,
+        se._d7x_build, se._d9x_build, se._w12_build, se._w13_build,
+    ):
+        base = build(spark, SF_DIR)
+        with open(os.path.join(base, "progress.jsonl")) as f:
+            assert [json.loads(line) for line in f], base
