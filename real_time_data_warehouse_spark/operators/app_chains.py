@@ -106,6 +106,7 @@ from real_time_data_warehouse_spark.operators.sink_readback import (
 from real_time_data_warehouse_spark.operators.streaming_exec import (
     _SRC_FILES,
     _assert_state_operators,
+    _read_slices,
     _sink_checksums,
     _sliced_source,
     _stream_artifact,
@@ -204,12 +205,7 @@ def _app_source(spark: SparkSession, sf_dir: str) -> str:
 
     def build(base: str) -> None:
         src0 = _sliced_source(spark, sf_dir, _SRC_FILES)
-        # the shared source's slice id, from its batch_<b>.parquet name
-        wire = spark.read.parquet(src0).withColumn(
-            "b",
-            F.regexp_extract("_metadata.file_name", r"^batch_(\d+)", 1)
-            .cast("int"),
-        )
+        wire = _read_slices(spark, src0)
         stats = sorted(
             wire.groupBy("b").agg(F.max("ts"), F.max("event_id")).collect()
         )

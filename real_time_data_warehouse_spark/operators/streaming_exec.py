@@ -6,7 +6,7 @@ those replays drive the foreachBatch APPLIERS directly — the actual
 runtime (trigger scheduling, watermark advancement across micro-batches,
 append-mode window eviction, checkpoint commit protocol) executed only
 under pytest. st14 closes that: it runs the DWS window pipeline
-(streaming/pipelines.run_dws_agg_stream — the reference's
+(streaming/pipelines.dws_windowed_agg — the reference's
 DwsTradeSkuOrderWindow shape, S7's day-partitioned file sink) as a REAL
 streaming query over a multi-file time-ordered source (one file per
 micro-batch, so the watermark genuinely advances between batches and
@@ -39,6 +39,7 @@ them.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -333,6 +334,25 @@ def _write_slices(sliced: DataFrame, dst: str, n_files: int) -> None:
     shutil.rmtree(stage, ignore_errors=True)
 
 
+_SLICE_FILE = r"^batch_(\d+)\.parquet$"  # the names _write_slices gives
+
+
+def _read_slices(spark: SparkSession, src: str) -> DataFrame:
+    """A ``_write_slices`` artifact read back, each row's slice id in
+    column ``b`` (from its file name). A data file of any other name
+    fails loudly instead of reading as a NULL slice id."""
+    stray = [
+        n for n in os.listdir(src)
+        if not n.startswith(("_", ".")) and not re.match(_SLICE_FILE, n)
+    ]
+    if stray:
+        raise ValueError(f"{src}: not a _write_slices file: {stray}")
+    return spark.read.parquet(src).withColumn(
+        "b", F.regexp_extract("_metadata.file_name", _SLICE_FILE, 1)
+        .cast("int"),
+    )
+
+
 def _sliced_source(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     """Session-cached shared slice artifact: the four real-streaming
     rows all stream the same events table, so the sliced source is
@@ -350,8 +370,7 @@ def _sliced_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _st14_build(spark: SparkSession, sf_dir: str) -> str:
-    # the DWS shell's query (streaming/pipelines.run_dws_agg_stream):
-    # watermarked window agg, day-partitioned append sink
+    # the DWS query: watermarked window agg, day-partitioned append sink
     def plan(base: str):
         return dws_windowed_agg(_sliced_events(spark, sf_dir)), None
 
@@ -370,7 +389,7 @@ def _st14_build(spark: SparkSession, sf_dir: str) -> str:
         "micro-batch — the watermark advances BETWEEN batches, so "
         "windows are emitted by watermark eviction, the production "
         "path, not by end-of-input), checkpointed, day-partitioned "
-        "(the streaming/pipelines.run_dws_agg_stream query). The sink "
+        "(streaming/pipelines.dws_windowed_agg). The sink "
         "is read back on the closed-window horizon (edt ≤ max ts − "
         "{h} s — inside the guaranteed-emitted region on both "
         "engines) and hash-compared to the one-pass batch oracle. "
@@ -743,8 +762,7 @@ def j14_left_outer_stream_readback(
 
 
 def _st18_build(spark: SparkSession, sf_dir: str) -> str:
-    # the DWS update shell's query (streaming/pipelines.
-    # run_dws_agg_update_stream): update-mode agg, keyed upsert body
+    # the DWS update query: update-mode agg, keyed upsert body
     def plan(base: str):
         agg = dws_windowed_agg(_sliced_events(spark, sf_dir), "1 hour")
         return agg, dws_upsert_sink(spark, os.path.join(base, "serving"))
@@ -761,7 +779,7 @@ def _st18_build(spark: SparkSession, sf_dir: str) -> str:
         "key) as opposed to st14's append-once-final: the DWS tumbling "
         "aggregate runs as readStream → update-mode foreachBatch → "
         "versioned keyed upsert into the serving table "
-        "(the streaming/pipelines.run_dws_agg_update_stream query over "
+        "(streaming/pipelines.dws_windowed_agg + dws_upsert_sink over "
         f"the shared {_SRC_FILES}-file time-ordered source). The FINAL "
         "serving state is read back and hash-compared to the batch "
         "aggregate on the FULL horizon — no closed-region cut, because "

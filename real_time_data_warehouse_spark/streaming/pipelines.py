@@ -1,8 +1,10 @@
 """Streaming pipeline topologies (DIM / DWD / DWS app analogs).
 
-Each reference app's `handle()` body becomes a pure df→df transform here;
-the streaming shell is: file/kafka source → transform → sink. Tests run the
-same transform in batch for the equivalence check.
+Each reference app's `handle()` body becomes a pure df→df transform here,
+and each foreachBatch sink an epoch body; a streaming query is file/kafka
+source → transform → sink, started by the runners of
+streaming/state_store. Tests run the same transform in batch for the
+equivalence check.
 
 Scale notes: watermarks bound all state (the reference's StateTtlConfig
 analogs — SURVEY.md §4); `foreachBatch` tags each row of the micro-batch
@@ -25,11 +27,7 @@ from pyspark.sql.types import (
 from real_time_data_warehouse_spark.functions.money import dec
 from real_time_data_warehouse_spark.functions.time import tumble, window_meta
 from real_time_data_warehouse_spark.session import tune
-from real_time_data_warehouse_spark.streaming.state_store import (
-    run_epoch_stream,
-    run_file_stream,
-    write_snapshot,
-)
+from real_time_data_warehouse_spark.streaming.state_store import write_snapshot
 
 # events schema as the streaming file source sees it (ts arrives as bigint
 # nanos under nanosAsLong — same normalization as tables.load).
@@ -45,25 +43,21 @@ EVENTS_RAW_SCHEMA = StructType(
 )
 
 
-def file_stream(
-    spark: SparkSession, path: str, schema: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def file_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Streaming source over a directory of parquet files of *schema*,
-    one file per micro-batch by default."""
+    one file per micro-batch."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
 
 
-def stream_events(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def stream_events(spark: SparkSession, path: str) -> DataFrame:
     """Streaming source over a directory of events parquet files (the
-    Kafka stand-in; S1). One file per micro-batch by default."""
+    Kafka stand-in; S1), one file per micro-batch."""
     tune(spark)
-    raw = file_stream(spark, path, EVENTS_RAW_SCHEMA, max_files_per_trigger)
+    raw = file_stream(spark, path, EVENTS_RAW_SCHEMA)
     return raw.withColumn(
         # integer division: ts/1000 via double loses ~1 µs on ~1.6% of values
         # (nanos exceed 2^53) — div keeps the exact microsecond
@@ -130,33 +124,6 @@ def stream_dedup_within_watermark(
     return src.dropDuplicatesWithinWatermark(["user_id", "event_type"])
 
 
-def run_dws_agg_update_stream(
-    spark: SparkSession, src_path: str, serving_dir: str, checkpoint_dir: str
-):
-    """S6/S7 update semantics: the DWS aggregate in UPDATE output mode,
-    upserted into the serving table keyed by (stt, sku_group) — each
-    window row is re-emitted whenever late-but-in-watermark data changes
-    it, and the upsert keeps the latest value. This is the reference's
-    Doris stream-load / upsert-kafka behavior (windows overwritten per
-    fire) rather than append-once-final."""
-    agg = dws_windowed_agg(stream_events(spark, src_path), watermark="1 hour")
-    return run_epoch_stream(
-        agg, dws_upsert_sink(spark, serving_dir), checkpoint_dir, "update"
-    )
-
-
-def dws_upsert_sink(spark: SparkSession, serving_dir: str):
-    """DWS update-mode epoch body: upsert each fired window row into the
-    serving table keyed by (stt, sku_group), latest fire wins."""
-    from real_time_data_warehouse_spark.streaming.sinks import upsert_versioned
-
-    def upsert_batch(batch: DataFrame, batch_id: int) -> None:
-        upsert_versioned(spark, batch, batch_id, serving_dir,
-                         key_cols=["stt", "sku_group"])
-
-    return upsert_batch
-
-
 def dws_windowed_agg(events: DataFrame, watermark: str = "10 seconds") -> DataFrame:
     """A1/W1/W7: the DWS tumbling-window aggregate with window metadata
     (DwsTradeSkuOrderWindow.java:271-302). In streaming the watermark
@@ -171,9 +138,33 @@ def dws_windowed_agg(events: DataFrame, watermark: str = "10 seconds") -> DataFr
     return window_meta(agg)
 
 
+def dws_sku_order_enriched(
+    events: DataFrame, dim: DataFrame, watermark: str = "10 seconds"
+) -> DataFrame:
+    """The full DwsTradeSkuOrderWindow shape (DwsTradeSkuOrderWindow.java:
+    271-302 window reduce + :480-619 async dim chain): watermarked tumbling
+    aggregate, then broadcast dim enrichment of the *aggregated* rows —
+    the reference enriches after windowing too (far fewer rows to enrich
+    than events). Stream-static join keeps the result streamable."""
+    agg = dws_windowed_agg(events, watermark)
+    return agg.join(F.broadcast(dim), agg["sku_group"] == dim["dic_code"], "left")
+
+
 # ---------------------------------------------------------------------------
-# Streaming shells
+# Epoch bodies (foreachBatch sinks)
 # ---------------------------------------------------------------------------
+
+
+def dws_upsert_sink(spark: SparkSession, serving_dir: str):
+    """DWS update-mode epoch body: upsert each fired window row into the
+    serving table keyed by (stt, sku_group), latest fire wins."""
+    from real_time_data_warehouse_spark.streaming.sinks import upsert_versioned
+
+    def upsert_batch(batch: DataFrame, batch_id: int) -> None:
+        upsert_versioned(spark, batch, batch_id, serving_dir,
+                         key_cols=["stt", "sku_group"])
+
+    return upsert_batch
 
 
 def log_split_sink(out_dir: str):
@@ -199,28 +190,6 @@ def log_split_sink(out_dir: str):
     return sink_batch
 
 
-def run_log_split_stream(
-    spark: SparkSession, src_path: str, out_dir: str, checkpoint_dir: str
-):
-    """DwdBaseLog shell: one source → ``log_split_sink`` → one parquet
-    sink partitioned by ``side``."""
-    return run_epoch_stream(
-        stream_events(spark, src_path), log_split_sink(out_dir), checkpoint_dir
-    )
-
-
-def dws_sku_order_enriched(
-    events: DataFrame, dim: DataFrame, watermark: str = "10 seconds"
-) -> DataFrame:
-    """The full DwsTradeSkuOrderWindow shape (DwsTradeSkuOrderWindow.java:
-    271-302 window reduce + :480-619 async dim chain): watermarked tumbling
-    aggregate, then broadcast dim enrichment of the *aggregated* rows —
-    the reference enriches after windowing too (far fewer rows to enrich
-    than events). Stream-static join keeps the result streamable."""
-    agg = dws_windowed_agg(events, watermark)
-    return agg.join(F.broadcast(dim), agg["sku_group"] == dim["dic_code"], "left")
-
-
 def routing_sink(config_rows: list[tuple[str, str]], out_dir: str):
     """X2/S5 epoch body: config-driven demux (DwdBaseDb.java:43-110 +
     dynamic-topic sink FlinkSinkUtil.java:44-65). The routing config
@@ -244,30 +213,3 @@ def routing_sink(config_rows: list[tuple[str, str]], out_dir: str):
         write_snapshot(routed, out_dir, batch_id, partition_by="sink_table")
 
     return sink_batch
-
-
-def run_dynamic_routing_stream(
-    spark: SparkSession,
-    src_path: str,
-    config_rows: list[tuple[str, str]],
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """X2/S5 shell: one source → ``routing_sink`` → ``sink_table``-
-    partitioned parquet sink."""
-    return run_epoch_stream(
-        stream_events(spark, src_path),
-        routing_sink(config_rows, out_dir),
-        checkpoint_dir,
-    )
-
-
-def run_dws_agg_stream(
-    spark: SparkSession, src_path: str, out_path: str, checkpoint_dir: str
-):
-    """DWS shell: source → watermarked window agg → append parquet sink,
-    day-partitioned (the Doris `par{date}` partitioning analog, S7)."""
-    agg = dws_windowed_agg(stream_events(spark, src_path))
-    return run_file_stream(
-        agg, out_path, checkpoint_dir, partition_by="cur_date"
-    )

@@ -38,7 +38,7 @@ def run_warehouse(
 
     The DWD split keeps one directory per side (``dwd/<side>/batch_id=N``)
     rather than the one side-partitioned epoch write of
-    ``run_log_split_stream``: the DWS layer streams ``dwd/page`` as its
+    ``log_split_sink``: the DWS layer streams ``dwd/page`` as its
     file source, and a file source over one side-partitioned tree would
     list every side's files each trigger to keep only the page rows."""
     dwd_dir = os.path.join(base_dir, "dwd")

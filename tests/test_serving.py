@@ -149,8 +149,11 @@ def test_dynamic_routing_stream(spark, tmp_path):
     import os
 
     from real_time_data_warehouse_spark.streaming.pipelines import (
-        run_dynamic_routing_stream,
+        routing_sink,
         stream_events,
+    )
+    from real_time_data_warehouse_spark.streaming.state_store import (
+        run_epoch_stream,
     )
     from real_time_data_warehouse_spark.tables import Tables
 
@@ -166,7 +169,9 @@ def test_dynamic_routing_stream(spark, tmp_path):
     )
     out, ckpt = str(tmp_path / "routed"), str(tmp_path / "ckpt")
     config = [("click", "dwd_click_log"), ("purchase", "dwd_trade_order")]
-    q = run_dynamic_routing_stream(spark, src, config, out, ckpt)
+    q = run_epoch_stream(
+        stream_events(spark, src), routing_sink(config, out), ckpt
+    )
     q.awaitTermination(120)
 
     routed = spark.read.parquet(out)

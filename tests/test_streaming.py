@@ -26,14 +26,13 @@ from real_time_data_warehouse_spark.streaming.pipelines import (
     dws_windowed_agg,
     log_split,
     log_split_sink,
-    run_dws_agg_stream,
-    run_log_split_stream,
     stream_events,
 )
 from real_time_data_warehouse_spark.streaming.state_store import (
     epoch_dir,
     read_log,
     run_epoch_stream,
+    run_file_stream,
     write_snapshot,
 )
 from real_time_data_warehouse_spark.streaming.stateful import (
@@ -66,7 +65,9 @@ def events_dir(spark, tmp_path_factory):
 
 def test_log_split_stream_matches_batch(spark, tmp_path, events_dir):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = run_log_split_stream(spark, events_dir, out, ckpt)
+    q = run_epoch_stream(
+        stream_events(spark, events_dir), log_split_sink(out), ckpt
+    )
     q.awaitTermination(120)
     ev = Tables(spark, SF_DIR).events
     batch_sides = {k: df.count() for k, df in log_split(ev).items()}
@@ -78,7 +79,10 @@ def test_log_split_stream_matches_batch(spark, tmp_path, events_dir):
 
 def test_dws_agg_stream_matches_batch(spark, tmp_path, events_dir):
     out, ckpt = str(tmp_path / "dws"), str(tmp_path / "ckpt2")
-    q = run_dws_agg_stream(spark, events_dir, out, ckpt)
+    q = run_file_stream(
+        dws_windowed_agg(stream_events(spark, events_dir)), out, ckpt,
+        partition_by="cur_date",
+    )
     q.awaitTermination(120)
     ev = Tables(spark, SF_DIR).events
     batch = dws_windowed_agg(ev)
@@ -433,12 +437,14 @@ def test_dws_update_mode_upsert(spark, tmp_path, events_dir):
     window key after late-but-in-watermark updates, equal to the batch
     recomputation for every window present."""
     from real_time_data_warehouse_spark.streaming.pipelines import (
-        dws_windowed_agg,
-        run_dws_agg_update_stream,
+        dws_upsert_sink,
     )
 
     serving, ckpt = str(tmp_path / "serving"), str(tmp_path / "ckpt_up")
-    q = run_dws_agg_update_stream(spark, events_dir, serving, ckpt)
+    q = run_epoch_stream(
+        dws_windowed_agg(stream_events(spark, events_dir), "1 hour"),
+        dws_upsert_sink(spark, serving), ckpt, "update",
+    )
     q.awaitTermination(180)
     got = spark.read.parquet(serving)
     ev = Tables(spark, SF_DIR).events
@@ -510,15 +516,13 @@ def test_progress_monitor_listener(spark, tmp_path, events_dir):
         attach_progress_log,
         detach,
     )
-    from real_time_data_warehouse_spark.streaming.pipelines import (
-        run_dws_agg_stream,
-    )
-
     log = str(tmp_path / "progress.jsonl")
     listener = attach_progress_log(spark, log)
     try:
-        q = run_dws_agg_stream(
-            spark, events_dir, str(tmp_path / "out"), str(tmp_path / "ckpt")
+        q = run_file_stream(
+            dws_windowed_agg(stream_events(spark, events_dir)),
+            str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            partition_by="cur_date",
         )
         qid = str(q.id)
         q.awaitTermination(120)
@@ -587,7 +591,7 @@ def test_log_split_crash_recovery_exactly_once(spark, tmp_path, events_dir):
     ).parquet(debris_dir)
 
     # restart from the same checkpoint, no fault this time
-    run_log_split_stream(spark, events_dir, out, ckpt)
+    run_epoch_stream(stream_events(spark, events_dir), log_split_sink(out), ckpt)
 
     log = read_log(spark, out)
     for side, df in log_split(ev).items():

@@ -262,7 +262,10 @@ def test_native_sink_checkpoint_resume_exactly_once(spark, tmp_path):
     )
     from real_time_data_warehouse_spark.streaming.pipelines import (
         dws_windowed_agg,
-        run_dws_agg_stream,
+        stream_events,
+    )
+    from real_time_data_warehouse_spark.streaming.state_store import (
+        run_file_stream,
     )
     from real_time_data_warehouse_spark.tables import Tables
 
@@ -274,10 +277,14 @@ def test_native_sink_checkpoint_resume_exactly_once(spark, tmp_path):
     names = [f"batch_{b}.parquet" for b in range(_SRC_FILES)]
     for n in names[:2]:  # wave 1: first half of the timeline
         _sh.copy2(os.path.join(shared, n), os.path.join(src, n))
-    run_dws_agg_stream(spark, src, out, ckpt)  # runs to completion
+    def run() -> None:  # the st14 query, to completion
+        agg = dws_windowed_agg(stream_events(spark, src))
+        run_file_stream(agg, out, ckpt, partition_by="cur_date")
+
+    run()
     for n in names[2:]:  # wave 2 arrives after the first query stopped
         _sh.copy2(os.path.join(shared, n), os.path.join(src, n))
-    run_dws_agg_stream(spark, src, out, ckpt)  # resume, same ckpt
+    run()  # resume, same ckpt
 
     back = spark.read.parquet(out)
     # exactly-once: no window key appears twice across the two runs

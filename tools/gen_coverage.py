@@ -22,9 +22,9 @@ NON_QUERY_ROWS: dict[str, str] = {
     "S2": "sources/cdc.parse_debezium + synthetic_cdc_json (no MySQL in env; Delta CDF gated)",
     "S3": "config preload = inline/parquet DataFrame (streaming/dim.default_dim_config); spark.read.jdbc gated (no DB in env)",
     "S4": "sources/kafka.with_fixed_topic",
-    "S5": "sources/kafka.with_dynamic_topic + streaming run_dynamic_routing_stream (tests/test_serving.py)",
+    "S5": "sources/kafka.with_dynamic_topic + streaming pipelines.routing_sink (tests/test_serving.py)",
     "S6": "sources/kafka.with_upsert_key; Delta-first: streaming/sinks.upsert_dim",
-    "S7": "streaming/sinks.write_serving_partitioned + run_dws_agg_stream (day-partitioned)",
+    "S7": "streaming/sinks.write_serving_partitioned + st14's day-partitioned dws_windowed_agg sink",
     "S8": "streaming/sinks.upsert_dim (MERGE when Delta present; tested upsert+delete lifecycle)",
     "S9": "streaming/sinks.apply_config_ddl",
     "S10": "broadcast stream-static join (j5) — lookup cache unnecessary in Spark",
@@ -38,7 +38,7 @@ NON_QUERY_ROWS: dict[str, str] = {
     "ST7": "streaming/dim.route_and_prune (per-batch config snapshot; preload race gone)",
     "U2": "streaming/stateful.py applyInPandasWithState (returning_user, visitor_fix)",
     "U3": "absent in reference; pandas GROUPED_AGG available if needed",
-    "X2": "streaming run_dynamic_routing_stream + j7/x1 queries",
+    "X2": "streaming pipelines.routing_sink + j7/x1 queries",
     "J8": "j8_semi_anti_join (+ full outer via join('full') if needed)",
 }
 
