@@ -6,9 +6,10 @@ import importlib
 
 # Import order only — the driver's visit order is the EXPLICIT
 # registry.MANIFEST (registry.ordered_registry), not import side-effect
-# order. Constraints here are purely load-time: curation composes
-# d7/t1/t2/t3, so it loads after them; gate_replay imports the batch
-# twins whose oracles it reuses itself.
+# order. The tuple carries no load-time constraint: a module whose rows
+# compose another module's oracle or code imports that module itself at
+# top level (curation imports dedup/textanalysis, streaming_exec imports
+# dedup/similarity/stateful, ...), so any order loads the same registry.
 _MODULES = (
     "dedup",
     "similarity",
@@ -19,7 +20,7 @@ _MODULES = (
     "importance",
     "multimodal",
     "sql_apps",
-    "curation",  # composes d7/t1/t2/t3 — must load after them
+    "curation",
     "retrieval",
     "projections",
     "joins",
@@ -30,12 +31,12 @@ _MODULES = (
     "graph",
     "scalar",
     "serving",
-    "sink_readback",  # composes serving.SERVING_DATE — after serving
-    "streaming_exec",  # reuses sink_readback's artifact cache
-    "dim_refresh",  # composes streaming_exec's sliced source — after it
-    "app_chains",  # composes streaming_exec's sliced source — after it
+    "sink_readback",
+    "streaming_exec",
+    "dim_refresh",
+    "app_chains",
     "layout",
-    "audits",  # composes s1/s3/d2/d3 — must load last
+    "audits",
 )
 
 _loaded = False

@@ -100,6 +100,8 @@ from real_time_data_warehouse_spark.functions.money import (
     oracle_dec_sum,
 )
 from real_time_data_warehouse_spark.functions.text import tokenize
+# app7s/app7x register with st5's oracle, so its module loads first
+from real_time_data_warehouse_spark.operators import stateful  # noqa: F401
 from real_time_data_warehouse_spark.operators.sink_readback import (
     _artifact_dir,
 )
@@ -113,7 +115,7 @@ from real_time_data_warehouse_spark.operators.streaming_exec import (
     _write_slices,
     _write_time_sliced_source,
 )
-from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 from real_time_data_warehouse_spark.streaming.pipelines import (
     EVENTS_RAW_SCHEMA,
     file_stream,
@@ -1444,7 +1446,7 @@ def _app7s_build(spark: SparkSession, sf_dir: str) -> str:
         "unrestricted batch oracle (update-mode running totals folded "
         "by last-write-wins); the read-back excludes the far-future "
         "sentinel dates (app2s-style).",
-    oracle=None,  # st5's oracle verbatim — attached below
+    oracle=QUERY_REGISTRY["st5_returning_user"].oracle,
 )
 def app7s_user_login_stream_chain(
     spark: SparkSession, sf_dir: str
@@ -1493,33 +1495,12 @@ def _app7x_build(spark: SparkSession, sf_dir: str) -> str:
         "stateful operators asserted in the replayed epochs' progress "
         "records; the FINAL store equals st5's unrestricted batch "
         "oracle.",
-    oracle=None,  # st5's oracle verbatim — attached below
+    oracle=QUERY_REGISTRY["st5_returning_user"].oracle,
 )
 def app7x_user_login_crash_restart(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     return _login_store_readback(spark, sf_dir, _app7x_build(spark, sf_dir))
-
-
-def _attach_app7s_oracle() -> None:
-    from dataclasses import replace
-
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        stateful as _stateful,
-    )
-    from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
-
-    st5 = QUERY_REGISTRY["st5_returning_user"].oracle
-    for name in (
-        "app7s_user_login_stream_chain",
-        "app7x_user_login_crash_restart",
-    ):
-        QUERY_REGISTRY[name] = replace(
-            QUERY_REGISTRY[name], oracle=st5
-        )
-
-
-_attach_app7s_oracle()
 
 
 # --------------------------------------------------------------------------

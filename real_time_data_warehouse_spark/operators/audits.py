@@ -81,7 +81,13 @@ def s9_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "recovers, asserted ≥ 0.90 (measured 255/256 ≈ 0.996). n_truth "
         "is recomputed exactly by the oracle from d2's own pair SQL, so "
         "the audit also re-pins the exact pair count.",
-    oracle=None,  # built below from d2's oracle so n_truth stays in sync
+    oracle=f"""
+        WITH d2_pairs AS (
+            {QUERY_REGISTRY["d2_ngram_jaccard_pairs"].oracle}
+        )
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_truth, TRUE AS above_floor
+        FROM d2_pairs
+    """,
 )
 def d14_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = QUERY_REGISTRY["d2_ngram_jaccard_pairs"].fn(spark, sf_dir).select(
@@ -102,20 +108,6 @@ def d14_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_hit") * 100 >= F.col("n_truth") * _MINHASH_FLOOR_X100
         ).alias("above_floor"),
     )
-
-
-import dataclasses as _dca  # noqa: E402
-
-QUERY_REGISTRY["d14_minhash_recall_audit"] = _dca.replace(
-    QUERY_REGISTRY["d14_minhash_recall_audit"],
-    oracle=f"""
-        WITH d2_pairs AS (
-            {QUERY_REGISTRY["d2_ngram_jaccard_pairs"].oracle}
-        )
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_truth, TRUE AS above_floor
-        FROM d2_pairs
-    """,
-)
 
 
 _SQ8_FLOOR_X100 = 80

@@ -18,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_data_warehouse_spark.functions.text import md5_hash, md5_hash_sql
+from real_time_data_warehouse_spark.functions.text import (
+    md5_hash,
+    md5_hash_sql,
+    tokenize_sql,
+)
 from real_time_data_warehouse_spark.operators import dedup as _dep_dedup  # noqa: F401
 from real_time_data_warehouse_spark.operators import (  # noqa: F401
     textanalysis as _dep_text,
@@ -68,7 +72,7 @@ def _c1_oracle() -> str:
         "broadcast-friendly doc_id equi-joins over per-doc signal frames; "
         "at scale each signal is a materialized column table and this is "
         "a zipper join, no recomputation.",
-    oracle=None,  # composed below from the d7/t1/t2 oracles
+    oracle=_c1_oracle(),
 )
 def c1_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate = QUERY_REGISTRY["d7_dedup_gate"].fn(spark, sf_dir)
@@ -120,7 +124,7 @@ def _rates_sql() -> str:
         "realized rates converge to the configured ones; a rate table "
         "swap is a broadcast, not a reshuffle.",
     oracle=f"""
-        WITH lang AS ({{t1}})
+        WITH lang AS ({QUERY_REGISTRY["t1_lang_id"].oracle})
         SELECT l.doc_id, l.predicted_lang AS lang,
                CAST(CASE WHEN {md5_hash_sql("CAST(l.doc_id AS VARCHAR)")} % 100 <
                          CASE l.predicted_lang {_rates_sql()} ELSE 100 END
@@ -155,7 +159,7 @@ def c2_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embarrassingly parallel and bins globally addressable as "
         "(shard, bin).",
     oracle=f"""
-        WITH toks AS ({{t3}}),
+        WITH toks AS ({QUERY_REGISTRY["t3_token_count"].oracle}),
         sharded AS (
             SELECT doc_id, ws_tokens,
                    CAST(doc_id % {_PACK_SHARDS} AS BIGINT) AS shard
@@ -198,27 +202,6 @@ def c3_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bin_id"),
         (cum_before % _PACK_CAPACITY).cast("bigint").alias("offset_in_bin"),
     )
-
-
-# compose the c1/c2/c3 oracles from the registered building blocks
-import dataclasses as _dc  # noqa: E402
-
-_QR = QUERY_REGISTRY
-_QR["c1_corpus_curation"] = _dc.replace(
-    _QR["c1_corpus_curation"], oracle=_c1_oracle()
-)
-_QR["c2_stratified_sample"] = _dc.replace(
-    _QR["c2_stratified_sample"],
-    oracle=_QR["c2_stratified_sample"].oracle.format(
-        t1=_QR["t1_lang_id"].oracle
-    ),
-)
-_QR["c3_sequence_packing"] = _dc.replace(
-    _QR["c3_sequence_packing"],
-    oracle=_QR["c3_sequence_packing"].oracle.format(
-        t3=_QR["t3_token_count"].oracle
-    ),
-)
 
 
 _SHUFFLE_SHARDS = 16  # c4: parallel shard count for the epoch shuffle
@@ -457,32 +440,6 @@ def c7_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRAIN_PCT = 90
 
 
-@register(
-    "c8_leakage_safe_split",
-    survey="ext-curation,ext-dedup",
-    doc=f"Leakage-safe train/val split: the {_TRAIN_PCT}/"
-        f"{100 - _TRAIN_PCT} assignment hashes the near-dup CLUSTER id "
-        "(d6's connected components over MinHash candidate pairs), not "
-        "the document id — so a near-duplicate of a training document "
-        "can never land in validation (the eval-leakage failure mode "
-        "doc-level random splits have). Deterministic content hash, no "
-        "rand(): the split is reproducible across runs, engines and "
-        "partitionings. Composes d6; the split itself adds only a "
-        "narrow projection.",
-    oracle=None,  # attached below from the d6 oracle
-)
-def c8_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clusters = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, sf_dir)
-    bucket = md5_hash(F.col("cluster_id").cast("string")) % 100
-    return clusters.select(
-        "doc_id",
-        "cluster_id",
-        F.when(bucket < _TRAIN_PCT, "train")
-        .otherwise("val")
-        .alias("split"),
-    )
-
-
 def _c8_oracle() -> str:
     d6 = QUERY_REGISTRY["d6_dedup_clusters"].oracle
     h = md5_hash_sql("CAST(cluster_id AS VARCHAR)")
@@ -495,11 +452,30 @@ def _c8_oracle() -> str:
     """
 
 
-import dataclasses as _dc8
-
-QUERY_REGISTRY["c8_leakage_safe_split"] = _dc8.replace(
-    QUERY_REGISTRY["c8_leakage_safe_split"], oracle=_c8_oracle()
+@register(
+    "c8_leakage_safe_split",
+    survey="ext-curation,ext-dedup",
+    doc=f"Leakage-safe train/val split: the {_TRAIN_PCT}/"
+        f"{100 - _TRAIN_PCT} assignment hashes the near-dup CLUSTER id "
+        "(d6's connected components over MinHash candidate pairs), not "
+        "the document id — so a near-duplicate of a training document "
+        "can never land in validation (the eval-leakage failure mode "
+        "doc-level random splits have). Deterministic content hash, no "
+        "rand(): the split is reproducible across runs, engines and "
+        "partitionings. Composes d6; the split itself adds only a "
+        "narrow projection.",
+    oracle=_c8_oracle(),
 )
+def c8_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    clusters = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, sf_dir)
+    bucket = md5_hash(F.col("cluster_id").cast("string")) % 100
+    return clusters.select(
+        "doc_id",
+        "cluster_id",
+        F.when(bucket < _TRAIN_PCT, "train")
+        .otherwise("val")
+        .alias("split"),
+    )
 
 
 _CHUNK_SIZE = 64  # tokens per chunk (c9)
@@ -524,7 +500,7 @@ _CHUNK_STRIDE = 48  # chunk start spacing → 16-token overlap
                    CAST(1 + floor((greatest(len(toks) - {_CHUNK_SIZE}, 0)
                         + {_CHUNK_STRIDE - 1}) / {_CHUNK_STRIDE}.0)
                         AS BIGINT) AS n_chunks
-            FROM (SELECT doc_id, {{t}} AS toks FROM documents) b
+            FROM (SELECT doc_id, {tokenize_sql("text")} AS toks FROM documents) b
         ),
         e AS (
             SELECT doc_id, toks,
@@ -576,18 +552,6 @@ def c9_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import dataclasses as _dc9  # noqa: E402
-
-from real_time_data_warehouse_spark.functions.text import tokenize_sql as _tok_sql  # noqa: E402
-
-QUERY_REGISTRY["c9_doc_chunks"] = _dc9.replace(
-    QUERY_REGISTRY["c9_doc_chunks"],
-    oracle=QUERY_REGISTRY["c9_doc_chunks"].oracle.format(
-        t=_tok_sql("text")
-    ),
-)
-
-
 @register(
     "c3s_packing_replay",
     survey="ext-curation",
@@ -601,7 +565,7 @@ QUERY_REGISTRY["c9_doc_chunks"] = _dc9.replace(
         "cumsum (previously pinned only by tests/test_pack_stream.py). "
         "Completes the replay family (d7s lexical, d9s semantic, st8s "
         "SCD2, c3s packing).",
-    oracle=None,  # attached below: the composed c3 oracle, verbatim
+    oracle=QUERY_REGISTRY["c3_sequence_packing"].oracle,
 )
 def c3s_packing_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.operators.gate_replay import (
@@ -613,12 +577,6 @@ def c3s_packing_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
     return _replay_batches(spark, docs, "doc_id", packing.apply_pack_batch)
-
-
-QUERY_REGISTRY["c3s_packing_replay"] = _dc9.replace(
-    QUERY_REGISTRY["c3s_packing_replay"],
-    oracle=QUERY_REGISTRY["c3_sequence_packing"].oracle,
-)
 
 
 @register(
@@ -634,7 +592,7 @@ QUERY_REGISTRY["c3s_packing_replay"] = _dc9.replace(
         "≡ the batch curation query (previously pinned only by "
         "tests/test_curation_stream.py). With c3s/d7s/d9s/st8s this "
         "driver-verifies every streaming gate in the repo.",
-    oracle=None,  # attached below: the composed c1 oracle, verbatim
+    oracle=QUERY_REGISTRY["c1_corpus_curation"].oracle,
 )
 def c1s_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
@@ -659,10 +617,28 @@ def c1s_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERY_REGISTRY["c1s_curation_replay"] = _dc9.replace(
-    QUERY_REGISTRY["c1s_curation_replay"],
-    oracle=QUERY_REGISTRY["c1_corpus_curation"].oracle,
-)
+def _c10_oracle() -> str:
+    t1 = QUERY_REGISTRY["t1_lang_id"].oracle
+    t2 = QUERY_REGISTRY["t2_quality_score"].oracle
+    t3 = QUERY_REGISTRY["t3_token_count"].oracle
+    return f"""
+        WITH lang AS ({t1}), qual AS ({t2}), toks AS ({t3}),
+        j AS (
+            SELECT d.source, l.predicted_lang, t.ws_tokens, q.quality_score
+            FROM documents d
+            JOIN lang l ON d.doc_id = l.doc_id
+            JOIN qual q ON d.doc_id = q.doc_id
+            JOIN toks t ON d.doc_id = t.doc_id
+        )
+        SELECT source, predicted_lang,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(ws_tokens) AS BIGINT) AS total_tokens,
+               CAST(floor(CAST(SUM(CAST(quality_score AS DECIMAL(18,4)))
+                        AS DOUBLE) / COUNT(*) * 10000 + 0.5) / 10000
+                    AS DOUBLE) AS mean_quality
+        FROM j
+        GROUP BY ROLLUP (source, predicted_lang)
+    """
 
 
 @register(
@@ -678,7 +654,7 @@ QUERY_REGISTRY["c1s_curation_replay"] = _dc9.replace(
         "quality scores are 4-decimal-rounded by construction, so the "
         "cast is exact) and surfaces with the engine-independent "
         "floor-rounding.",
-    oracle=None,  # composed below from the t1/t2/t3 oracles
+    oracle=_c10_oracle(),
 )
 def c10_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.functions.money import dec4
@@ -717,35 +693,6 @@ def c10_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _c10_oracle() -> str:
-    t1 = QUERY_REGISTRY["t1_lang_id"].oracle
-    t2 = QUERY_REGISTRY["t2_quality_score"].oracle
-    t3 = QUERY_REGISTRY["t3_token_count"].oracle
-    return f"""
-        WITH lang AS ({t1}), qual AS ({t2}), toks AS ({t3}),
-        j AS (
-            SELECT d.source, l.predicted_lang, t.ws_tokens, q.quality_score
-            FROM documents d
-            JOIN lang l ON d.doc_id = l.doc_id
-            JOIN qual q ON d.doc_id = q.doc_id
-            JOIN toks t ON d.doc_id = t.doc_id
-        )
-        SELECT source, predicted_lang,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(ws_tokens) AS BIGINT) AS total_tokens,
-               CAST(floor(CAST(SUM(CAST(quality_score AS DECIMAL(18,4)))
-                        AS DOUBLE) / COUNT(*) * 10000 + 0.5) / 10000
-                    AS DOUBLE) AS mean_quality
-        FROM j
-        GROUP BY ROLLUP (source, predicted_lang)
-    """
-
-
-QUERY_REGISTRY["c10_corpus_profile"] = _dc9.replace(
-    QUERY_REGISTRY["c10_corpus_profile"], oracle=_c10_oracle()
-)
-
-
 # --- c11: token-budget epoch planning ------------------------------------
 
 # Epoch cap: repeating pretraining data beyond ~4 epochs stops helping
@@ -776,14 +723,14 @@ _BUDGET_TAIL_W = 1
     oracle=f"""
         WITH tok AS (
             SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-                   CAST(SUM(len({{t}})) AS BIGINT) AS n_tokens
+                   CAST(SUM(len({tokenize_sql("text")})) AS BIGINT) AS n_tokens
             FROM documents GROUP BY source
         ),
         w AS (
             SELECT source, n_docs, n_tokens,
-                   CAST(CASE WHEN source IN {{cur}} THEN {_BUDGET_CURATED_W}
+                   CAST(CASE WHEN source IN {_MIX_CURATED} THEN {_BUDGET_CURATED_W}
                         ELSE {_BUDGET_TAIL_W} END AS BIGINT) AS w_s,
-                   SUM(CAST(CASE WHEN source IN {{cur}} THEN {_BUDGET_CURATED_W}
+                   SUM(CAST(CASE WHEN source IN {_MIX_CURATED} THEN {_BUDGET_CURATED_W}
                        ELSE {_BUDGET_TAIL_W} END AS BIGINT)) OVER () AS w_total,
                    SUM(n_tokens) OVER () AS t_total
             FROM tok
@@ -802,7 +749,7 @@ _BUDGET_TAIL_W = 1
                           + 0.5) / 10000 AS DOUBLE) AS epochs_raw,
                (target_tokens > {_BUDGET_EPOCH_CAP} * n_tokens) AS capped
         FROM plan
-    """.format(t=_tok_sql("text"), cur=_MIX_CURATED),
+    """,
 )
 def c11_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.functions.text import tokenize
@@ -867,41 +814,6 @@ def c11_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QW_BANDS = ((0.55, 100), (0.45, 50), (0.35, 20), (0.0, 5))
 
 
-@register(
-    "c12_quality_weighted_sample",
-    survey="ext-curation,ext-text",
-    doc="Quality-WEIGHTED soft sampling (the FineWeb/LLM-corpus practice "
-        "of down-sampling rather than hard-dropping mid-quality text): "
-        "t2's composite score maps to a keep-rate band (>=0.55 keeps "
-        "100%, 0.45-0.55 50%, 0.35-0.45 20%, below 5%) and the keep "
-        "decision is the deterministic md5(doc_id) % 100 < rate coin — "
-        "no rand(), so the sampled corpus is identical across runs, "
-        "engines and partitionings, and every decision is auditable "
-        "(band + rate + kept are all emitted). Composes t2 exactly like "
-        "c1/c2 compose their signals: a map-side projection over the "
-        "scored frame, zero extra shuffles.",
-    oracle=None,  # composed below from the t2 oracle
-)
-def c12_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = QUERY_REGISTRY["t2_quality_score"].fn(spark, sf_dir).select(
-        "doc_id", "quality_score"
-    )
-    rate = F.lit(None).cast("int")
-    band = F.lit(None).cast("int")
-    for i, (edge, r) in enumerate(_QW_BANDS):
-        cond = F.col("quality_score") >= edge
-        rate = F.coalesce(rate, F.when(cond, r))
-        band = F.coalesce(band, F.when(cond, i))
-    bucket = md5_hash(F.col("doc_id").cast("string")) % 100
-    return scored.select(
-        "doc_id",
-        "quality_score",
-        band.cast("int").alias("band"),
-        rate.cast("int").alias("rate_pct"),
-        (bucket < rate).cast("int").alias("kept"),
-    )
-
-
 def _c12_oracle() -> str:
     t2 = QUERY_REGISTRY["t2_quality_score"].oracle
     h = md5_hash_sql("CAST(doc_id AS VARCHAR)")
@@ -924,14 +836,64 @@ def _c12_oracle() -> str:
     """
 
 
-import dataclasses as _dc12
-
-QUERY_REGISTRY["c12_quality_weighted_sample"] = _dc12.replace(
-    QUERY_REGISTRY["c12_quality_weighted_sample"], oracle=_c12_oracle()
+@register(
+    "c12_quality_weighted_sample",
+    survey="ext-curation,ext-text",
+    doc="Quality-WEIGHTED soft sampling (the FineWeb/LLM-corpus practice "
+        "of down-sampling rather than hard-dropping mid-quality text): "
+        "t2's composite score maps to a keep-rate band (>=0.55 keeps "
+        "100%, 0.45-0.55 50%, 0.35-0.45 20%, below 5%) and the keep "
+        "decision is the deterministic md5(doc_id) % 100 < rate coin — "
+        "no rand(), so the sampled corpus is identical across runs, "
+        "engines and partitionings, and every decision is auditable "
+        "(band + rate + kept are all emitted). Composes t2 exactly like "
+        "c1/c2 compose their signals: a map-side projection over the "
+        "scored frame, zero extra shuffles.",
+    oracle=_c12_oracle(),
 )
+def c12_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    scored = QUERY_REGISTRY["t2_quality_score"].fn(spark, sf_dir).select(
+        "doc_id", "quality_score"
+    )
+    rate = F.lit(None).cast("int")
+    band = F.lit(None).cast("int")
+    for i, (edge, r) in enumerate(_QW_BANDS):
+        cond = F.col("quality_score") >= edge
+        rate = F.coalesce(rate, F.when(cond, r))
+        band = F.coalesce(band, F.when(cond, i))
+    bucket = md5_hash(F.col("doc_id").cast("string")) % 100
+    return scored.select(
+        "doc_id",
+        "quality_score",
+        band.cast("int").alias("band"),
+        rate.cast("int").alias("rate_pct"),
+        (bucket < rate).cast("int").alias("kept"),
+    )
 
 
 # --- c13: dedup-aware cluster-weighted downsampling ------------------------
+
+
+def _c13_oracle() -> str:
+    d6 = QUERY_REGISTRY["d6_dedup_clusters"].oracle
+    h = md5_hash_sql("CAST(doc_id AS VARCHAR)")
+    return f"""
+        WITH d6 AS ({d6}),
+        s AS (
+            SELECT doc_id, cluster_id,
+                   CAST(COUNT(*) OVER (PARTITION BY cluster_id)
+                        AS BIGINT) AS cluster_size,
+                   CAST(ROW_NUMBER() OVER (
+                       PARTITION BY cluster_id
+                       ORDER BY {h}, doc_id) AS INT) AS pick_rank
+            FROM d6
+        )
+        SELECT doc_id, cluster_id, cluster_size, pick_rank,
+               CAST(CASE WHEN pick_rank <=
+                        ceil(sqrt(CAST(cluster_size AS DOUBLE)))
+                    THEN 1 ELSE 0 END AS INT) AS kept
+        FROM s
+    """
 
 
 @register(
@@ -949,7 +911,7 @@ QUERY_REGISTRY["c12_quality_weighted_sample"] = _dc12.replace(
         "ceil(sqrt) on a bigint is a single exact IEEE op on both "
         "engines. Scale: one window over the cluster key on top of "
         "d6's cost — the cluster table is corpus-sized, never pairwise.",
-    oracle=None,  # attached below from the d6 oracle
+    oracle=_c13_oracle(),
 )
 def c13_cluster_weighted_sample(
     spark: SparkSession, sf_dir: str
@@ -979,36 +941,22 @@ def c13_cluster_weighted_sample(
     )
 
 
-def _c13_oracle() -> str:
-    d6 = QUERY_REGISTRY["d6_dedup_clusters"].oracle
-    h = md5_hash_sql("CAST(doc_id AS VARCHAR)")
-    return f"""
-        WITH d6 AS ({d6}),
-        s AS (
-            SELECT doc_id, cluster_id,
-                   CAST(COUNT(*) OVER (PARTITION BY cluster_id)
-                        AS BIGINT) AS cluster_size,
-                   CAST(ROW_NUMBER() OVER (
-                       PARTITION BY cluster_id
-                       ORDER BY {h}, doc_id) AS INT) AS pick_rank
-            FROM d6
-        )
-        SELECT doc_id, cluster_id, cluster_size, pick_rank,
-               CAST(CASE WHEN pick_rank <=
-                        ceil(sqrt(CAST(cluster_size AS DOUBLE)))
-                    THEN 1 ELSE 0 END AS INT) AS kept
-        FROM s
-    """
-
-
-import dataclasses as _dc13
-
-QUERY_REGISTRY["c13_cluster_weighted_sample"] = _dc13.replace(
-    QUERY_REGISTRY["c13_cluster_weighted_sample"], oracle=_c13_oracle()
-)
-
-
 # --- d19: chunk-granularity exact dedup -----------------------------------
+
+
+def _d19_oracle() -> str:
+    c9 = QUERY_REGISTRY["c9_doc_chunks"].oracle
+    return f"""
+        WITH c9 AS ({c9})
+        SELECT doc_id, chunk_id, chunk_hash,
+               CAST(COUNT(*) OVER (PARTITION BY chunk_hash) AS BIGINT)
+                   AS n_copies,
+               CAST(CASE WHEN ROW_NUMBER() OVER (
+                        PARTITION BY chunk_hash
+                        ORDER BY doc_id, chunk_id) = 1
+                    THEN 1 ELSE 0 END AS INT) AS kept
+        FROM c9
+    """
 
 
 @register(
@@ -1024,7 +972,7 @@ QUERY_REGISTRY["c13_cluster_weighted_sample"] = _dc13.replace(
         "c9's map-side explode — at 100 TB this is the cheapest rung "
         "of the dedup ladder and the one that usually removes the most "
         "tokens per dollar.",
-    oracle=None,  # attached below from the c9 oracle
+    oracle=_d19_oracle(),
 )
 def d19_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1043,32 +991,30 @@ def d19_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _d19_oracle() -> str:
-    c9 = QUERY_REGISTRY["c9_doc_chunks"].oracle
-    return f"""
-        WITH c9 AS ({c9})
-        SELECT doc_id, chunk_id, chunk_hash,
-               CAST(COUNT(*) OVER (PARTITION BY chunk_hash) AS BIGINT)
-                   AS n_copies,
-               CAST(CASE WHEN ROW_NUMBER() OVER (
-                        PARTITION BY chunk_hash
-                        ORDER BY doc_id, chunk_id) = 1
-                    THEN 1 ELSE 0 END AS INT) AS kept
-        FROM c9
-    """
-
-
-import dataclasses as _dc19c
-
-QUERY_REGISTRY["d19_chunk_dedup"] = _dc19c.replace(
-    QUERY_REGISTRY["d19_chunk_dedup"], oracle=_d19_oracle()
-)
-
-
 # --- c15: curriculum phases by quality rank -------------------------------
 
 _C15_PHASES = 10
 _C15_BUCKETS = 32
+
+
+def _c15_oracle() -> str:
+    t2 = QUERY_REGISTRY["t2_quality_score"].oracle
+    return f"""
+        WITH t2 AS ({t2}),
+        r AS (
+            SELECT doc_id, quality_score,
+                   ROW_NUMBER() OVER (
+                       ORDER BY floor(quality_score * 10000 + 0.5),
+                                doc_id) AS q_rank,
+                   COUNT(*) OVER () AS n
+            FROM t2
+        )
+        SELECT doc_id, quality_score,
+               CAST(q_rank AS BIGINT) AS q_rank,
+               CAST(floor(CAST((q_rank - 1) * {_C15_PHASES} AS DOUBLE) / n)
+                    AS INT) AS phase
+        FROM r
+    """
 
 
 @register(
@@ -1086,7 +1032,7 @@ _C15_BUCKETS = 32
         "broadcast back. Quality sits on the 1e-4 lattice, so the "
         "(quantized quality, doc_id) order and the phase arithmetic "
         "are integer-exact cross-engine.",
-    oracle=None,  # attached below from the t2 oracle
+    oracle=_c15_oracle(),
 )
 def c15_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.functions.prefix import (
@@ -1127,34 +1073,41 @@ def c15_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _c15_oracle() -> str:
-    t2 = QUERY_REGISTRY["t2_quality_score"].oracle
-    return f"""
-        WITH t2 AS ({t2}),
-        r AS (
-            SELECT doc_id, quality_score,
-                   ROW_NUMBER() OVER (
-                       ORDER BY floor(quality_score * 10000 + 0.5),
-                                doc_id) AS q_rank,
-                   COUNT(*) OVER () AS n
-            FROM t2
-        )
-        SELECT doc_id, quality_score,
-               CAST(q_rank AS BIGINT) AS q_rank,
-               CAST(floor(CAST((q_rank - 1) * {_C15_PHASES} AS DOUBLE) / n)
-                    AS INT) AS phase
-        FROM r
-    """
-
-
-import dataclasses as _dc15c
-
-QUERY_REGISTRY["c15_curriculum_phases"] = _dc15c.replace(
-    QUERY_REGISTRY["c15_curriculum_phases"], oracle=_c15_oracle()
-)
-
-
 # --- c16: dedup-adjusted mixture shares ------------------------------------
+
+
+def _c16_oracle() -> str:
+    d6 = QUERY_REGISTRY["d6_dedup_clusters"].oracle
+    return f"""
+        WITH d6 AS ({d6}),
+        docs AS (
+            SELECT doc_id, source,
+                   CAST(len({tokenize_sql("text")}) AS BIGINT) AS toks
+            FROM documents
+        ),
+        agg AS (
+            SELECT d.source,
+                   CAST(COUNT(*) AS BIGINT) AS raw_docs,
+                   CAST(SUM(d.toks) AS BIGINT) AS raw_tokens,
+                   CAST(SUM(c.is_canonical) AS BIGINT) AS dedup_docs,
+                   CAST(SUM(CASE WHEN c.is_canonical = 1 THEN d.toks
+                            ELSE 0 END) AS BIGINT) AS dedup_tokens
+            FROM docs d JOIN d6 c ON d.doc_id = c.doc_id
+            GROUP BY d.source
+        ),
+        tot AS (
+            SELECT CAST(SUM(raw_tokens) AS BIGINT) AS tr,
+                   CAST(SUM(dedup_tokens) AS BIGINT) AS td
+            FROM agg
+        )
+        SELECT a.source, a.raw_docs, a.raw_tokens, a.dedup_docs,
+               a.dedup_tokens,
+               CAST(floor(CAST(a.raw_tokens AS DOUBLE) / t.tr * 10000
+                          + 0.5) / 10000 AS DOUBLE) AS raw_share,
+               CAST(floor(CAST(a.dedup_tokens AS DOUBLE) / t.td * 10000
+                          + 0.5) / 10000 AS DOUBLE) AS dedup_share
+        FROM agg a CROSS JOIN tot t
+    """
 
 
 @register(
@@ -1173,7 +1126,7 @@ QUERY_REGISTRY["c15_curriculum_phases"] = _dc15c.replace(
         "AQE-broadcastable when the cluster table is small) and a "
         "#sources-row aggregate; token counts are map-side "
         "size(tokenize(text)).",
-    oracle=None,  # attached below (d6 + tokenizer composition)
+    oracle=_c16_oracle(),
 )
 def c16_dedup_adjusted_mixture(
     spark: SparkSession, sf_dir: str
@@ -1218,49 +1171,6 @@ def c16_dedup_adjusted_mixture(
         share("raw_tokens", "tr").alias("raw_share"),
         share("dedup_tokens", "td").alias("dedup_share"),
     )
-
-
-def _c16_oracle() -> str:
-    from real_time_data_warehouse_spark.functions.text import tokenize_sql
-
-    d6 = QUERY_REGISTRY["d6_dedup_clusters"].oracle
-    return f"""
-        WITH d6 AS ({d6}),
-        docs AS (
-            SELECT doc_id, source,
-                   CAST(len({tokenize_sql("text")}) AS BIGINT) AS toks
-            FROM documents
-        ),
-        agg AS (
-            SELECT d.source,
-                   CAST(COUNT(*) AS BIGINT) AS raw_docs,
-                   CAST(SUM(d.toks) AS BIGINT) AS raw_tokens,
-                   CAST(SUM(c.is_canonical) AS BIGINT) AS dedup_docs,
-                   CAST(SUM(CASE WHEN c.is_canonical = 1 THEN d.toks
-                            ELSE 0 END) AS BIGINT) AS dedup_tokens
-            FROM docs d JOIN d6 c ON d.doc_id = c.doc_id
-            GROUP BY d.source
-        ),
-        tot AS (
-            SELECT CAST(SUM(raw_tokens) AS BIGINT) AS tr,
-                   CAST(SUM(dedup_tokens) AS BIGINT) AS td
-            FROM agg
-        )
-        SELECT a.source, a.raw_docs, a.raw_tokens, a.dedup_docs,
-               a.dedup_tokens,
-               CAST(floor(CAST(a.raw_tokens AS DOUBLE) / t.tr * 10000
-                          + 0.5) / 10000 AS DOUBLE) AS raw_share,
-               CAST(floor(CAST(a.dedup_tokens AS DOUBLE) / t.td * 10000
-                          + 0.5) / 10000 AS DOUBLE) AS dedup_share
-        FROM agg a CROSS JOIN tot t
-    """
-
-
-import dataclasses as _dc16  # noqa: E402
-
-QUERY_REGISTRY["c16_dedup_adjusted_mixture"] = _dc16.replace(
-    QUERY_REGISTRY["c16_dedup_adjusted_mixture"], oracle=_c16_oracle()
-)
 
 
 # --- c18: k-anonymity audit over quasi-identifiers ------------------------

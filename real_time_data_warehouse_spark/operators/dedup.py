@@ -34,7 +34,7 @@ from real_time_data_warehouse_spark.functions.text import (
     tokenize,
     tokenize_sql,
 )
-from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 from real_time_data_warehouse_spark.tables import Tables
 
 
@@ -703,6 +703,29 @@ def _d6_cache_evict(key: tuple[str, str]) -> None:
         pass
 
 
+def _d6_oracle() -> str:
+    d3 = QUERY_REGISTRY["d3_minhash_lsh_pairs"].oracle
+    return f"""
+        WITH RECURSIVE
+        pairs AS (SELECT doc_a, doc_b FROM ({d3}) d3p),
+        edges AS (
+            SELECT doc_a AS a, doc_b AS b FROM pairs
+            UNION ALL
+            SELECT doc_b AS a, doc_a AS b FROM pairs
+        ),
+        reach(node, label) AS (
+            SELECT doc_id, doc_id FROM documents
+            UNION
+            SELECT e.a, r.label FROM reach r JOIN edges e ON r.node = e.b
+        )
+        SELECT node AS doc_id,
+               MIN(label) AS cluster_id,
+               CAST(CASE WHEN MIN(label) = node THEN 1 ELSE 0 END AS INT)
+                   AS is_canonical
+        FROM reach GROUP BY node
+    """
+
+
 @register(
     "d6_dedup_clusters",
     survey="ext-dedup",
@@ -715,7 +738,7 @@ def _d6_cache_evict(key: tuple[str, str]) -> None:
         "edge-node table; non-convergence raises rather than returning "
         "partial labels. Oracle: "
         "DuckDB recursive CTE computing reachability-min labels.",
-    oracle=None,  # generated below from the d3 oracle
+    oracle=_d6_oracle(),
 )
 def d6_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The cluster table is a deterministic artifact consumed by several
@@ -753,37 +776,26 @@ def d6_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _d6_oracle() -> str:
-    from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
-
+def _d7_oracle() -> str:
     d3 = QUERY_REGISTRY["d3_minhash_lsh_pairs"].oracle
     return f"""
-        WITH RECURSIVE
-        pairs AS (SELECT doc_a, doc_b FROM ({d3}) d3p),
-        edges AS (
-            SELECT doc_a AS a, doc_b AS b FROM pairs
-            UNION ALL
-            SELECT doc_b AS a, doc_a AS b FROM pairs
+        WITH exact AS (
+            SELECT doc_id,
+                   MIN(doc_id) OVER (PARTITION BY md5(lower(text))) AS first_id
+            FROM documents
         ),
-        reach(node, label) AS (
-            SELECT doc_id, doc_id FROM documents
-            UNION
-            SELECT e.a, r.label FROM reach r JOIN edges e ON r.node = e.b
+        near_first AS (
+            SELECT doc_b AS doc_id, MIN(doc_a) AS near_of
+            FROM ({d3}) p GROUP BY doc_b
         )
-        SELECT node AS doc_id,
-               MIN(label) AS cluster_id,
-               CAST(CASE WHEN MIN(label) = node THEN 1 ELSE 0 END AS INT)
-                   AS is_canonical
-        FROM reach GROUP BY node
+        SELECT e.doc_id,
+               CASE WHEN e.first_id < e.doc_id THEN 'exact_dup'
+                    WHEN nf.near_of IS NOT NULL THEN 'near_dup'
+                    ELSE 'unique' END AS status,
+               CAST(CASE WHEN e.first_id < e.doc_id THEN e.first_id
+                         ELSE nf.near_of END AS BIGINT) AS dup_of
+        FROM exact e LEFT JOIN near_first nf ON e.doc_id = nf.doc_id
     """
-
-
-import dataclasses as _dc
-from real_time_data_warehouse_spark.registry import QUERY_REGISTRY as _QR2
-
-_QR2["d6_dedup_clusters"] = _dc.replace(
-    _QR2["d6_dedup_clusters"], oracle=_d6_oracle()
-)
 
 
 @register(
@@ -797,7 +809,7 @@ _QR2["d6_dedup_clusters"] = _dc.replace(
         "All docs participate as comparison targets whether or not they "
         "were themselves duplicates (dup-of-a-dup is still a dup), which "
         "is what makes the sequential gate ≡ this one-pass form.",
-    oracle=None,  # generated below from the d3 oracle
+    oracle=_d7_oracle(),
 )
 def d7_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
@@ -829,31 +841,6 @@ def dedup_gate_batch(docs: DataFrame, near_pairs: DataFrame | None = None) -> Da
         .cast("bigint")
         .alias("dup_of"),
     )
-
-
-def _d7_oracle() -> str:
-    d3 = _QR2["d3_minhash_lsh_pairs"].oracle
-    return f"""
-        WITH exact AS (
-            SELECT doc_id,
-                   MIN(doc_id) OVER (PARTITION BY md5(lower(text))) AS first_id
-            FROM documents
-        ),
-        near_first AS (
-            SELECT doc_b AS doc_id, MIN(doc_a) AS near_of
-            FROM ({d3}) p GROUP BY doc_b
-        )
-        SELECT e.doc_id,
-               CASE WHEN e.first_id < e.doc_id THEN 'exact_dup'
-                    WHEN nf.near_of IS NOT NULL THEN 'near_dup'
-                    ELSE 'unique' END AS status,
-               CAST(CASE WHEN e.first_id < e.doc_id THEN e.first_id
-                         ELSE nf.near_of END AS BIGINT) AS dup_of
-        FROM exact e LEFT JOIN near_first nf ON e.doc_id = nf.doc_id
-    """
-
-
-_QR2["d7_dedup_gate"] = _dc.replace(_QR2["d7_dedup_gate"], oracle=_d7_oracle())
 
 
 # --- Benchmark decontamination (d8) ----------------------------------------
@@ -1009,10 +996,18 @@ def d12_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "duplicate groups, the one-line summary a dedup run is judged "
         "by (and the input to 'keep one per cluster' savings estimates). "
         "Two tiny aggregations on top of the d6 result; integers only.",
-    oracle=None,  # composed below from the d6 oracle
+    oracle=f"""
+        WITH d6 AS ({QUERY_REGISTRY["d6_dedup_clusters"].oracle}),
+        sizes AS (
+            SELECT cluster_id, COUNT(*) AS sz FROM d6 GROUP BY cluster_id
+        )
+        SELECT CAST(sz AS BIGINT) AS cluster_size,
+               CAST(COUNT(*) AS BIGINT) AS n_clusters
+        FROM sizes GROUP BY sz
+    """,
 )
 def d6b_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clusters = _QR2["d6_dedup_clusters"].fn(spark, sf_dir)
+    clusters = d6_dedup_clusters(spark, sf_dir)
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("sz"))
     return (
         sizes.groupBy("sz")
@@ -1022,22 +1017,6 @@ def d6b_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_clusters").cast("bigint").alias("n_clusters"),
         )
     )
-
-
-import dataclasses as _dc6b  # noqa: E402
-
-_QR2["d6b_cluster_histogram"] = _dc6b.replace(
-    _QR2["d6b_cluster_histogram"],
-    oracle=f"""
-        WITH d6 AS ({_QR2["d6_dedup_clusters"].oracle}),
-        sizes AS (
-            SELECT cluster_id, COUNT(*) AS sz FROM d6 GROUP BY cluster_id
-        )
-        SELECT CAST(sz AS BIGINT) AS cluster_size,
-               CAST(COUNT(*) AS BIGINT) AS n_clusters
-        FROM sizes GROUP BY sz
-    """,
-)
 
 
 # --- d13: source-overlap matrix ------------------------------------------
@@ -1166,7 +1145,7 @@ def d13_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the verify join — all linear; what it buys is a candidate "
         "space bounded by RARE-shingle collisions instead of hot-"
         "shingle f².",
-    oracle=None,  # replaced below: shares d2's oracle verbatim
+    oracle=QUERY_REGISTRY["d2_ngram_jaccard_pairs"].oracle,
 )
 def d2c_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
@@ -1322,14 +1301,6 @@ def prefix_jaccard_pairs(docs: DataFrame) -> DataFrame:
     return verified.where(jac >= 0.6).select(
         "doc_a", "doc_b", F.round(jac, 4).cast("double").alias("jaccard")
     )
-
-
-import dataclasses as _dc2c  # noqa: E402
-
-_QR2["d2c_prefix_jaccard"] = _dc2c.replace(
-    _QR2["d2c_prefix_jaccard"],
-    oracle=_QR2["d2_ngram_jaccard_pairs"].oracle,
-)
 
 
 # --- d15: exact substring duplication spans -------------------------------

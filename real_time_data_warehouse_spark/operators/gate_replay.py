@@ -652,12 +652,9 @@ def z3s_compaction_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s15s_ivf_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.operators.similarity import (
-        _IVF_PROBES,
-        _N_QUERIES,
         _as_double,
-        _sq8_code_col,
-        _topcells_udf,
         _trained_centroids,
+        ivf_sq8_probes,
     )
     from real_time_data_warehouse_spark.streaming import ivf_index
 
@@ -666,20 +663,9 @@ def s15s_ivf_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _as_double("embedding").alias("v")
     )
     cents = _trained_centroids(sf_dir, emb_full)  # frozen artifact
-    topcells = _topcells_udf(cents, _IVF_PROBES)
-    # probe cells and query codes are both per-row functions of v, so
-    # they fuse into ONE projection over the ~_N_QUERIES query rows —
-    # the previous form SQ8-encoded the ENTIRE corpus and equi-joined
-    # it back just to pick up the handful of query codes (guide §2.3:
-    # project/filter before the exchange). _sq8_code_col replays the
-    # exact _sq8_codes(_normalized(...)) IEEE sequence. probes feeds
-    # only the finalize searcher (fixture tables, not scratch dirs), so
-    # it needs no checkpoint of its own.
-    probes = emb_full.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(topcells(F.col("v"))).alias("cell"),
-        _sq8_code_col(F.col("v")).alias("qcode"),
-    )
+    # probes feeds only the finalize searcher (fixture tables, not
+    # scratch dirs), so it needs no checkpoint of its own
+    probes = ivf_sq8_probes(emb_full, cents)
     rows = t.embeddings.select("vec_id", "embedding")
     return _replay_batches(
         spark,

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.functions.text import tokenize, tokenize_sql
-from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 from real_time_data_warehouse_spark.tables import Tables
 
 # Fixed query — literals shared by the Spark plan and the oracle.
@@ -254,13 +254,31 @@ _QUERY_VEC_ID = 0  # fixed query-intent vector for the s7 rerank stage
         "trivially bounded. Ranking orders by the unrounded sim with a "
         "doc_id tie-break (the s1 discipline); sim surfaces rounded to "
         "6 places.",
-    oracle=None,  # attached below: composes the s6 oracle as a CTE
+    oracle=f"""
+        WITH s6 AS ({QUERY_REGISTRY["s6_bm25_topk"].oracle}),
+        e AS (SELECT vec_id,
+                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+              FROM embeddings),
+        q AS (SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}),
+        scored AS (
+            SELECT s6.doc_id, s6.bm25,
+                   list_inner_product(q.qv, e.v) /
+                       (sqrt(list_inner_product(q.qv, q.qv)) *
+                        sqrt(list_inner_product(e.v, e.v))) AS sim
+            FROM s6 JOIN e ON e.vec_id = s6.doc_id CROSS JOIN q
+        )
+        SELECT doc_id, bm25, CAST(rnk AS INT) AS rnk,
+               CAST(ROUND(sim, 6) AS DOUBLE) AS sim
+        FROM (
+            SELECT *, ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS rnk
+            FROM scored
+        ) WHERE rnk <= {_RERANK_K}
+    """,
 )
 def s7_hybrid_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from real_time_data_warehouse_spark.operators.similarity import cosine
-    from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
 
     shortlist = QUERY_REGISTRY["s6_bm25_topk"].fn(spark, sf_dir).select(
         "doc_id", "bm25"
@@ -423,35 +441,6 @@ def t8_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("pmi").desc(), "w1", "w2")
         .limit(_PMI_TOPK)
     )
-
-
-import dataclasses as _dcr  # noqa: E402
-
-from real_time_data_warehouse_spark.registry import QUERY_REGISTRY as _QRR  # noqa: E402
-
-_QRR["s7_hybrid_rerank"] = _dcr.replace(
-    _QRR["s7_hybrid_rerank"],
-    oracle=f"""
-        WITH s6 AS ({_QRR["s6_bm25_topk"].oracle}),
-        e AS (SELECT vec_id,
-                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-              FROM embeddings),
-        q AS (SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}),
-        scored AS (
-            SELECT s6.doc_id, s6.bm25,
-                   list_inner_product(q.qv, e.v) /
-                       (sqrt(list_inner_product(q.qv, q.qv)) *
-                        sqrt(list_inner_product(e.v, e.v))) AS sim
-            FROM s6 JOIN e ON e.vec_id = s6.doc_id CROSS JOIN q
-        )
-        SELECT doc_id, bm25, CAST(rnk AS INT) AS rnk,
-               CAST(ROUND(sim, 6) AS DOUBLE) AS sim
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS rnk
-            FROM scored
-        ) WHERE rnk <= {_RERANK_K}
-    """,
-)
 
 
 # --- s8: MMR diversified re-rank -----------------------------------------
@@ -895,13 +884,54 @@ _RRF_OUT = 10
         "expression — engine-exact without quantization. Cost: both "
         "lists are top-K TakeOrdered pulls; the fusion joins two "
         f"{_RRF_LIST}-row frames.",
-    oracle=None,  # attached below: composes the s6 oracle
+    oracle=f"""
+        WITH s6 AS ({QUERY_REGISTRY["s6_bm25_topk"].oracle}),
+        lex AS (
+            SELECT doc_id,
+                   CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id)
+                        AS INT) AS r_lex
+            FROM s6
+        ),
+        e AS (SELECT vec_id,
+                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+              FROM embeddings),
+        q AS (SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}),
+        den AS (
+            SELECT doc_id, CAST(rn AS INT) AS r_den FROM (
+                SELECT e.vec_id AS doc_id,
+                       ROW_NUMBER() OVER (
+                           ORDER BY list_inner_product(q.qv, e.v) /
+                               (sqrt(list_inner_product(q.qv, q.qv)) *
+                                sqrt(list_inner_product(e.v, e.v))) DESC,
+                           e.vec_id) AS rn
+                FROM e CROSS JOIN q
+                WHERE e.vec_id <> {_QUERY_VEC_ID})
+            WHERE rn <= {_RRF_LIST}
+        ),
+        fused AS (
+            SELECT COALESCE(lex.doc_id, den.doc_id) AS doc_id,
+                   lex.r_lex, den.r_den,
+                   COALESCE(CAST(1 AS DOUBLE) / ({_RRF_K} + lex.r_lex), 0.0)
+                   + COALESCE(CAST(1 AS DOUBLE) / ({_RRF_K} + den.r_den),
+                              0.0) AS rrf_raw
+            FROM lex FULL OUTER JOIN den ON lex.doc_id = den.doc_id
+        )
+        SELECT doc_id, CAST(rnk AS INT) AS rnk,
+               CAST(floor(rrf_raw * 1000000 + 0.5) / 1000000 AS DOUBLE)
+                   AS rrf,
+               CAST(r_lex AS INT) AS r_lex,
+               CAST(r_den AS INT) AS r_den
+        FROM (
+            SELECT *, ROW_NUMBER() OVER (ORDER BY rrf_raw DESC, doc_id)
+                       AS rnk
+            FROM fused
+        ) WHERE rnk <= {_RRF_OUT}
+    """,
 )
 def s13_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from real_time_data_warehouse_spark.operators.similarity import cosine
-    from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
 
     from real_time_data_warehouse_spark.functions.windows import (
         bounded_part_col,
@@ -985,51 +1015,3 @@ def s13_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r_den").cast("int").alias("r_den"),
         )
     )
-
-
-_QRR["s13_rrf_fusion"] = _dcr.replace(
-    _QRR["s13_rrf_fusion"],
-    oracle=f"""
-        WITH s6 AS ({_QRR["s6_bm25_topk"].oracle}),
-        lex AS (
-            SELECT doc_id,
-                   CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id)
-                        AS INT) AS r_lex
-            FROM s6
-        ),
-        e AS (SELECT vec_id,
-                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-              FROM embeddings),
-        q AS (SELECT v AS qv FROM e WHERE vec_id = {_QUERY_VEC_ID}),
-        den AS (
-            SELECT doc_id, CAST(rn AS INT) AS r_den FROM (
-                SELECT e.vec_id AS doc_id,
-                       ROW_NUMBER() OVER (
-                           ORDER BY list_inner_product(q.qv, e.v) /
-                               (sqrt(list_inner_product(q.qv, q.qv)) *
-                                sqrt(list_inner_product(e.v, e.v))) DESC,
-                           e.vec_id) AS rn
-                FROM e CROSS JOIN q
-                WHERE e.vec_id <> {_QUERY_VEC_ID})
-            WHERE rn <= {_RRF_LIST}
-        ),
-        fused AS (
-            SELECT COALESCE(lex.doc_id, den.doc_id) AS doc_id,
-                   lex.r_lex, den.r_den,
-                   COALESCE(CAST(1 AS DOUBLE) / ({_RRF_K} + lex.r_lex), 0.0)
-                   + COALESCE(CAST(1 AS DOUBLE) / ({_RRF_K} + den.r_den),
-                              0.0) AS rrf_raw
-            FROM lex FULL OUTER JOIN den ON lex.doc_id = den.doc_id
-        )
-        SELECT doc_id, CAST(rnk AS INT) AS rnk,
-               CAST(floor(rrf_raw * 1000000 + 0.5) / 1000000 AS DOUBLE)
-                   AS rrf,
-               CAST(r_lex AS INT) AS r_lex,
-               CAST(r_den AS INT) AS r_den
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY rrf_raw DESC, doc_id)
-                       AS rnk
-            FROM fused
-        ) WHERE rnk <= {_RRF_OUT}
-    """,
-)

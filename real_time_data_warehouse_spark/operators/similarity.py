@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 from real_time_data_warehouse_spark.tables import Tables
 
 _N_QUERIES = 10
@@ -379,7 +379,7 @@ def _s2_oracle() -> str:
         "production ANN is s2b (banded OR-construction, recall 0.64) or "
         "s3 (trained IVF, recall 0.84). The oracle replicates the same "
         "bucketing, so results compare exactly.",
-    oracle=None,  # set below after definition to keep the literal close by
+    oracle=_s2_oracle(),
 )
 def s2_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -420,13 +420,6 @@ def s2_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("sim", 6).cast("double").alias("sim"),
         )
     )
-
-
-# attach the generated oracle (kept out of the decorator for readability)
-from real_time_data_warehouse_spark.registry import QUERY_REGISTRY as _QR  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_QR["s2_lsh_ann_topk"] = _dc.replace(_QR["s2_lsh_ann_topk"], oracle=_s2_oracle())
 
 
 def _s2b_oracle() -> str:
@@ -476,7 +469,7 @@ def _s2b_oracle() -> str:
         "small and bounded — the shuffle key is (band, bucket) — while "
         "recall recovers from the single-table cliff (see COVERAGE.md "
         "numbers and SCALE.md sizing math). Same output contract as s1/s2.",
-    oracle=None,  # attached below
+    oracle=_s2b_oracle(),
 )
 def s2b_lsh_multiband_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -538,11 +531,6 @@ def s2b_lsh_multiband_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QR["s2b_lsh_multiband_topk"] = _dc.replace(
-    _QR["s2b_lsh_multiband_topk"], oracle=_s2b_oracle()
-)
-
-
 def _d5_oracle() -> str:
     branches = _bands_branches_sql()
     return f"""
@@ -587,7 +575,7 @@ def _d5_oracle() -> str:
         "per-(band,bucket) work stays bounded as the corpus grows — the "
         "single-table 64-bucket variant this replaced concentrates "
         "quadratic work per bucket (SCALE.md sizing math).",
-    oracle=None,  # attached below (generated from the shared hyperplanes)
+    oracle=_d5_oracle(),
 )
 def d5_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.operators.frame_cache import (
@@ -642,11 +630,6 @@ def d5_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # d17b paying the full d5 rebuild (~200 s at 10x scale) per call
     # without this.
     return cached_frame(spark, sf_dir, "d5_pairs", build)
-
-
-_QR["d5_embedding_neardup"] = _dc.replace(
-    _QR["d5_embedding_neardup"], oracle=_d5_oracle()
-)
 
 
 # --- IVF (inverted-file) ANN -----------------------------------------------
@@ -874,7 +857,7 @@ def _trained_centroids(
         "are broadcast nested loops over 16 rows (map-side); search "
         "shuffles only on the cell key — the IVF counterpart of the s2 "
         "hyperplane path.",
-    oracle=None,  # attached below
+    oracle=_ivf_oracle(),
 )
 def s3_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -919,9 +902,6 @@ def s3_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("sim", 6).cast("double").alias("sim"),
         )
     )
-
-
-_QR["s3_ivf_ann_topk"] = _dc.replace(_QR["s3_ivf_ann_topk"], oracle=_ivf_oracle())
 
 
 def _s4_oracle() -> str:
@@ -978,7 +958,7 @@ def _s4_oracle() -> str:
         "shuffles are the two per-cell aggregations. Cosines are exact "
         "integer-quantized values summed through DECIMAL(18,6), so the "
         "mean is partition-order-independent cross-engine.",
-    oracle=None,  # attached below (replays the training chain)
+    oracle=_s4_oracle(),
 )
 def s4_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1027,11 +1007,8 @@ def s4_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QR["s4_cluster_stats"] = _dc.replace(_QR["s4_cluster_stats"], oracle=_s4_oracle())
-
-
 def _d9_oracle() -> str:
-    d5 = _QR["d5_embedding_neardup"].oracle
+    d5 = QUERY_REGISTRY["d5_embedding_neardup"].oracle
     return f"""
         WITH p AS ({d5}),
         near_first AS (
@@ -1058,7 +1035,7 @@ def _d9_oracle() -> str:
         "redundant data is refused admission. Same sequential≡one-pass "
         "equivalence as the d7 text gate, pinned by "
         "tests/test_embedding_gate.py.",
-    oracle=None,  # attached below from the d5 oracle
+    oracle=_d9_oracle(),
 )
 def d9_semantic_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
@@ -1074,11 +1051,6 @@ def d9_semantic_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("status"),
         F.col("dup_of").cast("bigint").alias("dup_of"),
     )
-
-
-_QR["d9_semantic_gate"] = _dc.replace(
-    _QR["d9_semantic_gate"], oracle=_d9_oracle()
-)
 
 
 # --- PQ (product quantization) ANN ------------------------------------------
@@ -1334,7 +1306,7 @@ def _pq_oracle() -> str:
         f"{_EMB_DIM * 4 // (_PQ_M)}x smaller than float32 vectors, so "
         "stage 1 runs entirely against codes; only |Q| x "
         f"{_PQ_SHORTLIST} rows ever read the float tier.",
-    oracle=None,  # attached below
+    oracle=_pq_oracle(),
 )
 def s5_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1428,9 +1400,6 @@ def s5_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QR["s5_pq_adc_topk"] = _dc.replace(_QR["s5_pq_adc_topk"], oracle=_pq_oracle())
-
-
 # --- d17: SemDeDup — cluster-scoped semantic keep/drop ----------------------
 
 
@@ -1500,7 +1469,7 @@ def _assigned_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "one cell's vectors. Cosines are the exact integer-quantized "
         "values (s3's discipline) so the threshold comparison is "
         "bit-identical cross-engine.",
-    oracle=None,  # attached below (replays the training chain)
+    oracle=_d17_oracle(),
 )
 def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     asgn = _assigned_cells(spark, sf_dir)
@@ -1535,11 +1504,6 @@ def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QR["d17_semantic_dedup"] = _dc.replace(
-    _QR["d17_semantic_dedup"], oracle=_d17_oracle()
-)
-
-
 # --- d17b: SemDeDup cell-recall audit --------------------------------------
 
 
@@ -1549,7 +1513,7 @@ _AUDIT_PROBES = 2  # probe tier measured alongside top-1 (d17c's k)
 def _d17b_oracle() -> str:
     csim = _IVF_CSIM_SQL
     ctes, trained = _ivf_training_ctes()
-    d5 = _QR["d5_embedding_neardup"].oracle
+    d5 = QUERY_REGISTRY["d5_embedding_neardup"].oracle
     k = _AUDIT_PROBES
     return f"""
         WITH {ctes},
@@ -1611,12 +1575,12 @@ def _d17b_oracle() -> str:
         "arrays_overlap per pair — the probe-pair set (Σ squared "
         "probe-cell sizes, measured 53x on 10x data by the r9 sf1 "
         "probe) is never materialized.",
-    oracle=None,  # attached below (training chain + d5 oracle)
+    oracle=_d17b_oracle(),
 )
 def d17b_semdedup_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    pairs = _QR["d5_embedding_neardup"].fn(spark, sf_dir).select(
+    pairs = d5_embedding_neardup(spark, sf_dir).select(
         "vec_a", "vec_b"
     )
     asgn = _assigned_cells(spark, sf_dir).select("vec_id", "cell")
@@ -1683,11 +1647,6 @@ def d17b_semdedup_recall_audit(
     )
 
 
-_QR["d17b_semdedup_recall_audit"] = _dc.replace(
-    _QR["d17b_semdedup_recall_audit"], oracle=_d17b_oracle()
-)
-
-
 # --- d17c: multi-probe SemDeDup --------------------------------------------
 
 _SEMDEDUP_PROBES = 2  # candidate tier: pairs sharing ANY of the top-k cells
@@ -1749,7 +1708,7 @@ def _d17c_oracle() -> str:
         "d17's (same primary cell ⇒ top-k sets overlap; pytest-pinned). "
         "Probe explosion carries only (vec_id, cell) ids; vectors join "
         "back once per DISTINCT candidate pair (the d5 discipline).",
-    oracle=None,  # attached below (replays the training chain)
+    oracle=_d17c_oracle(),
 )
 def d17c_semantic_dedup_multiprobe(
     spark: SparkSession, sf_dir: str
@@ -1797,11 +1756,6 @@ def d17c_semantic_dedup_multiprobe(
         F.coalesce("n_dups", F.lit(0)).cast("bigint").alias("n_dups"),
         F.col("n_dups").isNull().cast("int").alias("kept"),
     )
-
-
-_QR["d17c_semantic_dedup_multiprobe"] = _dc.replace(
-    _QR["d17c_semantic_dedup_multiprobe"], oracle=_d17c_oracle()
-)
 
 
 # --- d20: semantic decontamination -----------------------------------------
@@ -1865,7 +1819,7 @@ def _d20_oracle() -> str:
         "train×eval; exact integer-quantized cosine verifies. At "
         "100 TB the eval shard is tiny and its probe table broadcasts; "
         "the train corpus streams through one cell-keyed join.",
-    oracle=None,  # attached below (training chain)
+    oracle=_d20_oracle(),
 )
 def d20_semantic_decontamination(
     spark: SparkSession, sf_dir: str
@@ -1912,11 +1866,6 @@ def d20_semantic_decontamination(
             F.round(pair_sim, 6).cast("double").alias("cos_sim"),
         )
     )
-
-
-_QR["d20_semantic_decontamination"] = _dc.replace(
-    _QR["d20_semantic_decontamination"], oracle=_d20_oracle()
-)
 
 
 # --- s14: int8 scalar-quantized (SQ8) ANN ----------------------------------
@@ -1974,6 +1923,37 @@ def int_dot(a: Column, b: Column) -> Column:
     )
 
 
+def _s14_oracle() -> str:
+    return f"""
+        WITH e AS (SELECT vec_id,
+                          list_transform(embedding, x -> CAST(x AS DOUBLE))
+                              AS v
+                   FROM embeddings),
+        codes AS (
+            SELECT vec_id,
+                   list_transform(v,
+                       x -> CAST(floor(x / sqrt(list_inner_product(v, v))
+                                       * {_SQ8_SCALE} + 0.5) AS BIGINT))
+                       AS qc
+            FROM e
+        ),
+        scored AS (
+            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+                   CAST(list_inner_product(q.qc, n.qc) AS BIGINT) AS score
+            FROM codes q JOIN codes n ON n.vec_id <> q.vec_id
+            WHERE q.vec_id < {_N_QUERIES}
+        )
+        SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk,
+               CAST(score AS BIGINT) AS score
+        FROM (
+            SELECT *, ROW_NUMBER() OVER (
+                PARTITION BY query_id
+                ORDER BY score DESC, neighbor_id) AS rnk
+            FROM scored
+        ) WHERE rnk <= {_TOP_K}
+    """
+
+
 @register(
     "s14_sq8_ann_topk",
     survey="ext-similarity",
@@ -1986,7 +1966,7 @@ def int_dot(a: Column, b: Column) -> Column:
         "columns. Map-side quantization, broadcast query side, "
         "per-partition TopN before the final TakeOrdered (the s1 "
         "shape over 1/4 the bytes).",
-    oracle=None,  # attached below
+    oracle=_s14_oracle(),
 )
 def s14_sq8_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -2025,90 +2005,54 @@ def s14_sq8_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _s14_oracle() -> str:
-    return f"""
-        WITH e AS (SELECT vec_id,
-                          list_transform(embedding, x -> CAST(x AS DOUBLE))
-                              AS v
-                   FROM embeddings),
-        codes AS (
-            SELECT vec_id,
-                   list_transform(v,
-                       x -> CAST(floor(x / sqrt(list_inner_product(v, v))
-                                       * {_SQ8_SCALE} + 0.5) AS BIGINT))
-                       AS qc
-            FROM e
-        ),
-        scored AS (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   CAST(list_inner_product(q.qc, n.qc) AS BIGINT) AS score
-            FROM codes q JOIN codes n ON n.vec_id <> q.vec_id
-            WHERE q.vec_id < {_N_QUERIES}
-        )
-        SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk,
-               CAST(score AS BIGINT) AS score
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY query_id
-                ORDER BY score DESC, neighbor_id) AS rnk
-            FROM scored
-        ) WHERE rnk <= {_TOP_K}
-    """
-
-
-_QR["s14_sq8_ann_topk"] = _dc.replace(
-    _QR["s14_sq8_ann_topk"], oracle=_s14_oracle()
-)
-
-
 # --- s15: two-stage IVF + SQ8 search ---------------------------------------
+# The three pieces below are the one IVF-SQ8 search: s15 builds its
+# inverted list in one pass, streaming/ivf_index appends it per
+# micro-batch and serves the same search from it (s15s).
 
 
-@register(
-    "s15_ivf_sq8_topk",
-    survey="ext-similarity",
-    doc=f"Two-stage ANN — the architecture SCALE.md names for 100 TB: "
-        f"the trained {_IVF_CELLS}-cell IVF quantizer PRUNES (each "
-        f"query probes its top-{_IVF_PROBES} cells; the corpus is "
-        "sharded by top-1 cell) and the uniform-symmetric SQ8 codes "
-        "SCORE (all-integer code dot, s14's ADC, 1/4 the scan bytes). "
-        "Pair space is sum over probed cells of |cell| — never "
-        "corpus x queries — and the per-cell scan touches int8 codes, "
-        "not doubles: FAISS IVF+SQ re-expressed as a broadcast of "
-        "~20 (query, cell, code) probe rows against a cell-keyed "
-        "equi-join on the inverted list. Integer scores keep the "
-        "rank contract engine-exact; cell assignment and probe ties "
-        "replay s3's quantized-cosine discipline (d17c-validated).",
-    oracle=None,  # attached below (training chain + codes composition)
-)
-def s15_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    cents = _trained_centroids(sf_dir, emb)
-    # inverted list: every corpus vector under its top-1 trained cell,
-    # carrying only its int8 code. Cell assignment and SQ8 encoding are
-    # both per-row functions of v, so they FUSE into one projection —
-    # the previous form derived them as two frames and equi-joined them
-    # back on vec_id (a full-corpus shuffle for a column that never
-    # left the row; guide §2.4). _sq8_code_col runs the identical IEEE
-    # sequence as _sq8_codes(_normalized(...)), so codes are unchanged.
+def ivf_sq8_list_rows(
+    emb: DataFrame, cents: list[tuple[int, list[float]]]
+) -> DataFrame:
+    """(vec_id, v) → inverted-list rows (vec_id, cell, ncode): every
+    vector under its top-1 trained cell, carrying only its int8 code.
+    Cell assignment and SQ8 encoding are both per-row functions of v,
+    so they fuse into one projection: no shuffle. _sq8_code_col runs
+    the identical IEEE sequence as _sq8_codes(_normalized(...))."""
     best = _topcells_udf(cents, 1)
-    inv = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
+    return emb.select(
+        "vec_id",
         best(F.col("v"))[0].alias("cell"),
         _sq8_code_col(F.col("v")).alias("ncode"),
     )
+
+
+def ivf_sq8_probes(
+    emb: DataFrame, cents: list[tuple[int, list[float]]]
+) -> DataFrame:
+    """(vec_id, v) → query probes (query_id, cell, qcode): each of the
+    _N_QUERIES query vectors once per probed cell (its top-_IVF_PROBES
+    trained cells), with its int8 code — one projection over the query
+    rows only (guide §2.3: project/filter before the exchange)."""
     topcells = _topcells_udf(cents, _IVF_PROBES)
-    probes = emb.where(F.col("vec_id") < _N_QUERIES).select(
+    return emb.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.explode(topcells(F.col("v"))).alias("cell"),
         _sq8_code_col(F.col("v")).alias("qcode"),
     )
+
+
+def ivf_sq8_search(probes: DataFrame, rows: DataFrame) -> DataFrame:
+    """The s15 top-_TOP_K over inverted-list *rows* (vec_id, cell,
+    ncode): a broadcast of the probe rows joined cell-keyed onto the
+    list (each vector has ONE cell → no duplicate pairs), scored by the
+    all-integer code dot, ranked by score then neighbor_id."""
+    from pyspark.sql.window import Window
+
+    inv = rows.select(F.col("vec_id").alias("neighbor_id"), "cell", "ncode")
     scored = (
         F.broadcast(probes)
-        .join(inv, "cell")  # each neighbor has ONE cell → no dup pairs
+        .join(inv, "cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -2174,9 +2118,30 @@ def _s15_oracle() -> str:
     """
 
 
-_QR["s15_ivf_sq8_topk"] = _dc.replace(
-    _QR["s15_ivf_sq8_topk"], oracle=_s15_oracle()
+@register(
+    "s15_ivf_sq8_topk",
+    survey="ext-similarity",
+    doc=f"Two-stage ANN — the architecture SCALE.md names for 100 TB: "
+        f"the trained {_IVF_CELLS}-cell IVF quantizer PRUNES (each "
+        f"query probes its top-{_IVF_PROBES} cells; the corpus is "
+        "sharded by top-1 cell) and the uniform-symmetric SQ8 codes "
+        "SCORE (all-integer code dot, s14's ADC, 1/4 the scan bytes). "
+        "Pair space is sum over probed cells of |cell| — never "
+        "corpus x queries — and the per-cell scan touches int8 codes, "
+        "not doubles: FAISS IVF+SQ re-expressed as a broadcast of "
+        "~20 (query, cell, code) probe rows against a cell-keyed "
+        "equi-join on the inverted list. Integer scores keep the "
+        "rank contract engine-exact; cell assignment and probe ties "
+        "replay s3's quantized-cosine discipline (d17c-validated).",
+    oracle=_s15_oracle(),
 )
+def s15_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = Tables(spark, sf_dir)
+    emb = t.embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    cents = _trained_centroids(sf_dir, emb)
+    return ivf_sq8_search(
+        ivf_sq8_probes(emb, cents), ivf_sq8_list_rows(emb, cents)
+    )
 
 
 # --- s10b: kNN label-noise vote over the IVF-SQ8 shortlist -----------------
@@ -2409,51 +2374,6 @@ def sq8_topk_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s10b_knn_noise_ivf",
-    survey="ext-similarity,ext-curation",
-    doc="kNN label-noise audit over the IVF-SQ8 shortlist — s10's "
-        "majority-vote semantics with candidates from the s15 two-stage "
-        "index instead of the exact driver-collected anchor matmul: "
-        "anchors (the same deterministic 1/10 sample) probe their top-2 "
-        "trained IVF cells, candidates come from the cell-keyed "
-        "inverted list (one cell per neighbor, so no duplicate pairs), "
-        "and ranking uses the all-integer SQ8 code dot. Every stage is "
-        "a shuffle-shaped join or window — NO driver collect of any "
-        "corpus fraction, which is what lets the anchor set grow with "
-        "the corpus at 100 TB. Integer scores and lexicographic ties "
-        "keep the vote engine-exact; s10c gates the shortlist's recall "
-        "against the same-metric exact scan (on this isotropic "
-        "fixture recall tracks the probed fraction — real clustered "
-        "corpora recover the usual 0.8+; the gate floor is 2x the "
-        "broken-index chance level).",
-    oracle=None,  # attached below (replays the IVF training chain)
-)
-def s10b_knn_noise_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    knn = s10b_shortlist_knn(spark, sf_dir)
-    votes = knn.groupBy("qid", "qlabel", "nlabel").agg(
-        F.count("*").alias("cnt")
-    )
-    wv = Window.partitionBy("qid").orderBy(
-        F.col("cnt").desc(), F.col("nlabel")
-    )
-    return (
-        votes.withColumn("rn", F.row_number().over(wv))
-        .where(F.col("rn") == 1)
-        .select(
-            F.col("qid").alias("vec_id"),
-            F.col("qlabel").cast("int").alias("label"),
-            F.col("nlabel").cast("int").alias("knn_label"),
-            F.when(F.col("nlabel") == F.col("qlabel"), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("agree"),
-        )
-    )
-
-
 def _s10b_oracle() -> str:
     from real_time_data_warehouse_spark.operators.retrieval import (
         _KNN_K,
@@ -2518,6 +2438,46 @@ def _s10b_oracle() -> str:
     """
 
 
-_QR["s10b_knn_noise_ivf"] = _dc.replace(
-    _QR["s10b_knn_noise_ivf"], oracle=_s10b_oracle()
+@register(
+    "s10b_knn_noise_ivf",
+    survey="ext-similarity,ext-curation",
+    doc="kNN label-noise audit over the IVF-SQ8 shortlist — s10's "
+        "majority-vote semantics with candidates from the s15 two-stage "
+        "index instead of the exact driver-collected anchor matmul: "
+        "anchors (the same deterministic 1/10 sample) probe their top-2 "
+        "trained IVF cells, candidates come from the cell-keyed "
+        "inverted list (one cell per neighbor, so no duplicate pairs), "
+        "and ranking uses the all-integer SQ8 code dot. Every stage is "
+        "a shuffle-shaped join or window — NO driver collect of any "
+        "corpus fraction, which is what lets the anchor set grow with "
+        "the corpus at 100 TB. Integer scores and lexicographic ties "
+        "keep the vote engine-exact; s10c gates the shortlist's recall "
+        "against the same-metric exact scan (on this isotropic "
+        "fixture recall tracks the probed fraction — real clustered "
+        "corpora recover the usual 0.8+; the gate floor is 2x the "
+        "broken-index chance level).",
+    oracle=_s10b_oracle(),
 )
+def s10b_knn_noise_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
+    knn = s10b_shortlist_knn(spark, sf_dir)
+    votes = knn.groupBy("qid", "qlabel", "nlabel").agg(
+        F.count("*").alias("cnt")
+    )
+    wv = Window.partitionBy("qid").orderBy(
+        F.col("cnt").desc(), F.col("nlabel")
+    )
+    return (
+        votes.withColumn("rn", F.row_number().over(wv))
+        .where(F.col("rn") == 1)
+        .select(
+            F.col("qid").alias("vec_id"),
+            F.col("qlabel").cast("int").alias("label"),
+            F.col("nlabel").cast("int").alias("knn_label"),
+            F.when(F.col("nlabel") == F.col("qlabel"), 1)
+            .otherwise(0)
+            .cast("int")
+            .alias("agree"),
+        )
+    )

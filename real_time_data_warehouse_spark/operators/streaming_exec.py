@@ -55,10 +55,17 @@ from real_time_data_warehouse_spark.functions.money import (
     oracle_dec_sum,
 )
 from real_time_data_warehouse_spark.functions.time import oracle_tumble
+# the stream rows register with their batch twins' oracles, so the
+# batch-form modules load first
+from real_time_data_warehouse_spark.operators import (  # noqa: F401
+    dedup,
+    similarity,
+    stateful,
+)
 from real_time_data_warehouse_spark.operators.sink_readback import (
     _artifact_dir,
 )
-from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 from real_time_data_warehouse_spark.streaming.joins import (
     interval_join_purchases,
     left_outer_stream_join,
@@ -474,8 +481,7 @@ def _st15_build(spark: SparkSession, sf_dir: str) -> str:
         "Exact because batches are ascending time ranges: each user's "
         "login-date sequence arrives in order, so the cross-batch state "
         "fold equals the batch window-function twin.",
-    # one source of truth: byte-identical to the st5 batch oracle
-    oracle=None,  # attached below from st5's registration
+    oracle=QUERY_REGISTRY["st5_returning_user"].oracle,
 )
 def st15_returning_user_stream_readback(
     spark: SparkSession, sf_dir: str
@@ -531,7 +537,7 @@ def _st16_build(spark: SparkSession, sf_dir: str) -> str:
         "oracle. Emission is exact: dedup emits each key's first "
         "arrival immediately, and ascending time-ranged batches mean "
         "no row is ever late against the 1-day-delayed watermark.",
-    oracle=None,  # attached via _attach_shared_oracles (st4's oracle)
+    oracle=QUERY_REGISTRY["st4_first_per_day_uv"].oracle,
 )
 def st16_daily_uv_stream_readback(
     spark: SparkSession, sf_dir: str
@@ -649,7 +655,7 @@ def _st17_build(spark: SparkSession, sf_dir: str) -> str:
         "repaired flag, not an aggregate. With st15 this closes the "
         "applyInPandasWithState family: both custom-keyed-state "
         "operators now have their actual runtime driver-verified.",
-    oracle=None,  # attached below: st3's oracle verbatim
+    oracle=QUERY_REGISTRY["st3_visitor_state_fix"].oracle,
 )
 def st17_visitor_fix_stream_readback(
     spark: SparkSession, sf_dir: str
@@ -1095,7 +1101,7 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
         "the failure (epoch replay overwrote the debris in both sinks, "
         "committed epochs did not re-emit, the partial store segment "
         "did not poison the retry's classification).",
-    oracle=None,  # attached below: the d7 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["d7_dedup_gate"].oracle,
 )
 def d7x_dedup_gate_stream_readback(
     spark: SparkSession, sf_dir: str
@@ -1172,7 +1178,7 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
         "batch under the production trigger/checkpoint path plus "
         "exactly-once across the failure, for the vector half of the "
         "ingestion-gate pair (d7x is the lexical half).",
-    oracle=None,  # attached below: the d9 batch-form oracle, verbatim
+    oracle=QUERY_REGISTRY["d9_semantic_gate"].oracle,
 )
 def d9x_semantic_gate_stream_readback(
     spark: SparkSession, sf_dir: str
@@ -1480,33 +1486,3 @@ def w13_sliding_window_stream_readback(
             "value_sum",
         )
     )
-
-
-def _attach_shared_oracles() -> None:
-    """The stream rows that reuse a batch row's oracle verbatim (same
-    output grain and aliases — the whole point is stream ≡ batch on the
-    same SQL). Query objects are frozen; rebuild with the shared text."""
-    from dataclasses import replace
-
-    # direct imports of this module must not depend on operators.load_all
-    # having run first — pull in the modules that own the shared oracles
-    from real_time_data_warehouse_spark.operators import (  # noqa: F401
-        dedup,
-        similarity,
-        stateful,
-    )
-    from real_time_data_warehouse_spark.registry import QUERY_REGISTRY
-
-    for row, donor in (
-        ("st15_returning_user_stream_readback", "st5_returning_user"),
-        ("st16_daily_uv_stream_readback", "st4_first_per_day_uv"),
-        ("st17_visitor_fix_stream_readback", "st3_visitor_state_fix"),
-        ("d7x_dedup_gate_stream_readback", "d7_dedup_gate"),
-        ("d9x_semantic_gate_stream_readback", "d9_semantic_gate"),
-    ):
-        QUERY_REGISTRY[row] = replace(
-            QUERY_REGISTRY[row], oracle=QUERY_REGISTRY[donor].oracle
-        )
-
-
-_attach_shared_oracles()

@@ -14,7 +14,7 @@ from real_time_data_warehouse_spark.functions.text import (
     tokenize,
     tokenize_sql,
 )
-from real_time_data_warehouse_spark.registry import register
+from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 from real_time_data_warehouse_spark.tables import Tables
 
 # Marker lexicon — the single source of truth for t1: both the Spark hits
@@ -379,7 +379,7 @@ def t5_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
                            list_transform(range(1, len(toks) - 1),
                                i -> array_to_string(toks[i:i+2], ' '))
                        ELSE [] END AS shs
-                FROM (SELECT doc_id, {{tokens}} AS toks FROM documents) b
+                FROM (SELECT doc_id, {tokenize_sql("text")} AS toks FROM documents) b
             ) s
         ) c
     """,
@@ -409,15 +409,6 @@ def t6_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.floor(ratio * 10000 + F.lit(0.5)) / 10000).cast("double"),
         ).alias("rep_ratio"),
     )
-
-
-from real_time_data_warehouse_spark.registry import QUERY_REGISTRY as _QRT  # noqa: E402
-import dataclasses as _dct  # noqa: E402
-
-_QRT["t6_repetition"] = _dct.replace(
-    _QRT["t6_repetition"],
-    oracle=_QRT["t6_repetition"].oracle.format(tokens=tokenize_sql("text")),
-)
 
 
 @register(
@@ -992,6 +983,26 @@ def t14_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- t15: language-ID confusion matrix ------------------------------------
 
 
+def _t15_oracle() -> str:
+    t1 = QUERY_REGISTRY["t1_lang_id"].oracle
+    return f"""
+        WITH t1 AS ({t1}),
+        cells AS (
+            SELECT labeled_lang, predicted_lang,
+                   CAST(COUNT(*) AS BIGINT) AS n_docs
+            FROM t1 GROUP BY labeled_lang, predicted_lang
+        ),
+        totals AS (
+            SELECT labeled_lang, CAST(COUNT(*) AS BIGINT) AS n_label
+            FROM t1 GROUP BY labeled_lang
+        )
+        SELECT c.labeled_lang, c.predicted_lang, c.n_docs,
+               CAST(floor(CAST(c.n_docs AS DOUBLE) / t.n_label * 10000
+                          + 0.5) / 10000 AS DOUBLE) AS row_share
+        FROM cells c JOIN totals t ON c.labeled_lang = t.labeled_lang
+    """
+
+
 @register(
     "t15_lang_confusion",
     survey="ext-text,ext-curation",
@@ -1004,10 +1015,10 @@ def t14_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expression verbatim (predictions cannot drift between the "
         "query and the audit); one (label, prediction) aggregation + a "
         "broadcast of the per-label totals.",
-    oracle=None,  # attached below from the t1 oracle
+    oracle=_t15_oracle(),
 )
 def t15_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    preds = _QRT["t1_lang_id"].fn(spark, sf_dir)
+    preds = t1_lang_id(spark, sf_dir)
     # the |langs|² cell table feeds BOTH the output and the row totals —
     # checkpoint it so the documents scan runs once (tiny frame, the
     # _assigned_cells discipline)
@@ -1030,33 +1041,6 @@ def t15_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t15_oracle() -> str:
-    t1 = _QRT["t1_lang_id"].oracle
-    return f"""
-        WITH t1 AS ({t1}),
-        cells AS (
-            SELECT labeled_lang, predicted_lang,
-                   CAST(COUNT(*) AS BIGINT) AS n_docs
-            FROM t1 GROUP BY labeled_lang, predicted_lang
-        ),
-        totals AS (
-            SELECT labeled_lang, CAST(COUNT(*) AS BIGINT) AS n_label
-            FROM t1 GROUP BY labeled_lang
-        )
-        SELECT c.labeled_lang, c.predicted_lang, c.n_docs,
-               CAST(floor(CAST(c.n_docs AS DOUBLE) / t.n_label * 10000
-                          + 0.5) / 10000 AS DOUBLE) AS row_share
-        FROM cells c JOIN totals t ON c.labeled_lang = t.labeled_lang
-    """
-
-
-import dataclasses as _dct15  # noqa: E402
-
-_QRT["t15_lang_confusion"] = _dct15.replace(
-    _QRT["t15_lang_confusion"], oracle=_t15_oracle()
-)
-
-
 # --- t16: bigram-LM perplexity quality filter -------------------------------
 # CCNet/RedPajama-style LM quality signal (Wenzek et al. 2020, public):
 # train an n-gram LM on the corpus itself and score every document by
@@ -1066,6 +1050,59 @@ _QRT["t15_lang_confusion"] = _dct15.replace(
 # first real conditional model.
 
 _T16_Q = 1_000_000  # ln-lattice quantum (micro-nats, t9's discipline)
+
+
+def _t16_oracle() -> str:
+    tok = tokenize_sql("text")
+    return f"""
+        WITH toked AS (SELECT doc_id, {tok} AS toks FROM documents),
+        grams AS (
+            SELECT doc_id, g.w1 AS w1, g.w2 AS w2
+            FROM (
+                SELECT doc_id,
+                       unnest(CASE WHEN len(toks) >= 2 THEN
+                           list_transform(range(1, len(toks)),
+                               i -> struct_pack(w1 := toks[i],
+                                                w2 := toks[i + 1]))
+                           ELSE [] END) AS g
+                FROM toked
+            )
+        ),
+        tf AS (
+            SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
+            FROM grams GROUP BY doc_id, w1, w2
+        ),
+        bg AS (
+            SELECT w1, w2, CAST(SUM(tf) AS BIGINT) AS cb
+            FROM tf GROUP BY w1, w2
+        ),
+        hist AS (
+            SELECT w1, CAST(SUM(cb) AS BIGINT) AS cu FROM bg GROUP BY w1
+        ),
+        vocab AS (
+            SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v
+            FROM (SELECT unnest(toks) AS w FROM toked)
+        ),
+        nll AS (
+            SELECT b.w1, b.w2,
+                   CAST(floor(ln(CAST(h.cu + vb.v AS DOUBLE)
+                                 / CAST(b.cb + 1 AS DOUBLE))
+                              * {_T16_Q} + 0.5) AS BIGINT) AS nll_micro
+            FROM bg b JOIN hist h ON b.w1 = h.w1 CROSS JOIN vocab vb
+        ),
+        scored AS (
+            SELECT tf.doc_id,
+                   CAST(SUM(tf.tf) AS BIGINT) AS n_bigrams,
+                   CAST(CAST(SUM(tf.tf * n.nll_micro) AS DOUBLE)
+                        / SUM(tf.tf) / {_T16_Q} AS DOUBLE) AS mean_nll
+            FROM tf JOIN nll n ON tf.w1 = n.w1 AND tf.w2 = n.w2
+            GROUP BY tf.doc_id
+        )
+        SELECT d.doc_id,
+               CAST(COALESCE(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+               CAST(s.mean_nll AS DOUBLE) AS mean_nll
+        FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
+    """
 
 
 @register(
@@ -1087,7 +1124,7 @@ _T16_Q = 1_000_000  # ln-lattice quantum (micro-nats, t9's discipline)
         "artifacts a deployment would persist once per snapshot. "
         "Docs with <2 tokens carry no bigram evidence and emit NULL "
         "score with n_bigrams=0 — unratable, not 'perfect'.",
-    oracle=None,  # attached below (token-expression composition)
+    oracle=_t16_oracle(),
 )
 def t16_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
@@ -1192,66 +1229,6 @@ def bigram_nll_frame(documents: DataFrame) -> DataFrame:
             F.col("mean_nll").cast("double").alias("mean_nll"),
         )
     )
-
-
-def _t16_oracle() -> str:
-    tok = tokenize_sql("text")
-    return f"""
-        WITH toked AS (SELECT doc_id, {tok} AS toks FROM documents),
-        grams AS (
-            SELECT doc_id, g.w1 AS w1, g.w2 AS w2
-            FROM (
-                SELECT doc_id,
-                       unnest(CASE WHEN len(toks) >= 2 THEN
-                           list_transform(range(1, len(toks)),
-                               i -> struct_pack(w1 := toks[i],
-                                                w2 := toks[i + 1]))
-                           ELSE [] END) AS g
-                FROM toked
-            )
-        ),
-        tf AS (
-            SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
-            FROM grams GROUP BY doc_id, w1, w2
-        ),
-        bg AS (
-            SELECT w1, w2, CAST(SUM(tf) AS BIGINT) AS cb
-            FROM tf GROUP BY w1, w2
-        ),
-        hist AS (
-            SELECT w1, CAST(SUM(cb) AS BIGINT) AS cu FROM bg GROUP BY w1
-        ),
-        vocab AS (
-            SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v
-            FROM (SELECT unnest(toks) AS w FROM toked)
-        ),
-        nll AS (
-            SELECT b.w1, b.w2,
-                   CAST(floor(ln(CAST(h.cu + vb.v AS DOUBLE)
-                                 / CAST(b.cb + 1 AS DOUBLE))
-                              * {_T16_Q} + 0.5) AS BIGINT) AS nll_micro
-            FROM bg b JOIN hist h ON b.w1 = h.w1 CROSS JOIN vocab vb
-        ),
-        scored AS (
-            SELECT tf.doc_id,
-                   CAST(SUM(tf.tf) AS BIGINT) AS n_bigrams,
-                   CAST(CAST(SUM(tf.tf * n.nll_micro) AS DOUBLE)
-                        / SUM(tf.tf) / {_T16_Q} AS DOUBLE) AS mean_nll
-            FROM tf JOIN nll n ON tf.w1 = n.w1 AND tf.w2 = n.w2
-            GROUP BY tf.doc_id
-        )
-        SELECT d.doc_id,
-               CAST(COALESCE(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-               CAST(s.mean_nll AS DOUBLE) AS mean_nll
-        FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
-    """
-
-
-import dataclasses as _dct16  # noqa: E402
-
-_QRT["t16_bigram_perplexity"] = _dct16.replace(
-    _QRT["t16_bigram_perplexity"], oracle=_t16_oracle()
-)
 
 
 # --- t18: per-source Jensen-Shannon drift vs the rest of the corpus --------

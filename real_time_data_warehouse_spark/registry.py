@@ -6,6 +6,13 @@ when SQL-expressible, an equivalent ANSI-SQL string for the DuckDB oracle.
 ``__spark_entry__.py::queries()/oracle_sql()`` and the pytest parity suite
 are both thin views over this registry.
 
+One rule for oracles: every row's FINAL oracle text goes in its own
+``@register(...)`` call, and ``register`` is the registry's only writer
+— nothing patches a row after it registers. A row whose oracle reuses
+or composes another row's (its donor) reads ``QUERY_REGISTRY[donor]
+.oracle`` inside the decorator, after a top-level import of the donor's
+module (tests/test_plan_lint.py fails any other write).
+
 Contract invariants enforced by design here and asserted in tests:
 - every computed column is aliased identically in the Spark plan and the
   oracle SQL (the driver sorts columns by name before hashing);

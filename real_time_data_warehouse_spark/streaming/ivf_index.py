@@ -25,7 +25,6 @@ the vector bytes (the s14/s15 argument).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.plans.audit import assert_no_cartesian
 from real_time_data_warehouse_spark.streaming.state_store import (
@@ -47,22 +46,11 @@ def make_ingest_applier(cents: list[tuple[int, list[float]]]):
     ) -> None:
         from real_time_data_warehouse_spark.operators.similarity import (
             _as_double,
-            _sq8_code_col,
-            _topcells_udf,
+            ivf_sq8_list_rows,
         )
 
-        # cell assignment and SQ8 encoding are both per-row functions of
-        # v — ONE projection, where the previous form built two derived
-        # frames and equi-joined them back on vec_id (a shuffle per
-        # micro-batch for nothing; guide §2.4). _sq8_code_col replays
-        # the exact _sq8_codes(_normalized(...)) IEEE sequence.
         emb = batch.select("vec_id", _as_double("embedding").alias("v"))
-        best = _topcells_udf(cents, 1)
-        rows = emb.select(
-            "vec_id",
-            best(F.col("v"))[0].alias("cell"),
-            _sq8_code_col(F.col("v")).alias("ncode"),
-        )
+        rows = ivf_sq8_list_rows(emb, cents)
         if batch_id == 0:
             assert_no_cartesian(rows, "ivf_index.apply_ingest_batch")
         write_snapshot(rows, out_dir, batch_id)
@@ -76,38 +64,10 @@ def make_searcher(probes: DataFrame):
     DataFrame`` serving the s15 search from the ingested list."""
 
     def search_index(spark: SparkSession, out_dir: str) -> DataFrame:
-        from pyspark.sql.window import Window
-
         from real_time_data_warehouse_spark.operators.similarity import (
-            _TOP_K,
-            int_dot,
+            ivf_sq8_search,
         )
 
-        inv = read_log(spark, out_dir).select(
-            F.col("vec_id").alias("neighbor_id"), "cell", "ncode"
-        )
-        scored = (
-            F.broadcast(probes)
-            .join(inv, "cell")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                int_dot(F.col("qcode"), F.col("ncode")).alias("score"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= _TOP_K)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.col("rnk").cast("int").alias("rnk"),
-                F.col("score").cast("bigint").alias("score"),
-            )
-        )
+        return ivf_sq8_search(probes, read_log(spark, out_dir))
 
     return search_index

@@ -268,3 +268,87 @@ def test_operators_run_streams_only_through_the_harness():
         if used:
             offenders.append(f"{rel}: {sorted(used)}")
     assert not offenders, f"streams run outside the harness: {offenders}"
+
+
+_REGISTRY_MUTATORS = {
+    "update", "setdefault", "pop", "popitem", "clear", "__setitem__",
+    "__delitem__",
+}
+
+
+def _registry_writes(src: str) -> list[int]:
+    """Line numbers where *src* writes into ``QUERY_REGISTRY``: an item
+    assignment or deletion, or a mutating method call, on the registry
+    under any name a ``from ... import QUERY_REGISTRY as X`` or a plain
+    ``X = QUERY_REGISTRY`` binds to it (``module.QUERY_REGISTRY`` too)."""
+    import ast
+
+    tree = ast.parse(src)
+    aliases = {"QUERY_REGISTRY"}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            aliases |= {
+                a.asname or a.name
+                for a in node.names
+                if a.name == "QUERY_REGISTRY"
+            }
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Assign)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in aliases
+        ):
+            aliases |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+
+    def is_registry(expr) -> bool:
+        return (isinstance(expr, ast.Name) and expr.id in aliases) or (
+            isinstance(expr, ast.Attribute) and expr.attr == "QUERY_REGISTRY"
+        )
+
+    lines = []
+    for node in ast.walk(tree):
+        targets = []
+        if isinstance(node, (ast.Assign, ast.Delete)):
+            targets = node.targets
+        elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+            targets = [node.target]
+        if any(
+            isinstance(t, ast.Subscript) and is_registry(t.value)
+            for t in targets
+        ):
+            lines.append(node.lineno)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _REGISTRY_MUTATORS
+            and is_registry(node.func.value)
+        ):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_only_register_writes_the_registry():
+    """Every row carries its final oracle in its own ``@register(...)``:
+    outside ``registry.py`` no package module writes into
+    ``QUERY_REGISTRY`` under any alias (a donor row's oracle is READ,
+    through an import of the donor's module), and no operators/ module
+    imports ``dataclasses`` (whose ``replace`` patched rows after the
+    fact). A row patched after registration depends on import order,
+    and a lost patch drops the row silently to a rows-only check."""
+    import ast
+
+    offenders = []
+    for rel, src in _package_sources():
+        if rel == "registry.py":
+            continue
+        writes = _registry_writes(src)
+        if writes:
+            offenders.append(f"{rel}: writes at lines {writes}")
+        if rel.startswith("operators" + os.sep) and any(
+            (isinstance(n, ast.Import)
+             and any(a.name == "dataclasses" for a in n.names))
+            or (isinstance(n, ast.ImportFrom) and n.module == "dataclasses")
+            for n in ast.walk(ast.parse(src))
+        ):
+            offenders.append(f"{rel}: imports dataclasses")
+    assert not offenders, f"registry written outside register(): {offenders}"

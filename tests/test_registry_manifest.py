@@ -136,6 +136,21 @@ REPLAY_TWINS = {
     "z3s_compaction_replay": "z3_compaction_plan",
     "s15s_ivf_ingest_replay": "s15_ivf_sq8_topk",
     "g1s_pagerank_replay": "g1_pagerank",
+    # the same check for every other row registered with a donor's
+    # oracle verbatim: the real-runtime stream readbacks and app chains
+    # (stream ≡ batch on the same SQL), the curation replays of the
+    # composed c1/c3 oracles, and d2c, whose lossless prefix filter
+    # answers d2's exact pair set
+    "st15_returning_user_stream_readback": "st5_returning_user",
+    "st16_daily_uv_stream_readback": "st4_first_per_day_uv",
+    "st17_visitor_fix_stream_readback": "st3_visitor_state_fix",
+    "d7x_dedup_gate_stream_readback": "d7_dedup_gate",
+    "d9x_semantic_gate_stream_readback": "d9_semantic_gate",
+    "app7s_user_login_stream_chain": "st5_returning_user",
+    "app7x_user_login_crash_restart": "st5_returning_user",
+    "c1s_curation_replay": "c1_corpus_curation",
+    "c3s_packing_replay": "c3_sequence_packing",
+    "d2c_prefix_jaccard": "d2_ngram_jaccard_pairs",
 }
 
 
@@ -144,3 +159,11 @@ def test_replay_rows_carry_batch_twin_oracle():
     for replay, twin in REPLAY_TWINS.items():
         assert registry[twin].oracle is not None, twin
         assert registry[replay].oracle == registry[twin].oracle, replay
+
+
+def test_every_row_carries_an_oracle():
+    """A row without an oracle drops to the rows-only branch of the
+    parity suite (``df.count() >= 0``), which no wrong answer fails —
+    so a lost oracle must fail here, loudly."""
+    missing = [n for n, q in ordered_registry().items() if q.oracle is None]
+    assert not missing, f"rows without an oracle: {missing}"
