@@ -18,11 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# composition: the audited operators register first (module load order)
-from real_time_data_warehouse_spark.operators import dedup as _dedup  # noqa: F401
-from real_time_data_warehouse_spark.operators import (  # noqa: F401
-    similarity as _similarity,
-)
+# composition: the audited rows register first (their oracles are read
+# below) and their functions are called directly
+from real_time_data_warehouse_spark.operators import dedup as _dedup
+from real_time_data_warehouse_spark.operators import similarity as _similarity
 from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 
 _ANN_FLOOR_X100 = 60
@@ -51,10 +50,10 @@ def s9_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semi-join, but Catalyst's ReuseExchange already deduplicates the
     # exact-scan subtree — an explicit localCheckpoint here A/B-measured
     # SLOWER (+25% on s14b, the same shape), so the lazy form is kept.
-    truth = QUERY_REGISTRY["s1_cosine_topk"].fn(spark, sf_dir).select(
+    truth = _similarity.s1_cosine_topk(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    approx = QUERY_REGISTRY["s3_ivf_ann_topk"].fn(spark, sf_dir).select(
+    approx = _similarity.s3_ivf_ann_topk(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
     hit = truth.join(approx, ["query_id", "neighbor_id"], "left_semi")
@@ -90,10 +89,10 @@ def s9_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def d14_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    truth = QUERY_REGISTRY["d2_ngram_jaccard_pairs"].fn(spark, sf_dir).select(
+    truth = _dedup.d2_ngram_jaccard_pairs(spark, sf_dir).select(
         "doc_a", "doc_b"
     )  # lazy on purpose — see the s9 ReuseExchange note
-    approx = QUERY_REGISTRY["d3_minhash_lsh_pairs"].fn(spark, sf_dir).select(
+    approx = _dedup.d3_minhash_lsh_pairs(spark, sf_dir).select(
         "doc_a", "doc_b"
     )
     hit = truth.join(approx, ["doc_a", "doc_b"], "left_semi")
@@ -136,7 +135,7 @@ def s14b_sq8_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         sq8_topk_matmul,
     )
 
-    truth = QUERY_REGISTRY["s1_cosine_topk"].fn(spark, sf_dir).select(
+    truth = _similarity.s1_cosine_topk(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )  # lazy on purpose — see the s9 ReuseExchange note
     # the approx side through the s10c numpy-matmul pattern (guide

@@ -23,10 +23,8 @@ from real_time_data_warehouse_spark.functions.text import (
     md5_hash_sql,
     tokenize_sql,
 )
-from real_time_data_warehouse_spark.operators import dedup as _dep_dedup  # noqa: F401
-from real_time_data_warehouse_spark.operators import (  # noqa: F401
-    textanalysis as _dep_text,
-)
+from real_time_data_warehouse_spark.operators import dedup as _dep_dedup
+from real_time_data_warehouse_spark.operators import textanalysis as _dep_text
 from real_time_data_warehouse_spark.registry import QUERY_REGISTRY, register
 
 _QUALITY_MIN = 0.45  # ≈ 40th percentile on the fixture — non-trivial split
@@ -75,11 +73,11 @@ def _c1_oracle() -> str:
     oracle=_c1_oracle(),
 )
 def c1_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    gate = QUERY_REGISTRY["d7_dedup_gate"].fn(spark, sf_dir)
-    lang = QUERY_REGISTRY["t1_lang_id"].fn(spark, sf_dir).select(
+    gate = _dep_dedup.d7_dedup_gate(spark, sf_dir)
+    lang = _dep_text.t1_lang_id(spark, sf_dir).select(
         "doc_id", "predicted_lang"
     )
-    qual = QUERY_REGISTRY["t2_quality_score"].fn(spark, sf_dir).select(
+    qual = _dep_text.t2_quality_score(spark, sf_dir).select(
         "doc_id", "quality_score"
     )
     keep = (
@@ -133,7 +131,7 @@ def _rates_sql() -> str:
     """,
 )
 def c2_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lang = QUERY_REGISTRY["t1_lang_id"].fn(spark, sf_dir).select(
+    lang = _dep_text.t1_lang_id(spark, sf_dir).select(
         "doc_id", F.col("predicted_lang").alias("lang")
     )
     rate = F.lit(100)
@@ -181,7 +179,7 @@ def c2_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def c3_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    toks = QUERY_REGISTRY["t3_token_count"].fn(spark, sf_dir).select(
+    toks = _dep_text.t3_token_count(spark, sf_dir).select(
         "doc_id", "ws_tokens"
     )
     sharded = toks.withColumn(
@@ -467,7 +465,7 @@ def _c8_oracle() -> str:
     oracle=_c8_oracle(),
 )
 def c8_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clusters = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, sf_dir)
+    clusters = _dep_dedup.d6_dedup_clusters(spark, sf_dir)
     bucket = md5_hash(F.col("cluster_id").cast("string")) % 100
     return clusters.select(
         "doc_id",
@@ -661,13 +659,13 @@ def c10_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real_time_data_warehouse_spark.tables import Tables
 
     t = Tables(spark, sf_dir)
-    lang = QUERY_REGISTRY["t1_lang_id"].fn(spark, sf_dir).select(
+    lang = _dep_text.t1_lang_id(spark, sf_dir).select(
         "doc_id", "predicted_lang"
     )
-    qual = QUERY_REGISTRY["t2_quality_score"].fn(spark, sf_dir).select(
+    qual = _dep_text.t2_quality_score(spark, sf_dir).select(
         "doc_id", "quality_score"
     )
-    toks = QUERY_REGISTRY["t3_token_count"].fn(spark, sf_dir).select(
+    toks = _dep_text.t3_token_count(spark, sf_dir).select(
         "doc_id", "ws_tokens"
     )
     j = (
@@ -852,7 +850,7 @@ def _c12_oracle() -> str:
     oracle=_c12_oracle(),
 )
 def c12_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = QUERY_REGISTRY["t2_quality_score"].fn(spark, sf_dir).select(
+    scored = _dep_text.t2_quality_score(spark, sf_dir).select(
         "doc_id", "quality_score"
     )
     rate = F.lit(None).cast("int")
@@ -918,7 +916,7 @@ def c13_cluster_weighted_sample(
 ) -> DataFrame:
     from pyspark.sql.window import Window
 
-    clusters = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, sf_dir).select(
+    clusters = _dep_dedup.d6_dedup_clusters(spark, sf_dir).select(
         "doc_id", "cluster_id"
     )
     wc = Window.partitionBy("cluster_id")
@@ -977,7 +975,7 @@ def _d19_oracle() -> str:
 def d19_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    chunks = QUERY_REGISTRY["c9_doc_chunks"].fn(spark, sf_dir).select(
+    chunks = c9_doc_chunks(spark, sf_dir).select(
         "doc_id", "chunk_id", "chunk_hash"
     )
     wc = Window.partitionBy("chunk_hash")
@@ -1039,7 +1037,7 @@ def c15_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_prefix,
     )
 
-    q = QUERY_REGISTRY["t2_quality_score"].fn(spark, sf_dir).select(
+    q = _dep_text.t2_quality_score(spark, sf_dir).select(
         "doc_id", "quality_score"
     )
     qm = F.floor(F.col("quality_score") * 10000 + F.lit(0.5)).cast("long")
@@ -1135,7 +1133,7 @@ def c16_dedup_adjusted_mixture(
     from real_time_data_warehouse_spark.tables import Tables
 
     t = Tables(spark, sf_dir)
-    clusters = QUERY_REGISTRY["d6_dedup_clusters"].fn(spark, sf_dir).select(
+    clusters = _dep_dedup.d6_dedup_clusters(spark, sf_dir).select(
         "doc_id", "is_canonical"
     )
     docs = t.documents.select(

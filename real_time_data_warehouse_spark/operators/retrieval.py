@@ -280,7 +280,7 @@ def s7_hybrid_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from real_time_data_warehouse_spark.operators.similarity import cosine
 
-    shortlist = QUERY_REGISTRY["s6_bm25_topk"].fn(spark, sf_dir).select(
+    shortlist = s6_bm25_topk(spark, sf_dir).select(
         "doc_id", "bm25"
     )
     t = Tables(spark, sf_dir)
@@ -951,10 +951,7 @@ def s13_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lex = (
         with_bounded_part(
-            QUERY_REGISTRY["s6_bm25_topk"]
-            .fn(spark, sf_dir)
-            .select("doc_id", "bm25"),
-            "doc_id",
+            s6_bm25_topk(spark, sf_dir).select("doc_id", "bm25"), "doc_id"
         )
         .withColumn("r_lex", F.row_number().over(w1).cast("int"))
         .drop("__bounded_part")

@@ -98,6 +98,15 @@ def dwd_trade_order(cdc_values: DataFrame, dim_user_province: DataFrame) -> Data
     return deduped.join(F.broadcast(dim_user_province), "user_id", "left")
 
 
+# the DWS serving table as upsert_versioned writes it: run_trade_pipeline's
+# window aggregate plus the epoch version; ads_gmv reads it with this
+# schema instead of inferring it (one job) on every call
+DWS_TRADE_PROVINCE_SCHEMA = (
+    "cur_date string, province_name string, order_amount double, "
+    "order_ct bigint, __ver bigint"
+)
+
+
 def run_trade_pipeline(
     spark: SparkSession,
     ods_path: str,
@@ -158,7 +167,7 @@ def run_trade_pipeline(
 def ads_gmv(spark: SparkSession, serving: str, date: str) -> DataFrame:
     """TradeStatsController./gmv analog over the streamed serving table."""
     return (
-        spark.read.parquet(serving)
+        spark.read.schema(DWS_TRADE_PROVINCE_SCHEMA).parquet(serving)
         .where(F.col("cur_date") == date)
         .groupBy("cur_date")
         .agg(

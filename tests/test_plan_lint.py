@@ -352,3 +352,33 @@ def test_only_register_writes_the_registry():
         ):
             offenders.append(f"{rel}: imports dataclasses")
     assert not offenders, f"registry written outside register(): {offenders}"
+
+
+def _registry_fn_calls(toks: list[str]) -> int:
+    """How many ``QUERY_REGISTRY[...].fn(`` calls the code tokens
+    *toks* hold, whatever the subscript."""
+    n = 0
+    for i, tok in enumerate(toks):
+        if tok != "QUERY_REGISTRY" or toks[i + 1:i + 2] != ["["]:
+            continue
+        depth = 0
+        for j in range(i + 1, len(toks)):
+            depth += {"[": 1, "]": -1}.get(toks[j], 0)
+            if depth == 0:
+                break
+        n += toks[j + 1:j + 4] == [".", "fn", "("]
+    return n
+
+
+def test_operators_call_donor_rows_directly():
+    """A row that composes another row calls the donor's function
+    through the donor's module (``register`` returns the function
+    unchanged), never ``QUERY_REGISTRY["<row>"].fn(...)``: a misspelled
+    or renamed donor then fails at import instead of when the composing
+    row runs, and the call stays visible to grep and editors."""
+    offenders = {
+        rel: n
+        for rel, src in _operator_sources()
+        if (n := _registry_fn_calls(_code_tokens(src)))
+    }
+    assert not offenders, f"donor rows called by name: {offenders}"

@@ -1,58 +1,180 @@
-"""Materialized serving layer: partition pruning must actually happen —
-the lakehouse equivalent of Doris `partition par#{date}`."""
+"""Materialized serving layer: a request reads only its day directory,
+and partition pruning must still show in the plan — the lakehouse
+equivalent of Doris `partition par#{date}`."""
 
 from __future__ import annotations
 
+import os
 import re
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from real_time_data_warehouse_spark.functions.money import dec
 from real_time_data_warehouse_spark.plans.audit import formatted_plan
 from real_time_data_warehouse_spark.serving import (
+    DWS_PROVINCE_DAILY_SCHEMA,
+    DWS_TRADE_DAILY_SCHEMA,
+    channel_topk,
     gmv_for_date,
+    materialize_dws_province_daily,
     materialize_dws_trade_daily,
+    province_stats,
+    read_days,
 )
+from real_time_data_warehouse_spark.tables import Tables
 from tests.conftest import SF_DIR
 
+PRESENT_DAY = "1998-01-04"  # has orders at sf0.001 (k2b relies on it too)
+ABSENT_DAY = "1998-01-01"  # no orders at sf0.001, so no day directory
 
-def test_partition_pruned_serving(spark, tmp_path):
-    path = str(tmp_path / "dws_trade_daily")
-    materialize_dws_trade_daily(spark, SF_DIR, path)
 
-    df = gmv_for_date(spark, path, "1998-01-01")
+@pytest.fixture(scope="module")
+def dws(spark, tmp_path_factory):
+    """Both serving tables, materialized once for the module from the
+    first quarter of 1998 of the sf0.001 orders: about 45 day dirs,
+    past the 32 at which a read of the table root lists them in a
+    parallel job, without writing all 1,094 of the fixture's days.
+    Returns endpoint → (table root, declared schema)."""
+    base = tmp_path_factory.mktemp("dws")
+    src = base / "sf"
+    src.mkdir()
+    for name in ("customer", "nation"):
+        os.symlink(os.path.join(SF_DIR, f"{name}.parquet"), src / f"{name}.parquet")
+    Tables(spark, SF_DIR).orders.where(
+        (F.col("o_orderdate") >= "1998-01-01") & (F.col("o_orderdate") < "1998-04-01")
+    ).write.parquet(str(src / "orders.parquet"))
+    trade, prov = str(base / "dws_trade_daily"), str(base / "dws_province_daily")
+    materialize_dws_trade_daily(spark, str(src), trade)
+    materialize_dws_province_daily(spark, str(src), prov)
+    assert len(_day_dirs(trade)) > 32
+    return {
+        gmv_for_date: (trade, DWS_TRADE_DAILY_SCHEMA),
+        province_stats: (prov, DWS_PROVINCE_DAILY_SCHEMA),
+    }
+
+
+def _day_dirs(root):
+    return sorted(d for d in os.listdir(root) if d.startswith("cur_date="))
+
+
+def test_partition_pruned_serving(spark, dws):
+    path = dws[gmv_for_date][0]
+    assert not os.path.exists(os.path.join(path, f"cur_date={ABSENT_DAY}"))
+    df = gmv_for_date(spark, path, PRESENT_DAY)
     plan = formatted_plan(df)
     # the day literal must land in PartitionFilters on the scan …
     assert re.search(r"PartitionFilters: \[[^\]]*cur_date", plan), plan
+    # … whose Location holds exactly the one requested day dir …
+    (location,) = re.findall(r"Location: \w+ \[([^\]]*)\]", plan)
+    assert location.split(", ") == [
+        f"file:{os.path.join(path, f'cur_date={PRESENT_DAY}')}"
+    ], location
     # … and the result must match computing from the fact table directly
-    got = df.first()
-    from real_time_data_warehouse_spark.functions.money import dec
-    from real_time_data_warehouse_spark.tables import Tables
-
+    got = df.collect()
     exp = (
         Tables(spark, SF_DIR)
-        .orders.where(F.date_format("o_orderdate", "yyyy-MM-dd") == "1998-01-01")
+        .orders.where(F.date_format("o_orderdate", "yyyy-MM-dd") == PRESENT_DAY)
         .agg(F.sum(dec("o_totalprice")).cast("double").alias("gmv"))
         .first()["gmv"]
     )
-    if exp is None:
-        assert got is None or got["gmv"] is None
-    else:
-        assert got is not None and abs(got["gmv"] - exp) < 1e-6
+    assert exp is not None and len(got) == 1
+    assert str(got[0]["cur_date"]) == PRESENT_DAY
+    assert abs(got[0]["gmv"] - exp) < 1e-6
 
 
-def test_province_and_channel_endpoints(spark, tmp_path):
-    from real_time_data_warehouse_spark.serving import (
-        channel_topk,
-        materialize_dws_province_daily,
-        province_stats,
+def _is_empty_answer(df, present) -> bool:
+    """*df* is an empty answer typed like *present*, planned with no
+    scan (an empty LocalRelation, so nothing is read)."""
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    return (
+        df.schema == present.schema
+        and optimized.getClass().getSimpleName() == "LocalRelation"
+        and df.collect() == []
     )
 
-    path = str(tmp_path / "dws_province_daily")
-    materialize_dws_province_daily(spark, SF_DIR, path)
-    some_date = (
-        spark.read.parquet(path).select("cur_date").orderBy("cur_date").first()[0]
-    )
-    prov = province_stats(spark, path, some_date)
+
+def test_absent_day_is_the_empty_answer(spark, dws):
+    """A day with no directory returns no rows, with the columns and
+    types of a present day's answer, and never scans."""
+    for fn, (path, _) in dws.items():
+        present = fn(spark, path, PRESENT_DAY)
+        assert present.count() > 0
+        assert _is_empty_answer(fn(spark, path, ABSENT_DAY), present), fn
+    # a table that does not exist is an error, not an empty answer
+    missing = os.path.join(os.path.dirname(dws[gmv_for_date][0]), "not_built")
+    for fn in dws:
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            fn(spark, missing, PRESENT_DAY)
+
+
+@pytest.mark.parametrize(
+    "day",
+    ["1998-1-4", "19980104", "garbage", "", f"{PRESENT_DAY}/../..",
+     f"../cur_date={PRESENT_DAY}"],
+)
+def test_malformed_day_is_the_empty_answer(spark, dws, day):
+    """A day that is not exactly yyyy-MM-dd — including a path-like one
+    that would climb out of the table root — is answered empty without
+    reading anything, not an ANSI cast error and not a foreign dir."""
+    for fn, (path, _) in dws.items():
+        present = fn(spark, path, PRESENT_DAY)
+        assert _is_empty_answer(fn(spark, path, day), present), (fn, day)
+
+
+def test_day_dir_read_equals_root_read(spark, dws):
+    """For every day dir of both tables, the rows read from that dir
+    with the declared schema equal the rows a read of the table root
+    infers for that day; the endpoints' answers match the root-read
+    form on sampled days."""
+    for fn, (path, schema) in dws.items():
+        days = [d[len("cur_date="):] for d in _day_dirs(path)]
+        root = spark.read.parquet(path)
+        by_dir = read_days(spark, path, schema, days)
+        assert by_dir.schema == root.schema
+        assert sorted(by_dir.collect()) == sorted(root.collect())
+        for day in days[:: max(1, len(days) // 5)] + [PRESENT_DAY]:
+            rows = root.where(F.col("cur_date") == day)
+            old = (
+                rows.groupBy("cur_date").agg(F.sum("order_amount").alias("gmv"))
+                if fn is gmv_for_date
+                else rows.select("province_name", "order_amount", "order_ct")
+            )
+            assert sorted(fn(spark, path, day).collect()) == sorted(old.collect())
+
+
+def test_declared_schemas_match_the_writers(spark, dws):
+    """Each declared schema is the schema Spark infers from a freshly
+    materialized table, so writer and reader cannot drift apart."""
+    for path, schema in dws.values():
+        declared = spark.createDataFrame([], schema).schema
+        assert spark.read.parquet(path).schema == declared, schema
+
+
+def test_at_most_two_jobs_per_request(spark, dws):
+    """A request costs its pruned scan only: no partition-discovery or
+    schema-inference job (job counts as in test_jobs_per_batch.py)."""
+    sc = spark.sparkContext
+    groups = {}
+    for fn, (path, _) in dws.items():
+        for day in (PRESENT_DAY, "1998-01-06"):
+            group = f"serving-jobs-{fn.__name__}-{day}"
+            sc.setJobGroup(group, group)
+            try:
+                assert fn(spark, path, day).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            groups[group] = None
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
+    assert all(1 <= n <= 2 for n in jobs.values()), jobs
+
+
+def test_province_and_channel_endpoints(spark, dws):
+    path = dws[province_stats][0]
+    prov = province_stats(spark, path, PRESENT_DAY)
     assert prov.count() > 0
     assert set(prov.columns) == {"province_name", "order_amount", "order_ct"}
 

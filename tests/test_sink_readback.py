@@ -48,12 +48,17 @@ def test_k2b_rollover_prunes_to_two_partitions(spark):
 
 def test_k2_artifact_is_day_partitioned(spark):
     from real_time_data_warehouse_spark.operators.sink_readback import (
+        _K2_SCHEMA,
         _k2_build,
     )
 
     base = _k2_build(spark, SF_DIR)
     days = [d for d in os.listdir(base) if d.startswith("cur_date=")]
     assert len(days) > 31  # orders span years → many day partitions
+    # k2/k2b read their day dirs with the declared schema: it must be
+    # the one Spark infers from the written store
+    declared = spark.createDataFrame([], _K2_SCHEMA).schema
+    assert spark.read.parquet(base).schema == declared
 
 
 def test_k1_one_file_per_topic_and_json_roundtrip(spark):

@@ -18,6 +18,7 @@ from real_time_data_warehouse_spark.sources.cdc import (
     synthetic_cdc_json,
 )
 from real_time_data_warehouse_spark.streaming.trade import (
+    DWS_TRADE_PROVINCE_SCHEMA,
     ads_gmv,
     run_trade_pipeline,
 )
@@ -79,6 +80,9 @@ def test_trade_pipeline_end_to_end(spark, tmp_path):
     # serving is keyed: one row per (day, province)
     serving = spark.read.parquet(paths["serving"])
     assert serving.count() == serving.select("cur_date", "province_name").distinct().count()
+    # ads_gmv reads with the declared schema: it must be the written one
+    declared = spark.createDataFrame([], DWS_TRADE_PROVINCE_SCHEMA).schema
+    assert serving.schema == declared
 
 
 def _event_time_slices(raw, n):
