@@ -93,7 +93,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from real_time_data_warehouse_spark.functions.money import (
     dec_sum,
@@ -110,6 +109,7 @@ from real_time_data_warehouse_spark.operators.streaming_exec import (
     _assert_state_operators,
     _read_slices,
     _sink_checksums,
+    _sink_dir,
     _sliced_source,
     _stream_artifact,
     _write_slices,
@@ -127,7 +127,10 @@ from real_time_data_warehouse_spark.streaming.state_store import (
     read_log,
     write_snapshot,
 )
-from real_time_data_warehouse_spark.streaming.stateful import returning_user
+from real_time_data_warehouse_spark.streaming.stateful import (
+    returning_user,
+    visitor_fix,
+)
 from real_time_data_warehouse_spark.tables import Tables
 
 _DELAY = "2 hours"  # watermark delay — must exceed the replay window
@@ -159,18 +162,6 @@ _APP_PARAMS: dict[str, object] = {
     "app16_pages": {"home": 0, "good_detail": 3},  # app16s P8: k%6 page ids
 }
 
-# State-store partition count for the app-chain queries. A CHAINED
-# topology multiplies the per-partition state-store overhead by the
-# operator count: app1s at 32 partitions maintains 5 ops x 32 stores x
-# N batches of commit/snapshot work, and the measured cold build was
-# 89.9 s vs 22.9 s at 8 partitions on the SAME data (sf0.01, local) —
-# a 3.9x tax with zero data-level benefit at artifact scale. 8 is
-# right for the harness; a production deployment sizes this to
-# ~2-3x cluster cores per the st14 note — a deploy-time conf, and the
-# chain multiplier is exactly why chained jobs size it more carefully
-# than single-op jobs. Every chain row hands it to the build harness,
-# streaming_exec._stream_artifact.
-_STATE_PARTS = 8
 _REPLAY_NS = 3600 * 10**9  # 1 h of each slice re-delivered in the next
 _SENT_NS = 30 * 86400 * 10**9  # sentinel 30 days past max event time
 # local aliases into _APP_PARAMS (usage sites read naturally; the table
@@ -259,7 +250,7 @@ def _app_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_events(spark, _app_source(spark, sf_dir))
 
 
-def _no_debris(base: str, epoch: int) -> None:
+def _no_debris(out: str, epoch: int) -> None:
     """Crash planter of the merge-sink rows (app4s, app7x): the replay of
     an LWW upsert is a no-op, so their crash leaves no partial append
     for the replay to heal — debris modeling belongs to append sinks; a
@@ -327,7 +318,7 @@ def _drop_sentinel_windows(
 
 
 def _app1s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         # per-table filter views (DwdTradeOrderDetail.java:30-82), each
         # branch LWW-deduped (ST1 — the DWS consumer's retract-dedup
@@ -378,7 +369,7 @@ def _app1s_build(spark: SparkSession, sf_dir: str) -> str:
 
     # 4 dedups + 3 symmetric hash joins = 7 stateful operators
     return _stream_artifact(
-        spark, sf_dir, "app1s", plan, _STATE_PARTS, _assert_state_operators(7)
+        spark, sf_dir, "app1s", plan, _assert_state_operators(7)
     )
 
 
@@ -428,7 +419,7 @@ def app1s_order_detail_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app1s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return (
         back.groupBy("order_key")
         .agg(
@@ -449,7 +440,7 @@ def app1s_order_detail_stream_chain(
 
 
 def _app2s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         # ST1: dedup by the detail's unique key (DwsTradeProvince
         # OrderWindow.java:74-99 — the retract-dedup ValueState with a
@@ -497,7 +488,7 @@ def _app2s_build(spark: SparkSession, sf_dir: str) -> str:
 
     # dedup + windowed agg = 2 stateful operators
     return _stream_artifact(
-        spark, sf_dir, "app2s", plan, _STATE_PARTS, _assert_state_operators(2)
+        spark, sf_dir, "app2s", plan, _assert_state_operators(2)
     )
 
 
@@ -537,7 +528,7 @@ def app2s_province_order_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app2s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return _drop_sentinel_windows(spark, sf_dir, back)
 
 
@@ -549,7 +540,7 @@ _APP3_DROP_MOD = _APP_PARAMS["app3_drop_mod"]
 
 
 def _app3s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         # P1/P11: per-row JSON parse + predicate filter — the
         # reference's tombstone/dirty-row gate ahead of the dedup
@@ -620,7 +611,7 @@ def _app3s_build(spark: SparkSession, sf_dir: str) -> str:
     # dedup + windowed agg = 2 stateful operators; the dim chain is
     # stateless per-batch broadcasts
     return _stream_artifact(
-        spark, sf_dir, "app3s", plan, _STATE_PARTS, _assert_state_operators(2)
+        spark, sf_dir, "app3s", plan, _assert_state_operators(2)
     )
 
 
@@ -668,7 +659,7 @@ def app3s_sku_order_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app3s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return _drop_sentinel_windows(spark, sf_dir, back)
 
 
@@ -688,8 +679,7 @@ _APP4_DELETE_MOD = _APP_PARAMS["app4_delete_mod"]
 
 
 def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
-        dim_base = os.path.join(base, "dim")
+    def plan(out: str):
         config = spark.createDataFrame(
             [(s, t, ",".join(c)) for s, t, c in _APP4_CONFIG],
             "event_type string, sink_table string, sink_columns string",
@@ -740,7 +730,7 @@ def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
                 upsert_dim(
                     spark,
                     sub,
-                    os.path.join(dim_base, sink),
+                    os.path.join(out, sink),
                     ["user_id"],
                     order_col="ord",
                     type_col="op",
@@ -753,9 +743,7 @@ def _app4s_build(spark: SparkSession, sf_dir: str) -> str:
     # checkpoint: the replayed epoch re-applies the same
     # upserts/deletes — a no-op under LWW (same rows, same ord), which
     # IS the exactly-once argument for an idempotent merge sink
-    return _stream_artifact(
-        spark, sf_dir, "app4s", plan, _STATE_PARTS, debris=_no_debris
-    )
+    return _stream_artifact(spark, sf_dir, "app4s", plan, debris=_no_debris)
 
 
 @register(
@@ -818,7 +806,7 @@ def app4s_dim_app_stream_chain(
     base = _app4s_build(spark, sf_dir)
     parts = []
     for _etype, sink, cols in _APP4_CONFIG:
-        d = spark.read.parquet(os.path.join(base, "dim", sink))
+        d = spark.read.parquet(os.path.join(_sink_dir(base), sink))
         parts.append(
             d.select(
                 F.lit(sink).alias("sink_table"),
@@ -891,72 +879,8 @@ def _app5_source(spark: SparkSession, sf_dir: str) -> str:
     return _artifact_dir(spark, sf_dir, "app5src", build)
 
 
-def _app5_schemas():
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("props", StringType()),
-            StructField("dirty", IntegerType()),
-            StructField("is_new", IntegerType()),
-        ]
-    )
-    state = StructType([StructField("first_visit_date", StringType())])
-    return out, state
-
-
-def _app5_fix_fn(key, pdf_iter, state):
-    """ST3 visitor-flag repair (DwdBaseLog.java:121-188) with the dirty
-    rows flowing THROUGH as state-neutral passthrough — the one-query
-    multi-sink form of Flink's pre-keyBy side output: dirty rows never
-    touch the per-user first_visit_date state and carry is_new=NULL.
-    Clean rows: is_new=1 only on the user's first-ever visit date."""
-    import pandas as pd
-
-    (user_id,) = key
-    first = state.get[0] if state.exists else None
-    cols = ["event_id", "user_id", "event_type", "props", "dirty", "is_new"]
-    outs = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("ts")
-        dates = pdf["ts"].dt.strftime("%Y-%m-%d")
-        is_new: list[int | None] = []
-        for d, dirty in zip(dates, pdf["dirty"]):
-            if dirty:
-                is_new.append(None)
-                continue
-            if first is None:
-                first = d
-            is_new.append(1 if d == first else 0)
-        out = pdf[["event_id", "user_id", "event_type", "props", "dirty"]]
-        out = out.assign(
-            is_new=pd.Series(is_new, index=pdf.index, dtype="object")
-        )
-        outs.append(out[cols])
-    if first is not None:
-        state.update((first,))
-    yield (
-        pd.concat(outs)
-        if outs
-        else pd.DataFrame(columns=cols)
-    )
-
-
 def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
-    out_schema, state_schema = _app5_schemas()
-
-    def plan(base: str):
-        out = os.path.join(base, "out")
-
+    def plan(out: str):
         def body(b: DataFrame, bid: int) -> None:
             # P2 + X1: one CASE routes every row (dirty first, then the
             # X1 5-way split); event types no side carries drop out
@@ -991,16 +915,15 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
             "dirty",
             F.get_json_object("props", "$").isNull().cast("int"),
         ).select("event_id", "user_id", "ts", "event_type", "props", "dirty")
-        fixed = flagged.groupBy("user_id").applyInPandasWithState(
-            _app5_fix_fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        # ST3 repair; dirty rows pass through state-neutral (is_new NULL)
+        fixed = visitor_fix(
+            flagged,
+            neutral="dirty",
+            passthrough=["event_type", "props", "dirty"],
         )
         return fixed, body
 
-    def debris(base: str, epoch: int) -> None:
+    def debris(out: str, epoch: int) -> None:
         # partial file a mid-write crash leaves in the crashed epoch's
         # side=action dir — the retry must REPLACE it
         ev = Tables(spark, sf_dir).events
@@ -1010,14 +933,12 @@ def _app5s_build(spark: SparkSession, sf_dir: str) -> str:
             F.lit(9).cast("int").alias("is_new"),
             F.lit("action").alias("side"),
         )
-        out = os.path.join(base, "out")
         write_snapshot(rows, out, epoch, partition_by="side")
 
     # exactly ONE keyed-state operator (the ST3 repair) in the replayed
     # epochs' plans
     return _stream_artifact(
-        spark, sf_dir, "app5s", plan, _STATE_PARTS,
-        _assert_state_operators(1), debris=debris,
+        spark, sf_dir, "app5s", plan, _assert_state_operators(1), debris=debris
     )
 
 
@@ -1094,7 +1015,7 @@ def app5s_base_log_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app5s_build(spark, sf_dir)
-    back = read_log(spark, os.path.join(base, "out"), _APP5_SINK_SCHEMA)
+    back = read_log(spark, _sink_dir(base), _APP5_SINK_SCHEMA)
     return _sink_checksums(
         back, "side", F.sum("is_new").cast("bigint").alias("new_sum")
     )
@@ -1109,7 +1030,7 @@ _APP6_SV_MOD = _APP_PARAMS["app6_sv_mod"]
 
 
 def _app6s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         raw = _app_events(spark, sf_dir)
         # the 4 stat dims (vc/ch/ar/is_new, :77-92) derived from the
         # key so every event of a user carries identical dims — the
@@ -1177,7 +1098,7 @@ def _app6s_build(spark: SparkSession, sf_dir: str) -> str:
 
     # 2 dedup states + 1 windowed agg = 3 stateful operators
     return _stream_artifact(
-        spark, sf_dir, "app6s", plan, _STATE_PARTS, _assert_state_operators(3)
+        spark, sf_dir, "app6s", plan, _assert_state_operators(3)
     )
 
 
@@ -1231,7 +1152,7 @@ def app6s_traffic_page_view_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app6s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return _drop_sentinel_windows(spark, sf_dir, back)
 
 
@@ -1248,7 +1169,7 @@ _APP8_SEARCH_MOD = _APP_PARAMS["app8_search_mod"]
 
 
 def _app8s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         # P10: the search-page filter (DwsTrafficSourceKeywordPageView
@@ -1303,7 +1224,7 @@ def _app8s_build(spark: SparkSession, sf_dir: str) -> str:
     # dedup + windowed count = 2 stateful operators; the tokenizer
     # explode is stateless between them
     return _stream_artifact(
-        spark, sf_dir, "app8s", plan, _STATE_PARTS, _assert_state_operators(2)
+        spark, sf_dir, "app8s", plan, _assert_state_operators(2)
     )
 
 
@@ -1359,7 +1280,7 @@ def app8s_keyword_window_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app8s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return _drop_sentinel_windows(spark, sf_dir, back)
 
 
@@ -1370,7 +1291,7 @@ def app8s_keyword_window_stream_chain(
 # --------------------------------------------------------------------------
 
 
-def _login_daily(spark: SparkSession, sf_dir: str, base: str):
+def _login_daily(spark: SparkSession, sf_dir: str, out: str):
     """The app7 topology (shared by app7s and app7x) as a (stream,
     update-mode epoch body) pair: login filter → ST5 returning-user
     keyed state (DwsUserUserLoginWindow
@@ -1383,7 +1304,6 @@ def _login_daily(spark: SparkSession, sf_dir: str, base: str):
     id, monotone) folds them so the FINAL store equals the complete
     aggregate — the exact shape of the reference's keyed-process →
     windowAll → upsert-sink, with no watermark and no horizon math."""
-    store = os.path.join(base, "store")
     logins = (
         _app_events(spark, sf_dir)
         .where(F.col("event_type").isin("signup", "click"))
@@ -1403,7 +1323,7 @@ def _login_daily(spark: SparkSession, sf_dir: str, base: str):
             "ord", F.lit(bid).cast("bigint")
         ).withColumn("op", F.lit("upsert"))
         upsert_dim(
-            spark, ups, store, ["cur_date"],
+            spark, ups, out, ["cur_date"],
             order_col="ord", type_col="op",
         )
 
@@ -1413,7 +1333,7 @@ def _login_daily(spark: SparkSession, sf_dir: str, base: str):
 def _login_store_readback(
     spark: SparkSession, sf_dir: str, base: str
 ) -> DataFrame:
-    back = spark.read.parquet(os.path.join(base, "store"))
+    back = spark.read.parquet(_sink_dir(base))
     return _drop_sentinel_windows(
         spark, sf_dir, back, col="cur_date", fmt="yyyy-MM-dd"
     ).select("cur_date", "uu_ct", "back_ct")
@@ -1422,8 +1342,8 @@ def _login_store_readback(
 def _app7s_build(spark: SparkSession, sf_dir: str) -> str:
     # the keyed ST5 state + the update-mode aggregate state
     return _stream_artifact(
-        spark, sf_dir, "app7s", lambda base: _login_daily(spark, sf_dir, base),
-        _STATE_PARTS, _assert_state_operators(2), mode="update",
+        spark, sf_dir, "app7s", lambda out: _login_daily(spark, sf_dir, out),
+        _assert_state_operators(2), mode="update",
     )
 
 
@@ -1468,8 +1388,8 @@ def _app7x_build(spark: SparkSession, sf_dir: str) -> str:
     # dates with is_uu=1 and the uu totals inflate. The replayed epochs
     # still plan the keyed ST5 state + the update-mode aggregate.
     return _stream_artifact(
-        spark, sf_dir, "app7x", lambda base: _login_daily(spark, sf_dir, base),
-        _STATE_PARTS, _assert_state_operators(2), debris=_no_debris,
+        spark, sf_dir, "app7x", lambda out: _login_daily(spark, sf_dir, out),
+        _assert_state_operators(2), debris=_no_debris,
         mode="update",
     )
 
@@ -1528,7 +1448,7 @@ def _pay_detail_joined(ev: DataFrame) -> DataFrame:
 
 
 def _app9s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         joined = _pay_detail_joined(ev).select(
             "pay_id", "pay_key", "pay_ts", "det_id"
@@ -1556,7 +1476,7 @@ def _app9s_build(spark: SparkSession, sf_dir: str) -> str:
     # 2 dedups + 1 symmetric hash join = 3 stateful operators; the dim
     # hop is a stateless per-batch broadcast
     return _stream_artifact(
-        spark, sf_dir, "app9s", plan, _STATE_PARTS, _assert_state_operators(3)
+        spark, sf_dir, "app9s", plan, _assert_state_operators(3)
     )
 
 
@@ -1597,7 +1517,7 @@ def app9s_pay_detail_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app9s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.groupBy("pay_key", "province_name").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.sum("pay_id").cast("bigint").alias("pay_id_sum"),
@@ -1612,7 +1532,7 @@ def app9s_pay_detail_stream_chain(
 
 
 def _app10s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         # ST4-shape keyed state: lastCartAddDate per user (DwsTradeCart
         # AddUuWindow.java:69-110) = first-cart-add-per-(user, day)
@@ -1637,7 +1557,7 @@ def _app10s_build(spark: SparkSession, sf_dir: str) -> str:
 
     # dedup state + window state = 2 stateful operators
     return _stream_artifact(
-        spark, sf_dir, "app10s", plan, _STATE_PARTS, _assert_state_operators(2)
+        spark, sf_dir, "app10s", plan, _assert_state_operators(2)
     )
 
 
@@ -1672,7 +1592,7 @@ def app10s_cart_add_uu_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app10s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return _drop_sentinel_windows(spark, sf_dir, back)
 
 
@@ -1683,8 +1603,7 @@ def app10s_cart_add_uu_stream_chain(
 
 
 def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
-        out = os.path.join(base, "out")
+    def plan(out: str):
         joined = _pay_detail_joined(_app_events(spark, sf_dir)).select(
             "pay_id", "pay_key", "det_id"
         )
@@ -1692,18 +1611,17 @@ def _app9x_build(spark: SparkSession, sf_dir: str) -> str:
         # output (the x1s exactly-once discipline)
         return joined, lambda b, bid: write_snapshot(b, out, bid)
 
-    def debris(base: str, epoch: int) -> None:
+    def debris(out: str, epoch: int) -> None:
         rows = spark.createDataFrame(
             [(-999, -999, -999)], "pay_id bigint, pay_key bigint, "
             "det_id bigint",
         )
-        write_snapshot(rows, os.path.join(base, "out"), epoch)
+        write_snapshot(rows, out, epoch)
 
     # the restarted handle's replayed epochs still plan the full chain:
     # 2 dedups + 1 symmetric hash join
     return _stream_artifact(
-        spark, sf_dir, "app9x", plan, _STATE_PARTS,
-        _assert_state_operators(3), debris=debris,
+        spark, sf_dir, "app9x", plan, _assert_state_operators(3), debris=debris
     )
 
 
@@ -1745,7 +1663,7 @@ def app9x_pay_detail_crash_restart(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app9x_build(spark, sf_dir)
-    back = read_log(spark, os.path.join(base, "out"))
+    back = read_log(spark, _sink_dir(base))
     return back.groupBy("pay_key").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.sum("pay_id").cast("bigint").alias("pay_id_sum"),
@@ -1763,7 +1681,7 @@ _APP11_GATE = _APP_PARAMS["cancel_gate"]
 
 
 def _app11s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         # P5: the CDC state-transition predicate (DwdTradeOrderCancel
@@ -1791,7 +1709,7 @@ def _app11s_build(spark: SparkSession, sf_dir: str) -> str:
         ).select("cancel_id", "cancel_key", "det_id"), None
 
     return _stream_artifact(
-        spark, sf_dir, "app11s", plan, _STATE_PARTS, _assert_state_operators(3)
+        spark, sf_dir, "app11s", plan, _assert_state_operators(3)
     )
 
 
@@ -1831,7 +1749,7 @@ def app11s_order_cancel_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app11s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.groupBy("cancel_key").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.sum("cancel_id").cast("bigint").alias("cancel_id_sum"),
@@ -1846,7 +1764,7 @@ def app11s_order_cancel_stream_chain(
 
 
 def _app12s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         # ST1 dedup absorbs the replayed slice tails, then the P6
@@ -1870,7 +1788,7 @@ def _app12s_build(spark: SparkSession, sf_dir: str) -> str:
         ), None
 
     return _stream_artifact(
-        spark, sf_dir, "app12s", plan, _STATE_PARTS, _assert_state_operators(1)
+        spark, sf_dir, "app12s", plan, _assert_state_operators(1)
     )
 
 
@@ -1903,7 +1821,7 @@ def app12s_cart_add_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app12s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum("event_id").cast("bigint").alias("id_sum"),
@@ -1915,7 +1833,7 @@ _APP13_DIC = _APP_PARAMS["app13_dic"]
 
 
 def _app13s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         # P4: map-subscript projection of the comment envelope
@@ -1942,7 +1860,7 @@ def _app13s_build(spark: SparkSession, sf_dir: str) -> str:
         return comments.join(F.broadcast(dic), "appraise_code"), None
 
     return _stream_artifact(
-        spark, sf_dir, "app13s", plan, _STATE_PARTS, _assert_state_operators(1)
+        spark, sf_dir, "app13s", plan, _assert_state_operators(1)
     )
 
 
@@ -1978,7 +1896,7 @@ def app13s_comment_info_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app13s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return _sink_checksums(back, "appraise_name")
 
 
@@ -1993,8 +1911,7 @@ _APP14_CONFIG = (
 
 
 def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
-        out = os.path.join(base, "out")
+    def plan(out: str):
         config = spark.createDataFrame(
             list(_APP14_CONFIG), "source_type string, sink_table string"
         )
@@ -2023,17 +1940,16 @@ def _app14s_build(spark: SparkSession, sf_dir: str) -> str:
             b, out, bid, partition_by="sink_table"
         )
 
-    def debris(base: str, epoch: int) -> None:
+    def debris(out: str, epoch: int) -> None:
         rows = spark.createDataFrame(
             [(-777, -777, "dwd_action")],
             "event_id bigint, user_id bigint, sink_table string",
         )
-        out = os.path.join(base, "out")
         write_snapshot(rows, out, epoch, partition_by="sink_table")
 
     return _stream_artifact(
-        spark, sf_dir, "app14s", plan, _STATE_PARTS,
-        _assert_state_operators(1), debris=debris,
+        spark, sf_dir, "app14s", plan, _assert_state_operators(1),
+        debris=debris,
     )
 
 
@@ -2074,7 +1990,7 @@ def app14s_base_db_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app14s_build(spark, sf_dir)
-    back = read_log(spark, os.path.join(base, "out"))
+    back = read_log(spark, _sink_dir(base))
     # sentinel rows route too
     return _sink_checksums(back.where(F.col("event_id") >= 0), "sink_table")
 
@@ -2095,7 +2011,7 @@ def _refund_chain(
     if pay_suc:
         lo = (lo + hi) // 2 + 1  # 76-90: refunds whose payment succeeded
 
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         refunds = (
@@ -2138,7 +2054,7 @@ def _refund_chain(
         ), None
 
     return _stream_artifact(
-        spark, sf_dir, kind, plan, _STATE_PARTS, _assert_state_operators(1)
+        spark, sf_dir, kind, plan, _assert_state_operators(1)
     )
 
 
@@ -2161,7 +2077,7 @@ def _refund_oracle(lo: int, hi: int) -> str:
 
 
 def _refund_readback(spark, base: str) -> DataFrame:
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.groupBy("refund_type", "province_name").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum("event_id").cast("bigint").alias("id_sum"),
@@ -2218,7 +2134,7 @@ _APP16_PAGES = _APP_PARAMS["app16_pages"]
 
 
 def _app16s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _app_events(spark, sf_dir)
         k = F.get_json_object("props", "$.k").try_cast("int")
         page = (
@@ -2253,7 +2169,7 @@ def _app16s_build(spark: SparkSession, sf_dir: str) -> str:
         ), None
 
     return _stream_artifact(
-        spark, sf_dir, "app16s", plan, _STATE_PARTS, _assert_state_operators(2)
+        spark, sf_dir, "app16s", plan, _assert_state_operators(2)
     )
 
 
@@ -2292,7 +2208,7 @@ def app16s_home_detail_stream_chain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _app16s_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return _drop_sentinel_windows(
         spark, sf_dir, back.where(F.col("page").isNotNull())
     )

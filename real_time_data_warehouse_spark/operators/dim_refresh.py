@@ -47,13 +47,13 @@ shuffles (stateless enrichment).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_warehouse_spark.operators.streaming_exec import (
     _SRC_FILES,
+    _beside_sink,
+    _sink_dir,
     _sliced_events,
     _stream_artifact,
 )
@@ -99,9 +99,8 @@ def _j16_build(
 ) -> str:
     swapped = {"done": False}
 
-    def plan(base: str):
-        dim_dir = os.path.join(base, "dim")
-        out = os.path.join(base, "out")
+    def plan(out: str):
+        dim_dir = _beside_sink(out, "dim")
         # generation v1 on disk before the stream starts
         _dim_df(spark, sf_dir, v2=False).coalesce(1).write.mode(
             "overwrite"
@@ -216,7 +215,7 @@ def j16_dim_refresh_stream_readback(
 
 
 def _j16_readback(spark: SparkSession, base: str) -> DataFrame:
-    back = read_log(spark, os.path.join(base, "out"))
+    back = read_log(spark, _sink_dir(base))
     return back.groupBy("province_name").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum("event_id").cast("bigint").alias("id_sum"),

@@ -29,11 +29,11 @@ reads a continuously-maintained DWS table rather than recomputing it.
 
 Every streaming artifact row — here, in app_chains and in dim_refresh —
 builds through one harness, ``_stream_artifact``: the row declares its
-query (and, for a crash row, its debris); the harness owns the cache,
-the sink and checkpoint paths, the state-store partition scope, the
+query over the sink dir it is handed (and, for a crash row, its
+debris); the harness owns the cache, the sink and checkpoint paths, the
 runner (``run_file_stream``, ``run_epoch_stream`` or the crash driver
 ``_run_crash_restart``), the progress records and the row's check on
-them.
+them. State partitions are sized by the runner (``state_store._run``).
 """
 
 from __future__ import annotations
@@ -43,7 +43,6 @@ import re
 import shutil
 import tempfile
 import time
-from contextlib import contextmanager as _contextmanager
 
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
@@ -100,30 +99,8 @@ _ST14_HORIZON_S = 20  # closed-window margin (2 windows behind max ts)
 
 # --- the build harness every streaming artifact row starts through ---------
 
-# State-store partitions of a streaming build. A streaming query pins
-# its state-store partition count to spark.sql.shuffle.partitions at
-# first start (it is then frozen in the checkpoint), and a vanilla
-# session leaves it at 200 — 200 state stores × tiny micro-batches is
-# pure per-batch task overhead at artifact scale. 32 fits a 32-core
-# local session (the app chains start at app_chains._STATE_PARTS); a
-# production deployment sizes it to ~2-3×
-# cluster cores BEFORE the first start, which is a deploy-time conf,
-# not a code change.
-_STREAM_PARTS = 32
 # the epoch every crash row kills: two epochs committed before it
 _CRASH_EPOCH = 2
-
-
-@_contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int):
-    """Scope spark.sql.shuffle.partitions to *n* around a streaming
-    query's START (see _STREAM_PARTS)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _assert_state_operators(expect: int):
@@ -216,12 +193,22 @@ def _run_crash_restart(
     return run_epoch_stream(stream, body, checkpoint_dir, output_mode)
 
 
+def _sink_dir(base: str) -> str:
+    """The sink dir of the streaming artifact built under *base*."""
+    return os.path.join(base, "out")
+
+
+def _beside_sink(out: str, name: str) -> str:
+    """Dir *name* beside the sink dir *out* in the same artifact: a
+    gate's store, a dim table the stream reads."""
+    return os.path.join(os.path.dirname(out), name)
+
+
 def _stream_artifact(
     spark: SparkSession,
     sf_dir: str,
     kind: str,
     plan,
-    parts: int = _STREAM_PARTS,
     check=None,
     debris=None,
     mode: str = "append",
@@ -231,29 +218,30 @@ def _stream_artifact(
     every streaming artifact row builds through (the reference's
     BaseApp — environment, checkpointing, source, handle(), execute).
 
-    ``plan(base)`` declares the query and returns ``(stream, body)``. A
+    ``plan(out)`` declares the query over the sink dir *out*
+    (``_sink_dir(base)``) and returns ``(stream, body)``. A
     ``body(batch, batch_id)`` runs as the foreachBatch body of a *mode*
     query; a ``body`` of None sinks *stream* as append parquet into
-    ``base/out``, partitioned by *partition_by* if given. The checkpoint
-    is ``base/ckpt`` and the query starts at *parts* state-store
-    partitions. With a *debris* planter the run goes through the crash
-    driver, which hands ``debris(base, epoch)`` the epoch it killed.
-    Every build writes its progress records to ``base/progress.jsonl``
-    and hands them to *check*, the row's claim on the run."""
+    *out*, partitioned by *partition_by* if given. The checkpoint is
+    ``base/ckpt``; the runner sizes a fresh query's state partitions
+    (``state_store._run``). With a *debris* planter the run goes through
+    the crash driver, which hands ``debris(out, epoch)`` the epoch it
+    killed. Every build writes its progress records to
+    ``base/progress.jsonl`` and hands them to *check*, the row's claim
+    on the run. Returns *base*."""
 
     def build(base: str) -> None:
-        stream, body = plan(base)
+        out = _sink_dir(base)
+        stream, body = plan(out)
         ckpt = os.path.join(base, "ckpt")
-        with _stream_shuffle_partitions(spark, parts):
-            if body is None:
-                out = os.path.join(base, "out")
-                q = run_file_stream(stream, out, ckpt, partition_by)
-            elif debris is None:
-                q = run_epoch_stream(stream, body, ckpt, mode)
-            else:
-                q = _run_crash_restart(
-                    stream, body, ckpt, lambda e: debris(base, e), mode
-                )
+        if body is None:
+            q = run_file_stream(stream, out, ckpt, partition_by)
+        elif debris is None:
+            q = run_epoch_stream(stream, body, ckpt, mode)
+        else:
+            q = _run_crash_restart(
+                stream, body, ckpt, lambda e: debris(out, e), mode
+            )
         records = dump_progress(q, base)
         if check is not None:
             check(records)
@@ -378,7 +366,7 @@ def _sliced_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _st14_build(spark: SparkSession, sf_dir: str) -> str:
     # the DWS query: watermarked window agg, day-partitioned append sink
-    def plan(base: str):
+    def plan(out: str):
         return dws_windowed_agg(_sliced_events(spark, sf_dir)), None
 
     return _stream_artifact(
@@ -433,7 +421,7 @@ def st14_dws_stream_readback(
         "yyyy-MM-dd HH:mm:ss",
     ).alias("horizon")
     hz = ev.agg(horizon)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return (
         back.crossJoin(F.broadcast(hz))  # one-row horizon scalar
         .where(F.col("edt") <= F.col("horizon"))
@@ -451,7 +439,7 @@ def st14_dws_stream_readback(
 
 
 def _st15_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         logins = (
             _sliced_events(spark, sf_dir)
             .where(F.col("event_type").isin("signup", "click"))
@@ -487,7 +475,7 @@ def st15_returning_user_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _st15_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.groupBy("cur_date").agg(
         F.count("*").cast("bigint").alias("uu_ct"),
         F.sum("is_back").cast("bigint").alias("back_ct"),
@@ -498,7 +486,7 @@ def st15_returning_user_stream_readback(
 
 
 def _st16_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _sliced_events(spark, sf_dir).withColumn(
             "day_ts", F.date_trunc("day", "ts")
         )
@@ -543,7 +531,7 @@ def st16_daily_uv_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _st16_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.groupBy(
         F.date_format("day_ts", "yyyy-MM-dd").alias("cur_date")
     ).agg(F.count("*").cast("bigint").alias("uv_ct"))
@@ -555,7 +543,7 @@ _J13_HORIZON_S = 60  # closed-region margin behind max event ts
 
 
 def _j13_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         return interval_join_purchases(_sliced_events(spark, sf_dir)), None
 
     # hard evidence the join state is watermark-BOUNDED, not
@@ -618,7 +606,7 @@ def j13_interval_join_stream_readback(
             F.unix_micros(F.max("ts")) - _J13_HORIZON_S * 1_000_000
         ).alias("horizon")
     )
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return (
         back.crossJoin(F.broadcast(hz))  # one-row horizon scalar
         .where(F.col("pay_ts") <= F.col("horizon"))
@@ -631,7 +619,7 @@ def j13_interval_join_stream_readback(
 
 
 def _st17_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _sliced_events(spark, sf_dir).select("event_id", "user_id", "ts")
         return visitor_fix(ev), None
 
@@ -661,7 +649,7 @@ def st17_visitor_fix_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _st17_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.select("event_id", "user_id", "visit_date", "is_new")
 
 
@@ -672,7 +660,7 @@ _J14_HORIZON_S = 1800 + 60  # order fully decided: o_ts + window < watermark
 
 
 def _j14_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         ev = _sliced_events(spark, sf_dir)
         joined = left_outer_stream_join(
             ev.where(F.col("event_type") == "click"),
@@ -756,7 +744,7 @@ def j14_left_outer_stream_readback(
             - _J14_HORIZON_S * 1_000_000
         ).alias("horizon")
     )
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return (
         back.crossJoin(F.broadcast(hz))  # one-row horizon scalar
         .where(F.col("o_ts") <= F.col("horizon"))
@@ -769,9 +757,9 @@ def j14_left_outer_stream_readback(
 
 def _st18_build(spark: SparkSession, sf_dir: str) -> str:
     # the DWS update query: update-mode agg, keyed upsert body
-    def plan(base: str):
+    def plan(out: str):
         agg = dws_windowed_agg(_sliced_events(spark, sf_dir), "1 hour")
-        return agg, dws_upsert_sink(spark, os.path.join(base, "serving"))
+        return agg, dws_upsert_sink(spark, out)
 
     return _stream_artifact(spark, sf_dir, "st18", plan, mode="update")
 
@@ -810,7 +798,7 @@ def st18_dws_update_upsert_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _st18_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "serving"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.select(
         "stt",
         "edt",
@@ -844,11 +832,10 @@ def _sink_checksums(back: DataFrame, key: str, *extra) -> DataFrame:
 
 
 def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
-        out = os.path.join(base, "out")
+    def plan(out: str):
         return _sliced_events(spark, sf_dir), log_split_sink(out)
 
-    def debris(base: str, epoch: int) -> None:
+    def debris(out: str, epoch: int) -> None:
         # partial file a mid-write crash leaves: a few purchase rows
         # already landed in the crashed epoch's side=page dir — the
         # retry must REPLACE them, not append beside them
@@ -858,7 +845,6 @@ def _x1s_build(spark: SparkSession, sf_dir: str) -> str:
             .limit(7)
             .withColumn("side", F.lit("page"))
         )
-        out = os.path.join(base, "out")
         write_snapshot(rows, out, epoch, partition_by="side")
 
     return _stream_artifact(spark, sf_dir, "x1s", plan, debris=debris)
@@ -908,7 +894,7 @@ def x1s_log_split_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _x1s_build(spark, sf_dir)
-    back = read_log(spark, os.path.join(base, "out"), _EV_SINK_SCHEMA)
+    back = read_log(spark, _sink_dir(base), _EV_SINK_SCHEMA)
     return _sink_checksums(back, "side")
 
 
@@ -927,11 +913,10 @@ _X2S_CONFIG = [
 
 
 def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
-        out = os.path.join(base, "out")
+    def plan(out: str):
         return _sliced_events(spark, sf_dir), routing_sink(_X2S_CONFIG, out)
 
-    def debris(base: str, epoch: int) -> None:
+    def debris(out: str, epoch: int) -> None:
         ev = Tables(spark, sf_dir).events
         rows = (
             ev.where(F.col("event_type") == "click")
@@ -939,7 +924,6 @@ def _x2s_build(spark: SparkSession, sf_dir: str) -> str:
             .drop("event_type")
             .withColumn("sink_table", F.lit("dwd_action_log"))
         )
-        out = os.path.join(base, "out")
         write_snapshot(rows, out, epoch, partition_by="sink_table")
 
     return _stream_artifact(spark, sf_dir, "x2s", plan, debris=debris)
@@ -983,7 +967,7 @@ def x2s_dynamic_routing_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _x2s_build(spark, sf_dir)
-    back = read_log(spark, os.path.join(base, "out"), _EV_SINK_SCHEMA)
+    back = read_log(spark, _sink_dir(base), _EV_SINK_SCHEMA)
     return _sink_checksums(back, "sink_table")
 
 
@@ -1033,16 +1017,15 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
         apply_gate_batch,
     )
 
-    def plan(base: str):
-        store = os.path.join(base, "store")
-        out = os.path.join(base, "out")
+    def plan(out: str):
+        store = _beside_sink(out, "store")
         src = _id_sliced_source(spark, sf_dir, "documents", ("doc_id", "text"))
         docs = file_stream(spark, src, "doc_id long, text string")
         return docs, lambda b, bid: apply_gate_batch(
             b.sparkSession, b, bid, store, out
         )
 
-    def debris(base: str, epoch: int) -> None:
+    def debris(out: str, epoch: int) -> None:
         from real_time_data_warehouse_spark.operators.dedup import (
             minhash_sigs_for,
         )
@@ -1062,14 +1045,14 @@ def _d7x_build(spark: SparkSession, sf_dir: str) -> str:
                 F.lit("exact_dup").alias("status"),
                 F.lit(0).cast("bigint").alias("dup_of"),
             ),
-            os.path.join(base, "out"),
+            out,
             epoch,
         )
         write_snapshot(
             crashed.select(
                 "doc_id", F.md5(F.lower("text")).alias("th")
             ).join(minhash_sigs_for(crashed), "doc_id", "left"),
-            os.path.join(base, "store"),
+            _beside_sink(out, "store"),
             epoch,
         )
 
@@ -1107,7 +1090,7 @@ def d7x_dedup_gate_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _d7x_build(spark, sf_dir)
-    return read_log(spark, os.path.join(base, "out")).select(
+    return read_log(spark, _sink_dir(base)).select(
         "doc_id", "status", "dup_of"
     )
 
@@ -1119,9 +1102,8 @@ def d7x_dedup_gate_stream_readback(
 def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
     from real_time_data_warehouse_spark.streaming import embedding_gate
 
-    def plan(base: str):
-        store = os.path.join(base, "store")
-        out = os.path.join(base, "out")
+    def plan(out: str):
+        store = _beside_sink(out, "store")
         src = _id_sliced_source(
             spark, sf_dir, "embeddings", ("vec_id", "embedding")
         )
@@ -1130,12 +1112,12 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
             b.sparkSession, b, bid, store, out
         )
 
-    def debris(base: str, epoch: int) -> None:
+    def debris(out: str, epoch: int) -> None:
         # mid-write leftovers in both sinks of the crashed epoch:
         # wrong-status decision rows, plus a PARTIAL store segment
         # written through the real banded layout (what the crashed
         # attempt's write job would have landed before dying)
-        store = os.path.join(base, "store")
+        store = _beside_sink(out, "store")
         vecs = Tables(spark, sf_dir).embeddings.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("v"),
@@ -1147,7 +1129,7 @@ def _d9x_build(spark: SparkSession, sf_dir: str) -> str:
                 F.lit("near_dup").alias("status"),
                 F.lit(0).cast("bigint").alias("dup_of"),
             ),
-            os.path.join(base, "out"),
+            out,
             epoch,
         )
         _, entry = embedding_gate.classify_batch(spark, crashed, store)
@@ -1184,7 +1166,7 @@ def d9x_semantic_gate_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _d9x_build(spark, sf_dir)
-    return read_log(spark, os.path.join(base, "out")).select(
+    return read_log(spark, _sink_dir(base)).select(
         "vec_id", "status", "dup_of"
     )
 
@@ -1197,7 +1179,7 @@ _W12_HORIZON_S = 20  # closed-session margin behind max event ts
 
 
 def _w12_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         agg = (
             _sliced_events(spark, sf_dir)
             .withWatermark("ts", f"{_W12_DELAY_S} seconds")
@@ -1283,7 +1265,7 @@ def w12_session_window_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _w12_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     horizon = (
         Tables(spark, sf_dir)
         .events.agg(
@@ -1307,7 +1289,7 @@ def w12_session_window_stream_readback(
 # --- j15: stream-static dim enrichment under the REAL runtime (J5/J6) ------
 
 def _j15_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         t = Tables(spark, sf_dir)
         dim = (
             t.customer.join(
@@ -1369,7 +1351,7 @@ def j15_dim_join_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _j15_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     return back.groupBy("nation_name").agg(
         F.count("*").cast("bigint").alias("n_events"),
         F.sum("event_id").cast("bigint").alias("id_sum"),
@@ -1387,7 +1369,7 @@ _W13_HORIZON_S = 20  # one slide past the watermark delay, like st14
 
 
 def _w13_build(spark: SparkSession, sf_dir: str) -> str:
-    def plan(base: str):
+    def plan(out: str):
         agg = (
             _sliced_events(spark, sf_dir)
             .withWatermark("ts", f"{_W13_DELAY_S} seconds")
@@ -1467,7 +1449,7 @@ def w13_sliding_window_stream_readback(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     base = _w13_build(spark, sf_dir)
-    back = spark.read.parquet(os.path.join(base, "out"))
+    back = spark.read.parquet(_sink_dir(base))
     horizon = (
         Tables(spark, sf_dir)
         .events.agg(

@@ -3,8 +3,13 @@
 The reference hard-codes env setup in ``BaseApp.java:26-35`` (parallelism 4,
 5 s exactly-once checkpoints). Here the equivalent knobs are Spark confs,
 sized for the test harness (local[N]) but chosen to scale: AQE handles
-runtime coalescing/skew at cluster scale, shuffle partitions default to the
-core count locally and should be ~2-3× total cores on a real cluster.
+runtime coalescing/skew at cluster scale, batch shuffle partitions default
+to the core count locally and should be ~2-3× total cores on a real
+cluster. Streaming state is sized by one rule instead, as the reference
+sets its parallelism once: every streaming start goes through
+``streaming/state_store._run``, which gives a fresh query one state
+partition per core (``defaultParallelism``); the checkpoint keeps that
+count across restarts.
 """
 
 from __future__ import annotations

@@ -31,7 +31,8 @@ start an ``availableNow`` query on its checkpoint, wait for it under the
 one ``STREAM_TIMEOUT_S`` limit (stopping the query and raising
 ``TimeoutError`` past it — a partial sink is never handed back as
 finished) and return the finished handle, whose ``recentProgress`` holds
-the run's progress records. A failing micro-batch surfaces as the
+the run's progress records. A fresh query starts with one state
+partition per core (``_run``). A failing micro-batch surfaces as the
 ``StreamingQueryException`` the wait raises. ``run_applier_stream``
 wires an applier ``(spark, batch, batch_id, state_dir, out_dir)`` as an
 epoch body, the same body the ``_replay_batches`` rows drive.
@@ -139,12 +140,37 @@ def last_wins_log(
 STREAM_TIMEOUT_S = 300
 
 
-def _run(writer, checkpoint_dir: str):
-    q = (
-        writer.option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+def _run(spark: SparkSession, writer, checkpoint_dir: str):
+    """Start *writer* as an availableNow query on *checkpoint_dir* and
+    wait for it under ``STREAM_TIMEOUT_S``.
+
+    The package's one state-partition rule: a fresh query gets one state
+    partition per core (``defaultParallelism``), so each micro-batch
+    runs one state-store task per core in one wave. Each task pays a
+    fixed cost (store load and commit, the Python runner, one output
+    file), so more tasks than cores only add waves of it. The checkpoint
+    freezes the count at first start, so a restart keeps its own. On a
+    cluster ``defaultParallelism`` is the executors' total cores, or
+    ``spark.default.parallelism`` where the deployment sets it.
+
+    ``spark.sql.shuffle.partitions`` carries the rule: it is scoped
+    around ``start()`` and restored afterwards. The change is
+    session-wide while the query starts, so a batch query another thread
+    plans in that window sees it too; that changes its partitioning, not
+    its result. Two starts from different threads could restore each
+    other's value; the package starts its queries from one thread (a
+    row's build, or the live ingest loop beside ADS readers)."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        q = (
+            writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, old)
     if not q.awaitTermination(STREAM_TIMEOUT_S):
         q.stop()
         raise TimeoutError(
@@ -160,6 +186,7 @@ def run_epoch_stream(
     """Run ``body(batch, batch_id)`` as an availableNow ``foreachBatch``
     query over *stream* to completion; returns the finished handle."""
     return _run(
+        stream.sparkSession,
         stream.writeStream.foreachBatch(body).outputMode(output_mode),
         checkpoint_dir,
     )
@@ -177,7 +204,7 @@ def run_file_stream(
     w = df.writeStream.format("parquet").option("path", out_dir)
     if partition_by is not None:
         w = w.partitionBy(partition_by)
-    return _run(w.outputMode("append"), checkpoint_dir)
+    return _run(df.sparkSession, w.outputMode("append"), checkpoint_dir)
 
 
 def run_applier_stream(

@@ -128,42 +128,73 @@ VISITOR_OUTPUT = StructType(
 _VISITOR_STATE = StructType([StructField("first_visit_date", StringType())])
 
 
-def _make_visitor_fix_fn(idle_ttl_ms: int | None):
+def _make_visitor_fix_fn(
+    idle_ttl_ms: int | None, neutral: str | None, passthrough: list[str]
+):
+    cols = [*VISITOR_OUTPUT.fieldNames(), *passthrough]
+
     def _visitor_fix_fn(
         key: tuple[Any, ...],
         pdf_iter: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         """ST3 (DwdBaseLog.java:121-188): is_new stays 1 only on the
-        first-ever visit date of the mid; later dates are repaired to 0."""
+        first-ever visit date of the mid; later dates are repaired to 0.
+        Rows flagged by the *neutral* column never touch the state and
+        carry is_new NULL."""
         if state.hasTimedOut:
             state.remove()
-            yield pd.DataFrame(columns=["event_id", "user_id", "visit_date", "is_new"])
+            yield pd.DataFrame(columns=cols)
             return
-        (user_id,) = key
         first = state.get[0] if state.exists else None
-        out: list[tuple[int, int, str, int]] = []
+        outs = []
         for pdf in pdf_iter:
             pdf = pdf.sort_values("ts")
             dates = pdf["ts"].dt.strftime("%Y-%m-%d")
-            for eid, d in zip(pdf["event_id"], dates):
+            skip = pdf[neutral] if neutral else [0] * len(pdf)
+            is_new: list[int | None] = []
+            for d, n in zip(dates, skip):
+                if n:
+                    is_new.append(None)
+                    continue
                 if first is None:
                     first = d
-                out.append((int(eid), user_id, d, 1 if d == first else 0))
-        state.update((first,))
+                is_new.append(1 if d == first else 0)
+            outs.append(
+                pdf.assign(
+                    visit_date=dates,
+                    is_new=pd.Series(is_new, index=pdf.index, dtype="object"),
+                )[cols]
+            )
+        if first is not None:
+            state.update((first,))
         if idle_ttl_ms:
             state.setTimeoutDuration(idle_ttl_ms)
-        yield pd.DataFrame(out, columns=["event_id", "user_id", "visit_date", "is_new"])
+        yield pd.concat(outs) if outs else pd.DataFrame(columns=cols)
 
     return _visitor_fix_fn
 
 
-def visitor_fix(events: DataFrame, idle_ttl_ms: int | None = None) -> DataFrame:
+def visitor_fix(
+    events: DataFrame,
+    idle_ttl_ms: int | None = None,
+    neutral: str | None = None,
+    passthrough: list[str] | None = None,
+) -> DataFrame:
+    """ST3 streaming form: events (event_id, user_id, ts, ...) → one
+    ``VISITOR_OUTPUT`` row per event, then the *passthrough* columns.
+    Rows whose *neutral* column is non-zero pass through state-neutral
+    with is_new NULL (app5s's dirty rows: the one-query form of the
+    reference's pre-keyBy side output)."""
+    passthrough = list(passthrough or [])
+    out = StructType(
+        VISITOR_OUTPUT.fields + [events.schema[c] for c in passthrough]
+    )
     return (
         events.groupBy("user_id")
         .applyInPandasWithState(
-            _make_visitor_fix_fn(idle_ttl_ms),
-            outputStructType=VISITOR_OUTPUT,
+            _make_visitor_fix_fn(idle_ttl_ms, neutral, passthrough),
+            outputStructType=out,
             stateStructType=_VISITOR_STATE,
             outputMode="append",
             timeoutConf=(

@@ -251,12 +251,15 @@ def test_app4s_dim_store_shape(spark):
         _APP4_CONFIG,
         _app4s_build,
     )
+    from real_time_data_warehouse_spark.operators.streaming_exec import (
+        _sink_dir,
+    )
 
-    base = _app4s_build(spark, SF_DIR)
-    tables = sorted(_os.listdir(_os.path.join(base, "dim")))
+    out = _sink_dir(_app4s_build(spark, SF_DIR))
+    tables = sorted(_os.listdir(out))
     assert tables == sorted(s for _, s, _c in _APP4_CONFIG)
     for _e, sink, _c in _APP4_CONFIG:
-        d = spark.read.parquet(_os.path.join(base, "dim", sink))
+        d = spark.read.parquet(_os.path.join(out, sink))
         assert d.where(F.col("user_id") < 0).count() == 0
         # every surviving row is an upsert (deletes leave no row)
         assert d.where(F.col("op") == "delete").count() == 0

@@ -137,10 +137,10 @@ def test_unbounded_global_window_detector_edges(spark):
     assert len(unbounded_global_windows(lit_part)) == 1
 
 
-def _package_sources():
-    """(path relative to the package, source) of every package module
-    except ``streaming/state_store.py``, the epoch-layout and query-run
-    owner."""
+def _package_sources(with_owner: bool = False):
+    """(path relative to the package, source) of every package module,
+    except ``streaming/state_store.py`` (the epoch-layout and query-run
+    owner) unless *with_owner*."""
     import real_time_data_warehouse_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
@@ -148,23 +148,49 @@ def _package_sources():
     for dirpath, _, files in os.walk(root):
         for f in files:
             path = os.path.join(dirpath, f)
-            if f.endswith(".py") and path != owner:
+            if f.endswith(".py") and (with_owner or path != owner):
                 with open(path, encoding="utf-8") as fh:
                     yield os.path.relpath(path, root), fh.read()
 
 
-def _code_tokens(source: str) -> list[str]:
+def _code_tokens(source: str, strings: bool = False) -> list[str]:
     """Text of every NAME and OP token of *source*: code only, since a
     comment or a string literal (docstrings included) is one token of
-    another type."""
+    another type. With *strings*, also every string literal that is an
+    operand, quotes included; a string that is a statement of its own
+    (a docstring) is left out."""
     import io
     import tokenize
 
-    return [
-        t.string
-        for t in tokenize.generate_tokens(io.StringIO(source).readline)
-        if t.type in (tokenize.NAME, tokenize.OP)
-    ]
+    layout = (tokenize.NL, tokenize.COMMENT)
+    starts = (tokenize.NEWLINE, tokenize.INDENT, tokenize.DEDENT)
+    out, prev = [], tokenize.NEWLINE
+    for t in tokenize.generate_tokens(io.StringIO(source).readline):
+        if t.type in (tokenize.NAME, tokenize.OP) or (
+            strings and t.type == tokenize.STRING and prev not in starts
+        ):
+            out.append(t.string)
+        if t.type not in layout:
+            prev = t.type
+    return out
+
+
+def _blank_defs(src: str, keep) -> str:
+    """*src* with every top-level statement ``keep(node)`` accepts
+    blanked out, decorators included, so a lint can scan the rest."""
+    import ast
+
+    lines = src.split("\n")
+    for node in ast.parse(src).body:
+        if keep(node):
+            first = min(
+                [node.lineno]
+                + [d.lineno for d in getattr(node, "decorator_list", [])]
+            )
+            lines[first - 1:node.end_lineno] = [""] * (
+                node.end_lineno - first + 1
+            )
+    return "\n".join(lines)
 
 
 def test_epoch_paths_only_in_state_store():
@@ -237,37 +263,79 @@ def test_debris_epoch_is_never_a_literal():
 def test_operators_run_streams_only_through_the_harness():
     """``operators/streaming_exec._stream_artifact`` (the build harness)
     and ``_run_crash_restart`` (its crash driver) are the only operators/
-    code that starts a streaming query or scopes its state-store
-    partitions: elsewhere under operators/, code names none of
-    ``run_file_stream``, ``run_epoch_stream`` and
-    ``_stream_shuffle_partitions`` (imports aside; docstrings and
-    comments may name them)."""
+    code that starts a streaming query: elsewhere under operators/, code
+    names neither ``run_file_stream`` nor ``run_epoch_stream`` (imports
+    aside; docstrings and comments may name them)."""
     import ast
 
-    names = {"run_file_stream", "run_epoch_stream", "_stream_shuffle_partitions"}
+    names = {"run_file_stream", "run_epoch_stream"}
     owners = {"_stream_artifact", "_run_crash_restart"} | names
     harness = os.path.join("operators", "streaming_exec.py")
     offenders = []
     for rel, src in _operator_sources():
-        lines = src.split("\n")
-        for node in ast.parse(src).body:
-            allowed = isinstance(node, (ast.Import, ast.ImportFrom)) or (
+        code = _blank_defs(
+            src,
+            lambda node: isinstance(node, (ast.Import, ast.ImportFrom))
+            or (
                 rel == harness
                 and isinstance(node, ast.FunctionDef)
                 and node.name in owners
-            )
-            if allowed:
-                first = min(
-                    [node.lineno]
-                    + [d.lineno for d in getattr(node, "decorator_list", [])]
-                )
-                lines[first - 1:node.end_lineno] = [""] * (
-                    node.end_lineno - first + 1
-                )
-        used = names & set(_code_tokens("\n".join(lines)))
+            ),
+        )
+        used = names & set(_code_tokens(code))
         if used:
             offenders.append(f"{rel}: {sorted(used)}")
     assert not offenders, f"streams run outside the harness: {offenders}"
+
+
+# where the package may set spark.sql.shuffle.partitions: the batch
+# default of a session it builds, and the state-partition rule every
+# streaming start goes through
+_SHUFFLE_PARTS_OWNERS = {
+    "session.py": "get_spark",
+    os.path.join("streaming", "state_store.py"): "_run",
+}
+
+
+def test_shuffle_partitions_set_only_by_the_session_and_the_rule():
+    """No package code names ``spark.sql.shuffle.partitions`` outside
+    ``session.get_spark`` (the batch default) and ``state_store._run``
+    (one state partition per core at a query's first start): a row or
+    helper that scopes its own count would start its queries at a
+    hand-picked state-partition count the checkpoint then freezes.
+    Docstrings and comments may name the key."""
+    import ast
+
+    offenders = []
+    for rel, src in _package_sources(with_owner=True):
+        owner = _SHUFFLE_PARTS_OWNERS.get(rel)
+        code = _blank_defs(
+            src,
+            lambda node: isinstance(node, ast.FunctionDef)
+            and node.name == owner,
+        )
+        toks = _code_tokens(code, strings=True)
+        if any("spark.sql.shuffle.partitions" in t for t in toks):
+            offenders.append(rel)
+    assert not offenders, (
+        f"spark.sql.shuffle.partitions set in {sorted(offenders)}"
+    )
+
+
+def test_code_strings_leave_docstrings_out():
+    """The string-literal half of ``_code_tokens`` sees operands, not
+    docstrings or comments."""
+    src = (
+        '"""module doc: "k"."""\n'
+        "def f(c):\n"
+        '    """doc naming "k"."""\n'
+        '    # comment naming "k"\n'
+        '    c.set("k", 1)\n'
+        '    return ("k",\n'
+        '            "k")\n'
+    )
+    toks = _code_tokens(src, strings=True)
+    assert [t for t in toks if t.startswith('"')] == ['"k"'] * 3
 
 
 _REGISTRY_MUTATORS = {

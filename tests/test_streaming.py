@@ -633,12 +633,10 @@ def test_crash_debris_follows_the_crash_epoch(
     ev = Tables(spark, SF_DIR).events
     planted = []
 
-    def plan(base):
-        out = os.path.join(base, "out")
+    def plan(out):
         return stream_events(spark, events_dir), log_split_sink(out)
 
-    def debris(base, epoch):
-        out = os.path.join(base, "out")
+    def debris(out, epoch):
         assert os.path.isdir(epoch_dir(out, epoch - 1))
         assert not os.path.exists(epoch_dir(out, epoch))
         rows = (
@@ -654,7 +652,7 @@ def test_crash_debris_follows_the_crash_epoch(
     )
     assert planted == [7]
     assert os.path.isfile(os.path.join(base, "progress.jsonl"))
-    log = read_log(spark, os.path.join(base, "out"))
+    log = read_log(spark, streaming_exec._sink_dir(base))
     assert {r[0] for r in log.select("batch_id").distinct().collect()} == {
         0, 1
     }
@@ -682,6 +680,84 @@ def test_partitioned_epoch_overwrite_is_static(spark, tmp_path):
     assert not os.path.exists(os.path.join(epoch_dir(out, 3), "side=b"))
     got = [tuple(r) for r in read_log(spark, out, "id long").collect()]
     assert got == [(1, 3, "a")]
+
+
+def _state_partitions(q) -> set[int]:
+    """State-partition counts in a finished query's progress records."""
+    import json
+
+    return {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in json.loads(p.json)["stateOperators"]
+    }
+
+
+def _drain(batch, batch_id: int) -> None:
+    """A foreachBatch body that runs every partition (a stateful query
+    fails an epoch whose body leaves state partitions uncommitted)."""
+    batch.count()
+
+
+def test_fresh_start_takes_one_state_partition_per_core(
+    spark, tmp_path, events_dir
+):
+    """The state-partition rule (``state_store._run``): a fresh keyed
+    query starts with ``defaultParallelism`` state partitions whatever
+    the session's shuffle-partition count, and leaves that count as it
+    was."""
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(cores + 3))
+    try:
+        q = run_epoch_stream(
+            stream_events(spark, events_dir).groupBy("event_type").count(),
+            _drain,
+            str(tmp_path / "ckpt"),
+            "update",
+        )
+        assert spark.conf.get(key) == str(cores + 3)
+    finally:
+        spark.conf.set(key, old)
+    assert _state_partitions(q) == {cores}
+
+
+def test_resumed_query_keeps_its_checkpointed_state_partitions(
+    spark, tmp_path
+):
+    """The checkpoint freezes a query's state-partition count at first
+    start: a query first started through a raw ``writeStream`` at a
+    count the rule would not pick keeps that count when
+    ``run_epoch_stream`` resumes it over a new file."""
+    from tests.conftest import write_stream_file
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    frozen = spark.sparkContext.defaultParallelism + 3
+    write_stream_file(spark.range(0, 50).toDF("k"), src, "f0")
+    counts = (
+        spark.readStream.schema("k long").parquet(src).groupBy("k").count()
+    )
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(frozen))
+    try:
+        first = (
+            counts.writeStream.foreachBatch(_drain)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert first.awaitTermination(120)
+    finally:
+        spark.conf.set(key, old)
+    assert _state_partitions(first) == {frozen}
+
+    write_stream_file(spark.range(50, 80).toDF("k"), src, "f1")
+    resumed = run_epoch_stream(counts, _drain, ckpt, "update")
+    assert sum(p.numInputRows for p in resumed.recentProgress) == 30
+    assert _state_partitions(resumed) == {frozen}
 
 
 def test_dws_sku_order_enriched_stream(spark, tmp_path, events_dir):
